@@ -565,6 +565,27 @@ def test_extracted_text_dedup_end_to_end(spark):
     assert spark_set == {tuple(r) for r in oracle}
 
 
+def test_extracted_text_dedup_oversized_doc_matches_oracle(spark,
+                                                         oversized_sf):
+    """The oversized-doc branch through the whole query: doc 14 and its
+    planted clone are split into parts, extracted, reassembled and only
+    then MinHashed; the output must equal the DuckDB oracle row for row."""
+    import duckdb
+
+    from unipdf_spark.operators import extracted
+
+    got = sorted(tuple(r) for r in
+                 extracted.extracted_text_dedup(spark, oversized_sf).collect())
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{oversized_sf}/documents.parquet/*.parquet')")
+    want = sorted(con.execute(extracted.EXTRACTED_DEDUP_SQL).fetchall())
+    assert got == want
+    clone = {r[0]: r for r in got}[14 + extracted.CLONE_OFFSET]
+    # (doc_id, canonical_doc_id, group_size, n_tokens, n_candidates)
+    assert clone[1:3] == (14, 2) and clone[4] >= 1
+
+
 def test_html_main_content_end_to_end(spark):
     """HTML leg of the main-content pipeline: boilerplate-laden wrap →
     DOM-heuristic strip must recover exactly the article text (oracle

@@ -75,3 +75,58 @@ def test_sources_reader_pushes_docid_range(spark):
     df = read_docs(spark, f"{SF}/documents.parquet", min_doc_id="10")
     pf = pushed_filters(df)
     assert any("doc_id" in f for f in pf), pf
+
+
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _subplans(node) -> list:
+    """Children of a physical node, looking through AQE wrappers and query
+    stages into the final plan, but NOT into cached relations."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if name.endswith("QueryStageExec"):
+        return [node.plan()]
+    return _seq(node.children())
+
+
+def _walk(node):
+    yield node
+    for c in _subplans(node):
+        yield from _walk(c)
+
+
+def _udf_names(node) -> list[str]:
+    return [n.func().name() for n in _walk(node)
+            if n.getClass().getSimpleName() == "MapInPandasExec"]
+
+
+def test_extracted_text_dedup_single_pass_plan(spark, oversized_sf):
+    """extracted_text_dedup renders and extracts every doc ONCE: its
+    executed plan caches one relation, whose small-doc and oversized-doc
+    branches each hold exactly one render→extract (rex) worker, and no
+    Filter on `multi` re-reads a rex output."""
+    from unipdf_spark.operators.extracted import extracted_text_dedup
+
+    df = extracted_text_dedup(spark, oversized_sf)
+    df.collect()
+    ident = spark.sparkContext._jvm.System.identityHashCode
+    cached = {}
+    for n in _walk(df._jdf.queryExecution().executedPlan()):
+        if n.getClass().getSimpleName() == "InMemoryTableScanExec":
+            rel = n.relation()
+            cached[ident(rel.cacheBuilder())] = rel.cachedPlan()
+    assert len(cached) == 1, len(cached)
+    (plan,) = cached.values()
+    union = next(n for n in _walk(plan)
+                 if n.getClass().getSimpleName() == "UnionExec")
+    small, big = _seq(union.children())
+    assert [u for u in _udf_names(small) if "_rex" in u] == \
+        ["_rex_sig_worker"]
+    assert [u for u in _udf_names(big) if "_rex" in u] == ["_rex_worker"]
+    assert _udf_names(plan).count("split_batches") == 1
+    assert not [n for n in _walk(plan)
+                if n.getClass().getSimpleName() == "FilterExec"
+                and "multi" in n.condition().toString()]

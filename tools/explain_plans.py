@@ -51,26 +51,31 @@ def main() -> None:
         )
         out.append("```\n" + txt.strip()[:4000] + "\n```\n")
     out.append("""
-## Notes (r7)
+## Notes: extracted_text_dedup
 
 - **extracted_text_dedup scale shape**: ONE persisted InMemoryRelation
-  over a Union of (a) the map-only small-doc branch and (b) the
-  oversized-doc branch (split → range Exchange, ~one bounded atom per
-  task → extract → ordered reassembly aggregate); both dedup-hash and
-  LSH subtrees read the same cached relation; partner join stays a
-  BroadcastHashJoin. Verified at the 100k integrated soak with a planted
-  1.1 MB doc: straggler ratio 1.17, 0 errors.
-- **extracted_text_dedup cold floor** (r6 VERDICT #8): cold ≈ warm +
-  ~5-7 s. The delta is (1) the one-time janino/JIT compile of the
-  minhash band/bucket expression family (~4-5 s per executor REGARDLESS
-  of data size — same constant documented for minhash_lsh_pairs, whose
-  cold-warm delta is ~4 s in the same run) and (2) the first
-  materialization of the persisted render+extract frame (~1.5-2 s at 6k
-  docs), which the warm run reuses via canonicalized-plan cache match.
-  Both are per-executor constants that amortize to noise at production
-  scale; caching rendered PDFs across the boundary would only shift cost
-  (1) remains either way. Accepted floor, re-measured each round in
-  BENCH queries_cold.
+  of (doc_id, text, h0..h31) over a Union of (a) the small-doc branch:
+  one `_rex_sig_worker` MapInPandas that renders, extracts and
+  MinHashes each doc, map-only; and (b) the oversized-doc branch: split
+  → range Exchange (~one bounded atom per task) → `_rex_worker` →
+  ordered reassembly aggregate → MinHash worker. The dedup-hash subtree
+  and the LSH band subtree (`band_table`: one `inline` generator over the
+  cached h0..h31) both read that one relation, so each doc is rendered
+  and extracted once per query. No `Filter` on `multi` sits above a rex
+  worker. `tests/test_plans.py::test_extracted_text_dedup_single_pass_plan`
+  locks this shape in. The partner join stays a BroadcastHashJoin.
+- **extracted_text_dedup cold floor**: cold ≈ warm + ~6 s. Measured with
+  perfbench `text_dedup --trace 1` on a 4-vCPU host: 9.5 s cold against
+  ~3.6 s warm for 686 docs. The delta is one-time per session: janino
+  compiles the band/bucket expression family, each Python worker imports
+  the engine, and the cached frame is materialized for the first time.
+  None of it grows with data size, so it amortizes at corpus scale.
+- **band_table users**: `band_table` emits the 8 band rows of a
+  signature with one `inline` generator, so the band subtree of
+  `minhash_lsh_pairs` lost the Project that unpacked the exploded struct.
+  Regenerating this file before and after that change and diffing with
+  expression ids normalized, only `extracted_text_dedup` and
+  `minhash_lsh_pairs` differ.
 
 ## Notes (r8)
 

@@ -145,22 +145,21 @@ def attach_minhash_signature(d: DataFrame) -> DataFrame:
     return base.select("doc_id", acc.alias("acc")).select("doc_id", *sigs)
 
 
+# all 8 (band, band_hash) rows of a signature row as ONE generator
+# expression; each key is the oracle's own fold (phash.fold_sql)
+_BANDS_EXPR = "inline(array({}))".format(", ".join(
+    f"named_struct('band', {b}, 'band_hash', "
+    + phash.fold_sql([f"h{b * BAND_SIZE + r}" for r in range(BAND_SIZE)])
+    + ")"
+    for b in range(N_HASHES // BAND_SIZE)
+))
+
+
 def band_table(sig: DataFrame) -> DataFrame:
     """Signature frame → one (doc_id, band, band_hash) row per band, in ONE
-    pass (explode of all 8 band keys from a single signature computation)."""
-    band_structs = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            phash.fold(
-                [F.col(f"h{b * BAND_SIZE + r}") for r in range(BAND_SIZE)]
-            ).alias("band_hash"),
-        )
-        for b in range(N_HASHES // BAND_SIZE)
-    ])
-    return sig.select(
-        "doc_id", F.explode(band_structs).alias("bb")
-    ).select("doc_id", F.col("bb.band").alias("band"),
-             F.col("bb.band_hash").alias("band_hash"))
+    pass and ONE ``selectExpr`` call; the Column-API fold it replaces made
+    a py4j round trip per operator to build."""
+    return sig.selectExpr("doc_id", _BANDS_EXPR)
 
 
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -180,13 +179,17 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_signatures_pandas(_docs(spark, sf_dir))
 
 
-_SIG_FIELDS = ", ".join(f"h{i} long" for i in range(N_HASHES))
+SIG_NAMES = [f"h{i}" for i in range(N_HASHES)]
+_SIG_FIELDS = ", ".join(f"{h} long" for h in SIG_NAMES)
 
 
-def minhash_signatures_pandas(d: DataFrame) -> DataFrame:
-    """(doc_id, text, …) → (doc_id, h0..h31) via mapInPandas: Python-side
-    tokenize → 3-gram shingles → md5-derived h32 → one numpy (n_shingles ×
-    32) modular matmul-min. Bit-identical to MINHASH_SIG_SQL:
+def with_minhash(pdf):
+    """pandas batch with a ``text`` column → the same batch plus h0..h31:
+    Python-side tokenize → 3-gram shingles → md5-derived h32 → one numpy
+    (n_shingles × 32) modular matmul-min per doc. The one Python copy of
+    the math, shared by :func:`minhash_signatures_pandas` and the fused
+    render→extract workers of :mod:`.extracted`. Bit-identical to
+    MINHASH_SIG_SQL:
 
     * tokens: ``re.ASCII`` ``\\s+`` split of ``text.lower()`` — Java's and
       RE2's ``\\s`` are ASCII-only, so the Python pattern must be too;
@@ -195,46 +198,44 @@ def minhash_signatures_pandas(d: DataFrame) -> DataFrame:
       ``('0x'||substr(md5(s),1,15))::BIGINT`` (< 2^60, exact in int64);
     * families: ``(A_i·h + B_i) % P`` with A_i < 2^30 → products < 2^62.
     """
+    import hashlib
+    import re
+
     import numpy as np
 
     a_arr = np.array(phash.A, dtype=np.int64)
     b_arr = np.array(phash.B, dtype=np.int64)
     p = phash.P
+    ws = re.compile(r"\s+", re.ASCII)
+    sigs = np.empty((len(pdf), N_HASHES), dtype=np.int64)
+    for i, text in enumerate(pdf["text"].tolist()):
+        toks = [t for t in ws.split(text.lower()) if t]
+        end = max(len(toks) - 3, 0) + 1
+        sh = {" ".join(toks[j : j + 3]) for j in range(end)}
+        hs = np.fromiter(
+            (
+                int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16) % p
+                for s in sh
+            ),
+            dtype=np.int64,
+            count=len(sh),
+        )
+        # per-doc (n_shingles × 32) op, NOT batched across docs: a
+        # measured segmented-reduceat variant (one giant concatenated
+        # product + np.minimum.reduceat) ran 6× SLOWER — the ~150×32
+        # per-doc temporaries stay in L2 while the batch-wide ones thrash
+        # cache (r7)
+        sigs[i] = ((hs[:, None] * a_arr + b_arr) % p).min(axis=0)
+    return pdf.assign(**{h: sigs[:, k] for k, h in enumerate(SIG_NAMES)})
+
+
+def minhash_signatures_pandas(d: DataFrame) -> DataFrame:
+    """(doc_id, text, …) → (doc_id, h0..h31) via mapInPandas over
+    :func:`with_minhash`."""
 
     def batches(pdfs):
-        import hashlib
-        import re
-
-        import pandas as pd
-
-        ws = re.compile(r"\s+", re.ASCII)
         for pdf in pdfs:
-            n = len(pdf)
-            sigs = np.empty((n, N_HASHES), dtype=np.int64)
-            texts = pdf["text"].tolist()
-            for i, text in enumerate(texts):
-                toks = [t for t in ws.split(text.lower()) if t]
-                end = max(len(toks) - 3, 0) + 1
-                sh = {" ".join(toks[j : j + 3]) for j in range(end)}
-                hs = np.fromiter(
-                    (
-                        int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15],
-                            16) % p
-                        for s in sh
-                    ),
-                    dtype=np.int64,
-                    count=len(sh),
-                )
-                # per-doc (n_shingles × 32) op, NOT batched across docs:
-                # a measured segmented-reduceat variant (one giant
-                # concatenated product + np.minimum.reduceat) ran 6×
-                # SLOWER — the ~150×32 per-doc temporaries stay in L2
-                # while the batch-wide ones thrash cache (r7)
-                sigs[i] = ((hs[:, None] * a_arr + b_arr) % p).min(axis=0)
-            out = pd.DataFrame({"doc_id": pdf["doc_id"]})
-            for k in range(N_HASHES):
-                out[f"h{k}"] = sigs[:, k]
-            yield out
+            yield with_minhash(pdf)[["doc_id", *SIG_NAMES]]
 
     id_type = d.schema["doc_id"].dataType.simpleString()
     return d.select("doc_id", "text").mapInPandas(

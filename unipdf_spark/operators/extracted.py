@@ -17,26 +17,29 @@ chunking (the render plan is seeded per doc_id), so the pair is a true
 re-formatted duplicate — same content, different layout — exactly what
 normalized dedup and MinHash LSH exist to catch.
 
-Scale shape (100 TB): render and extraction are map-only mapInPandas
-stages (no payload shuffle); the reassembled-text frame is persisted once
-and feeds both the dedup-hash and signature paths; LSH banding reuses the
-count-gated bounded-bucket pattern from :mod:`dedup` (no self-join, no
-mega-bucket task).
+Scale shape (100 TB): each doc is rendered, extracted, reassembled and
+MinHashed in ONE map-only Python pass (no payload shuffle); only
+oversized docs take the split → extract → reassemble detour. The
+resulting (doc_id, text, h0..h31) frame is persisted once and feeds both
+the dedup-hash and the LSH band paths; banding reuses the count-gated
+bounded-bucket pattern from :mod:`dedup` (no self-join, no mega-bucket
+task).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .. import pipeline
 from . import phash
 from .dedup import (
     MAX_BUCKET,
+    SIG_NAMES,
     _SHINGLE_CTE,
     _SIG_COLS_SQL,
+    _SIG_FIELDS,
     _BANDS_SQL,
     band_table,
-    minhash_signatures_pandas,
+    with_minhash,
 )
 
 CLONE_OFFSET = 1_000_000
@@ -50,41 +53,6 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + CLONE_OFFSET).alias("doc_id"), "text"
     )
     return docs.unionByName(clones)
-
-
-def render_extract_reassemble(named: DataFrame) -> DataFrame:
-    """(doc_id 'doc_NNNNNNNN', text) → (doc_id bigint, text) where the
-    output text made a full render→span-extraction→reassembly trip
-    through the PDF engine. FUSED into ONE mapInPandas worker: as two
-    chained MapInPandas nodes every rendered PDF (and its span structs)
-    would cross Python→JVM→Python through Arrow once for nothing — the
-    render here is only the synthetic source; a real corpus enters at the
-    extraction stage, which stays the standalone pipeline.run_extraction.
-    Map-only (no payload shuffle) and streaming-capable (mapInPandas binds
-    to micro-batches unchanged — see the streaming integrated-path test)."""
-
-    def render_extract(batches):
-        import re
-
-        import pandas as pd
-
-        from ..fixtures.gen import make_text_doc
-        from ..pdf.extract import extract_spans
-
-        ws = re.compile(r"\s+")
-        for b in batches:
-            ids, texts = [], []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                _golden, pdf = make_text_doc(doc_id, text or "")
-                res = extract_spans(pdf)
-                joined = " ".join(
-                    s["text"] for s in res.spans if s["kind"] == "text")
-                ids.append(int(doc_id[4:]))
-                texts.append(ws.sub(" ", joined).strip())
-            yield pd.DataFrame({"doc_id": ids, "text": texts})
-
-    return named.mapInPandas(
-        render_extract, schema="doc_id bigint, text string")
 
 
 PART_CHARS = 65536  # oversized-doc task atom: ~0.6 s render+extract each
@@ -127,6 +95,35 @@ def _rex_worker(batches):
             "elapsed_ms", "error"])
 
 
+SIG_DDL = "doc_id bigint, text string, " + _SIG_FIELDS
+
+
+def _sig_worker(batches):
+    """(doc_id, text) batches → SIG_DDL rows: the text plus its 32 MinHash
+    values."""
+    for b in batches:
+        yield with_minhash(b)[["doc_id", "text", *SIG_NAMES]]
+
+
+def _rex_sig_worker(batches):
+    """Small docs in ONE Python pass: render → extract → MinHash."""
+    yield from _sig_worker(_rex_worker(batches))
+
+
+def render_extract_reassemble(named: DataFrame) -> DataFrame:
+    """(doc_id 'doc_NNNNNNNN', text) → (doc_id bigint, text) where the
+    output text made a full render→span-extraction→reassembly trip
+    through the PDF engine, in ONE fused worker (:func:`_rex_worker`): as
+    two chained MapInPandas nodes every rendered PDF (and its span
+    structs) would cross Python→JVM→Python through Arrow once for nothing
+    — the render here is only the synthetic source; a real corpus enters
+    at the extraction stage, which stays the standalone
+    pipeline.run_extraction. Map-only (no payload shuffle) and
+    streaming-capable (mapInPandas binds to micro-batches unchanged — see
+    the streaming integrated-path test)."""
+    return named.mapInPandas(_rex_worker, REX_DDL).select("doc_id", "text")
+
+
 def _make_splitter(part_chars: int):
     """Word-boundary splitter worker: (doc_id, text) → bounded parts."""
 
@@ -152,6 +149,38 @@ def _make_splitter(part_chars: int):
     return split_batches
 
 
+def _by_size(named: DataFrame, part_chars: int
+             ) -> tuple[DataFrame, DataFrame]:
+    """(small, big) (doc_id, text) frames: texts up to ``part_chars`` and
+    the oversized rest."""
+    d = named.select("doc_id", "text")
+    n = F.length(F.coalesce("text", F.lit("")))
+    return d.filter(n <= part_chars), d.filter(n > part_chars)
+
+
+def _big_parts_ext(big: DataFrame, part_chars: int) -> DataFrame:
+    """Oversized docs → word-boundary parts, each rendered and extracted
+    as its own atom (REX_DDL rows, ``multi`` true)."""
+    # range- (not hash-) partitioned: the part count is small, and hash
+    # buckets birthday-collide (2-3 atoms in one task defeats the split);
+    # ranges give ~one atom per partition
+    return (
+        big.mapInPandas(_make_splitter(part_chars), PARTS_DDL)
+        .repartitionByRange(F.col("doc_id"), F.col("part_idx"))
+        .mapInPandas(_rex_worker, REX_DDL)
+    )
+
+
+def _join_parts(multi: DataFrame) -> DataFrame:
+    """Multi-part rows → (doc_id, text): part_idx-ordered space join, the
+    token stream identical to the unsplit text."""
+    return multi.groupBy("doc_id").agg(F.array_join(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("part_idx", "text"))),
+            lambda s: s["text"],
+        ), " ").alias("text"))
+
+
 def render_extract_parts(named: DataFrame, part_chars: int = PART_CHARS
                          ) -> DataFrame:
     """Scale path for heavy-tailed corpora: texts longer than
@@ -167,45 +196,33 @@ def render_extract_parts(named: DataFrame, part_chars: int = PART_CHARS
     multi boolean, partition_id int, elapsed_ms bigint, error string) —
     the lineage columns feed per-partition straggler metrics (north-rule
     per-partition lineage, same convention as pipeline.run_extraction)."""
-    small = named.filter(
-        F.length(F.coalesce("text", F.lit(""))) <= part_chars)
-    big = named.filter(F.length(F.coalesce("text", F.lit(""))) > part_chars)
-    parts = big.mapInPandas(
-        _make_splitter(part_chars), PARTS_DDL
-    ).repartitionByRange(F.col("doc_id"), F.col("part_idx"))
-    # range- (not hash-) partitioned: the part count is small, and hash
-    # buckets birthday-collide (2-3 atoms in one task defeats the split);
-    # ranges give ~one atom per partition
-    return (
-        small.select("doc_id", "text").mapInPandas(_rex_worker, REX_DDL)
-        .unionByName(parts.mapInPandas(_rex_worker, REX_DDL))
-    )
+    small, big = _by_size(named, part_chars)
+    return small.mapInPandas(_rex_worker, REX_DDL).unionByName(
+        _big_parts_ext(big, part_chars))
 
 
 def reassemble_parts(parts_ext: DataFrame) -> DataFrame:
     """Part rows → (doc_id bigint, text): single-part docs pass through
-    shuffle-free; only the oversized slice aggregates (part_idx-ordered
-    space join — token stream identical to the unsplit text)."""
+    shuffle-free; only the oversized slice aggregates. Reads ``parts_ext``
+    twice — persist it first."""
     singles = parts_ext.filter(~F.col("multi")).select("doc_id", "text")
-    joined = (
-        parts_ext.filter(F.col("multi"))
-        .groupBy("doc_id")
-        .agg(F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("part_idx", "text"))),
-                lambda s: s["text"],
-            ), " ").alias("text"))
-    )
-    return singles.unionByName(joined)
+    return singles.unionByName(_join_parts(parts_ext.filter(F.col("multi"))))
 
 
 def render_extract_reassemble_scalable(named: DataFrame,
                                        part_chars: int = PART_CHARS
                                        ) -> DataFrame:
-    """Batch-mode render→extract→reassembly with the oversized-doc split
-    (streaming keeps :func:`render_extract_reassemble` — the reassembly
-    aggregate would need stateful semantics there)."""
-    return reassemble_parts(render_extract_parts(named, part_chars))
+    """Batch-mode render→extract→reassembly with the oversized-doc split,
+    plus the 32 MinHash values: (doc_id, text, h0..h31). Same shape as
+    the streaming twin (``streaming_render_extract_reassemble``): small
+    docs take one Python pass (:func:`_rex_sig_worker`) with no shuffle;
+    only oversized parts reach the reassembly aggregate, after which their
+    signatures come from the same :func:`with_minhash`. Every doc is
+    rendered and extracted exactly once per evaluation."""
+    small, big = _by_size(named, part_chars)
+    joined = _join_parts(_big_parts_ext(big, part_chars))
+    return small.mapInPandas(_rex_sig_worker, SIG_DDL).unionByName(
+        joined.mapInPandas(_sig_worker, SIG_DDL))
 
 
 def extracted_text_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -220,6 +237,7 @@ def extracted_text_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                  ).alias("doc_id"),
         "text",
     )
+    # ONE cached frame feeds both the dedup-hash and the band branches
     extracted = render_extract_reassemble_scalable(named).persist()
 
     # normalized dedup ON EXTRACTED TEXT (same normalization as
@@ -252,7 +270,7 @@ def extracted_text_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # MinHash LSH candidate partners ON EXTRACTED TEXT: count-gated
     # buckets (skew armor, same [2, MAX_BUCKET] gate as minhash_lsh_pairs)
     # → bounded member collect → distinct pairs → per-doc partner count.
-    bt = band_table(minhash_signatures_pandas(extracted)).persist()
+    bt = band_table(extracted)
     ok = (
         bt.groupBy("band", "band_hash")
         .agg(F.count(F.lit(1)).alias("n"))

@@ -57,15 +57,9 @@ def family_sql(i: int, expr: str) -> str:
     return f"(({A[i]} * {expr} + {B[i]}) % {P})"
 
 
-def fold(cols: list[Column]) -> Column:
-    """Order-dependent fold of h32-range values into one band key."""
-    acc: Column = F.lit(0).cast("long")
-    for c in cols:
-        acc = (acc * FOLD_MULT + c) % M
-    return acc
-
-
 def fold_sql(exprs: list[str]) -> str:
+    """Order-dependent fold of h32-range values into one band key, as SQL
+    text that Spark (``selectExpr``) and DuckDB both evaluate."""
     acc = "0"
     for e in exprs:
         acc = f"(({acc} * {FOLD_MULT} + {e}) % {M})"

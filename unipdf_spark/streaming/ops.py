@@ -249,14 +249,14 @@ def streaming_render_extract_reassemble(docs: DataFrame,
     map-only branch; a 1 MB document in a micro-batch no longer holds the
     trigger hostage on one core."""
     from ..operators.extracted import (PART_CHARS, PARTS_DDL, REX_DDL,
-                                       _make_splitter, _rex_worker)
+                                       _by_size, _make_splitter,
+                                       _rex_worker)
 
     pc = part_chars or PART_CHARS
-    small = docs.filter(F.length(F.coalesce("text", F.lit(""))) <= pc)
-    big = docs.filter(F.length(F.coalesce("text", F.lit(""))) > pc)
+    small, big = _by_size(docs, pc)
     parts = big.mapInPandas(_make_splitter(pc), PARTS_DDL).repartition(
         F.col("doc_id"), F.col("part_idx"))
-    ext_small = small.select("doc_id", "text").mapInPandas(
+    ext_small = small.mapInPandas(
         _rex_worker, REX_DDL).select("doc_id", "text")
     ext_big = (
         parts.mapInPandas(_rex_worker, REX_DDL)
