@@ -151,161 +151,103 @@ def _doc_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     covers every fixture class once; the geometry legs (term boxes, area)
     run on plain-Helvetica classes whose glyph layout the planner itself
     computes."""
-    import pandas as pd
-
     from unipdf_spark.fixtures import golden as G
     from unipdf_spark.operators import multimodal as mm
 
-    inv_docs = pipeline.gen_docs_pdf(spark, G.INV_N)
-    term_docs = pipeline.gen_docs_pdf(spark, G.TERM_N, mix=G.TERM_MIX)
-    vis_docs = pipeline.gen_docs_pdf(spark, G.VIS_N, mix=G.VIS_MIX)
-    list_docs = pipeline.gen_docs_pdf(spark, G.LIST_N, mix=G.LIST_MIX)
     out_schema = "doc_id string, page int, kind string, name string, value long"
 
-    def inv_batch(batches):
+    def inventory(doc_id, pdf_bytes):
         # ONE parse per doc feeds the font AND image inventories
         # (extract_document_profile — the SURVEY §3.2 'one interpretation'
         # principle)
         from unipdf_spark.pdf.extract import extract_document_profile
 
-        for b in batches:
-            rows = []
-            for doc_id, pdf_bytes in zip(b["doc_id"], b["pdf_bytes"]):
-                prof = extract_document_profile(bytes(pdf_bytes))
-                for pg in prof["pages"]:
-                    for name, subtype in pg["fonts"]:
-                        rows.append((doc_id, pg["page"], "font",
-                                     f"{name}/{subtype}", 1))
-                    for ref in pg["images"]:
-                        rows.append((doc_id, pg["page"], "image", ref, 1))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "page", "kind", "name", "value"]
-            )
+        rows = []
+        for pg in extract_document_profile(bytes(pdf_bytes))["pages"]:
+            for name, subtype in pg["fonts"]:
+                rows.append((doc_id, pg["page"], "font", f"{name}/{subtype}",
+                             1))
+            for ref in pg["images"]:
+                rows.append((doc_id, pg["page"], "image", ref, 1))
+        return rows
 
-    def term_batch(batches):
+    def term_boxes(doc_id, pdf_bytes):
         from unipdf_spark.pdf.extract import extract_document_profile
 
-        for b in batches:
-            rows = []
-            for doc_id, pdf_bytes in zip(b["doc_id"], b["pdf_bytes"]):
-                prof = extract_document_profile(
-                    bytes(pdf_bytes), terms=list(G.TERMS))
-                for m in prof["term_boxes"]:
-                    rows.append((
-                        doc_id, m["page"], "term_box",
-                        f"{m['term']}|{m['x0']:.1f},{m['y0']:.1f},"
-                        f"{m['x1']:.1f},{m['y1']:.1f}",
-                        m["line_offset"],
-                    ))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "page", "kind", "name", "value"]
-            )
+        prof = extract_document_profile(bytes(pdf_bytes), terms=list(G.TERMS))
+        return [(doc_id, m["page"], "term_box",
+                 f"{m['term']}|{m['x0']:.1f},{m['y0']:.1f},"
+                 f"{m['x1']:.1f},{m['y1']:.1f}",
+                 m["line_offset"])
+                for m in prof["term_boxes"]]
 
-    def vis_batch(batches):
+    def visibility(doc_id, pdf_bytes):
         from unipdf_spark.pdf.extract import extract_text_visibility
 
-        for b in batches:
-            rows = []
-            for doc_id, pdf_bytes in zip(b["doc_id"], b["pdf_bytes"]):
-                v = extract_text_visibility(bytes(pdf_bytes))
-                rows.append((doc_id, -1, "total_chars", "", v["n_chars"]))
-                rows.append((doc_id, -1, "invisible_chars", "",
-                             v["n_invisible"]))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "page", "kind", "name", "value"]
-            )
+        v = extract_text_visibility(bytes(pdf_bytes))
+        return [(doc_id, -1, "total_chars", "", v["n_chars"]),
+                (doc_id, -1, "invisible_chars", "", v["n_invisible"])]
 
-    def list_batch(batches):
+    def list_items(doc_id, pdf_bytes):
         from unipdf_spark.pdf.extract import extract_lists
 
-        for b in batches:
-            rows = []
-            for doc_id, pdf_bytes in zip(b["doc_id"], b["pdf_bytes"]):
-                for li, lst in enumerate(extract_lists(bytes(pdf_bytes))):
-                    for ii, item in enumerate(lst["items"]):
-                        rows.append((doc_id, li, "list_item",
-                                     f"{item['label']} {item['body']}", ii))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "page", "kind", "name", "value"]
-            )
+        return [(doc_id, li, "list_item", f"{item['label']} {item['body']}",
+                 ii)
+                for li, lst in enumerate(extract_lists(bytes(pdf_bytes)))
+                for ii, item in enumerate(lst["items"])]
 
-    def img_batch(batches):
+    def image_boxes(doc_id, pdf_bytes):
         # ExtractPageImages analog: placed image boxes (0.1pt-quantized
         # into the name key, like term boxes)
         from unipdf_spark.pdf.extract import extract_image_placements
 
-        for b in batches:
-            rows = []
-            for doc_id, pdf_bytes in zip(b["doc_id"], b["pdf_bytes"]):
+        return [(doc_id, m["page"], "image_box",
+                 f"{m['media_ref']}|{m['x0']:.1f},{m['y0']:.1f},"
+                 f"{m['x1']:.1f},{m['y1']:.1f}",
+                 i)
                 for i, m in enumerate(
-                        extract_image_placements(bytes(pdf_bytes))):
-                    rows.append((
-                        doc_id, m["page"], "image_box",
-                        f"{m['media_ref']}|{m['x0']:.1f},{m['y0']:.1f},"
-                        f"{m['x1']:.1f},{m['y1']:.1f}",
-                        i,
-                    ))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "page", "kind", "name", "value"]
-            )
+                    extract_image_placements(bytes(pdf_bytes)))]
 
-    inv = inv_docs.select("doc_id", "pdf_bytes").mapInPandas(
-        inv_batch, out_schema)
-    terms = term_docs.select("doc_id", "pdf_bytes").mapInPandas(
-        term_batch, out_schema)
-    vis = vis_docs.select("doc_id", "pdf_bytes").mapInPandas(
-        vis_batch, out_schema)
-    lst = list_docs.select("doc_id", "pdf_bytes").mapInPandas(
-        list_batch, out_schema)
-    imgs = pipeline.gen_docs_pdf(
-        spark, G.IMG_N, mix=G.IMG_MIX
-    ).select("doc_id", "pdf_bytes").mapInPandas(img_batch, out_schema)
-
-    def area_batch(batches):
+    def area_chars(doc_id, pdf_bytes):
         # ApplyArea analog (e:886): left-half-page extraction char count
         from unipdf_spark.pdf.extract import extract_spans
 
-        for b in batches:
-            rows = []
-            for doc_id, pdf_bytes in zip(b["doc_id"], b["pdf_bytes"]):
-                full = extract_spans(bytes(pdf_bytes))
-                half = extract_spans(bytes(pdf_bytes), area=G.AREA_RECT)
-                rows.append((doc_id, -1, "area_chars", "left_half",
-                             sum(len(s["text"]) for s in half.spans)))
-                rows.append((doc_id, -1, "full_chars", "",
-                             sum(len(s["text"]) for s in full.spans)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "page", "kind", "name", "value"]
-            )
+        full = extract_spans(bytes(pdf_bytes))
+        half = extract_spans(bytes(pdf_bytes), area=G.AREA_RECT)
+        return [(doc_id, -1, "area_chars", "left_half",
+                 sum(len(s["text"]) for s in half.spans)),
+                (doc_id, -1, "full_chars", "",
+                 sum(len(s["text"]) for s in full.spans))]
 
-    areas = pipeline.gen_docs_pdf(
-        spark, G.AREA_N, mix=G.AREA_MIX
-    ).select("doc_id", "pdf_bytes").mapInPandas(area_batch, out_schema)
-
-    def stroke_batch(batches):
+    def stroke_paths(doc_id, pdf_bytes):
         # dedicated stroked-rules corpus so ExtractStrokePaths coverage is
         # visible beyond the single rules doc in the default-mix floor
         from unipdf_spark.pdf.extract import extract_stroke_paths
 
-        for b in batches:
-            rows = []
-            for doc_id, pdf_bytes in zip(b["doc_id"], b["pdf_bytes"]):
-                for i, sp in enumerate(extract_stroke_paths(bytes(pdf_bytes))):
-                    r_, g_, b_ = sp["color"]
-                    px, py = sp["points"][0] if sp["points"] else (0.0, 0.0)
-                    rows.append((
-                        doc_id, sp["page"], "stroke_path",
-                        f"{r_:.2f},{g_:.2f},{b_:.2f}|n={len(sp['points'])}"
-                        f"|{px:.1f},{py:.1f}",
-                        i,
-                    ))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "page", "kind", "name", "value"]
-            )
+        rows = []
+        for i, sp in enumerate(extract_stroke_paths(bytes(pdf_bytes))):
+            r_, g_, b_ = sp["color"]
+            px, py = sp["points"][0] if sp["points"] else (0.0, 0.0)
+            rows.append((
+                doc_id, sp["page"], "stroke_path",
+                f"{r_:.2f},{g_:.2f},{b_:.2f}|n={len(sp['points'])}"
+                f"|{px:.1f},{py:.1f}",
+                i,
+            ))
+        return rows
 
-    strokes = pipeline.gen_docs_pdf(
-        spark, G.STROKE_N, mix=G.STROKE_MIX
-    ).select("doc_id", "pdf_bytes").mapInPandas(stroke_batch, out_schema)
+    def leg(n, mix, per_doc_fn):
+        docs = pipeline.gen_docs_pdf(spark, n, mix=mix)
+        return pipeline.map_docs(docs.select("doc_id", "pdf_bytes"),
+                                 per_doc_fn, out_schema)
+
+    inv = leg(G.INV_N, "default", inventory)
+    terms = leg(G.TERM_N, G.TERM_MIX, term_boxes)
+    vis = leg(G.VIS_N, G.VIS_MIX, visibility)
+    lst = leg(G.LIST_N, G.LIST_MIX, list_items)
+    imgs = leg(G.IMG_N, G.IMG_MIX, image_boxes)
+    areas = leg(G.AREA_N, G.AREA_MIX, area_chars)
+    strokes = leg(G.STROKE_N, G.STROKE_MIX, stroke_paths)
     media = mm.media_table_from_fixtures(spark, n_docs=G.MEDIA_N,
                                          mix=G.MEDIA_MIX)
     feats = mm.extract_features(media).select(

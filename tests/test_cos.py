@@ -605,8 +605,9 @@ def test_content_tokenizer_matches_reference_impl():
     produce byte-identical Operation lists to the pre-r11 per-token Lexer
     implementation across every fixture class (the full corpus A/B ran
     2107 streams / 0 divergent at the time of the change)."""
+    from content_reference import parse_content_reference
     from unipdf_spark.fixtures.gen import FIXTURE_CLASSES, make_doc
-    from unipdf_spark.pdf.content import parse_content, parse_content_reference
+    from unipdf_spark.pdf.content import parse_content
     from unipdf_spark.pdf.cos import PdfDocument
 
     n = 0
@@ -624,7 +625,8 @@ def test_content_tokenizer_edge_tokens():
     """Edge lexemes through both tokenizer implementations: hex-escaped
     names, comments, booleans/null, hex strings, nested arrays/dicts,
     malformed operands (relaxed skip)."""
-    from unipdf_spark.pdf.content import parse_content, parse_content_reference
+    from content_reference import parse_content_reference
+    from unipdf_spark.pdf.content import parse_content
 
     cases = [
         b"/N#41me 1 .5 -2. +3 Tf % comment\n(str\\)par) Tj",

@@ -6,6 +6,7 @@ from __future__ import annotations
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from unipdf_spark import pipeline
@@ -160,6 +161,35 @@ def test_checkpoint_partial_resume_one_pass(spark):
         docs_pdf.unpersist()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_checkpoint_resume_from_uncommitted_manifest(spark, tmp_path):
+    """A crash during the first manifest append leaves `_manifest/` holding
+    only Spark's `_temporary/`: resume reads that as no bucket done and
+    produces the full, span-equal output."""
+    out = str(tmp_path)
+    (tmp_path / "_manifest" / "_temporary" / "0").mkdir(parents=True)
+    docs_pdf = pipeline.gen_docs_pdf(spark, 12, partitions=2).persist()
+    pipeline.run_with_checkpoint(docs_pdf, out, partitions=2, buckets=4)
+    eq = pipeline.span_equality(
+        docs_pdf, pipeline.read_checkpointed(spark, out)).collect()
+    docs_pdf.unpersist()
+    assert len(eq) == 12 and all(r["match"] for r in eq)
+    done = spark.read.schema(pipeline.MANIFEST_DDL).parquet(
+        f"{out}/_manifest").collect()
+    assert sorted(r["bucket"] for r in done) == [0, 1, 2, 3]
+
+
+def test_checkpoint_corrupt_manifest_fails_loudly(spark, tmp_path):
+    """An unreadable manifest part must raise, not silently restart the
+    whole extraction from zero."""
+    out = str(tmp_path)
+    docs_pdf = pipeline.gen_docs_pdf(spark, 8, partitions=2)
+    pipeline.run_with_checkpoint(docs_pdf, out, partitions=2, buckets=2)
+    part = sorted((tmp_path / "_manifest").glob("part-*.parquet"))[0]
+    part.write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        pipeline.run_with_checkpoint(docs_pdf, out, partitions=2, buckets=2)
 
 
 # --- span_equality digest-compare equivalence (r11 optimization guard) -------

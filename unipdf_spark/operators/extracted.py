@@ -28,8 +28,11 @@ task).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..pipeline import doc_worker, map_docs
 from . import phash
 from .dedup import (
     MAX_BUCKET,
@@ -58,41 +61,24 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 PART_CHARS = 65536  # oversized-doc task atom: ~0.6 s render+extract each
 PARTS_DDL = "doc_id string, part_idx int, text string"
 REX_DDL = ("doc_id bigint, part_idx int, text string, multi boolean, "
-           "partition_id int, elapsed_ms bigint, error string")
+           "partition_id int, elapsed_ms double, error string")
+_WS = re.compile(r"\s+")
 
 
-def _rex_worker(batches):
-    """Fused render→extract→reassemble worker over (doc_id, text[,
-    part_idx]) rows — shared by the batch and streaming scale paths."""
-    import re
-    import time
-
-    import pandas as pd
-    from pyspark import TaskContext
-
+def _rex_worker(doc_id, *row):
+    """Fused render→extract→reassemble worker over one (doc_id, text)
+    row, or one (doc_id, part_idx, text) part of an oversized doc
+    (``multi``). Shared by the batch and streaming scale paths."""
     from ..fixtures.gen import make_text_doc
     from ..pdf.extract import extract_spans
 
-    pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-    ws = re.compile(r"\s+")
-    for b in batches:
-        rows = []
-        has_part = "part_idx" in b.columns
-        parts = b["part_idx"] if has_part else [0] * len(b)
-        for doc_id, text, part in zip(b["doc_id"], b["text"], parts):
-            t0 = time.perf_counter()
-            _golden, pdf = make_text_doc(doc_id, text or "")
-            res = extract_spans(pdf)
-            joined = " ".join(
-                s["text"] for s in res.spans if s["kind"] == "text")
-            rows.append((
-                int(doc_id[4:]), int(part),
-                ws.sub(" ", joined).strip(), has_part, pid,
-                int((time.perf_counter() - t0) * 1000), res.error,
-            ))
-        yield pd.DataFrame(rows, columns=[
-            "doc_id", "part_idx", "text", "multi", "partition_id",
-            "elapsed_ms", "error"])
+    multi = len(row) == 2
+    part, text = row if multi else (0, row[0])
+    _golden, pdf = make_text_doc(doc_id, text or "")
+    res = extract_spans(pdf)
+    joined = " ".join(s["text"] for s in res.spans if s["kind"] == "text")
+    return [(int(doc_id[4:]), int(part), _WS.sub(" ", joined).strip(),
+             multi, res.error)]
 
 
 SIG_DDL = "doc_id bigint, text string, " + _SIG_FIELDS
@@ -107,7 +93,7 @@ def _sig_worker(batches):
 
 def _rex_sig_worker(batches):
     """Small docs in ONE Python pass: render → extract → MinHash."""
-    yield from _sig_worker(_rex_worker(batches))
+    yield from _sig_worker(doc_worker(_rex_worker, REX_DDL)(batches))
 
 
 def render_extract_reassemble(named: DataFrame) -> DataFrame:
@@ -121,30 +107,24 @@ def render_extract_reassemble(named: DataFrame) -> DataFrame:
     pipeline.run_extraction. Map-only (no payload shuffle) and
     streaming-capable (mapInPandas binds to micro-batches unchanged — see
     the streaming integrated-path test)."""
-    return named.mapInPandas(_rex_worker, REX_DDL).select("doc_id", "text")
+    return map_docs(named, _rex_worker, REX_DDL).select("doc_id", "text")
 
 
 def _make_splitter(part_chars: int):
     """Word-boundary splitter worker: (doc_id, text) → bounded parts."""
 
-    def split_batches(batches):
-        import pandas as pd
-
-        for b in batches:
-            rows = []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                cur: list[str] = []
-                n = 0
-                idx = 0
-                for w in (text or "").split():
-                    if n + len(w) + 1 > part_chars and cur:
-                        rows.append((doc_id, idx, " ".join(cur)))
-                        idx += 1
-                        cur, n = [], 0
-                    cur.append(w)
-                    n += len(w) + 1
-                rows.append((doc_id, idx, " ".join(cur)))
-            yield pd.DataFrame(rows, columns=["doc_id", "part_idx", "text"])
+    def split_batches(doc_id, text):
+        rows = []
+        cur: list[str] = []
+        n = 0
+        for w in (text or "").split():
+            if n + len(w) + 1 > part_chars and cur:
+                rows.append((doc_id, len(rows), " ".join(cur)))
+                cur, n = [], 0
+            cur.append(w)
+            n += len(w) + 1
+        rows.append((doc_id, len(rows), " ".join(cur)))
+        return rows
 
     return split_batches
 
@@ -164,11 +144,9 @@ def _big_parts_ext(big: DataFrame, part_chars: int) -> DataFrame:
     # range- (not hash-) partitioned: the part count is small, and hash
     # buckets birthday-collide (2-3 atoms in one task defeats the split);
     # ranges give ~one atom per partition
-    return (
-        big.mapInPandas(_make_splitter(part_chars), PARTS_DDL)
-        .repartitionByRange(F.col("doc_id"), F.col("part_idx"))
-        .mapInPandas(_rex_worker, REX_DDL)
-    )
+    parts = map_docs(big, _make_splitter(part_chars), PARTS_DDL
+                     ).repartitionByRange(F.col("doc_id"), F.col("part_idx"))
+    return map_docs(parts, _rex_worker, REX_DDL)
 
 
 def _join_parts(multi: DataFrame) -> DataFrame:
@@ -193,11 +171,11 @@ def render_extract_parts(named: DataFrame, part_chars: int = PART_CHARS
     only the oversized slice pays a parts shuffle.
 
     Returns one row per part: (doc_id bigint, part_idx int, text,
-    multi boolean, partition_id int, elapsed_ms bigint, error string) —
+    multi boolean, partition_id int, elapsed_ms double, error string) —
     the lineage columns feed per-partition straggler metrics (north-rule
     per-partition lineage, same convention as pipeline.run_extraction)."""
     small, big = _by_size(named, part_chars)
-    return small.mapInPandas(_rex_worker, REX_DDL).unionByName(
+    return map_docs(small, _rex_worker, REX_DDL).unionByName(
         _big_parts_ext(big, part_chars))
 
 

@@ -2,11 +2,15 @@
 
 Design (SURVEY §3.1 "Spark lifecycle equivalent"):
 
-    scan → size-aware salted repartition → mapInPandas(extract_batch)
+    scan → size-aware salted repartition → map_docs(extract_doc)
          → spans_out (+ per-partition lineage/metrics) → sink / verification
 
 All tokenize/classify work happens inside Arrow-batched Python workers — never
-per-row Python in the driver plan. The only cross-document relational ops are
+per-row Python in the driver plan. Every per-doc stage in the package (render,
+extract, tables, media decode, HTML strip, corpus ingest) has one worker
+shape, :func:`map_docs`: a per-doc function over one input row's values,
+with the batch loop, output columns and lineage columns (``partition_id``,
+``elapsed_ms``) owned by the helper. The only cross-document relational ops are
 the explicit salted repartition, the verification join, and checkpoint
 bookkeeping (manifest anti-join), exactly the set called out in SURVEY §2.5.
 
@@ -59,50 +63,121 @@ def get_spark(app: str = "unipdf-spark", cores: int | None = None,
     return b.getOrCreate()
 
 
+# --- the one Arrow worker shape ----------------------------------------------
+
+
+def ddl_columns(ddl: str) -> list[str]:
+    """Top-level column names of a Spark DDL string. Commas nested inside
+    ``<…>`` or ``(…)`` separate struct fields or type arguments, not
+    columns."""
+    names, depth, start = [], 0, 0
+    for i, ch in enumerate(ddl + ","):
+        if ch in "<(":
+            depth += 1
+        elif ch in ">)":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            names.append(ddl[start:i].split()[0])
+            start = i + 1
+    return names
+
+
+def doc_worker(per_doc_fn, ddl: str):
+    """The Arrow batch function :func:`map_docs` runs: calls
+    ``per_doc_fn(*row)`` for every input row and stacks the rows it
+    returns into ``ddl``-shaped frames. ``per_doc_fn`` returns the
+    doc's output rows (a list, possibly empty) in DDL column order
+    without ``partition_id`` and ``elapsed_ms``; where the DDL names
+    those columns, the worker fills in the task's partition id (-1
+    outside a task) and the wall ms ``per_doc_fn`` took for that doc.
+    The function carries ``per_doc_fn``'s name, which is the UDF name
+    Spark prints in plans."""
+    cols = ddl_columns(ddl)
+    doc_cols = [c for c in cols if c not in ("partition_id", "elapsed_ms")]
+    tagged = "partition_id" in cols
+    timed = "elapsed_ms" in cols
+
+    def batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        pid = ctx.partitionId() if ctx else -1
+        for b in batches:
+            rows: list = []
+            elapsed: list[float] = []
+            for values in zip(*(b[c] for c in b.columns)):
+                t0 = time.perf_counter()
+                out = per_doc_fn(*values)
+                if timed:
+                    ms = (time.perf_counter() - t0) * 1000.0
+                    elapsed.extend([ms] * len(out))
+                rows.extend(out)
+            frame = pd.DataFrame(rows, columns=doc_cols)
+            if tagged:
+                frame["partition_id"] = pid
+            if timed:
+                frame["elapsed_ms"] = elapsed
+            yield frame[cols]
+
+    batch_fn.__name__ = per_doc_fn.__name__
+    return batch_fn
+
+
+def map_docs(df: DataFrame, per_doc_fn, ddl: str) -> DataFrame:
+    """``df`` → ``ddl`` rows, one ``per_doc_fn`` call per input row inside
+    an Arrow-batched ``mapInPandas`` worker (:func:`doc_worker`); ``df``'s
+    columns, in order, are ``per_doc_fn``'s arguments. Every per-doc stage
+    goes through here; ``per_doc_fn`` keeps its own per-row error
+    handling."""
+    return df.mapInPandas(doc_worker(per_doc_fn, ddl), schema=ddl)
+
+
 # --- distributed fixture generation ------------------------------------------
+
+DOCS_PDF_GOLDEN_DDL = (
+    schema.DOCS_PDF_DDL
+    + ", golden_spans array<struct<kind:string,text:string,"
+      "media_ref:string,offset:int>>"
+)
+
+
+def _span_tuples(spans) -> list[tuple]:
+    return [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans]
+
+
+def _render_docs(df: DataFrame, make_doc) -> DataFrame:
+    """The render stage of every docs_pdf source: ``make_doc(*row)``
+    returns ``(doc_id, fixture_class, golden_spans, pdf_bytes)`` for one
+    input row, rendered on the executors; the output carries the golden
+    spans that :func:`span_equality` checks extraction against."""
+
+    def render_doc(*row):
+        doc_id, cls, golden, pdf_bytes = make_doc(*row)
+        return [(doc_id, pdf_bytes, len(golden), cls, _span_tuples(golden))]
+
+    return map_docs(df, render_doc, DOCS_PDF_GOLDEN_DDL)
 
 
 def gen_docs_pdf(spark: SparkSession, n_docs: int, seed: int = 42,
                  mix="default", partitions: int | None = None) -> DataFrame:
-    """Distributed fixture corpus: spark.range → mapInPandas(render).
+    """Distributed fixture corpus: spark.range → render.
     Generation is a pure function of (seed, doc_id) so any executor can
     (re)produce any doc — no driver-side rendering, no broadcast payloads."""
     parts = partitions or spark.sparkContext.defaultParallelism
 
-    def render_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_fixture(i):
         from .fixtures import gen
 
         if isinstance(mix, list):  # explicit [(class, weight), ...]
             use_mix = mix
         else:
             use_mix = gen.BENCH_MIX if mix == "bench" else gen.DEFAULT_MIX
-        for pdf_batch in batches:
-            rows = []
-            for i in pdf_batch["id"]:
-                i = int(i)
-                doc_id = f"doc_{i:08d}"
-                cls = gen._class_for(i, use_mix)
-                golden, pdf_bytes = gen.make_doc(doc_id, cls, seed)
-                rows.append(
-                    (doc_id, pdf_bytes, len(golden), cls,
-                     [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                      for s in golden])
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "pdf_bytes", "n_spans", "fixture_class",
-                         "golden_spans"],
-            )
+        doc_id = f"doc_{i:08d}"
+        cls = gen._class_for(i, use_mix)
+        return (doc_id, cls, *gen.make_doc(doc_id, cls, seed))
 
-    out_schema = (
-        schema.DOCS_PDF_DDL
-        + ", golden_spans array<struct<kind:string,text:string,"
-          "media_ref:string,offset:int>>"
-    )
-    return (
-        spark.range(0, n_docs, numPartitions=parts)
-        .mapInPandas(render_batch, schema=out_schema)
-    )
+    return _render_docs(spark.range(0, n_docs, numPartitions=parts),
+                        make_fixture)
 
 
 def docs_pdf_from_documents(spark: SparkSession, sf_dir: str,
@@ -118,53 +193,13 @@ def docs_pdf_from_documents(spark: SparkSession, sf_dir: str,
         "text",
     )
 
-    def render_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_external(doc_id, text):
         from .fixtures import gen
 
-        for b in batches:
-            rows = []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                golden, pdf_bytes = gen.make_text_doc(doc_id, text or "")
-                rows.append(
-                    (doc_id, pdf_bytes, len(golden), "external_text",
-                     [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                      for s in golden])
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "pdf_bytes", "n_spans", "fixture_class",
-                         "golden_spans"],
-            )
+        return (doc_id, "external_text",
+                *gen.make_text_doc(doc_id, text or ""))
 
-    out_schema = (
-        schema.DOCS_PDF_DDL
-        + ", golden_spans array<struct<kind:string,text:string,"
-          "media_ref:string,offset:int>>"
-    )
-    return docs.mapInPandas(render_batch, schema=out_schema)
-
-
-def docs_pdf_from_text(docs: DataFrame) -> DataFrame:
-    """(doc_id string, text) → rendered PDFs (distributed), WITHOUT golden
-    spans: the render stage for text→PDF→extract→curate round trips
-    (operators.extracted), where correctness is proven downstream against
-    the original text instead of per-span goldens — leaner Arrow traffic."""
-
-    def render_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .fixtures import gen
-
-        for b in batches:
-            rows = []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                golden, pdf_bytes = gen.make_text_doc(doc_id, text or "")
-                rows.append((doc_id, pdf_bytes, len(golden), "external_text"))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "pdf_bytes", "n_spans", "fixture_class"],
-            )
-
-    return docs.select("doc_id", "text").mapInPandas(
-        render_batch, schema=schema.DOCS_PDF_DDL)
+    return _render_docs(docs, make_external)
 
 
 def docs_pdf_from_spans_table(docs: DataFrame) -> DataFrame:
@@ -174,35 +209,17 @@ def docs_pdf_from_spans_table(docs: DataFrame) -> DataFrame:
     golden spans (text normalized to the renderable subset; media payloads
     derived from the opaque input refs — see fixtures.gen.make_spans_doc)."""
 
-    def render_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_from_spans(doc_id, spans):
         from .fixtures.gen import make_spans_doc
 
-        for b in batches:
-            rows = []
-            for doc_id, spans in zip(b["doc_id"], b["spans"]):
-                span_dicts = [
-                    {"kind": s["kind"], "text": s["text"],
-                     "media_ref": s["media_ref"], "offset": s["offset"]}
-                    for s in spans
-                ]
-                golden, pdf_bytes = make_spans_doc(doc_id, span_dicts)
-                rows.append(
-                    (doc_id, pdf_bytes, len(golden), "spans_table",
-                     [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                      for s in golden])
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "pdf_bytes", "n_spans", "fixture_class",
-                         "golden_spans"],
-            )
+        span_dicts = [
+            {"kind": s["kind"], "text": s["text"],
+             "media_ref": s["media_ref"], "offset": s["offset"]}
+            for s in spans
+        ]
+        return (doc_id, "spans_table", *make_spans_doc(doc_id, span_dicts))
 
-    out_schema = (
-        schema.DOCS_PDF_DDL
-        + ", golden_spans array<struct<kind:string,text:string,"
-          "media_ref:string,offset:int>>"
-    )
-    return docs.mapInPandas(render_batch, schema=out_schema)
+    return _render_docs(docs.select("doc_id", "spans"), make_from_spans)
 
 
 # --- extraction stage -----------------------------------------------------------
@@ -220,37 +237,14 @@ def salted_repartition(df: DataFrame, partitions: int,
     return df.repartition(partitions, F.xxhash64(F.col("doc_id")))
 
 
-def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: pdf_bytes → spans (+metrics). Pure Python/NumPy
-    inside Arrow batches; no Spark calls (ArrowEvalPython stage)."""
-    from pyspark import TaskContext
-
+def extract_doc(doc_id, pdf_bytes):
+    """Per-doc extraction worker: pdf_bytes → one SPANS_OUT_DDL row. Pure
+    Python inside Arrow batches; no Spark calls."""
     from .pdf.extract import extract_spans
 
-    pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-    for b in batches:
-        rows = []
-        for doc_id, pdf_bytes in zip(b["doc_id"], b["pdf_bytes"]):
-            t0 = time.perf_counter()
-            res = extract_spans(bytes(pdf_bytes))
-            dt = (time.perf_counter() - t0) * 1000.0
-            rows.append(
-                (
-                    doc_id,
-                    [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                     for s in res.spans],
-                    res.n_chars,
-                    res.n_misses,
-                    pid,
-                    dt,
-                    res.error,
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "spans", "n_chars", "n_misses", "partition_id",
-                     "elapsed_ms", "error"],
-        )
+    res = extract_spans(bytes(pdf_bytes))
+    return [(doc_id, _span_tuples(res.spans), res.n_chars, res.n_misses,
+             res.error)]
 
 
 def run_extraction(docs_pdf: DataFrame, partitions: int | None = None,
@@ -274,36 +268,29 @@ def run_extraction(docs_pdf: DataFrame, partitions: int | None = None,
             df = df.coalesce(partitions)
         elif partitions > cur:
             df = df.repartition(partitions)
-    return df.mapInPandas(extract_batch, schema=schema.SPANS_OUT_DDL)
+    return map_docs(df, extract_doc, schema.SPANS_OUT_DDL)
 
 
 TABLE_CELLS_DDL = "doc_id string, table_idx int, row int, col int, cell string"
 
 
-def table_cells_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: pdf_bytes → one row per (table, row, col) cell —
+def table_cells_doc(doc_id, pdf_bytes):
+    """Per-doc worker: pdf_bytes → one row per (table, row, col) cell —
     the TextTable/TableCell structured API (extractor.go:35/:899) lifted to
     a relational shape."""
     from .pdf.extract import extract_tables
 
-    for b in batches:
-        rows = []
-        for doc_id, pdf_bytes in zip(b["doc_id"], b["pdf_bytes"]):
-            for ti, t in enumerate(extract_tables(bytes(pdf_bytes))):
-                for r, rowvals in enumerate(t["cells"]):
-                    for c, cell in enumerate(rowvals):
-                        rows.append((doc_id, ti, r, c, cell))
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "table_idx", "row", "col", "cell"]
-        )
+    return [(doc_id, ti, r, c, cell)
+            for ti, t in enumerate(extract_tables(bytes(pdf_bytes)))
+            for r, rowvals in enumerate(t["cells"])
+            for c, cell in enumerate(rowvals)]
 
 
 def run_table_extraction(docs_pdf: DataFrame) -> DataFrame:
     """Structured table cells for every detected table (map-only, same
     no-payload-shuffle policy as run_extraction)."""
-    return docs_pdf.select("doc_id", "pdf_bytes").mapInPandas(
-        table_cells_batch, schema=TABLE_CELLS_DDL
-    )
+    return map_docs(docs_pdf.select("doc_id", "pdf_bytes"), table_cells_doc,
+                    TABLE_CELLS_DDL)
 
 
 def partition_lineage(spans_out: DataFrame) -> DataFrame:
@@ -386,6 +373,9 @@ def span_equality(docs_pdf: DataFrame, spans_out: DataFrame) -> DataFrame:
 # --- checkpoint / resume ---------------------------------------------------------
 
 
+MANIFEST_DDL = "bucket int, n_docs long, elapsed_s double, finished_at double"
+
+
 def run_with_checkpoint(docs_pdf: DataFrame, out_dir: str,
                         partitions: int | None = None,
                         buckets: int = 16,
@@ -414,11 +404,10 @@ def run_with_checkpoint(docs_pdf: DataFrame, out_dir: str,
     spans_dir = os.path.join(out_dir, "spans")
     done: set[int] = set()
     if os.path.isdir(manifest_dir):
-        try:
-            mdf = spark.read.parquet(manifest_dir)
-            done = {r["bucket"] for r in mdf.select("bucket").collect()}
-        except Exception:
-            done = set()
+        # an explicit schema reads a manifest dir holding no committed part
+        # yet (only `_temporary/`) as empty; an unreadable part raises
+        mdf = spark.read.schema(MANIFEST_DDL).parquet(manifest_dir)
+        done = {r["bucket"] for r in mdf.select("bucket").collect()}
     pending = [b for b in range(buckets) if b not in done]
     if not pending:
         return
@@ -449,7 +438,7 @@ def run_with_checkpoint(docs_pdf: DataFrame, out_dir: str,
         }
         lineage = spark.createDataFrame(
             [(b, counts.get(b, 0), elapsed, time.time()) for b in batch],
-            "bucket int, n_docs long, elapsed_s double, finished_at double",
+            MANIFEST_DDL,
         )
         lineage.write.mode("append").parquet(manifest_dir)
 

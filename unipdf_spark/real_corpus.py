@@ -19,21 +19,19 @@ Spark-first shape (scale notes):
 * Format sniffing is JVM-side column logic over the first 2 KiB (magic
   bytes beat extensions: a ``.bin`` that starts with ``%PDF-`` is a PDF;
   ``%PDF-`` may sit after transport junk, which the parser rebases).
-* Extraction reuses the SAME Arrow-batched ``mapInPandas`` worker shape
-  as the main pipeline (pipeline.extract_batch): per-document errors are
-  rows, not task failures (relaxed-mode philosophy, core/core.go:389).
+* Extraction runs through the one Arrow-batched worker shape,
+  ``pipeline.map_docs``, like every per-doc stage: per-document errors
+  are rows, not task failures (relaxed-mode philosophy, core/core.go:389).
 * The report aggregates DataFrame-side (groupBy/approxQuantile); only the
   tiny aggregate ever reaches the driver.
 """
 
 from __future__ import annotations
 
-import time
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .pipeline import map_docs
 
 CORPUS_RESULT_DDL = (
     "path string, doc_id string, kind string, n_bytes long, ok boolean, "
@@ -83,93 +81,75 @@ def read_corpus_dir(spark: SparkSession, corpus_dir: str,
     )
 
 
-def _extract_outcome_batch(batches: Iterator[pd.DataFrame]
-                           ) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: (path, kind, content, n_bytes) → outcome row.
+def _outcome_row(path, kind, content, n_bytes):
+    """Per-file worker: (path, kind, content, n_bytes) → outcome row.
     Every document yields exactly one row; exceptions become the row's
     ``error`` (corpus-scale rule: one bad file must not fail a task)."""
     from .html_extract import main_content
     from .pdf.extract import extract_spans
 
-    for b in batches:
-        rows = []
-        for path, kind, content, n_bytes in zip(
-                b["path"], b["kind"], b["content"], b["n_bytes"]):
-            data = bytes(content)
-            t0 = time.perf_counter()
-            ok, err = False, None
-            n_spans = n_text = n_media = n_miss = 0
-            try:
-                if kind == "pdf":
-                    res = extract_spans(data)
-                    err = res.error
-                    ok = err is None
-                    n_spans = len(res.spans)
-                    n_text = res.n_chars
-                    n_media = sum(1 for s in res.spans
-                                  if s["kind"] == "media")
-                    n_miss = res.n_misses
-                elif kind == "html":
-                    text = main_content(
-                        data.decode("utf-8", errors="replace"))
-                    ok = True
-                    n_spans = 1 if text else 0
-                    n_text = len(text)
-                else:
-                    err = "unknown format (no %PDF- magic, no HTML root)"
-            except Exception as e:  # harness guarantee: rows, not raises
-                err, ok = f"{type(e).__name__}: {e}", False
-            # doc_id == full path in BOTH the outcome and spans tables so
-            # they join on doc_id; a basename id collides for same-named
-            # files in different subdirectories
-            rows.append((path, path, kind, int(n_bytes),
-                         ok, err, n_spans, n_text, n_media, n_miss,
-                         (time.perf_counter() - t0) * 1000.0))
-        yield pd.DataFrame(rows, columns=[
-            "path", "doc_id", "kind", "n_bytes", "ok", "error", "n_spans",
-            "n_text_chars", "n_media", "n_misses", "elapsed_ms"])
+    data = bytes(content)
+    ok, err = False, None
+    n_spans = n_text = n_media = n_miss = 0
+    try:
+        if kind == "pdf":
+            res = extract_spans(data)
+            err = res.error
+            ok = err is None
+            n_spans = len(res.spans)
+            n_text = res.n_chars
+            n_media = sum(1 for s in res.spans if s["kind"] == "media")
+            n_miss = res.n_misses
+        elif kind == "html":
+            text = main_content(data.decode("utf-8", errors="replace"))
+            ok = True
+            n_spans = 1 if text else 0
+            n_text = len(text)
+        else:
+            err = "unknown format (no %PDF- magic, no HTML root)"
+    except Exception as e:  # harness guarantee: rows, not raises
+        err, ok = f"{type(e).__name__}: {e}", False
+    # doc_id == full path in BOTH the outcome and spans tables so they
+    # join on doc_id; a basename id collides for same-named files in
+    # different subdirectories
+    return [(path, path, kind, int(n_bytes), ok, err, n_spans, n_text,
+             n_media, n_miss)]
 
 
-def _extract_spans_batch(batches: Iterator[pd.DataFrame]
-                         ) -> Iterator[pd.DataFrame]:
+def _spans_row(path, kind, content):
     """Heavier variant: full span payloads (for writing a spans table)."""
     from .html_extract import main_content
     from .pdf.extract import extract_spans
 
-    for b in batches:
-        rows = []
-        for path, kind, content in zip(b["path"], b["kind"], b["content"]):
-            data = bytes(content)
-            spans, err = [], None
-            try:
-                if kind == "pdf":
-                    res = extract_spans(data)
-                    err = res.error
-                    spans = [(s["kind"], s["text"], s["media_ref"],
-                              s["offset"]) for s in res.spans]
-                elif kind == "html":
-                    text = main_content(
-                        data.decode("utf-8", errors="replace"))
-                    if text:
-                        spans = [("text", text, "", 0)]
-                else:
-                    err = "unknown format"
-            except Exception as e:
-                err = f"{type(e).__name__}: {e}"
-            rows.append((path, spans, err))
-        yield pd.DataFrame(rows, columns=["doc_id", "spans", "error"])
+    data = bytes(content)
+    spans, err = [], None
+    try:
+        if kind == "pdf":
+            res = extract_spans(data)
+            err = res.error
+            spans = [(s["kind"], s["text"], s["media_ref"], s["offset"])
+                     for s in res.spans]
+        elif kind == "html":
+            text = main_content(data.decode("utf-8", errors="replace"))
+            if text:
+                spans = [("text", text, "", 0)]
+        else:
+            err = "unknown format"
+    except Exception as e:
+        err = f"{type(e).__name__}: {e}"
+    return [(path, spans, err)]
 
 
 def extract_corpus(corpus: DataFrame) -> DataFrame:
     """Per-document outcome rows (one per input file, guaranteed)."""
-    return corpus.mapInPandas(_extract_outcome_batch,
-                              schema=CORPUS_RESULT_DDL)
+    return map_docs(corpus.select("path", "kind", "content", "n_bytes"),
+                    _outcome_row, CORPUS_RESULT_DDL)
 
 
 def extract_corpus_spans(corpus: DataFrame) -> DataFrame:
     """Per-document span payloads (doc_id = file path)."""
-    return corpus.select("path", "kind", "content").mapInPandas(
-        _extract_spans_batch, schema=CORPUS_SPANS_DDL)
+    return map_docs(corpus.select("path", "kind", "content"),
+                    _spans_row, CORPUS_SPANS_DDL)
 
 
 def corpus_report(outcomes: DataFrame, corpus_dir: str = "") -> str:

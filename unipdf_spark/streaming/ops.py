@@ -13,7 +13,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .. import schema
+from ..pipeline import map_docs, run_extraction
 
 SESSION_GAP_S = 1800
 
@@ -114,14 +114,11 @@ def streaming_sessionize(events: DataFrame) -> DataFrame:
 
 
 def streaming_extract(docs_pdf: DataFrame) -> DataFrame:
-    """Streaming span extraction: the SAME Arrow-batched extract_batch stage
-    bound to a streaming source — micro-batch continuous ingestion of
-    documents (checkpointing comes from the sink's checkpointLocation)."""
-    from ..pipeline import extract_batch
-
-    return docs_pdf.select("doc_id", "pdf_bytes").mapInPandas(
-        extract_batch, schema=schema.SPANS_OUT_DDL
-    )
+    """Streaming span extraction: the SAME Arrow-batched extraction stage
+    (pipeline.run_extraction) bound to a streaming source — micro-batch
+    continuous ingestion of documents (checkpointing comes from the sink's
+    checkpointLocation)."""
+    return run_extraction(docs_pdf)
 
 
 DEDUP_OUT_SCHEMA = "text_hash string, doc_id string, is_new boolean"
@@ -254,12 +251,11 @@ def streaming_render_extract_reassemble(docs: DataFrame,
 
     pc = part_chars or PART_CHARS
     small, big = _by_size(docs, pc)
-    parts = big.mapInPandas(_make_splitter(pc), PARTS_DDL).repartition(
+    parts = map_docs(big, _make_splitter(pc), PARTS_DDL).repartition(
         F.col("doc_id"), F.col("part_idx"))
-    ext_small = small.mapInPandas(
-        _rex_worker, REX_DDL).select("doc_id", "text")
+    ext_small = map_docs(small, _rex_worker, REX_DDL).select("doc_id", "text")
     ext_big = (
-        parts.mapInPandas(_rex_worker, REX_DDL)
+        map_docs(parts, _rex_worker, REX_DDL)
         .groupBy("doc_id")
         .applyInPandasWithState(
             _reassemble_fn,
