@@ -80,12 +80,7 @@ def resume_drill(n_docs: int, cores: int) -> dict:
                 break
         p.wait()
         killed = saw_start and p.returncode != 0
-        # partial state?
-        manifest = os.path.join(out_b, "_manifest")
-        partial_buckets = 0
-        if os.path.isdir(manifest):
-            partial_buckets = sum(
-                1 for f in os.listdir(manifest) if f.endswith(".parquet"))
+        partial_buckets = len(pipeline.committed_buckets(out_b, 16))
 
         spark = pipeline.get_spark("drill", cores=cores)
         spark.sparkContext.setLogLevel("ERROR")

@@ -51,6 +51,17 @@ def test_dedup_exact_finds_injected_duplicates(spark):
     assert sorted(out.values()) == [(1, 3), (3, 1)]
 
 
+def _shingles(col, n: int = 3):
+    """Distinct word n-gram shingles from a text column."""
+    from pyspark.sql import functions as F
+
+    toks = F.filter(F.split(F.lower(col), r"\s+"), lambda x: x != "")
+    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
+    return F.array_distinct(
+        F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, n), " "))
+    )
+
+
 def test_minhash_similar_docs_collide(spark):
     """Two near-identical docs must share LSH buckets; a disjoint doc not.
     Uses the operator's portable hash families (phash)."""
@@ -58,7 +69,7 @@ def test_minhash_similar_docs_collide(spark):
     from pyspark.sql import functions as F
 
     from unipdf_spark.operators import phash
-    from unipdf_spark.operators.dedup import BAND_SIZE, N_HASHES, _shingles
+    from unipdf_spark.operators.dedup import BAND_SIZE, N_HASHES
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
     near = base.replace("kappa", "kappa2", 1)

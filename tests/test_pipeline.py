@@ -3,8 +3,11 @@ join, checkpoint/resume idempotence, skew isolation."""
 
 from __future__ import annotations
 
+import json
+import os
 import shutil
 import tempfile
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -51,20 +54,17 @@ def test_checkpoint_resume_idempotent(spark):
     tmp2 = tempfile.mkdtemp()
     try:
         docs_pdf = pipeline.gen_docs_pdf(spark, 30, partitions=4).persist()
-        # full run
-        pipeline.run_with_checkpoint(docs_pdf, tmp1, partitions=2, buckets=4)
+        pipeline.run_with_checkpoint(docs_pdf, tmp1, buckets=4)
         full = {
             r["doc_id"]: r["spans"]
             for r in pipeline.read_checkpointed(spark, tmp1).collect()
         }
-        # interrupted run: pre-seed manifest as if buckets 0,1 completed,
-        # then "resume" — only remaining buckets are processed
-        pipeline.run_with_checkpoint(docs_pdf, tmp2, partitions=2, buckets=4)
-        mdf = spark.read.parquet(f"{tmp2}/_manifest")
-        assert mdf.count() == 4
-        # resume on a complete manifest is a no-op (no new manifest rows)
-        pipeline.run_with_checkpoint(docs_pdf, tmp2, partitions=2, buckets=4)
-        assert spark.read.parquet(f"{tmp2}/_manifest").count() == 4
+        pipeline.run_with_checkpoint(docs_pdf, tmp2, buckets=4)
+        assert pipeline.committed_buckets(tmp2) == {0, 1, 2, 3}
+        log = sorted(os.listdir(f"{tmp2}/_commits"))
+        # resume on a complete log is a no-op (no new commit)
+        pipeline.run_with_checkpoint(docs_pdf, tmp2, buckets=4)
+        assert sorted(os.listdir(f"{tmp2}/_commits")) == log
         resumed = {
             r["doc_id"]: r["spans"]
             for r in pipeline.read_checkpointed(spark, tmp2).collect()
@@ -126,6 +126,13 @@ def test_partition_lineage_metrics(spark):
         assert r["total_chars"] > 0
 
 
+def _bucket_files(out: str, buckets) -> dict:
+    """Span part files of ``buckets`` with their mtimes: unchanged iff a
+    run left those buckets alone."""
+    return {f: f.stat().st_mtime_ns for b in buckets
+            for f in Path(out, "spans", f"bucket={b}").iterdir()}
+
+
 def test_checkpoint_partial_resume_one_pass(spark):
     """Crash simulation: two buckets survive, two are lost — resume must
     re-extract ONLY the lost buckets (one pass) and reproduce the full
@@ -133,26 +140,22 @@ def test_checkpoint_partial_resume_one_pass(spark):
     tmp = tempfile.mkdtemp()
     try:
         docs_pdf = pipeline.gen_docs_pdf(spark, 30, partitions=4).persist()
-        pipeline.run_with_checkpoint(docs_pdf, tmp, partitions=2, buckets=4)
+        pipeline.run_with_checkpoint(docs_pdf, tmp, buckets=4)
         full = {
             r["doc_id"]: r["spans"]
             for r in pipeline.read_checkpointed(spark, tmp).collect()
         }
-        # drop buckets 2 and 3 from the manifest and the span store
-        kept = [
-            (r["bucket"], r["n_docs"], r["elapsed_s"], r["finished_at"])
-            for r in spark.read.parquet(f"{tmp}/_manifest").collect()
-            if r["bucket"] < 2
-        ]
-        shutil.rmtree(f"{tmp}/_manifest")
-        spark.createDataFrame(
-            kept, "bucket int, n_docs long, elapsed_s double, finished_at double"
-        ).write.parquet(f"{tmp}/_manifest")
+        # the commit names only buckets 0 and 1; the spans of 2 and 3 are gone
+        (commit,) = Path(tmp, "_commits").glob("*.json")
+        commit.write_text(json.dumps(
+            {**json.loads(commit.read_text()), "buckets": [0, 1]}))
         for b in (2, 3):
             shutil.rmtree(f"{tmp}/spans/bucket={b}")
-        pipeline.run_with_checkpoint(docs_pdf, tmp, partitions=2, buckets=4)
-        mrows = spark.read.parquet(f"{tmp}/_manifest").collect()
-        assert sorted(r["bucket"] for r in mrows) == [0, 1, 2, 3]
+        kept = _bucket_files(tmp, (0, 1))
+        pipeline.run_with_checkpoint(docs_pdf, tmp, buckets=4)
+        assert pipeline.committed_buckets(tmp) == {0, 1, 2, 3}
+        assert len(list(Path(tmp, "_commits").glob("*.json"))) == 2
+        assert _bucket_files(tmp, (0, 1)) == kept
         resumed = {
             r["doc_id"]: r["spans"]
             for r in pipeline.read_checkpointed(spark, tmp).collect()
@@ -163,33 +166,107 @@ def test_checkpoint_partial_resume_one_pass(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_checkpoint_resume_from_uncommitted_manifest(spark, tmp_path):
-    """A crash during the first manifest append leaves `_manifest/` holding
-    only Spark's `_temporary/`: resume reads that as no bucket done and
+def test_checkpoint_resume_from_stray_temp_commit(spark, tmp_path):
+    """A crash during the first commit leaves only its half-written temp
+    file in `_commits/`: that is no commit, so resume starts from zero and
     produces the full, span-equal output."""
     out = str(tmp_path)
-    (tmp_path / "_manifest" / "_temporary" / "0").mkdir(parents=True)
+    (tmp_path / "_commits").mkdir()
+    (tmp_path / "_commits" / ".00000.json.tmp").write_text('{"buckets": [0,')
+    assert pipeline.committed_buckets(out) == set()
     docs_pdf = pipeline.gen_docs_pdf(spark, 12, partitions=2).persist()
-    pipeline.run_with_checkpoint(docs_pdf, out, partitions=2, buckets=4)
+    pipeline.run_with_checkpoint(docs_pdf, out, buckets=4)
     eq = pipeline.span_equality(
         docs_pdf, pipeline.read_checkpointed(spark, out)).collect()
     docs_pdf.unpersist()
     assert len(eq) == 12 and all(r["match"] for r in eq)
-    done = spark.read.schema(pipeline.MANIFEST_DDL).parquet(
-        f"{out}/_manifest").collect()
-    assert sorted(r["bucket"] for r in done) == [0, 1, 2, 3]
+    assert pipeline.committed_buckets(out) == {0, 1, 2, 3}
 
 
-def test_checkpoint_corrupt_manifest_fails_loudly(spark, tmp_path):
-    """An unreadable manifest part must raise, not silently restart the
-    whole extraction from zero."""
+def test_checkpoint_corrupt_commit_fails_loudly(spark, tmp_path):
+    """An unreadable commit must raise, in resume and in readers, not
+    silently restart the whole extraction from zero."""
     out = str(tmp_path)
     docs_pdf = pipeline.gen_docs_pdf(spark, 8, partitions=2)
-    pipeline.run_with_checkpoint(docs_pdf, out, partitions=2, buckets=2)
-    part = sorted((tmp_path / "_manifest").glob("part-*.parquet"))[0]
-    part.write_bytes(b"not a parquet file")
-    with pytest.raises(Exception, match="(?i)parquet"):
-        pipeline.run_with_checkpoint(docs_pdf, out, partitions=2, buckets=2)
+    pipeline.run_with_checkpoint(docs_pdf, out, buckets=2)
+    (commit,) = (tmp_path / "_commits").glob("*.json")
+    commit.write_text("not a commit")
+    with pytest.raises(ValueError, match="unreadable checkpoint commit"):
+        pipeline.run_with_checkpoint(docs_pdf, out, buckets=2)
+    with pytest.raises(ValueError, match="unreadable checkpoint commit"):
+        pipeline.read_checkpointed(spark, out)
+
+
+def test_checkpoint_crash_between_spans_write_and_commit(
+        spark, tmp_path, monkeypatch):
+    """The spans of chunk 2 of 2 are written, then its commit fails:
+    readers see only chunk 1's buckets, and resume re-extracts only the
+    uncommitted ones, to the full span-equal output."""
+    out = str(tmp_path)
+    docs_pdf = pipeline.gen_docs_pdf(spark, 30, partitions=4).persist()
+    replace, commits = os.replace, []
+
+    def crash_on_second_commit(src, dst):
+        if "_commits" in str(dst):
+            commits.append(dst)
+            if len(commits) == 2:
+                raise OSError("crash before the commit of chunk 2")
+        return replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", crash_on_second_commit)
+    with pytest.raises(OSError, match="chunk 2"):
+        pipeline.run_with_checkpoint(docs_pdf, out, buckets=4,
+                                     max_buckets_per_pass=2)
+    monkeypatch.undo()
+    assert pipeline.committed_buckets(out) == {0, 1}
+    assert (tmp_path / "spans" / "bucket=2").is_dir()  # written, uncommitted
+    partial = pipeline.read_checkpointed(spark, out).collect()
+    assert {r["bucket"] for r in partial} == {0, 1}
+    kept = _bucket_files(out, (0, 1))
+
+    pipeline.run_with_checkpoint(docs_pdf, out, buckets=4,
+                                 max_buckets_per_pass=2)
+    assert pipeline.committed_buckets(out) == {0, 1, 2, 3}
+    assert _bucket_files(out, (0, 1)) == kept
+    resumed = pipeline.read_checkpointed(spark, out)
+    eq = pipeline.span_equality(docs_pdf, resumed).collect()
+    docs_pdf.unpersist()
+    assert len(eq) == 30 and all(r["match"] for r in eq)
+    assert len(partial) == resumed.filter(F.col("bucket") < 2).count()
+
+
+def test_checkpoint_resume_noop_launches_no_spark_job(spark, tmp_path):
+    """A run launches one Spark job per chunk; a resume with every bucket
+    committed launches none (the commit log is read without Spark)."""
+    src, out = str(tmp_path / "docs"), str(tmp_path / "ckpt")
+    pipeline.gen_docs_pdf(spark, 12, partitions=2).write.parquet(src)
+    docs = spark.read.parquet(src)  # the input read's job: outside the groups
+    sc = spark.sparkContext
+
+    def jobs(group: str) -> int:
+        sc.setJobGroup(group, group)
+        try:
+            pipeline.run_with_checkpoint(docs, out, buckets=4,
+                                         max_buckets_per_pass=2)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("checkpoint-run") == 2
+    assert jobs("checkpoint-resume-noop") == 0
+
+
+def test_checkpoint_bucket_count_mismatch_raises(spark, tmp_path):
+    """Bucket ids name other docs under another bucket count, so resuming
+    a log with a different ``buckets`` would skip or repeat docs."""
+    out = str(tmp_path)
+    docs_pdf = pipeline.gen_docs_pdf(spark, 8, partitions=2)
+    pipeline.run_with_checkpoint(docs_pdf, out, buckets=4,
+                                 max_buckets_per_pass=2)
+    log = sorted(os.listdir(tmp_path / "_commits"))
+    with pytest.raises(ValueError, match="written with 4 buckets"):
+        pipeline.run_with_checkpoint(docs_pdf, out, buckets=2)
+    assert sorted(os.listdir(tmp_path / "_commits")) == log
 
 
 # --- span_equality digest-compare equivalence (r11 optimization guard) -------

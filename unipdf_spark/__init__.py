@@ -11,7 +11,6 @@ Layout:
     pipeline.py Spark pipeline: (doc_id, pdf_bytes) -> spans_out
     operators/  analytics/query operators (TPC-H-ish, dedup, ANN, text stats)
     sources/    table readers
-    functions/  shared column helpers
     streaming/  structured-streaming operators
 """
 

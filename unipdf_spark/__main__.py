@@ -76,13 +76,12 @@ def main(argv: list[str] | None = None) -> int:
             docs = spark.read.parquet(args.inp)
             if args.checkpoint:
                 pipeline.run_with_checkpoint(docs, args.out)
+                out = pipeline.read_checkpointed(spark, args.out)
             else:
-                out = pipeline.run_extraction(docs, salt=args.salt)
-                out.write.mode("overwrite").parquet(args.out)
-            n = spark.read.parquet(
-                args.out if not args.checkpoint else f"{args.out}/spans"
-            ).count()
-            print(json.dumps({"extracted": n, "out": args.out}))
+                pipeline.run_extraction(docs, salt=args.salt).write.mode(
+                    "overwrite").parquet(args.out)
+                out = spark.read.parquet(args.out)
+            print(json.dumps({"extracted": out.count(), "out": args.out}))
         elif args.cmd == "verify":
             docs = spark.read.parquet(args.docs)
             spans = spark.read.parquet(args.spans)

@@ -23,6 +23,8 @@ DuckDB evaluates to identical values.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import phash
@@ -106,45 +108,6 @@ FROM h JOIN g USING (norm_hash)
 """
 
 
-def _shingles(col, n: int = 3):
-    """Distinct word n-gram shingles from a text column."""
-    toks = F.filter(F.split(F.lower(col), r"\s+"), lambda x: x != "")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, n), " "))
-    )
-
-
-def attach_minhash_signature(d: DataFrame) -> DataFrame:
-    """(doc_id, text, …) → (doc_id, h0..h31): k=32 portable universal-hash
-    families ((A·h32 + B) mod P over md5-derived shingle hashes). Works on
-    batch AND streaming frames (pure column expressions — shared by the
-    batch operators and the streaming candidate detector).
-
-    Hash each shingle string once, then derive the k families as modular
-    arithmetic — all WITHIN the row and in ONE pass (aggregate with a
-    32-wide running-min accumulator; 32 separate array_min(transform)
-    columns generate 32 re-traversals and a huge codegen class): no
-    explode, no shuffle; identical values to the explode+min form."""
-    h32 = F.transform(_shingles(F.col("text")), lambda s: phash.h32(s))
-    base = d.select("doc_id", h32.alias("h32"))
-
-    def _families(h):
-        # NB: single-parameter lambda only — a two-parameter lambda would be
-        # taken as Spark's (element, index) form
-        return F.array(*[phash.family(i, h) for i in range(N_HASHES)])
-
-    acc = F.aggregate(
-        F.col("h32"),
-        F.array_repeat(F.lit(phash.P).cast("long"), N_HASHES),
-        lambda a, h: F.zip_with(a, _families(h), lambda x, y: F.least(x, y)),
-    )
-    # shingle lists are never empty (empty text yields the [''] shingle),
-    # so the P-initialized accumulator always gets overwritten
-    sigs = [F.element_at(F.col("acc"), i + 1).alias(f"h{i}") for i in range(N_HASHES)]
-    return base.select("doc_id", acc.alias("acc")).select("doc_id", *sigs)
-
-
 # all 8 (band, band_hash) rows of a signature row as ONE generator
 # expression; each key is the oracle's own fold (phash.fold_sql)
 _BANDS_EXPR = "inline(array({}))".format(", ".join(
@@ -174,13 +137,26 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression form the suite's dominant cost (r3 VERDICT: 7.5 s
     steady-state, 2.5× the next-slowest query). hashlib md5 is
     bit-identical to SQL ``md5`` and the modular family math is exact in
-    int64, so the DuckDB oracle is unchanged. The column-expression form
-    (:func:`attach_minhash_signature`) remains for streaming frames."""
+    int64, so the DuckDB oracle is unchanged."""
     return minhash_signatures_pandas(_docs(spark, sf_dir))
 
 
 SIG_NAMES = [f"h{i}" for i in range(N_HASHES)]
 _SIG_FIELDS = ", ".join(f"{h} long" for h in SIG_NAMES)
+
+
+_WS = re.compile(r"\s+", re.ASCII)
+
+
+def _shingle_set(text: str) -> set[str]:
+    """Distinct word 3-gram shingles of ``text``, bit-identical to the
+    ``_SHINGLE_CTE`` oracle fragment: ``re.ASCII`` ``\\s+`` split of
+    ``text.lower()`` (Java's and RE2's ``\\s`` are ASCII-only, so the
+    Python pattern must be too), empty tokens dropped, and one window
+    for texts of fewer than 3 tokens."""
+    toks = [t for t in _WS.split(text.lower()) if t]
+    return {" ".join(toks[j : j + 3])
+            for j in range(max(len(toks) - 3, 0) + 1)}
 
 
 def with_minhash(pdf):
@@ -191,27 +167,22 @@ def with_minhash(pdf):
     render→extract workers of :mod:`.extracted`. Bit-identical to
     MINHASH_SIG_SQL:
 
-    * tokens: ``re.ASCII`` ``\\s+`` split of ``text.lower()`` — Java's and
-      RE2's ``\\s`` are ASCII-only, so the Python pattern must be too;
+    * shingles: :func:`_shingle_set`;
     * shingle hash: ``int(md5(s)[:15], 16) % P`` ≡ Spark
       ``conv(substr(md5(s),1,15),16,10)`` ≡ DuckDB
       ``('0x'||substr(md5(s),1,15))::BIGINT`` (< 2^60, exact in int64);
     * families: ``(A_i·h + B_i) % P`` with A_i < 2^30 → products < 2^62.
     """
     import hashlib
-    import re
 
     import numpy as np
 
     a_arr = np.array(phash.A, dtype=np.int64)
     b_arr = np.array(phash.B, dtype=np.int64)
     p = phash.P
-    ws = re.compile(r"\s+", re.ASCII)
     sigs = np.empty((len(pdf), N_HASHES), dtype=np.int64)
     for i, text in enumerate(pdf["text"].tolist()):
-        toks = [t for t in ws.split(text.lower()) if t]
-        end = max(len(toks) - 3, 0) + 1
-        sh = {" ".join(toks[j : j + 3]) for j in range(end)}
+        sh = _shingle_set(text)
         hs = np.fromiter(
             (
                 int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16) % p
@@ -245,27 +216,16 @@ def minhash_signatures_pandas(d: DataFrame) -> DataFrame:
 
 def _shingle_sets_pandas(d: DataFrame) -> DataFrame:
     """(doc_id, text, …) → (doc_id, sh array<string>): the distinct-3-gram
-    shingle sets on the same Arrow-batched Python path (re.ASCII ``\\s+``
-    tokenization identical to :func:`minhash_signatures_pandas` and the
-    ``_SHINGLE_CTE`` oracle fragment). Used by the candidate-verify stage
-    of :func:`minhash_lsh_pairs` — bounded by candidate count."""
+    shingle sets (:func:`_shingle_set`, shared with :func:`with_minhash`)
+    on the same Arrow-batched Python path. Used by the candidate-verify
+    stage of :func:`minhash_lsh_pairs` — bounded by candidate count."""
 
     def batches(pdfs):
-        import re
-
         import pandas as pd
 
-        ws = re.compile(r"\s+", re.ASCII)
         for pdf in pdfs:
-            shs = []
-            for text in pdf["text"].tolist():
-                toks = [t for t in ws.split(text.lower()) if t]
-                end = max(len(toks) - 3, 0) + 1
-                shs.append(
-                    sorted({" ".join(toks[j : j + 3]) for j in range(end)}))
+            shs = [sorted(_shingle_set(t)) for t in pdf["text"].tolist()]
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "sh": shs})
-
-    import pandas as pd  # noqa: F401  (worker import exercised above)
 
     id_type = d.schema["doc_id"].dataType.simpleString()
     return d.select("doc_id", "text").mapInPandas(

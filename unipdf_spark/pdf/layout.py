@@ -722,20 +722,6 @@ def detect_aligned_tables(paras: list, rank: int):
         rest = rest2
 
 
-def _gap_cut(intervals: list[tuple[float, float]], min_gap: float) -> float | None:
-    """Largest whitespace band splitting the interval set, or None."""
-    ivs = sorted(intervals)
-    best = None
-    best_gap = min_gap
-    hi = ivs[0][1]
-    for lo, h in ivs[1:]:
-        if lo - hi > best_gap:
-            best_gap = lo - hi
-            best = (hi + lo) / 2.0
-        hi = max(hi, h)
-    return best
-
-
 def reading_order(paras: list[Para]) -> list[Para]:
     """Reading order — the reference's topoOrder/readBefore relation
     (extractor.go e:271/:511, verified against the obfuscated source):

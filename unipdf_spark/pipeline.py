@@ -11,8 +11,9 @@ extract, tables, media decode, HTML strip, corpus ingest) has one worker
 shape, :func:`map_docs`: a per-doc function over one input row's values,
 with the batch loop, output columns and lineage columns (``partition_id``,
 ``elapsed_ms``) owned by the helper. The only cross-document relational ops are
-the explicit salted repartition, the verification join, and checkpoint
-bookkeeping (manifest anti-join), exactly the set called out in SURVEY §2.5.
+the explicit salted repartition and the verification join. Checkpoint
+bookkeeping is a JSON commit log, read and written with the stdlib, without a
+Spark job.
 
 Skew: document size is heavy-tailed (one 5,000-page PDF ≫ median). The
 opt-in salted repartition spreads docs with a full-cardinality
@@ -24,6 +25,8 @@ already-balanced parquet inputs (SURVEY §4 "Custom needed").
 
 from __future__ import annotations
 
+import json
+import os
 import time
 from collections.abc import Iterator
 
@@ -48,8 +51,6 @@ ARROW_BATCH_CONF = {
 
 def get_spark(app: str = "unipdf-spark", cores: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
-    import os
-
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     b = (
         SparkSession.builder.appName(app)
@@ -373,48 +374,84 @@ def span_equality(docs_pdf: DataFrame, spans_out: DataFrame) -> DataFrame:
 # --- checkpoint / resume ---------------------------------------------------------
 
 
-MANIFEST_DDL = "bucket int, n_docs long, elapsed_s double, finished_at double"
+def _bucket_col(buckets: int):
+    return F.pmod(F.xxhash64("doc_id"), F.lit(buckets)).cast("int")
 
 
-def run_with_checkpoint(docs_pdf: DataFrame, out_dir: str,
-                        partitions: int | None = None,
-                        buckets: int = 16,
-                        max_buckets_per_pass: int | None = None) -> None:
-    """Checkpoint-resumable extraction: docs are bucketed by xxhash64(doc_id);
-    finished buckets are skipped on restart via the manifest (SURVEY §4
-    'checkpoint/resume'). Output is byte-identical regardless of how many
-    times the job was interrupted (bucket contents are deterministic).
-
-    By default all pending buckets are extracted and written in ONE pass
-    (`partitionBy("bucket")`), then each completed bucket directory gets its
-    manifest row — a cold resume pays the upstream plan once, not once per
-    bucket (round-1 ran `buckets` sequential jobs, each re-deriving the full
-    upstream ~16×). Within one attempt, Spark task retries handle transient
-    failures; across attempts, the manifest anti-join skips whole buckets.
-
-    ``max_buckets_per_pass`` bounds the work unit: process at most that
-    many buckets per write+manifest commit, looping until done. A crash
-    then loses only the in-flight chunk — the knob a 100 TB run uses to
-    trade re-derivation cost against blast radius (the kill-resume drill,
-    bench/drill.py, exercises exactly this)."""
-    import os
-
-    spark = docs_pdf.sparkSession
-    manifest_dir = os.path.join(out_dir, "_manifest")
-    spans_dir = os.path.join(out_dir, "spans")
+def committed_buckets(out_dir: str, buckets: int | None = None) -> set[int]:
+    """The buckets the ``_commits/`` log of a checkpoint directory commits,
+    read with the stdlib (no Spark job). Only ``*.json`` files are
+    commits; a temp file left by a crash during a commit is not. Raises
+    ``ValueError`` on a commit that does not parse and, when ``buckets``
+    is given, on a commit written by a run with another bucket count."""
+    log = os.path.join(out_dir, "_commits")
+    names = os.listdir(log) if os.path.isdir(log) else []
     done: set[int] = set()
-    if os.path.isdir(manifest_dir):
-        # an explicit schema reads a manifest dir holding no committed part
-        # yet (only `_temporary/`) as empty; an unreadable part raises
-        mdf = spark.read.schema(MANIFEST_DDL).parquet(manifest_dir)
-        done = {r["bucket"] for r in mdf.select("bucket").collect()}
+    for name in sorted(n for n in names if n.endswith(".json")):
+        path = os.path.join(log, name)
+        try:
+            with open(path) as f:
+                commit = json.load(f)
+            done.update(commit["buckets"])
+            total = commit["total_buckets"]
+        except (ValueError, KeyError, TypeError) as e:
+            raise ValueError(f"unreadable checkpoint commit {path}") from e
+        if buckets is not None and total != buckets:
+            raise ValueError(
+                f"checkpoint {out_dir} was written with {total} buckets; "
+                f"resuming it with {buckets} would skip or repeat docs")
+    return done
+
+
+def _commit(out_dir: str, batch: list[int], buckets: int,
+            elapsed_s: float) -> None:
+    """Adds one chunk's commit to the log: written under a temp name,
+    fsynced, ``os.replace``d into place, then the directory fsynced. The
+    name is the chunk's first bucket, unique because no bucket is
+    committed twice."""
+    log = os.path.join(out_dir, "_commits")
+    os.makedirs(log, exist_ok=True)
+    name = f"{batch[0]:05d}.json"
+    tmp = os.path.join(log, f".{name}.tmp")
+    with open(tmp, "w") as f:
+        json.dump({"buckets": batch, "total_buckets": buckets,
+                   "elapsed_s": elapsed_s, "finished_at": time.time()}, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, os.path.join(log, name))
+    fd = os.open(log, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
+def run_with_checkpoint(docs_pdf: DataFrame, out_dir: str, buckets: int = 16,
+                        max_buckets_per_pass: int | None = None) -> None:
+    """Checkpoint-resumable extraction (SURVEY §4 'checkpoint/resume'):
+    docs are bucketed by xxhash64(doc_id); each chunk of buckets is
+    extracted, written to ``out_dir/spans`` (``partitionBy("bucket")``,
+    dynamic overwrite, so done buckets are never touched) and then
+    committed by one JSON file in ``out_dir/_commits`` (:func:`_commit`).
+    A restart skips the buckets the log commits (:func:`committed_buckets`,
+    no Spark job), so a resume with nothing left launches no job at all.
+    A bucket whose spans were written but whose commit was not is
+    extracted again; the output is identical however often the job was
+    interrupted, because bucket contents are deterministic. Resuming with
+    a ``buckets`` count other than the log's raises.
+
+    By default all pending buckets form one chunk, one extraction pass:
+    a cold resume pays the upstream plan once, not once per bucket.
+    ``max_buckets_per_pass`` bounds the chunk instead, looping until
+    done: a crash then loses only the in-flight chunk, the knob a 100 TB
+    run uses to trade re-derivation cost against blast radius (the
+    kill-resume drill, bench/drill.py, exercises exactly this)."""
+    done = committed_buckets(out_dir, buckets)
     pending = [b for b in range(buckets) if b not in done]
     if not pending:
         return
 
-    bucketed = docs_pdf.withColumn(
-        "bucket", (F.pmod(F.xxhash64("doc_id"), F.lit(buckets))).cast("int")
-    )
+    bucketed = docs_pdf.withColumn("bucket", _bucket_col(buckets))
     chunk = max_buckets_per_pass or len(pending)
     for i0 in range(0, len(pending), chunk):
         batch = pending[i0 : i0 + chunk]
@@ -422,28 +459,18 @@ def run_with_checkpoint(docs_pdf: DataFrame, out_dir: str,
         t0 = time.time()
         # re-derive the bucket from doc_id AFTER extraction (cheap
         # expression, no join/shuffle) — extraction stays map-only
-        out = run_extraction(part.drop("bucket"), partitions).withColumn(
-            "bucket",
-            (F.pmod(F.xxhash64("doc_id"), F.lit(buckets))).cast("int"),
-        )
+        out = run_extraction(part.drop("bucket")).withColumn(
+            "bucket", _bucket_col(buckets))
         out.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"  # never touch done buckets
-        ).partitionBy("bucket").parquet(spans_dir)
-        elapsed = time.time() - t0
-        counts = {
-            r["bucket"]: r["n"]
-            for r in spark.read.parquet(spans_dir)
-            .filter(F.col("bucket").isin(batch))
-            .groupBy("bucket").agg(F.count("*").alias("n")).collect()
-        }
-        lineage = spark.createDataFrame(
-            [(b, counts.get(b, 0), elapsed, time.time()) for b in batch],
-            MANIFEST_DDL,
-        )
-        lineage.write.mode("append").parquet(manifest_dir)
+        ).partitionBy("bucket").parquet(os.path.join(out_dir, "spans"))
+        _commit(out_dir, batch, buckets, time.time() - t0)
 
 
 def read_checkpointed(spark: SparkSession, out_dir: str) -> DataFrame:
-    import os
-
-    return spark.read.parquet(os.path.join(out_dir, "spans"))
+    """The spans of the buckets the commit log commits: the same record
+    decides what a resume skips and what readers see."""
+    done = sorted(committed_buckets(out_dir))
+    return (spark.read.schema(schema.SPANS_OUT_DDL + ", bucket int")
+            .parquet(os.path.join(out_dir, "spans"))
+            .filter(F.col("bucket").isin(done)))

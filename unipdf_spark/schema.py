@@ -55,10 +55,3 @@ DOCS_DDL = (
 def media_ref_for(raw_stream_bytes: bytes) -> str:
     """Deterministic media reference for an image payload (see module doc)."""
     return "img_" + hashlib.sha256(raw_stream_bytes).hexdigest()[:16]
-
-
-def spark_span_schema():
-    """Structured spans_out schema as pyspark types (lazy import)."""
-    from pyspark.sql import types as T
-
-    return T._parse_datatype_string(SPANS_OUT_DDL)
