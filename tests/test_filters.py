@@ -441,6 +441,27 @@ def test_jpeg_420_roundtrip_psnr():
     assert 10 * np.log10(255**2 / mse) > 26  # chroma subsampling cost
 
 
+def test_jpeg_420_one_row_and_one_column_roundtrip():
+    """4:2:0 on images one pixel high or wide: chroma is averaged along the
+    long axis only, so it fits the chroma block grid."""
+    import numpy as np
+
+    from unipdf_spark.fixtures.render import jpeg_420_encode
+    from unipdf_spark.pdf.jpeg import decode_baseline
+
+    for h, w in ((1, 9), (1, 40), (9, 1), (40, 1)):
+        x, y = np.meshgrid(np.arange(w), np.arange(h))
+        rgb = np.stack([
+            128 + 100 * np.sin(x / 7.0),
+            128 + 90 * np.cos(y / 6.0),
+            128 + 80 * np.sin((x + y) / 9.0),
+        ], axis=2).astype("u1")
+        out = decode_baseline(jpeg_420_encode(rgb))
+        assert out.shape == rgb.shape
+        mse = float(np.mean((out.astype("f8") - rgb) ** 2))
+        assert 10 * np.log10(255**2 / mse) > 26, (h, w)
+
+
 def test_jbig2_refinement_region_roundtrip_fuzz():
     """Generic refinement regions (T.88 §6.3): templates 0/1, with and
     without TPGRON typical prediction, vs the independent writer-side

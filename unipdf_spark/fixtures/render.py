@@ -9,10 +9,12 @@ from __future__ import annotations
 
 import base64
 import binascii
+import functools
 import re
 import hashlib
 import struct
 import zlib
+from itertools import groupby
 
 _CRYPT_PAD = bytes([
     0x28, 0xBF, 0x4E, 0x5E, 0x4E, 0x75, 0x8A, 0x41, 0x64, 0x00, 0x4E, 0x56,
@@ -471,6 +473,52 @@ def _ccitt_run(w: "_BitWriter", run: int, white: bool) -> None:
     w.write(term[run])
 
 
+def _ccitt_1d_row(w: "_BitWriter", changes: list[int], columns: int) -> None:
+    """T.4 one-dimensional (MH) coding of one row: alternating white/black
+    run lengths, starting white."""
+    pos, white = 0, True
+    for c in changes + [columns]:
+        _ccitt_run(w, c - pos, white)
+        pos = c
+        white = not white
+        if pos >= columns:
+            break
+    if pos < columns:
+        _ccitt_run(w, columns - pos, white)
+
+
+def _ccitt_2d_row(w: "_BitWriter", cur: list[int], ref: list[int],
+                  columns: int) -> None:
+    """T.4/T.6 two-dimensional coding of one row (changes ``cur``) against
+    the reference row's changes ``ref``: pass, vertical or horizontal
+    mode per changing element."""
+    a0, white = -1, True
+    while a0 < columns:
+        # a1: next change right of a0 (color flip from current color)
+        a1 = next((c for c in cur if c > a0), columns)
+        i = 0
+        while i < len(ref) and ref[i] <= a0:
+            i += 1
+        if (i % 2 == 0) != white:
+            i += 1
+        b1 = ref[i] if i < len(ref) else columns
+        b2 = ref[i + 1] if i + 1 < len(ref) else columns
+        if b2 < a1:
+            w.write("0001")  # pass
+            a0 = b2
+        elif abs(a1 - b1) <= 3:
+            w.write({0: "1", 1: "011", -1: "010", 2: "000011",
+                     -2: "000010", 3: "0000011", -3: "0000010"}[a1 - b1])
+            a0 = a1
+            white = not white
+        else:  # horizontal
+            a2 = next((c for c in cur if c > a1), columns)
+            w.write("001")
+            _ccitt_run(w, a1 - max(a0, 0), white)
+            _ccitt_run(w, a2 - a1, not white)
+            a0 = a2
+
+
 def ccitt_g4_encode(rows: list[list[bool]], columns: int) -> bytes:
     """Generator-side ITU-T T.6 (Group 4) encoder — independent of the
     engine's decoder; fixture-side T.4 code tables (ccitt_codes)."""
@@ -489,41 +537,7 @@ def _ccitt_g4_into(w: "_BitWriter", rows: list[list[bool]],
     ref = [columns, columns]
     for row in rows:
         cur = _ccitt_changes(row)
-        a0 = -1
-        white = True
-        while a0 < columns:
-            # a1: next change right of a0 (color flip from current color)
-            a1 = columns
-            for c in cur:
-                if c > (a0 if a0 >= 0 else -1):
-                    a1 = c
-                    break
-            i = 0
-            while i < len(ref) and ref[i] <= (a0 if a0 >= 0 else -1):
-                i += 1
-            if (i % 2 == 0) != white:
-                i += 1
-            b1 = ref[i] if i < len(ref) else columns
-            b2 = ref[i + 1] if i + 1 < len(ref) else columns
-            if b2 < a1:
-                w.write("0001")  # pass
-                a0 = b2
-            elif abs(a1 - b1) <= 3:
-                w.write({0: "1", 1: "011", -1: "010", 2: "000011",
-                         -2: "000010", 3: "0000011", -3: "0000010"}[a1 - b1])
-                a0 = a1
-                white = not white
-            else:  # horizontal
-                a2 = columns
-                for c in cur:
-                    if c > a1:
-                        a2 = c
-                        break
-                start = a0 if a0 > 0 else 0
-                w.write("001")
-                _ccitt_run(w, a1 - start, white)
-                _ccitt_run(w, a2 - a1, not white)
-                a0 = a2
+        _ccitt_2d_row(w, cur, ref, columns)
         ref = cur
 
 
@@ -532,17 +546,7 @@ def ccitt_g3_1d_encode(rows: list[list[bool]], columns: int) -> bytes:
     w = _BitWriter()
     for row in rows:
         w.write("000000000001")  # EOL
-        changes = _ccitt_changes(row) + [columns]
-        pos = 0
-        white = True
-        for c in changes:
-            _ccitt_run(w, c - pos, white)
-            pos = c
-            white = not white
-            if pos >= columns:
-                break
-        if pos < columns:
-            _ccitt_run(w, columns - pos, white)
+        _ccitt_1d_row(w, _ccitt_changes(row), columns)
     return w.bytes()
 
 
@@ -556,53 +560,12 @@ def ccitt_g3_2d_encode(rows: list[list[bool]], columns: int,
     for r, row in enumerate(rows):
         cur = _ccitt_changes(row)
         w.write("000000000001")  # EOL
-        if r % k == 0:  # 1D row
+        if r % k == 0:
             w.write("1")
-            pos, white = 0, True
-            for c in cur + [columns]:
-                _ccitt_run(w, c - pos, white)
-                pos = c
-                white = not white
-                if pos >= columns:
-                    break
-            if pos < columns:
-                _ccitt_run(w, columns - pos, white)
-        else:  # 2D row against ref
+            _ccitt_1d_row(w, cur, columns)
+        else:
             w.write("0")
-            a0, white = -1, True
-            while a0 < columns:
-                a1 = columns
-                for c in cur:
-                    if c > (a0 if a0 >= 0 else -1):
-                        a1 = c
-                        break
-                i = 0
-                while i < len(ref) and ref[i] <= (a0 if a0 >= 0 else -1):
-                    i += 1
-                if (i % 2 == 0) != white:
-                    i += 1
-                b1 = ref[i] if i < len(ref) else columns
-                b2 = ref[i + 1] if i + 1 < len(ref) else columns
-                if b2 < a1:
-                    w.write("0001")
-                    a0 = b2
-                elif abs(a1 - b1) <= 3:
-                    w.write({0: "1", 1: "011", -1: "010", 2: "000011",
-                             -2: "000010", 3: "0000011",
-                             -3: "0000010"}[a1 - b1])
-                    a0 = a1
-                    white = not white
-                else:
-                    a2 = columns
-                    for c in cur:
-                        if c > a1:
-                            a2 = c
-                            break
-                    start = a0 if a0 > 0 else 0
-                    w.write("001")
-                    _ccitt_run(w, a1 - start, white)
-                    _ccitt_run(w, a2 - a1, not white)
-                    a0 = a2
+            _ccitt_2d_row(w, cur, ref, columns)
         ref = cur
     return w.bytes()
 
@@ -777,9 +740,50 @@ def _jb2_generic_body(rows: list[list[bool]], cols: int,
 
 
 def _jb2_segment(number: int, seg_type: int, data: bytes,
-                 page: int = 1) -> bytes:
-    return (number.to_bytes(4, "big") + bytes([seg_type & 0x3F, 0x00, page])
-            + len(data).to_bytes(4, "big") + data)
+                 refs=()) -> bytes:
+    """Segment header on page 1 (1-byte referred-to segment numbers,
+    count ≤ 4) + data."""
+    return (number.to_bytes(4, "big") + bytes([seg_type & 0x3F, len(refs) << 5])
+            + bytes(refs) + bytes([1]) + len(data).to_bytes(4, "big") + data)
+
+
+def _jb2_stream(cols: int, rows: int, *segs) -> bytes:
+    """Embedded JBIG2 stream: page information (segment 1, cols×rows,
+    default pixel 0, lossless), ``segs`` as segments 2, 3, … — each
+    (type, referred-to segment numbers, data) — then end of page."""
+    page_info = (cols.to_bytes(4, "big") + rows.to_bytes(4, "big")
+                 + bytes(8) + bytes([0x01]) + bytes(2))
+    out = _jb2_segment(1, 48, page_info)
+    for number, (seg_type, refs, data) in enumerate(segs, 2):
+        out += _jb2_segment(number, seg_type, data, refs)
+    return out + _jb2_segment(len(segs) + 2, 49, b"")
+
+
+def _jb2_region_info(cols: int, rows: int) -> bytes:
+    """Region segment information: cols×rows at (0, 0), external OR."""
+    return cols.to_bytes(4, "big") + rows.to_bytes(4, "big") + bytes(9)
+
+
+def _jb2_at_bytes(at) -> bytes:
+    return b"".join(bytes([ax & 0xFF, ay & 0xFF]) for ax, ay in at)
+
+
+_JB2_AT0 = _jb2_at_bytes(_JB2_NOMINAL0)
+_JB2_GRAT0 = bytes([0xFF, 0xFF, 0xFF, 0xFF])  # GRAT nominal (-1,-1) x2
+
+
+def _jb2_compose(cols: int, rows: int, placed) -> list[list[int]]:
+    """cols×rows page of 0/1 with each (bitmap, x, y) OR'ed in at its
+    top-left (x, y), clipped to the page."""
+    page = [[0] * cols for _ in range(rows)]
+    for bmp, x, y in placed:
+        for yy, srow in enumerate(bmp):
+            if 0 <= y + yy < rows:
+                prow = page[y + yy]
+                for xx, v in enumerate(srow):
+                    if v and 0 <= x + xx < cols:
+                        prow[x + xx] = 1
+    return page
 
 
 def jbig2_encode(rows: list[list[bool]], cols: int, mmr: bool = False,
@@ -788,26 +792,15 @@ def jbig2_encode(rows: list[list[bool]], cols: int, mmr: bool = False,
     generic region (type 38). mmr=True uses MMR (T.6) region coding via the
     writer's independent G4 encoder; else MQ template-0 arithmetic coding,
     optionally with TPGDON typical-prediction and custom AT positions."""
-    h = len(rows)
-    page_info = (cols.to_bytes(4, "big") + h.to_bytes(4, "big")
-                 + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                 + bytes([0x01]) + (0).to_bytes(2, "big"))
-    region_info = (cols.to_bytes(4, "big") + h.to_bytes(4, "big")
-                   + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                   + bytes([0]))  # external comb op OR
     if mmr:
-        gflags = bytes([0x01])
-        at = b""
-        body = ccitt_g4_encode(rows, cols)
+        region = bytes([0x01]) + ccitt_g4_encode(rows, cols)
     else:
-        gflags = bytes([0x08 if tpgdon else 0x00])  # MQ, template 0
-        at_pts = list(at_pixels) if at_pixels is not None else _JB2_NOMINAL0
-        at = b"".join(bytes([ax & 0xFF, ay & 0xFF]) for ax, ay in at_pts)
-        body = _jb2_generic_body(rows, cols, at=at_pts, tpgdon=tpgdon)
-    seg1 = _jb2_segment(1, 48, page_info)
-    seg2 = _jb2_segment(2, 38, region_info + gflags + at + body)
-    seg3 = _jb2_segment(3, 49, b"")  # end of page
-    return seg1 + seg2 + seg3
+        at = list(at_pixels) if at_pixels is not None else _JB2_NOMINAL0
+        region = (bytes([0x08 if tpgdon else 0x00])  # MQ, template 0
+                  + _jb2_at_bytes(at)
+                  + _jb2_generic_body(rows, cols, at=at, tpgdon=tpgdon))
+    return _jb2_stream(cols, len(rows), (
+        38, [], _jb2_region_info(cols, len(rows)) + region))
 
 
 def _jb2_int_ctx():
@@ -890,13 +883,114 @@ def _jb2_generic_into(enc: "_MQEncoder", contexts: dict,
             enc.encode(cx, 1 if rows[y][x] else 0)
 
 
-def _jb2_segment_refs(number: int, seg_type: int, refs: list[int],
-                      data: bytes, page: int = 1) -> bytes:
-    """Segment header with 1-byte referred-to segment numbers (count ≤ 4)."""
-    rt = bytes([len(refs) << 5])
-    return (number.to_bytes(4, "big") + bytes([seg_type & 0x3F]) + rt
-            + bytes(refs) + bytes([page])
-            + len(data).to_bytes(4, "big") + data)
+def _jb2_symbol_dict(symbols, order) -> bytes:
+    """Arithmetic symbol dictionary segment data (generic template 0,
+    nominal AT, every symbol exported) coding ``symbols`` in ``order``;
+    each run of equal heights is one height class. The text encoders
+    order by height, the refagg encoders by (height, width)."""
+    enc = _MQEncoder()
+    gb_ctx: dict = {}
+    iadh, iadw, iaex = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
+    hcheight = 0
+    for h, cls in groupby(order, key=lambda k: len(symbols[k])):
+        _jb2_enc_int(enc, iadh, h - hcheight)
+        hcheight = h
+        symwidth = 0
+        for k in cls:
+            w = len(symbols[k][0])
+            _jb2_enc_int(enc, iadw, w - symwidth)
+            symwidth = w
+            _jb2_generic_into(enc, gb_ctx, symbols[k], w)
+        _jb2_enc_int(enc, iadw, None)  # OOB: end of height class
+    _jb2_enc_int(enc, iaex, 0)              # skip-run 0
+    _jb2_enc_int(enc, iaex, len(symbols))   # export-run all
+    n = len(symbols).to_bytes(4, "big")
+    return bytes(2) + _JB2_AT0 + n + n + enc.flush()
+
+
+def _jb2_strips(exported, placements, instance_refine: dict,
+                ref_corner: int, transposed: bool, strips: int = 1):
+    """Text-region instances by strip: [(strip base T, sorted [(S,
+    T - base, export id, placement index)])]. Placements are (export id,
+    x, y) with (x, y) the TOP-LEFT pixel; T is the ref_corner (0=BL 1=TL
+    2=BR 3=TR) edge of the instance's effective (possibly refined) bitmap,
+    along y — along x when transposed, S then along y (T.88 §6.4.5)."""
+    by_strip: dict[int, list] = {}
+    for p_idx, (sid, x, y) in enumerate(placements):
+        bmp = instance_refine.get(p_idx, exported[sid])
+        if transposed:
+            t = x if ref_corner in (0, 1) else x + len(bmp[0]) - 1
+            s = y
+        else:
+            t = y if ref_corner in (1, 3) else y + len(bmp) - 1
+            s = x
+        base = (t // strips) * strips
+        by_strip.setdefault(base, []).append((s, t - base, sid, p_idx))
+    return [(b, sorted(by_strip[b])) for b in sorted(by_strip)]
+
+
+def _jb2_text_region(exported, placements, cols: int, nrows: int,
+                     ref_corner: int = 1, transposed: bool = False,
+                     instance_refine: dict | None = None) -> bytes:
+    """Arithmetic text region segment data (one-row strips, OR) placing
+    (export id, x, y) instances of the dictionary's ``exported`` symbols
+    (see _jb2_strips). ``instance_refine`` maps placement index → a bitmap
+    coded as an SBREFINE=1 refinement of that instance's symbol
+    (§6.4.11)."""
+    instance_refine = instance_refine or {}
+    refine = bool(instance_refine)
+    symcodelen = max(1, (len(exported) - 1).bit_length())
+    enc = _MQEncoder()
+    iadt, iafs, iads = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
+    iaid_cx = [[0, 0] for _ in range(1 << (symcodelen + 1))]
+    iari, iardw, iardh = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
+    iardx, iardy = _jb2_int_ctx(), _jb2_int_ctx()
+    gr_ctx: dict = {}
+    _jb2_enc_int(enc, iadt, 0)  # STRIPT init = 0
+    stript = 0
+    firsts = 0
+    n_inst = 0
+    total = len(placements)
+    for t, insts in _jb2_strips(exported, placements, instance_refine,
+                                ref_corner, transposed):
+        _jb2_enc_int(enc, iadt, t - stript)
+        stript = t
+        first = True
+        curs = 0
+        for s, _, sid, p_idx in insts:
+            if first:
+                _jb2_enc_int(enc, iafs, s - firsts)
+                firsts = s
+                first = False
+            else:
+                _jb2_enc_int(enc, iads, s - curs)
+            curs = s
+            _jb2_enc_iaid(enc, iaid_cx, symcodelen, sid)
+            sym = exported[sid]
+            bmp = instance_refine.get(p_idx)
+            if refine:
+                _jb2_enc_int(enc, iari, 1 if bmp is not None else 0)
+            if bmp is not None:
+                sw0, sh0 = len(sym[0]), len(sym)
+                wi, hi = len(bmp[0]), len(bmp)
+                _jb2_enc_int(enc, iardw, wi - sw0)
+                _jb2_enc_int(enc, iardh, hi - sh0)
+                _jb2_enc_int(enc, iardx, 0)
+                _jb2_enc_int(enc, iardy, 0)
+                _jb2_refine_into(enc, gr_ctx, bmp, sym, wi, hi, sw0, sh0,
+                                 (wi - sw0) >> 1, (hi - sh0) >> 1,
+                                 template=0)
+                sym = bmp
+            curs += (len(sym) if transposed else len(sym[0])) - 1
+            n_inst += 1
+        if n_inst < total:
+            _jb2_enc_int(enc, iads, None)  # end of strip
+    # SBREFINE bit 1, REFCORNER bits 4-5, TRANSPOSED bit 6; strips=1, OR
+    flags = ((int(refine) << 1) | ((ref_corner & 3) << 4)
+             | (int(transposed) << 6))
+    return (_jb2_region_info(cols, nrows) + flags.to_bytes(2, "big")
+            + (_JB2_GRAT0 if refine else b"") + total.to_bytes(4, "big")
+            + enc.flush())
 
 
 def jbig2_text_encode(symbols: list[list[list[bool]]],
@@ -916,131 +1010,20 @@ def jbig2_text_encode(symbols: list[list[list[bool]]],
     SBREFINE=1 refinement of that instance's dictionary symbol (§6.4.11).
     Returns (stream, composed page rows 0/1)."""
     instance_refine = instance_refine or {}
-    # --- symbol dictionary segment -------------------------------------
-    order = sorted(range(len(symbols)), key=lambda i: len(symbols[i]))
-    enc = _MQEncoder()
-    gb_ctx: dict = {}
-    iadh, iadw, iaex = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    hcheight = 0
-    i = 0
-    while i < len(order):
-        h = len(symbols[order[i]])
-        _jb2_enc_int(enc, iadh, h - hcheight)
-        hcheight = h
-        symwidth = 0
-        while i < len(order) and len(symbols[order[i]]) == h:
-            w = len(symbols[order[i]][0])
-            _jb2_enc_int(enc, iadw, w - symwidth)
-            symwidth = w
-            _jb2_generic_into(enc, gb_ctx, symbols[order[i]], w)
-            i += 1
-        _jb2_enc_int(enc, iadw, None)  # OOB: end of height class
-    _jb2_enc_int(enc, iaex, 0)              # skip-run 0
-    _jb2_enc_int(enc, iaex, len(symbols))   # export-run all
-    sd_body = enc.flush()
-    at = bytes([3 & 0xFF, 0xFF, 0x100 - 3, 0xFF, 2, 0xFE, 0x100 - 2, 0xFE])
-    sd_data = (0).to_bytes(2, "big") + at \
-        + len(symbols).to_bytes(4, "big") + len(symbols).to_bytes(4, "big") \
-        + sd_body
     # dictionary order is height-sorted: id in the TEXT REGION indexes the
     # exported list, so remap caller ids
+    order = sorted(range(len(symbols)), key=lambda i: len(symbols[i]))
     remap = {orig: k for k, orig in enumerate(order)}
-
-    # --- text region segment --------------------------------------------
-    n_syms = len(symbols)
-    symcodelen = max(1, (n_syms - 1).bit_length() if n_syms > 1 else 1)
-    enc2 = _MQEncoder()
-    iadt, iafs, iads = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    iaid_cx = [[0, 0] for _ in range(1 << (symcodelen + 1))]
-    refine = bool(instance_refine)
-    iari, iardw, iardh = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    iardx, iardy = _jb2_int_ctx(), _jb2_int_ctx()
-    gr_ctx: dict = {}
-
-    def eff_bitmap(p_idx: int, sym_id: int):
-        return instance_refine.get(p_idx, symbols[sym_id])
-
-    by_row: dict[int, list[tuple[int, int, int]]] = {}
-    for p_idx, (sym_id, x, y) in enumerate(placements):
-        bmp0 = eff_bitmap(p_idx, sym_id)
-        if transposed:
-            # encoded T (along x): left edge for TL/BL, right col for TR/BR
-            t_enc = x if ref_corner in (0, 1) else (x + len(bmp0[0]) - 1)
-            s_coord = y
-        else:
-            # encoded T (along y): top edge for TL/TR, bottom row for BL/BR
-            t_enc = y if ref_corner in (1, 3) else (y + len(bmp0) - 1)
-            s_coord = x
-        by_row.setdefault(t_enc, []).append((s_coord, remap[sym_id], p_idx))
-    _jb2_enc_int(enc2, iadt, 0)  # STRIPT init = 0
-    stript = 0
-    firsts = 0
-    n_inst = 0
-    total = len(placements)
-    for t in sorted(by_row):
-        _jb2_enc_int(enc2, iadt, t - stript)
-        stript = t
-        first = True
-        curs = 0
-        for s, sid, p_idx in sorted(by_row[t]):
-            if first:
-                _jb2_enc_int(enc2, iafs, s - firsts)
-                firsts = s
-                curs = s
-                first = False
-            else:
-                _jb2_enc_int(enc2, iads, s - curs)
-                curs = s
-            _jb2_enc_iaid(enc2, iaid_cx, symcodelen, sid)
-            sym = symbols[order[sid]]
-            bmp = instance_refine.get(p_idx)
-            if refine:
-                _jb2_enc_int(enc2, iari, 1 if bmp is not None else 0)
-            if bmp is not None:
-                sw0, sh0 = len(sym[0]), len(sym)
-                wi, hi = len(bmp[0]), len(bmp)
-                _jb2_enc_int(enc2, iardw, wi - sw0)
-                _jb2_enc_int(enc2, iardh, hi - sh0)
-                _jb2_enc_int(enc2, iardx, 0)
-                _jb2_enc_int(enc2, iardy, 0)
-                _jb2_refine_into(enc2, gr_ctx, bmp, sym, wi, hi, sw0, sh0,
-                                 (wi - sw0) >> 1, (hi - sh0) >> 1,
-                                 template=0)
-                sym = bmp
-            curs += (len(sym) if transposed else len(sym[0])) - 1
-            n_inst += 1
-        if n_inst < total:
-            _jb2_enc_int(enc2, iads, None)  # end of strip
-    tr_body = enc2.flush()
-    region_info = (cols.to_bytes(4, "big") + nrows.to_bytes(4, "big")
-                   + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                   + bytes([0]))
-    # SBREFINE bit 1, REFCORNER bits 4-5, TRANSPOSED bit 6; strips=1, OR
-    tr_flags = (((1 if refine else 0) << 1) | ((ref_corner & 3) << 4)
-                | ((1 if transposed else 0) << 6))
-    rat = bytes([0xFF, 0xFF, 0xFF, 0xFF]) if refine else b""
-    tr_data = (region_info + tr_flags.to_bytes(2, "big") + rat
-               + total.to_bytes(4, "big") + tr_body)
-
-    page_info = (cols.to_bytes(4, "big") + nrows.to_bytes(4, "big")
-                 + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                 + bytes([0x01]) + (0).to_bytes(2, "big"))
-    stream = (_jb2_segment(1, 48, page_info)
-              + _jb2_segment(2, 0, sd_data)
-              + _jb2_segment_refs(3, 6, [2], tr_data)
-              + _jb2_segment(4, 49, b""))
-
-    # composed reference bitmap (TL placement, OR)
-    page = [[0] * cols for _ in range(nrows)]
-    for p_idx, (sym_id, x, y) in enumerate(placements):
-        sym = eff_bitmap(p_idx, sym_id)
-        for yy, srow in enumerate(sym):
-            if 0 <= y + yy < nrows:
-                prow = page[y + yy]
-                for xx, v in enumerate(srow):
-                    if v and 0 <= x + xx < cols:
-                        prow[x + xx] = 1
-    return stream, page
+    tr_data = _jb2_text_region(
+        [symbols[k] for k in order],
+        [(remap[sym_id], x, y) for sym_id, x, y in placements], cols, nrows,
+        ref_corner, transposed, instance_refine)
+    stream = _jb2_stream(cols, nrows,
+                         (0, [], _jb2_symbol_dict(symbols, order)),
+                         (6, [2], tr_data))
+    return stream, _jb2_compose(cols, nrows, [
+        (instance_refine.get(p_idx, symbols[sym_id]), x, y)
+        for p_idx, (sym_id, x, y) in enumerate(placements)])
 
 
 def jbig2_huffman_textregion_encode(symbols: list[list[list[bool]]],
@@ -1061,32 +1044,9 @@ def jbig2_huffman_textregion_encode(symbols: list[list[list[bool]]],
     byte-aligned BMSIZE arithmetic GRR chunks sharing one GR context
     store). Returns (stream, composed page rows 0/1)."""
     instance_refine = instance_refine or {}
-    # --- symbol dictionary segment (arithmetic, as jbig2_text_encode) ---
     order = sorted(range(len(symbols)), key=lambda i: len(symbols[i]))
-    enc = _MQEncoder()
-    gb_ctx: dict = {}
-    iadh, iadw, iaex = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    hcheight = 0
-    i = 0
-    while i < len(order):
-        h = len(symbols[order[i]])
-        _jb2_enc_int(enc, iadh, h - hcheight)
-        hcheight = h
-        symwidth = 0
-        while i < len(order) and len(symbols[order[i]]) == h:
-            w = len(symbols[order[i]][0])
-            _jb2_enc_int(enc, iadw, w - symwidth)
-            symwidth = w
-            _jb2_generic_into(enc, gb_ctx, symbols[order[i]], w)
-            i += 1
-        _jb2_enc_int(enc, iadw, None)
-    _jb2_enc_int(enc, iaex, 0)
-    _jb2_enc_int(enc, iaex, len(symbols))
-    at = bytes([3 & 0xFF, 0xFF, 0x100 - 3, 0xFF, 2, 0xFE, 0x100 - 2, 0xFE])
-    sd_data = (0).to_bytes(2, "big") + at \
-        + len(symbols).to_bytes(4, "big") + len(symbols).to_bytes(4, "big") \
-        + enc.flush()
     remap = {orig: k for k, orig in enumerate(order)}
+    exported = [symbols[k] for k in order]
 
     # --- Huffman text region segment ------------------------------------
     n_syms = len(symbols)
@@ -1096,7 +1056,7 @@ def jbig2_huffman_textregion_encode(symbols: list[list[list[bool]]],
     bw = _JB2BitWriterMSB()
     # §7.4.3.1.7: uniform symbol ID code length L → runcode table with a
     # single 1-bit code for runcode L, emitted once per symbol
-    sym_len = max(1, (n_syms - 1).bit_length() if n_syms > 1 else 1)
+    sym_len = max(1, (n_syms - 1).bit_length())
     for rc in range(35):
         bw.write(1 if rc == sym_len else 0, 4)
     for _ in range(n_syms):
@@ -1106,35 +1066,22 @@ def jbig2_huffman_textregion_encode(symbols: list[list[list[bool]]],
     def put(tbl, v):
         _jb2_huff_put(bw, tbl, v)
 
-    # group placements into strips of `strips` T-rows; the encoded T is
-    # the corner-selected edge of the EFFECTIVE (possibly refined) bitmap
-    def eff_bitmap(p_idx: int, sym_id: int):
-        return instance_refine.get(p_idx, symbols[sym_id])
-
-    by_strip: dict[int, list[tuple[int, int, int, int]]] = {}
-    for p_idx, (sym_id, x, y) in enumerate(placements):
-        bmp0 = eff_bitmap(p_idx, sym_id)
-        if transposed:
-            t_enc = x if ref_corner in (0, 1) else x + len(bmp0[0]) - 1
-            s_coord = y
-        else:
-            t_enc = y if ref_corner in (1, 3) else y + len(bmp0) - 1
-            s_coord = x
-        base = (t_enc // strips) * strips
-        by_strip.setdefault(base, []).append((s_coord, t_enc - base,
-                                              remap[sym_id], p_idx))
     put("B11", 1)  # STRIPT init: stript = -strips
     stript = -strips
     firsts = 0
     n_inst = 0
     total = len(placements)
     gr_ctx: dict = {}
-    for base in sorted(by_strip):
+    # strips of `strips` T-rows; the encoded T is the corner-selected edge
+    # of the EFFECTIVE (possibly refined) bitmap
+    placed = [(remap[sym_id], x, y) for sym_id, x, y in placements]
+    for base, insts in _jb2_strips(exported, placed, instance_refine,
+                                   ref_corner, transposed, strips):
         put("B11", (base - stript) // strips)
         stript = base
         first = True
         curs = 0
-        for x, curt, sid, p_idx in sorted(by_strip[base]):
+        for x, curt, sid, p_idx in insts:
             if first:
                 put("B6", x - firsts)
                 firsts = x
@@ -1146,7 +1093,7 @@ def jbig2_huffman_textregion_encode(symbols: list[list[list[bool]]],
             if strips != 1:
                 bw.write(curt, log_strips)
             bw.write(sid, sym_len)  # canonical uniform-length ID code
-            sym = symbols[order[sid]]
+            sym = exported[sid]
             bmp = instance_refine.get(p_idx)
             if refine:
                 bw.write(1 if bmp is not None else 0, 1)  # RI raw bit
@@ -1172,9 +1119,6 @@ def jbig2_huffman_textregion_encode(symbols: list[list[list[bool]]],
             put("B8", None)  # OOB: end of strip
     tr_body = bw.flush()
 
-    region_info = (cols.to_bytes(4, "big") + nrows.to_bytes(4, "big")
-                   + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                   + bytes([0]))
     # SBHUFF=1, SBREFINE bit 1, LOGSBSTRIPS bits 2-3, REFCORNER bits 4-5,
     # TRANSPOSED bit 6
     tr_flags = (1 | ((1 if refine else 0) << 1) | (log_strips << 2)
@@ -1182,32 +1126,19 @@ def jbig2_huffman_textregion_encode(symbols: list[list[list[bool]]],
                 | ((1 if transposed else 0) << 6))
     # huffman flags: FS=B6(0), DS=B8(0), DT=B11(0), RD*=B15(1), RSIZE=B1(0)
     hflags = (1 << 6) | (1 << 8) | (1 << 10) | (1 << 12)
-    rat = bytes([0xFF, 0xFF, 0xFF, 0xFF]) if refine else b""
-    tr_data = (region_info + tr_flags.to_bytes(2, "big")
-               + hflags.to_bytes(2, "big") + rat
+    tr_data = (_jb2_region_info(cols, nrows) + tr_flags.to_bytes(2, "big")
+               + hflags.to_bytes(2, "big")
+               + (_JB2_GRAT0 if refine else b"")
                + total.to_bytes(4, "big") + tr_body)
-
-    page_info = (cols.to_bytes(4, "big") + nrows.to_bytes(4, "big")
-                 + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                 + bytes([0x01]) + (0).to_bytes(2, "big"))
-    stream = (_jb2_segment(1, 48, page_info)
-              + _jb2_segment(2, 0, sd_data)
-              + _jb2_segment_refs(3, 6, [2], tr_data)
-              + _jb2_segment(4, 49, b""))
-
-    page = [[0] * cols for _ in range(nrows)]
-    for p_idx, (sym_id, x, y) in enumerate(placements):
-        sym = instance_refine.get(p_idx, symbols[sym_id])
-        for yy, srow in enumerate(sym):
-            if 0 <= y + yy < nrows:
-                prow = page[y + yy]
-                for xx, v in enumerate(srow):
-                    if v and 0 <= x + xx < cols:
-                        prow[x + xx] = 1
-    return stream, page
+    stream = _jb2_stream(cols, nrows,
+                         (0, [], _jb2_symbol_dict(symbols, order)),
+                         (6, [2], tr_data))
+    return stream, _jb2_compose(cols, nrows, [
+        (instance_refine.get(p_idx, symbols[sym_id]), x, y)
+        for p_idx, (sym_id, x, y) in enumerate(placements)])
 
 
-# --- baseline grayscale JPEG writer-side encoder ------------------------------
+# --- JPEG writer-side encoders ----------------------------------------------
 # Independent T.81 transcription (Annex K tables); the engine's decoder
 # (pdf/jpeg.py) is round-trip checked against it by PSNR.
 
@@ -1301,6 +1232,148 @@ _JPG12_AC_BITS = [0, 0, 0, 0, 0, 0, 0, len(_JPG12_AC_VALS), 0, 0, 0, 0, 0,
                   0, 0, 0]
 
 
+def _seg(marker: int, payload: bytes) -> bytes:
+    """One JPEG marker segment: FF, marker, 2-byte length, payload."""
+    return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") \
+        + payload
+
+
+def _mag(v: int) -> tuple[int, int]:
+    """(magnitude bits, size category) of a signed DC/AC value."""
+    t = abs(v).bit_length()
+    return (v if v >= 0 else v + (1 << t) - 1, t)
+
+
+@functools.cache
+def _jpg_dct():
+    """(8×8 DCT-II matrix, K.1 quantizer in natural order)."""
+    import numpy as np
+
+    c = np.zeros((8, 8))
+    for k in range(8):
+        for n in range(8):
+            c[k, n] = np.cos(np.pi * (2 * n + 1) * k / 16.0) * (
+                np.sqrt(0.125) if k == 0 else 0.5)
+    q = np.zeros(64)
+    q[_JPG_ZZ] = _JPG_Q  # K.1 table is given in zigzag order
+    return c, q.reshape(8, 8)
+
+
+def _jpg_pad(plane, ph: int, pw: int):
+    """``plane`` padded to ph×pw by replicating its last row and column."""
+    import numpy as np
+
+    h, w = plane.shape
+    p = np.zeros((ph, pw))
+    p[:h, :w] = plane
+    p[h:, :w] = plane[h - 1 : h, :]
+    p[:, w:] = p[:, w - 1 : w]
+    return p
+
+
+def _jpg_zz(blk, shift: float) -> list[int]:
+    """Level-shifted, DCT'd, quantized 8×8 block in zigzag order."""
+    import numpy as np
+
+    c, q = _jpg_dct()
+    return np.rint((c @ (blk - shift) @ c.T) / q).astype("i8").reshape(
+        64)[_JPG_ZZ].tolist()
+
+
+def _jpeg_sequential(planes, luma_sampling: tuple[int, int],
+                     precision: int = 8, restart_interval: int = 0) -> bytes:
+    """Sequential-DCT JPEG (T.81; Annex K tables) of one plane or three
+    (Y, Cb, Cr): baseline SOF0 at precision 8, extended SOF1 at 12 (2048
+    level shift, 16-category DC table). Component 0 samples at
+    luma_sampling = (H, V); chroma at (1, 1), box-averaged by V rows × H
+    columns along each axis at least that long (a shorter axis keeps full
+    resolution). All components share one quantization table and one
+    Huffman pair (selector 0). With restart_interval > 0, emits a DRI
+    segment and RSTn markers every that many MCUs (DC predictors reset,
+    byte realigned)."""
+    hs, vs = luma_sampling
+    h, w = planes[0].shape
+    mh, mw = -(-h // (8 * vs)), -(-w // (8 * hs))
+    fv, fh = (vs if h >= vs else 1), (hs if w >= hs else 1)
+    comps = [(_jpg_pad(planes[0], mh * 8 * vs, mw * 8 * hs), hs, vs)]
+    for pl in planes[1:]:
+        box = pl[: h // fv * fv, : w // fh * fh].reshape(
+            h // fv, fv, w // fh, fh).mean(axis=(1, 3))
+        comps.append((_jpg_pad(box, mh * 8, mw * 8), 1, 1))
+    if precision == 12:
+        tables = (_JPG12_DC_BITS, _JPG12_DC_VALS, _JPG12_AC_BITS,
+                  _JPG12_AC_VALS)
+    else:
+        tables = (_JPG_DC_BITS, _JPG_DC_VALS, _JPG_AC_BITS, _JPG_AC_VALS)
+    dc_codes = _jpg_codes(tables[0], tables[1])
+    ac_codes = _jpg_codes(tables[2], tables[3])
+    shift = float(1 << (precision - 1))
+    bwr = _JpgBitWriter()
+    preds = [0] * len(comps)
+    mcu = 0
+    rst = 0
+    for my in range(mh):
+        for mx in range(mw):
+            if restart_interval and mcu and mcu % restart_interval == 0:
+                bwr.marker(0xD0 + rst)
+                rst = (rst + 1) & 7
+                preds = [0] * len(comps)
+            mcu += 1
+            for ci, (plane, ch, cv) in enumerate(comps):
+                for by in range(my * cv, my * cv + cv):
+                    for bx in range(mx * ch, mx * ch + ch):
+                        zz = _jpg_zz(plane[by * 8 : by * 8 + 8,
+                                           bx * 8 : bx * 8 + 8], shift)
+                        v, t = _mag(zz[0] - preds[ci])
+                        preds[ci] = zz[0]
+                        bwr.write(*dc_codes[t])
+                        if t:
+                            bwr.write(v & ((1 << t) - 1), t)
+                        run = 0
+                        last_nz = max((i for i in range(1, 64) if zz[i]),
+                                      default=0)
+                        for k in range(1, last_nz + 1):
+                            if zz[k] == 0:
+                                run += 1
+                                continue
+                            while run > 15:
+                                bwr.write(*ac_codes[0xF0])  # ZRL
+                                run -= 16
+                            v, t = _mag(zz[k])
+                            bwr.write(*ac_codes[(run << 4) | t])
+                            bwr.write(v & ((1 << t) - 1), t)
+                            run = 0
+                        if last_nz < 63:
+                            bwr.write(*ac_codes[0x00])  # EOB
+    body = bwr.flush()
+    n = len(comps)
+    sof = _seg(0xC0 if precision == 8 else 0xC1,
+               bytes([precision]) + h.to_bytes(2, "big")
+               + w.to_bytes(2, "big") + bytes([n])
+               + b"".join(bytes([ci + 1, (ch << 4) | cv, 0])
+                          for ci, (_, ch, cv) in enumerate(comps)))
+    dht = _seg(0xC4, bytes([0x00]) + bytes(tables[0]) + bytes(tables[1])) \
+        + _seg(0xC4, bytes([0x10]) + bytes(tables[2]) + bytes(tables[3]))
+    dri = _seg(0xDD, restart_interval.to_bytes(2, "big")) \
+        if restart_interval else b""
+    sos = _seg(0xDA, bytes([n]) + b"".join(bytes([ci + 1, 0x00])
+                                           for ci in range(n))
+               + bytes([0, 63, 0]))
+    return (b"\xff\xd8" + _seg(0xDB, bytes([0]) + bytes(_JPG_Q)) + sof + dht
+            + dri + sos + body + b"\xff\xd9")
+
+
+def _jpg_ycbcr(rgb) -> list:
+    """JFIF RGB → Y, Cb, Cr float planes."""
+    import numpy as np
+
+    rgb = np.asarray(rgb, dtype="f8")
+    r, g, b = rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2]
+    return [0.299 * r + 0.587 * g + 0.114 * b,
+            -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0,
+            0.5 * r - 0.418688 * g - 0.081312 * b + 128.0]
+
+
 def jpeg_gray_encode(img, restart_interval: int = 0,
                      precision: int = 8) -> bytes:
     """Grayscale JPEG encoder (T.81; Annex K tables): baseline sequential
@@ -1310,354 +1383,28 @@ def jpeg_gray_encode(img, restart_interval: int = 0,
     reset + byte realignment)."""
     import numpy as np
 
-    c = np.zeros((8, 8))
-    for k in range(8):
-        for n in range(8):
-            c[k, n] = np.cos(np.pi * (2 * n + 1) * k / 16.0) * (
-                np.sqrt(0.125) if k == 0 else 0.5)
-    img = np.asarray(img, dtype="f8")
-    h, w = img.shape
-    bh, bw = (h + 7) // 8, (w + 7) // 8
-    padded = np.zeros((bh * 8, bw * 8))
-    padded[:h, :w] = img
-    padded[h:, :w] = img[h - 1 : h, :]  # edge replicate
-    padded[:, w:] = padded[:, w - 1 : w]
-    q = np.zeros(64)
-    q[_JPG_ZZ] = _JPG_Q  # K.1 table is given in zigzag order
-    q = q.reshape(8, 8)
-    if precision == 12:
-        dc_bits, dc_vals = _JPG12_DC_BITS, _JPG12_DC_VALS
-        ac_bits, ac_vals = _JPG12_AC_BITS, _JPG12_AC_VALS
-    else:
-        dc_bits, dc_vals = _JPG_DC_BITS, _JPG_DC_VALS
-        ac_bits, ac_vals = _JPG_AC_BITS, _JPG_AC_VALS
-    dc_codes = _jpg_codes(dc_bits, dc_vals)
-    ac_codes = _jpg_codes(ac_bits, ac_vals)
-    bwr = _JpgBitWriter()
-    pred = 0
-
-    def mag(v: int) -> tuple[int, int]:
-        t = abs(v).bit_length()
-        return (v if v >= 0 else v + (1 << t) - 1, t)
-
-    mcu = 0
-    rst = 0
-    for by in range(bh):
-        for bx in range(bw):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                bwr.marker(0xD0 + rst)
-                rst = (rst + 1) & 7
-                pred = 0
-            mcu += 1
-            blk = (padded[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
-                   - float(1 << (precision - 1)))
-            coef = c @ blk @ c.T
-            quant = np.rint(coef / q).astype("i8")
-            zz = quant.reshape(64)[_JPG_ZZ]
-            diff = int(zz[0]) - pred
-            pred = int(zz[0])
-            v, t = mag(diff)
-            bwr.write(*dc_codes[t])
-            if t:
-                bwr.write(v & ((1 << t) - 1), t)
-            run = 0
-            last_nz = max((i for i in range(1, 64) if zz[i]), default=0)
-            for k in range(1, last_nz + 1):
-                if zz[k] == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    bwr.write(*ac_codes[0xF0])  # ZRL
-                    run -= 16
-                v, t = mag(int(zz[k]))
-                bwr.write(*ac_codes[(run << 4) | t])
-                bwr.write(v & ((1 << t) - 1), t)
-                run = 0
-            if last_nz < 63:
-                bwr.write(*ac_codes[0x00])  # EOB
-    body = bwr.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") \
-            + payload
-
-    dqt = seg(0xDB, bytes([0]) + bytes(_JPG_Q))
-    sof = seg(0xC0 if precision == 8 else 0xC1,
-              bytes([precision]) + h.to_bytes(2, "big")
-              + w.to_bytes(2, "big") + bytes([1, 1, 0x11, 0]))
-    dht = seg(0xC4, bytes([0x00]) + bytes(dc_bits) + bytes(dc_vals)) \
-        + seg(0xC4, bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals))
-    dri = seg(0xDD, restart_interval.to_bytes(2, "big")) \
-        if restart_interval else b""
-    sos = seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    return b"\xff\xd8" + dqt + sof + dht + dri + sos + body + b"\xff\xd9"
+    return _jpeg_sequential([np.asarray(img, dtype="f8")], (1, 1),
+                            precision, restart_interval)
 
 
 def jpeg_color_encode(rgb) -> bytes:
     """Baseline 4:4:4 color JPEG encoder: JFIF RGB→YCbCr, three interleaved
     components sharing the K.1 quantization and K.3 luminance Huffman
     tables (selector 0 for all — legal and round-trip-simple)."""
-    import numpy as np
-
-    rgb = np.asarray(rgb, dtype="f8")
-    h, w, _ = rgb.shape
-    r, g, b = rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2]
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-    cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-    planes = [y, cb, cr]
-
-    c = np.zeros((8, 8))
-    for k in range(8):
-        for n in range(8):
-            c[k, n] = np.cos(np.pi * (2 * n + 1) * k / 16.0) * (
-                np.sqrt(0.125) if k == 0 else 0.5)
-    bh, bw = (h + 7) // 8, (w + 7) // 8
-    padded = []
-    for pl in planes:
-        p = np.zeros((bh * 8, bw * 8))
-        p[:h, :w] = pl
-        p[h:, :w] = pl[h - 1 : h, :]
-        p[:, w:] = p[:, w - 1 : w]
-        padded.append(p)
-    q = np.zeros(64)
-    q[_JPG_ZZ] = _JPG_Q
-    q = q.reshape(8, 8)
-    dc_codes = _jpg_codes(_JPG_DC_BITS, _JPG_DC_VALS)
-    ac_codes = _jpg_codes(_JPG_AC_BITS, _JPG_AC_VALS)
-    bwr = _JpgBitWriter()
-    preds = [0, 0, 0]
-
-    def mag(v: int) -> tuple[int, int]:
-        t = abs(v).bit_length()
-        return (v if v >= 0 else v + (1 << t) - 1, t)
-
-    for by in range(bh):
-        for bx in range(bw):
-            for ci in range(3):  # interleaved MCU, 4:4:4
-                blk = padded[ci][by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] - 128.0
-                quant = np.rint((c @ blk @ c.T) / q).astype("i8")
-                zz = quant.reshape(64)[_JPG_ZZ]
-                diff = int(zz[0]) - preds[ci]
-                preds[ci] = int(zz[0])
-                v, t = mag(diff)
-                bwr.write(*dc_codes[t])
-                if t:
-                    bwr.write(v & ((1 << t) - 1), t)
-                run = 0
-                last_nz = max((i for i in range(1, 64) if zz[i]), default=0)
-                for k in range(1, last_nz + 1):
-                    if zz[k] == 0:
-                        run += 1
-                        continue
-                    while run > 15:
-                        bwr.write(*ac_codes[0xF0])
-                        run -= 16
-                    v, t = mag(int(zz[k]))
-                    bwr.write(*ac_codes[(run << 4) | t])
-                    bwr.write(v & ((1 << t) - 1), t)
-                    run = 0
-                if last_nz < 63:
-                    bwr.write(*ac_codes[0x00])
-    body = bwr.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") \
-            + payload
-
-    dqt = seg(0xDB, bytes([0]) + bytes(_JPG_Q))
-    sof = seg(0xC0, bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
-              + bytes([3, 1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0]))
-    dht = seg(0xC4, bytes([0x00]) + bytes(_JPG_DC_BITS) + bytes(_JPG_DC_VALS)) \
-        + seg(0xC4, bytes([0x10]) + bytes(_JPG_AC_BITS) + bytes(_JPG_AC_VALS))
-    sos = seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-    return b"\xff\xd8" + dqt + sof + dht + sos + body + b"\xff\xd9"
+    return _jpeg_sequential(_jpg_ycbcr(rgb), (1, 1))
 
 
 def jpeg_420_encode(rgb) -> bytes:
     """Baseline 4:2:0 color JPEG encoder (the common camera/scanner shape):
     16×16 MCUs of 4 luma blocks + box-averaged Cb/Cr."""
-    import numpy as np
-
-    rgb = np.asarray(rgb, dtype="f8")
-    h, w, _ = rgb.shape
-    r, g, b = rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2]
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-    cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-    mh, mw = (h + 15) // 16, (w + 15) // 16
-
-    def pad(pl, ph, pw):
-        p = np.zeros((ph, pw))
-        p[: pl.shape[0], : pl.shape[1]] = pl
-        p[pl.shape[0]:, : pl.shape[1]] = pl[-1:, :]
-        p[:, pl.shape[1]:] = p[:, pl.shape[1] - 1 : pl.shape[1]]
-        return p
-
-    yp = pad(y, mh * 16, mw * 16)
-    # 2x2 box-average the chroma planes, then pad to the chroma grid
-    cb2 = cb[: (h // 2) * 2, : (w // 2) * 2].reshape(
-        h // 2, 2, w // 2, 2).mean(axis=(1, 3)) if h >= 2 and w >= 2 else cb
-    cr2 = cr[: (h // 2) * 2, : (w // 2) * 2].reshape(
-        h // 2, 2, w // 2, 2).mean(axis=(1, 3)) if h >= 2 and w >= 2 else cr
-    cbp = pad(cb2, mh * 8, mw * 8)
-    crp = pad(cr2, mh * 8, mw * 8)
-
-    c = np.zeros((8, 8))
-    for k in range(8):
-        for n in range(8):
-            c[k, n] = np.cos(np.pi * (2 * n + 1) * k / 16.0) * (
-                np.sqrt(0.125) if k == 0 else 0.5)
-    q = np.zeros(64)
-    q[_JPG_ZZ] = _JPG_Q
-    q = q.reshape(8, 8)
-    dc_codes = _jpg_codes(_JPG_DC_BITS, _JPG_DC_VALS)
-    ac_codes = _jpg_codes(_JPG_AC_BITS, _JPG_AC_VALS)
-    bwr = _JpgBitWriter()
-    preds = [0, 0, 0]
-
-    def mag(v: int) -> tuple[int, int]:
-        t = abs(v).bit_length()
-        return (v if v >= 0 else v + (1 << t) - 1, t)
-
-    def put_block(plane, py, px, ci):
-        blk = plane[py : py + 8, px : px + 8] - 128.0
-        quant = np.rint((c @ blk @ c.T) / q).astype("i8")
-        zz = quant.reshape(64)[_JPG_ZZ]
-        diff = int(zz[0]) - preds[ci]
-        preds[ci] = int(zz[0])
-        v, t = mag(diff)
-        bwr.write(*dc_codes[t])
-        if t:
-            bwr.write(v & ((1 << t) - 1), t)
-        run = 0
-        last_nz = max((i for i in range(1, 64) if zz[i]), default=0)
-        for k in range(1, last_nz + 1):
-            if zz[k] == 0:
-                run += 1
-                continue
-            while run > 15:
-                bwr.write(*ac_codes[0xF0])
-                run -= 16
-            v, t = mag(int(zz[k]))
-            bwr.write(*ac_codes[(run << 4) | t])
-            bwr.write(v & ((1 << t) - 1), t)
-            run = 0
-        if last_nz < 63:
-            bwr.write(*ac_codes[0x00])
-
-    for my in range(mh):
-        for mx in range(mw):
-            for sub in range(4):
-                put_block(yp, my * 16 + (sub // 2) * 8,
-                          mx * 16 + (sub % 2) * 8, 0)
-            put_block(cbp, my * 8, mx * 8, 1)
-            put_block(crp, my * 8, mx * 8, 2)
-    body = bwr.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") \
-            + payload
-
-    dqt = seg(0xDB, bytes([0]) + bytes(_JPG_Q))
-    sof = seg(0xC0, bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
-              + bytes([3, 1, 0x22, 0, 2, 0x11, 0, 3, 0x11, 0]))
-    dht = seg(0xC4, bytes([0x00]) + bytes(_JPG_DC_BITS) + bytes(_JPG_DC_VALS)) \
-        + seg(0xC4, bytes([0x10]) + bytes(_JPG_AC_BITS) + bytes(_JPG_AC_VALS))
-    sos = seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-    return b"\xff\xd8" + dqt + sof + dht + sos + body + b"\xff\xd9"
+    return _jpeg_sequential(_jpg_ycbcr(rgb), (2, 2))
 
 
 def jpeg_411_encode(rgb) -> bytes:
     """Baseline 4:1:1 color JPEG encoder (Y h=4,v=1; Cb/Cr 1,1 — the DV/
     camera shape the reference's Go image/jpeg also decodes): 32×8 MCUs
     of 4 horizontal luma blocks + 4×1 box-averaged chroma."""
-    import numpy as np
-
-    rgb = np.asarray(rgb, dtype="f8")
-    h, w, _ = rgb.shape
-    r, g, b = rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2]
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-    cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-    mh, mw = (h + 7) // 8, (w + 31) // 32
-
-    def pad(pl, ph, pw):
-        p = np.zeros((ph, pw))
-        p[: pl.shape[0], : pl.shape[1]] = pl
-        p[pl.shape[0]:, : pl.shape[1]] = pl[-1:, :]
-        p[:, pl.shape[1]:] = p[:, pl.shape[1] - 1 : pl.shape[1]]
-        return p
-
-    yp = pad(y, mh * 8, mw * 32)
-    w4 = (w // 4) * 4
-    cb4 = cb[:, :w4].reshape(h, w // 4, 4).mean(axis=2) if w >= 4 else cb
-    cr4 = cr[:, :w4].reshape(h, w // 4, 4).mean(axis=2) if w >= 4 else cr
-    cbp = pad(cb4, mh * 8, mw * 8)
-    crp = pad(cr4, mh * 8, mw * 8)
-
-    c = np.zeros((8, 8))
-    for k in range(8):
-        for n in range(8):
-            c[k, n] = np.cos(np.pi * (2 * n + 1) * k / 16.0) * (
-                np.sqrt(0.125) if k == 0 else 0.5)
-    q = np.zeros(64)
-    q[_JPG_ZZ] = _JPG_Q
-    q = q.reshape(8, 8)
-    dc_codes = _jpg_codes(_JPG_DC_BITS, _JPG_DC_VALS)
-    ac_codes = _jpg_codes(_JPG_AC_BITS, _JPG_AC_VALS)
-    bwr = _JpgBitWriter()
-    preds = [0, 0, 0]
-
-    def mag(v: int) -> tuple[int, int]:
-        t = abs(v).bit_length()
-        return (v if v >= 0 else v + (1 << t) - 1, t)
-
-    def put_block(plane, py, px, ci):
-        blk = plane[py : py + 8, px : px + 8] - 128.0
-        quant = np.rint((c @ blk @ c.T) / q).astype("i8")
-        zz = quant.reshape(64)[_JPG_ZZ]
-        diff = int(zz[0]) - preds[ci]
-        preds[ci] = int(zz[0])
-        v, t = mag(diff)
-        bwr.write(*dc_codes[t])
-        if t:
-            bwr.write(v & ((1 << t) - 1), t)
-        run = 0
-        last_nz = max((i for i in range(1, 64) if zz[i]), default=0)
-        for k in range(1, last_nz + 1):
-            if zz[k] == 0:
-                run += 1
-                continue
-            while run > 15:
-                bwr.write(*ac_codes[0xF0])
-                run -= 16
-            v, t = mag(int(zz[k]))
-            bwr.write(*ac_codes[(run << 4) | t])
-            bwr.write(v & ((1 << t) - 1), t)
-            run = 0
-        if last_nz < 63:
-            bwr.write(*ac_codes[0x00])
-
-    for my in range(mh):
-        for mx in range(mw):
-            for sub in range(4):
-                put_block(yp, my * 8, mx * 32 + sub * 8, 0)
-            put_block(cbp, my * 8, mx * 8, 1)
-            put_block(crp, my * 8, mx * 8, 2)
-    body = bwr.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") \
-            + payload
-
-    dqt = seg(0xDB, bytes([0]) + bytes(_JPG_Q))
-    sof = seg(0xC0, bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
-              + bytes([3, 1, 0x41, 0, 2, 0x11, 0, 3, 0x11, 0]))
-    dht = seg(0xC4, bytes([0x00]) + bytes(_JPG_DC_BITS) + bytes(_JPG_DC_VALS)) \
-        + seg(0xC4, bytes([0x10]) + bytes(_JPG_AC_BITS) + bytes(_JPG_AC_VALS))
-    sos = seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-    return b"\xff\xd8" + dqt + sof + dht + sos + body + b"\xff\xd9"
+    return _jpeg_sequential(_jpg_ycbcr(rgb), (4, 1))
 
 
 # lossless categories reach 16 (the special diff=32768 symbol carries no
@@ -1677,10 +1424,6 @@ def jpeg_lossless_encode(img, precision: int = 8,
     codes = _jpg_codes(_JPGL_DC_BITS, _JPGL_DC_VALS)
     bwr = _JpgBitWriter()
     default = 1 << (precision - 1)
-
-    def mag(v: int) -> tuple[int, int]:
-        t = abs(v).bit_length()
-        return (v if v >= 0 else v + (1 << t) - 1, t)
 
     for y in range(h):
         for x in range(w):
@@ -1702,21 +1445,17 @@ def jpeg_lossless_encode(img, precision: int = 8,
                 bwr.write(*codes[16])
                 continue
             signed = d - 65536 if d > 32768 else d
-            v, t = mag(signed)
+            v, t = _mag(signed)
             bwr.write(*codes[t])
             if t:
                 bwr.write(v & ((1 << t) - 1), t)
     body = bwr.flush()
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") \
-            + payload
-
-    sof = seg(0xC3, bytes([precision]) + h.to_bytes(2, "big")
+    sof = _seg(0xC3, bytes([precision]) + h.to_bytes(2, "big")
               + w.to_bytes(2, "big") + bytes([1, 1, 0x11, 0]))
-    dht = seg(0xC4, bytes([0x00]) + bytes(_JPGL_DC_BITS)
+    dht = _seg(0xC4, bytes([0x00]) + bytes(_JPGL_DC_BITS)
               + bytes(_JPGL_DC_VALS))
-    sos = seg(0xDA, bytes([1, 1, 0x00, predictor, 0, 0x00]))
+    sos = _seg(0xDA, bytes([1, 1, 0x00, predictor, 0, 0x00]))
     return b"\xff\xd8" + sof + dht + sos + body + b"\xff\xd9"
 
 
@@ -1729,31 +1468,12 @@ def jpeg_progressive_encode(img) -> bytes:
     independent round-trip oracle for pdf/jpeg.py's progressive path."""
     import numpy as np
 
-    c = np.zeros((8, 8))
-    for k in range(8):
-        for n in range(8):
-            c[k, n] = np.cos(np.pi * (2 * n + 1) * k / 16.0) * (
-                np.sqrt(0.125) if k == 0 else 0.5)
     img = np.asarray(img, dtype="f8")
     h, w = img.shape
     bh, bw = (h + 7) // 8, (w + 7) // 8
-    padded = np.zeros((bh * 8, bw * 8))
-    padded[:h, :w] = img
-    padded[h:, :w] = img[h - 1 : h, :]
-    padded[:, w:] = padded[:, w - 1 : w]
-    q = np.zeros(64)
-    q[_JPG_ZZ] = _JPG_Q
-    q = q.reshape(8, 8)
-    blocks: list[list[int]] = []
-    for by in range(bh):
-        for bx in range(bw):
-            blk = padded[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] - 128.0
-            quant = np.rint((c @ blk @ c.T) / q).astype("i8")
-            blocks.append([int(v) for v in quant.reshape(64)[_JPG_ZZ]])
-
-    def mag(v: int) -> tuple[int, int]:
-        t = abs(v).bit_length()
-        return (v if v >= 0 else v + (1 << t) - 1, t)
+    padded = _jpg_pad(img, bh * 8, bw * 8)
+    blocks = [_jpg_zz(padded[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8], 128.0)
+              for by in range(bh) for bx in range(bw)]
 
     def flat_table(symbols):
         """Canonical table giving every symbol the same code length L with
@@ -1777,7 +1497,7 @@ def jpeg_progressive_encode(img) -> bytes:
             for zz in blocks:
                 diff = (zz[0] >> al) - pred
                 pred = zz[0] >> al
-                v, t = mag(diff)
+                v, t = _mag(diff)
                 sym(t)
                 if t:
                     put(v, t)
@@ -1816,7 +1536,7 @@ def jpeg_progressive_encode(img) -> bytes:
                     while run > 15:
                         sym(0xF0)
                         run -= 16
-                    v, t = mag(-m if sign else m)
+                    v, t = _mag(-m if sign else m)
                     sym((run << 4) | t)
                     put(v, t)
                     run = 0
@@ -1889,12 +1609,8 @@ def jpeg_progressive_encode(img) -> bytes:
             flush()
         return ev
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") \
-            + payload
-
-    out = b"\xff\xd8" + seg(0xDB, bytes([0]) + bytes(_JPG_Q))
-    out += seg(0xC2, bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
+    out = b"\xff\xd8" + _seg(0xDB, bytes([0]) + bytes(_JPG_Q))
+    out += _seg(0xC2, bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
                + bytes([1, 1, 0x11, 0]))
     for ss, se, ah, al in ((0, 0, 0, 1), (1, 5, 0, 1), (6, 63, 0, 1),
                            (0, 0, 1, 0), (1, 63, 1, 0)):
@@ -1905,14 +1621,14 @@ def jpeg_progressive_encode(img) -> bytes:
             bits, vals = flat_table(syms)
             codes = _jpg_codes(bits, vals)
             tc = 0 if ss == 0 else 1
-            out += seg(0xC4, bytes([(tc << 4) | 0]) + bytes(bits)
+            out += _seg(0xC4, bytes([(tc << 4) | 0]) + bytes(bits)
                        + bytes(vals))
         for e in ev:
             if e[0] == "sym":
                 bwr.write(*codes[e[1]])
             else:
                 bwr.write(e[1], e[2])
-        out += seg(0xDA, bytes([1, 1, 0x00, ss, se, (ah << 4) | al]))
+        out += _seg(0xDA, bytes([1, 1, 0x00, ss, se, (ah << 4) | al]))
         out += bwr.flush()
     return out + b"\xff\xd9"
 
@@ -2098,26 +1814,15 @@ def jbig2_refinement_encode(base_rows, target_rows, cols: int,
     """Embedded JBIG2: page info + generic region (base) + immediate
     refinement region (type 42) replacing it with `target_rows`."""
     h = len(base_rows)
-    page_info = (cols.to_bytes(4, "big") + h.to_bytes(4, "big")
-                 + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                 + bytes([0x01]) + (0).to_bytes(2, "big"))
-    region_info = (cols.to_bytes(4, "big") + h.to_bytes(4, "big")
-                   + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                   + bytes([0]))
-    gen_data = (region_info + bytes([0x00])
-                + bytes([3 & 0xFF, 0xFF, 0x100 - 3, 0xFF, 2, 0xFE,
-                         0x100 - 2, 0xFE])
+    region_info = _jb2_region_info(cols, h)
+    gen_data = (region_info + bytes([0x00]) + _JB2_AT0
                 + _jb2_generic_body(base_rows, cols))
     rflags = (1 if template else 0) | (2 if tpgron else 0)
-    rdata = region_info + bytes([rflags])
-    if template == 0:
-        rdata += bytes([0xFF, 0xFF, 0xFF, 0xFF])  # GRAT nominal (-1,-1) x2
-    rdata += _jb2_refine_body(target_rows, base_rows, cols, h,
-                              template, tpgron)
-    stream = (_jb2_segment(1, 48, page_info)
-              + _jb2_segment(2, 38, gen_data)
-              + _jb2_segment(3, 42, rdata)
-              + _jb2_segment(4, 49, b""))
+    rdata = (region_info + bytes([rflags])
+             + (_JB2_GRAT0 if template == 0 else b"")
+             + _jb2_refine_body(target_rows, base_rows, cols, h, template,
+                                tpgron))
+    stream = _jb2_stream(cols, h, (38, [], gen_data), (42, [], rdata))
     want = [[1 if v else 0 for v in r] for r in target_rows]
     return stream, want
 
@@ -2134,30 +1839,20 @@ def jbig2_huffman_text_encode(symbols, placements, cols: int, nrows: int,
                    key=lambda i: (len(symbols[i]), len(symbols[i][0])))
     bw = _JB2BitWriterMSB()
     hcheight = 0
-    i = 0
-    while i < len(order):
-        hgt = len(symbols[order[i]])
+    for hgt, cls in groupby(order, key=lambda k: len(symbols[k])):
+        cls = list(cls)
         _jb2_huff_put(bw, "B4", hgt - hcheight)
         hcheight = hgt
         symwidth = 0
-        cls: list[int] = []
-        while i < len(order) and len(symbols[order[i]]) == hgt:
-            wd = len(symbols[order[i]][0])
+        for k in cls:
+            wd = len(symbols[k][0])
             _jb2_huff_put(bw, dw_tbl, wd - symwidth)
             symwidth = wd
-            cls.append(order[i])
-            i += 1
         _jb2_huff_put(bw, dw_tbl, None)  # OOB: end of height class
         # collective bitmap: class symbols concatenated left-to-right
         totwidth = sum(len(symbols[k][0]) for k in cls)
-        coll = [[False] * totwidth for _ in range(hgt)]
-        x0 = 0
-        for k in cls:
-            sym = symbols[k]
-            for yy in range(hgt):
-                for xx in range(len(sym[0])):
-                    coll[yy][x0 + xx] = bool(sym[yy][xx])
-            x0 += len(sym[0])
+        coll = [[bool(v) for k in cls for v in symbols[k][yy]]
+                for yy in range(hgt)]
         if mmr:
             body = ccitt_g4_encode(coll, totwidth)
             _jb2_huff_put(bw, "B1", len(body))
@@ -2182,70 +1877,17 @@ def jbig2_huffman_text_encode(symbols, placements, cols: int, nrows: int,
         + len(symbols).to_bytes(4, "big") + len(symbols).to_bytes(4, "big") \
         + bw.flush()
     remap = {orig: k for k, orig in enumerate(order)}
-
-    # arithmetic text region (same shape as jbig2_text_encode, TL corner)
-    n_syms = len(symbols)
-    symcodelen = max(1, (n_syms - 1).bit_length() if n_syms > 1 else 1)
-    enc2 = _MQEncoder()
-    iadt, iafs, iads = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    iaid_cx = [[0, 0] for _ in range(1 << (symcodelen + 1))]
-    by_row: dict[int, list[tuple[int, int]]] = {}
-    for sym_id, x, y in placements:
-        by_row.setdefault(y, []).append((x, remap[sym_id]))
-    _jb2_enc_int(enc2, iadt, 0)
-    stript = 0
-    firsts = 0
-    n_inst = 0
-    total = len(placements)
-    for y in sorted(by_row):
-        _jb2_enc_int(enc2, iadt, y - stript)
-        stript = y
-        first = True
-        curs = 0
-        for x, sid in sorted(by_row[y]):
-            if first:
-                _jb2_enc_int(enc2, iafs, x - firsts)
-                firsts = x
-                curs = x
-                first = False
-            else:
-                _jb2_enc_int(enc2, iads, x - curs)
-                curs = x
-            _jb2_enc_iaid(enc2, iaid_cx, symcodelen, sid)
-            curs += len(symbols[order[sid]][0]) - 1
-            n_inst += 1
-        if n_inst < total:
-            _jb2_enc_int(enc2, iads, None)
-    region_info = (cols.to_bytes(4, "big") + nrows.to_bytes(4, "big")
-                   + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                   + bytes([0]))
-    tr_flags = 1 << 4  # TL corner, strips=1, untransposed, OR
-    tr_data = (region_info + tr_flags.to_bytes(2, "big")
-               + total.to_bytes(4, "big") + enc2.flush())
-    page_info = (cols.to_bytes(4, "big") + nrows.to_bytes(4, "big")
-                 + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                 + bytes([0x01]) + (0).to_bytes(2, "big"))
-    if custom_dw:
-        stream = (_jb2_segment(1, 48, page_info)
-                  + _jb2_segment(2, 53, _jb2_custom_dw_segment())
-                  + _jb2_segment_refs(3, 0, [2], sd_data)
-                  + _jb2_segment_refs(4, 6, [3], tr_data)
-                  + _jb2_segment(5, 49, b""))
-    else:
-        stream = (_jb2_segment(1, 48, page_info)
-                  + _jb2_segment(2, 0, sd_data)
-                  + _jb2_segment_refs(3, 6, [2], tr_data)
-                  + _jb2_segment(4, 49, b""))
-    page = [[0] * cols for _ in range(nrows)]
-    for sym_id, x, y in placements:
-        sym = symbols[sym_id]
-        for yy, srow in enumerate(sym):
-            if 0 <= y + yy < nrows:
-                prow = page[y + yy]
-                for xx, v in enumerate(srow):
-                    if v and 0 <= x + xx < cols:
-                        prow[x + xx] = 1
-    return stream, page
+    # arithmetic text region (TL corner, strips=1, untransposed, OR)
+    tr_data = _jb2_text_region(
+        [symbols[k] for k in order],
+        [(remap[sym_id], x, y) for sym_id, x, y in placements], cols, nrows)
+    # the custom DW table is segment 2, referred to by the dictionary
+    table = [(53, [], _jb2_custom_dw_segment())] if custom_dw else []
+    stream = _jb2_stream(cols, nrows, *table,
+                         (0, [2] * len(table), sd_data),
+                         (6, [2 + len(table)], tr_data))
+    return stream, _jb2_compose(cols, nrows, [
+        (symbols[sym_id], x, y) for sym_id, x, y in placements])
 
 
 def jbig2_halftone_encode(gray, patterns, mmr: bool = False,
@@ -2295,35 +1937,231 @@ def jbig2_halftone_encode(gray, patterns, mmr: bool = False,
             _jb2_generic_into(enc, ctx, plane_bits(j), hgw,
                               skip=skipmap)
         body = enc.flush()
-    region_info = (rw.to_bytes(4, "big") + rh.to_bytes(4, "big")
-                   + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                   + bytes([0]))
     ht_flags = (1 if mmr else 0) | ((1 if skip_cols else 0) << 3)
-    ht_data = (region_info + bytes([ht_flags])
+    ht_data = (_jb2_region_info(rw, rh) + bytes([ht_flags])
                + hgw.to_bytes(4, "big") + hgh.to_bytes(4, "big")
                + ((hgx << 8) & 0xFFFFFFFF).to_bytes(4, "big")  # 1/256 fp
                + (0).to_bytes(4, "big")
                + (s << 8).to_bytes(2, "big") + (0).to_bytes(2, "big")
                + body)
-    page_info = (rw.to_bytes(4, "big") + rh.to_bytes(4, "big")
-                 + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                 + bytes([0x01]) + (0).to_bytes(2, "big"))
-    stream = (_jb2_segment(1, 48, page_info)
-              + _jb2_segment(2, 16, pd_data)
-              + _jb2_segment_refs(3, 22, [2], ht_data)
-              + _jb2_segment(4, 49, b""))
-    page = [[0] * rw for _ in range(rh)]
-    for mg in range(hgh):
-        for ng in range(hgw):
-            if skipmap is not None and skipmap[mg][ng]:
-                continue  # cell wholly off-region: decodes as gray 0
-            pat = patterns[gray[mg][ng]]
-            for yy in range(s):
-                for xx in range(s):
-                    px = hgx + ng * s + xx
-                    if pat[yy][xx] and 0 <= px < rw:
-                        page[mg * s + yy][px] = 1
-    return stream, page
+    stream = _jb2_stream(rw, rh, (16, [], pd_data), (22, [2], ht_data))
+    # a cell wholly off-region (skip bitmap) decodes as gray 0: not drawn
+    return stream, _jb2_compose(rw, rh, [
+        (patterns[gray[mg][ng]], hgx + ng * s, mg * s)
+        for mg in range(hgh) for ng in range(hgw)
+        if skipmap is None or not skipmap[mg][ng]])
+
+
+def _jb2_agg_strips(insts):
+    """An aggregate's instances (base id, x, y, refined bitmap) as
+    TL/strip-1 text-region strips: [(T = y, [(x, base id, bitmap)] by x)]."""
+    by_t: dict = {}
+    for bid, ax, ay, bmp in insts:
+        by_t.setdefault(ay, []).append((ax, bid, bmp))
+    return [(t, sorted(by_t[t], key=lambda z: z[0])) for t in sorted(by_t)]
+
+
+def _jb2_refagg(refine_dict, base_symbols, variants, placements,
+                cols: int, nrows: int, aggregates) -> tuple[bytes, list]:
+    """The SDREFAGG=1 stream both refagg encoders share: the base
+    arithmetic dictionary (segment 2), ``refine_dict``'s refinement
+    dictionary of the new symbols importing it (segment 3), and an
+    arithmetic text region over the combined exports (segment 4). New
+    symbols are the variants, then the aggregates' composed canvases;
+    both dictionaries code their symbols sorted by (height, width)."""
+    aggregates = aggregates or []
+
+    def by_size(bmps):
+        return sorted(range(len(bmps)),
+                      key=lambda k: (len(bmps[k]), len(bmps[k][0])))
+
+    new = [bmp for _, bmp in variants] + [
+        _jb2_compose(cw, ch, [(bmp, ax, ay) for _, ax, ay, bmp in insts])
+        for cw, ch, insts in aggregates]
+    base_order, new_order = by_size(base_symbols), by_size(new)
+    base_remap = {orig: k for k, orig in enumerate(base_order)}
+    sd2 = refine_dict(base_symbols, base_remap, variants, aggregates, new,
+                      new_order)
+    # export order: base (base_order) then new entries (new_order)
+    all_syms = list(base_symbols) + new
+    export = base_order + [len(base_symbols) + k for k in new_order]
+    remap = {orig: k for k, orig in enumerate(export)}
+    tr_data = _jb2_text_region(
+        [all_syms[k] for k in export],
+        [(remap[sym_id], x, y) for sym_id, x, y in placements], cols, nrows)
+    stream = _jb2_stream(
+        cols, nrows, (0, [], _jb2_symbol_dict(base_symbols, base_order)),
+        (0, [2], sd2), (6, [3], tr_data))
+    return stream, _jb2_compose(cols, nrows, [
+        (all_syms[sym_id], x, y) for sym_id, x, y in placements])
+
+
+def _jb2_refagg_dict_arith(base_symbols, base_remap, variants, aggregates,
+                           new, new_order) -> bytes:
+    """Arithmetic SDREFAGG=1 dictionary data: each variant is IAAI(1) +
+    IAID(base) + IARDX/IARDY(0) + GRR refinement of that base (§6.5.8.2),
+    each aggregate a nested TL/strip-1 text region of refined base
+    instances (§6.5.8.2.1); one MQ coder, one GR context store."""
+    n_total = len(base_symbols) + len(new)
+    symcodelen = max(1, (n_total - 1).bit_length())
+    enc = _MQEncoder()
+    gr_ctx: dict = {}
+    iadh, iadw, iaex = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
+    iaai, iardx, iardy = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
+    # nested aggregate text regions get their OWN integer stats (only the
+    # GR store + IAID tree are shared with the dictionary — §6.5.8.2.1 as
+    # implemented by the reference's decodeThroughTextRegion/setContexts)
+    iadt2, iafs2, iads2 = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
+    iari2, iardw2, iardh2 = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
+    iardx2, iardy2 = _jb2_int_ctx(), _jb2_int_ctx()
+    iaid_cx = [[0, 0] for _ in range(1 << (symcodelen + 1))]
+    hcheight = 0
+    for hgt, cls in groupby(new_order, key=lambda k: len(new[k])):
+        _jb2_enc_int(enc, iadh, hgt - hcheight)
+        hcheight = hgt
+        symwidth = 0
+        for k in cls:
+            wd = len(new[k][0])
+            _jb2_enc_int(enc, iadw, wd - symwidth)
+            symwidth = wd
+            if k < len(variants):
+                base_id, bmp = variants[k]
+                _jb2_enc_int(enc, iaai, 1)  # REFAGGNINST = 1
+                # index into SDINSYMS
+                _jb2_enc_iaid(enc, iaid_cx, symcodelen, base_remap[base_id])
+                _jb2_enc_int(enc, iardx, 0)
+                _jb2_enc_int(enc, iardy, 0)
+                ref = base_symbols[base_id]
+                _jb2_refine_into(enc, gr_ctx, bmp, ref, wd, hgt,
+                                 len(ref[0]), len(ref), 0, 0, template=0)
+                continue
+            # aggregate: nested TL/strip-1/refined text region over the
+            # pool, shared contexts (§6.5.8.2.1)
+            insts = aggregates[k - len(variants)][2]
+            _jb2_enc_int(enc, iaai, len(insts))
+            _jb2_enc_int(enc, iadt2, 0)  # STRIPT init
+            stript = 0
+            firsts = 0
+            n_i = 0
+            for t, row in _jb2_agg_strips(insts):
+                _jb2_enc_int(enc, iadt2, t - stript)
+                stript = t
+                first = True
+                curs = 0
+                for ax, bid, bmp in row:
+                    if first:
+                        _jb2_enc_int(enc, iafs2, ax - firsts)
+                        firsts = ax
+                        first = False
+                    else:
+                        _jb2_enc_int(enc, iads2, ax - curs)
+                    curs = ax
+                    _jb2_enc_iaid(enc, iaid_cx, symcodelen, base_remap[bid])
+                    _jb2_enc_int(enc, iari2, 1)
+                    ref = base_symbols[bid]
+                    sw0, sh0 = len(ref[0]), len(ref)
+                    wi, hi = len(bmp[0]), len(bmp)
+                    _jb2_enc_int(enc, iardw2, wi - sw0)
+                    _jb2_enc_int(enc, iardh2, hi - sh0)
+                    _jb2_enc_int(enc, iardx2, 0)
+                    _jb2_enc_int(enc, iardy2, 0)
+                    _jb2_refine_into(enc, gr_ctx, bmp, ref, wi, hi, sw0, sh0,
+                                     (wi - sw0) >> 1, (hi - sh0) >> 1,
+                                     template=0)
+                    curs += wi - 1
+                    n_i += 1
+                if n_i < len(insts):
+                    _jb2_enc_int(enc, iads2, None)
+        _jb2_enc_int(enc, iadw, None)
+    _jb2_enc_int(enc, iaex, 0)
+    _jb2_enc_int(enc, iaex, n_total)  # export inputs + new
+    return ((0x0002).to_bytes(2, "big") + _JB2_AT0 + _JB2_GRAT0
+            + n_total.to_bytes(4, "big") + len(new).to_bytes(4, "big")
+            + enc.flush())
+
+
+def _jb2_refagg_dict_huffman(base_symbols, base_remap, variants, aggregates,
+                             new, new_order) -> bytes:
+    """Huffman SDREFAGG=1 dictionary data (DH B.4, DW B.2, REFAGGNINST
+    B.1): each variant is a raw ID + B.15 RDX/RDY + B.1 BMSIZE + a
+    byte-aligned arithmetic GRR chunk; each aggregate a nested Huffman
+    text region (B.6/B.8/B.11/B.14, raw-bit IDs) of such chunks."""
+    n_total = len(base_symbols) + len(new)
+    symcodelen = max(1, (n_total - 1).bit_length())
+    bw = _JB2BitWriterMSB()
+    gr_ctx: dict = {}
+
+    def chunk_out(bmp, ref, wi, hi, sw0, sh0, dx, dy):
+        genc = _MQEncoder()
+        _jb2_refine_into(genc, gr_ctx, bmp, ref, wi, hi, sw0, sh0,
+                         dx, dy, template=0)
+        chunk = genc.flush()
+        _jb2_huff_put(bw, "B1", len(chunk))  # BMSIZE
+        bw.align()
+        bw.out.extend(chunk)
+
+    hcheight = 0
+    for hgt, cls in groupby(new_order, key=lambda k: len(new[k])):
+        _jb2_huff_put(bw, "B4", hgt - hcheight)  # DH (B.4: ≥ 1)
+        hcheight = hgt
+        symwidth = 0
+        for k in cls:
+            wd = len(new[k][0])
+            _jb2_huff_put(bw, "B2", wd - symwidth)  # DW (B.2: ≥ 0)
+            symwidth = wd
+            if k < len(variants):
+                base_id, bmp = variants[k]
+                _jb2_huff_put(bw, "B1", 1)  # REFAGGNINST
+                bw.write(base_remap[base_id], symcodelen)  # raw ID
+                _jb2_huff_put(bw, "B15", 0)  # RDX
+                _jb2_huff_put(bw, "B15", 0)  # RDY
+                ref = base_symbols[base_id]
+                # SD refined symbols: GRREFERENCEDX = RDX directly
+                chunk_out(bmp, ref, wd, hgt, len(ref[0]), len(ref), 0, 0)
+                continue
+            insts = aggregates[k - len(variants)][2]
+            _jb2_huff_put(bw, "B1", len(insts))  # REFAGGNINST > 1
+            _jb2_huff_put(bw, "B11", 1)  # STRIPT init → −1
+            stript = -1
+            firsts = 0
+            n_i = 0
+            for t, row in _jb2_agg_strips(insts):
+                _jb2_huff_put(bw, "B11", t - stript)  # DT ≥ 1
+                stript = t
+                first = True
+                curs = 0
+                for ax, bid, bmp in row:
+                    if first:
+                        _jb2_huff_put(bw, "B6", ax - firsts)
+                        firsts = ax
+                        first = False
+                    else:
+                        _jb2_huff_put(bw, "B8", ax - curs)
+                    curs = ax
+                    bw.write(base_remap[bid], symcodelen)  # raw ID
+                    bw.write(1, 1)  # RI
+                    ref = base_symbols[bid]
+                    sw0, sh0 = len(ref[0]), len(ref)
+                    wi, hi = len(bmp[0]), len(bmp)
+                    _jb2_huff_put(bw, "B14", wi - sw0)  # RDW
+                    _jb2_huff_put(bw, "B14", hi - sh0)  # RDH
+                    _jb2_huff_put(bw, "B14", 0)  # RDX
+                    _jb2_huff_put(bw, "B14", 0)  # RDY
+                    # §6.4.11 instances add floor(RDW/2)/floor(RDH/2)
+                    chunk_out(bmp, ref, wi, hi, sw0, sh0,
+                              (wi - sw0) >> 1, (hi - sh0) >> 1)
+                    curs += wi - 1
+                    n_i += 1
+                if n_i < len(insts):
+                    _jb2_huff_put(bw, "B8", None)  # end of strip
+        _jb2_huff_put(bw, "B2", None)  # OOB: end of height class
+    _jb2_huff_put(bw, "B1", 0)          # export skip-run
+    _jb2_huff_put(bw, "B1", n_total)    # export inputs + new
+    # flags: SDHUFF=1, SDREFAGG=1, DH=B.4(0), DW=B.2(0), BM=B.1(0),
+    # AGG=B.1(0), SDRTEMPLATE=0
+    return ((0x0003).to_bytes(2, "big") + _JB2_GRAT0
+            + n_total.to_bytes(4, "big") + len(new).to_bytes(4, "big")
+            + bw.flush())
 
 
 def jbig2_refagg_text_encode(base_symbols, variants, placements,
@@ -2341,212 +2179,8 @@ def jbig2_refagg_text_encode(base_symbols, variants, placements,
     contexts. Placements index base symbols, then variants, then
     aggregates (caller order), always top-left.
     Returns (stream, composed page rows)."""
-    aggregates = aggregates or []
-    # --- base dictionary (arithmetic, as jbig2_text_encode) ---------------
-    base_order = sorted(range(len(base_symbols)),
-                        key=lambda i: (len(base_symbols[i]),
-                                       len(base_symbols[i][0])))
-    enc = _MQEncoder()
-    gb_ctx: dict = {}
-    iadh, iadw, iaex = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    hcheight = 0
-    i = 0
-    while i < len(base_order):
-        hgt = len(base_symbols[base_order[i]])
-        _jb2_enc_int(enc, iadh, hgt - hcheight)
-        hcheight = hgt
-        symwidth = 0
-        while i < len(base_order) and len(base_symbols[base_order[i]]) == hgt:
-            wd = len(base_symbols[base_order[i]][0])
-            _jb2_enc_int(enc, iadw, wd - symwidth)
-            symwidth = wd
-            _jb2_generic_into(enc, gb_ctx, base_symbols[base_order[i]], wd)
-            i += 1
-        _jb2_enc_int(enc, iadw, None)
-    _jb2_enc_int(enc, iaex, 0)
-    _jb2_enc_int(enc, iaex, len(base_symbols))
-    at = bytes([3 & 0xFF, 0xFF, 0x100 - 3, 0xFF, 2, 0xFE, 0x100 - 2, 0xFE])
-    sd1 = ((0).to_bytes(2, "big") + at
-           + len(base_symbols).to_bytes(4, "big")
-           + len(base_symbols).to_bytes(4, "big") + enc.flush())
-    base_remap = {orig: k for k, orig in enumerate(base_order)}
-
-    # --- refinement dictionary (SDREFAGG=1, refers to the base) ----------
-    # new entries: refine-1 variants and (optionally) REFAGGNINST>1
-    # aggregates, class-sorted together by (height, width)
-    def agg_canvas(a):
-        cw, ch, insts = a
-        canvas = [[False] * cw for _ in range(ch)]
-        for _bid, ax, ay, bmp in insts:
-            for yy, rrow in enumerate(bmp):
-                if 0 <= ay + yy < ch:
-                    for xx, v in enumerate(rrow):
-                        if v and 0 <= ax + xx < cw:
-                            canvas[ay + yy][ax + xx] = True
-        return canvas
-
-    entries = [("var", j, len(variants[j][1]), len(variants[j][1][0]))
-               for j in range(len(variants))]
-    entries += [("agg", k, aggregates[k][1], aggregates[k][0])
-                for k in range(len(aggregates))]
-    entry_order = sorted(range(len(entries)),
-                         key=lambda e: (entries[e][2], entries[e][3]))
-    n_in = len(base_symbols)
-    n_new = len(entries)
-    n_total = n_in + n_new
-    symcodelen = max(1, (n_total - 1).bit_length() if n_total > 1 else 1)
-    enc2 = _MQEncoder()
-    gr_ctx: dict = {}
-    iadh2, iadw2, iaex2 = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    iaai, iardx, iardy = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    # nested aggregate text regions get their OWN integer stats (only the
-    # GR store + IAID tree are shared with the dictionary — §6.5.8.2.1 as
-    # implemented by the reference's decodeThroughTextRegion/setContexts)
-    iadt2, iafs2, iads2 = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    iari2, iardw2, iardh2 = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    iardx2, iardy2 = _jb2_int_ctx(), _jb2_int_ctx()
-    iaid_cx = [[0, 0] for _ in range(1 << (symcodelen + 1))]
-    hcheight = 0
-    i = 0
-    while i < len(entry_order):
-        e = entries[entry_order[i]]
-        hgt = e[2]
-        _jb2_enc_int(enc2, iadh2, hgt - hcheight)
-        hcheight = hgt
-        symwidth = 0
-        while i < len(entry_order) and entries[entry_order[i]][2] == hgt:
-            kind, j, _h, wd = entries[entry_order[i]]
-            _jb2_enc_int(enc2, iadw2, wd - symwidth)
-            symwidth = wd
-            if kind == "var":
-                base_id, bmp = variants[j]
-                _jb2_enc_int(enc2, iaai, 1)  # REFAGGNINST = 1
-                rid = base_remap[base_id]  # index into SDINSYMS
-                _jb2_enc_iaid(enc2, iaid_cx, symcodelen, rid)
-                _jb2_enc_int(enc2, iardx, 0)
-                _jb2_enc_int(enc2, iardy, 0)
-                ref = base_symbols[base_id]
-                _jb2_refine_into(enc2, gr_ctx, bmp, ref, wd, hgt,
-                                 len(ref[0]), len(ref), 0, 0, template=0)
-            else:
-                # aggregate: nested TL/strip-1/refined text region over
-                # the pool, shared contexts (§6.5.8.2.1)
-                cw, ch, insts = aggregates[j]
-                _jb2_enc_int(enc2, iaai, len(insts))
-                _jb2_enc_int(enc2, iadt2, 0)  # STRIPT init
-                stript = 0
-                firsts = 0
-                n_i = 0
-                by_t: dict = {}
-                for bid, ax, ay, bmp in insts:
-                    by_t.setdefault(ay, []).append((ax, bid, bmp))
-                for t in sorted(by_t):
-                    _jb2_enc_int(enc2, iadt2, t - stript)
-                    stript = t
-                    first = True
-                    curs = 0
-                    for ax, bid, bmp in sorted(by_t[t],
-                                               key=lambda z: z[0]):
-                        if first:
-                            _jb2_enc_int(enc2, iafs2, ax - firsts)
-                            firsts = ax
-                            curs = ax
-                            first = False
-                        else:
-                            _jb2_enc_int(enc2, iads2, ax - curs)
-                            curs = ax
-                        rid = base_remap[bid]
-                        _jb2_enc_iaid(enc2, iaid_cx, symcodelen, rid)
-                        _jb2_enc_int(enc2, iari2, 1)
-                        ref = base_symbols[bid]
-                        sw0, sh0 = len(ref[0]), len(ref)
-                        wi, hi = len(bmp[0]), len(bmp)
-                        _jb2_enc_int(enc2, iardw2, wi - sw0)
-                        _jb2_enc_int(enc2, iardh2, hi - sh0)
-                        _jb2_enc_int(enc2, iardx2, 0)
-                        _jb2_enc_int(enc2, iardy2, 0)
-                        _jb2_refine_into(enc2, gr_ctx, bmp, ref, wi, hi,
-                                         sw0, sh0, (wi - sw0) >> 1,
-                                         (hi - sh0) >> 1, template=0)
-                        curs += wi - 1
-                        n_i += 1
-                    if n_i < len(insts):
-                        _jb2_enc_int(enc2, iads2, None)
-            i += 1
-        _jb2_enc_int(enc2, iadw2, None)
-    _jb2_enc_int(enc2, iaex2, 0)
-    _jb2_enc_int(enc2, iaex2, n_total)  # export inputs + new
-    rat = bytes([0xFF, 0xFF, 0xFF, 0xFF])  # GRAT nominal (-1,-1) x2
-    sd2 = ((0x0002).to_bytes(2, "big") + at + rat
-           + n_total.to_bytes(4, "big") + n_new.to_bytes(4, "big")
-           + enc2.flush())
-
-    # --- text region over the combined exports ---------------------------
-    # export order: base (base_order) then new entries (entry_order)
-    def entry_bitmap(e):
-        kind, j, _h, _w = e
-        return variants[j][1] if kind == "var" else agg_canvas(aggregates[j])
-
-    combined = [base_symbols[k] for k in base_order] + [
-        entry_bitmap(entries[k]) for k in entry_order]
-    remap = dict(base_remap)
-    for k, orig in enumerate(entry_order):
-        remap[n_in + orig] = n_in + k
-    symcodelen_t = max(1, (n_total - 1).bit_length() if n_total > 1 else 1)
-    enc3 = _MQEncoder()
-    iadt, iafs, iads = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    iaid_t = [[0, 0] for _ in range(1 << (symcodelen_t + 1))]
-    by_row: dict[int, list[tuple[int, int]]] = {}
-    for sym_id, x, y in placements:
-        by_row.setdefault(y, []).append((x, remap[sym_id]))
-    _jb2_enc_int(enc3, iadt, 0)
-    stript = 0
-    firsts = 0
-    n_inst = 0
-    total = len(placements)
-    for y in sorted(by_row):
-        _jb2_enc_int(enc3, iadt, y - stript)
-        stript = y
-        first = True
-        curs = 0
-        for x, sid in sorted(by_row[y]):
-            if first:
-                _jb2_enc_int(enc3, iafs, x - firsts)
-                firsts = x
-                curs = x
-                first = False
-            else:
-                _jb2_enc_int(enc3, iads, x - curs)
-                curs = x
-            _jb2_enc_iaid(enc3, iaid_t, symcodelen_t, sid)
-            curs += len(combined[sid][0]) - 1
-            n_inst += 1
-        if n_inst < total:
-            _jb2_enc_int(enc3, iads, None)
-    region_info = (cols.to_bytes(4, "big") + nrows.to_bytes(4, "big")
-                   + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                   + bytes([0]))
-    tr_data = (region_info + (1 << 4).to_bytes(2, "big")
-               + total.to_bytes(4, "big") + enc3.flush())
-    page_info = (cols.to_bytes(4, "big") + nrows.to_bytes(4, "big")
-                 + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                 + bytes([0x01]) + (0).to_bytes(2, "big"))
-    stream = (_jb2_segment(1, 48, page_info)
-              + _jb2_segment(2, 0, sd1)
-              + _jb2_segment_refs(3, 0, [2], sd2)
-              + _jb2_segment_refs(4, 6, [3], tr_data)
-              + _jb2_segment(5, 49, b""))
-    all_syms = list(base_symbols) + [entry_bitmap(e) for e in entries]
-    page = [[0] * cols for _ in range(nrows)]
-    for sym_id, x, y in placements:
-        sym = all_syms[sym_id]
-        for yy, srow in enumerate(sym):
-            if 0 <= y + yy < nrows:
-                prow = page[y + yy]
-                for xx, v in enumerate(srow):
-                    if v and 0 <= x + xx < cols:
-                        prow[x + xx] = 1
-    return stream, page
+    return _jb2_refagg(_jb2_refagg_dict_arith, base_symbols, variants,
+                       placements, cols, nrows, aggregates)
 
 
 def jbig2_huffman_refagg_encode(base_symbols, variants, placements,
@@ -2562,206 +2196,8 @@ def jbig2_huffman_refagg_encode(base_symbols, variants, placements,
     `aggregates` = [(canvas_w, canvas_h, [(base_id, x, y, refined_bmp)])]
     with |bmp dims − base dims| ≤ 2 (B.14 range). Returns
     (stream, composed page rows)."""
-    aggregates = aggregates or []
-    # --- base dictionary (arithmetic) ------------------------------------
-    base_order = sorted(range(len(base_symbols)),
-                        key=lambda i: (len(base_symbols[i]),
-                                       len(base_symbols[i][0])))
-    enc = _MQEncoder()
-    gb_ctx: dict = {}
-    iadh, iadw, iaex = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    hcheight = 0
-    i = 0
-    while i < len(base_order):
-        hgt = len(base_symbols[base_order[i]])
-        _jb2_enc_int(enc, iadh, hgt - hcheight)
-        hcheight = hgt
-        symwidth = 0
-        while i < len(base_order) and len(base_symbols[base_order[i]]) == hgt:
-            wd = len(base_symbols[base_order[i]][0])
-            _jb2_enc_int(enc, iadw, wd - symwidth)
-            symwidth = wd
-            _jb2_generic_into(enc, gb_ctx, base_symbols[base_order[i]], wd)
-            i += 1
-        _jb2_enc_int(enc, iadw, None)
-    _jb2_enc_int(enc, iaex, 0)
-    _jb2_enc_int(enc, iaex, len(base_symbols))
-    at = bytes([3 & 0xFF, 0xFF, 0x100 - 3, 0xFF, 2, 0xFE, 0x100 - 2, 0xFE])
-    sd1 = ((0).to_bytes(2, "big") + at
-           + len(base_symbols).to_bytes(4, "big")
-           + len(base_symbols).to_bytes(4, "big") + enc.flush())
-    base_remap = {orig: k for k, orig in enumerate(base_order)}
-
-    # --- Huffman refinement dictionary -----------------------------------
-    def agg_canvas(a):
-        cw, ch, insts = a
-        canvas = [[False] * cw for _ in range(ch)]
-        for _bid, ax, ay, bmp in insts:
-            for yy, rrow in enumerate(bmp):
-                if 0 <= ay + yy < ch:
-                    for xx, v in enumerate(rrow):
-                        if v and 0 <= ax + xx < cw:
-                            canvas[ay + yy][ax + xx] = True
-        return canvas
-
-    entries = [("var", j, len(variants[j][1]), len(variants[j][1][0]))
-               for j in range(len(variants))]
-    entries += [("agg", k, aggregates[k][1], aggregates[k][0])
-                for k in range(len(aggregates))]
-    entry_order = sorted(range(len(entries)),
-                         key=lambda e: (entries[e][2], entries[e][3]))
-    n_in = len(base_symbols)
-    n_new = len(entries)
-    n_total = n_in + n_new
-    symcodelen = max(1, (n_total - 1).bit_length() if n_total > 1 else 1)
-    bw = _JB2BitWriterMSB()
-    gr_ctx: dict = {}
-
-    def chunk_out(bmp, ref, wi, hi, sw0, sh0, dx, dy):
-        genc = _MQEncoder()
-        _jb2_refine_into(genc, gr_ctx, bmp, ref, wi, hi, sw0, sh0,
-                         dx, dy, template=0)
-        chunk = genc.flush()
-        _jb2_huff_put(bw, "B1", len(chunk))  # BMSIZE
-        bw.align()
-        bw.out.extend(chunk)
-
-    hcheight = 0
-    i = 0
-    while i < len(entry_order):
-        hgt = entries[entry_order[i]][2]
-        _jb2_huff_put(bw, "B4", hgt - hcheight)  # DH (B.4: ≥ 1)
-        hcheight = hgt
-        symwidth = 0
-        while i < len(entry_order) and entries[entry_order[i]][2] == hgt:
-            kind, j, _h, wd = entries[entry_order[i]]
-            _jb2_huff_put(bw, "B2", wd - symwidth)  # DW (B.2: ≥ 0)
-            symwidth = wd
-            if kind == "var":
-                base_id, bmp = variants[j]
-                _jb2_huff_put(bw, "B1", 1)  # REFAGGNINST
-                bw.write(base_remap[base_id], symcodelen)  # raw ID
-                _jb2_huff_put(bw, "B15", 0)  # RDX
-                _jb2_huff_put(bw, "B15", 0)  # RDY
-                ref = base_symbols[base_id]
-                # SD refined symbols: GRREFERENCEDX = RDX directly
-                chunk_out(bmp, ref, wd, hgt, len(ref[0]), len(ref), 0, 0)
-            else:
-                cw, ch, insts = aggregates[j]
-                _jb2_huff_put(bw, "B1", len(insts))  # REFAGGNINST > 1
-                _jb2_huff_put(bw, "B11", 1)  # STRIPT init → −1
-                stript = -1
-                firsts = 0
-                n_i = 0
-                by_t: dict = {}
-                for bid, ax, ay, bmp in insts:
-                    by_t.setdefault(ay, []).append((ax, bid, bmp))
-                for t in sorted(by_t):
-                    _jb2_huff_put(bw, "B11", t - stript)  # DT ≥ 1
-                    stript = t
-                    first = True
-                    curs = 0
-                    for ax, bid, bmp in sorted(by_t[t],
-                                               key=lambda z: z[0]):
-                        if first:
-                            _jb2_huff_put(bw, "B6", ax - firsts)
-                            firsts = ax
-                            curs = ax
-                            first = False
-                        else:
-                            _jb2_huff_put(bw, "B8", ax - curs)
-                            curs = ax
-                        bw.write(base_remap[bid], symcodelen)  # raw ID
-                        bw.write(1, 1)  # RI
-                        ref = base_symbols[bid]
-                        sw0, sh0 = len(ref[0]), len(ref)
-                        wi, hi = len(bmp[0]), len(bmp)
-                        _jb2_huff_put(bw, "B14", wi - sw0)  # RDW
-                        _jb2_huff_put(bw, "B14", hi - sh0)  # RDH
-                        _jb2_huff_put(bw, "B14", 0)  # RDX
-                        _jb2_huff_put(bw, "B14", 0)  # RDY
-                        # §6.4.11 instances add floor(RDW/2)/floor(RDH/2)
-                        chunk_out(bmp, ref, wi, hi, sw0, sh0,
-                                  (wi - sw0) >> 1, (hi - sh0) >> 1)
-                        curs += wi - 1
-                        n_i += 1
-                    if n_i < len(insts):
-                        _jb2_huff_put(bw, "B8", None)  # end of strip
-            i += 1
-        _jb2_huff_put(bw, "B2", None)  # OOB: end of height class
-    _jb2_huff_put(bw, "B1", 0)          # export skip-run
-    _jb2_huff_put(bw, "B1", n_total)    # export inputs + new
-    rat = bytes([0xFF, 0xFF, 0xFF, 0xFF])  # GRAT nominal (−1,−1) ×2
-    # flags: SDHUFF=1, SDREFAGG=1, DH=B.4(0), DW=B.2(0), BM=B.1(0),
-    # AGG=B.1(0), SDRTEMPLATE=0
-    sd2 = ((0x0003).to_bytes(2, "big") + rat
-           + n_total.to_bytes(4, "big") + n_new.to_bytes(4, "big")
-           + bw.flush())
-
-    # --- text region over the combined exports ---------------------------
-    def entry_bitmap(e):
-        kind, j, _h, _w = e
-        return variants[j][1] if kind == "var" else agg_canvas(aggregates[j])
-
-    combined = [base_symbols[k] for k in base_order] + [
-        entry_bitmap(entries[k]) for k in entry_order]
-    remap = dict(base_remap)
-    for k, orig in enumerate(entry_order):
-        remap[n_in + orig] = n_in + k
-    enc3 = _MQEncoder()
-    iadt, iafs, iads = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    iaid_t = [[0, 0] for _ in range(1 << (symcodelen + 1))]
-    by_row: dict[int, list[tuple[int, int]]] = {}
-    for sym_id, x, y in placements:
-        by_row.setdefault(y, []).append((x, remap[sym_id]))
-    _jb2_enc_int(enc3, iadt, 0)
-    stript = 0
-    firsts = 0
-    n_inst = 0
-    total = len(placements)
-    for y in sorted(by_row):
-        _jb2_enc_int(enc3, iadt, y - stript)
-        stript = y
-        first = True
-        curs = 0
-        for x, sid in sorted(by_row[y]):
-            if first:
-                _jb2_enc_int(enc3, iafs, x - firsts)
-                firsts = x
-                curs = x
-                first = False
-            else:
-                _jb2_enc_int(enc3, iads, x - curs)
-                curs = x
-            _jb2_enc_iaid(enc3, iaid_t, symcodelen, sid)
-            curs += len(combined[sid][0]) - 1
-            n_inst += 1
-        if n_inst < total:
-            _jb2_enc_int(enc3, iads, None)
-    region_info = (cols.to_bytes(4, "big") + nrows.to_bytes(4, "big")
-                   + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                   + bytes([0]))
-    tr_data = (region_info + (1 << 4).to_bytes(2, "big")
-               + total.to_bytes(4, "big") + enc3.flush())
-    page_info = (cols.to_bytes(4, "big") + nrows.to_bytes(4, "big")
-                 + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                 + bytes([0x01]) + (0).to_bytes(2, "big"))
-    stream = (_jb2_segment(1, 48, page_info)
-              + _jb2_segment(2, 0, sd1)
-              + _jb2_segment_refs(3, 0, [2], sd2)
-              + _jb2_segment_refs(4, 6, [3], tr_data)
-              + _jb2_segment(5, 49, b""))
-    all_syms = list(base_symbols) + [entry_bitmap(e) for e in entries]
-    page = [[0] * cols for _ in range(nrows)]
-    for sym_id, x, y in placements:
-        sym = all_syms[sym_id]
-        for yy, srow in enumerate(sym):
-            if 0 <= y + yy < nrows:
-                prow = page[y + yy]
-                for xx, v in enumerate(srow):
-                    if v and 0 <= x + xx < cols:
-                        prow[x + xx] = 1
-    return stream, page
+    return _jb2_refagg(_jb2_refagg_dict_huffman, base_symbols, variants,
+                       placements, cols, nrows, aggregates)
 
 
 # a custom DW table spec (structure exercises type-53 table segments):
