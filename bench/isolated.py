@@ -1,82 +1,30 @@
 """Tier-isolated bench launcher (r9 VERDICT #3): run each bench tier in a
-FRESH process behind a health gate, so latency-shaped numbers (integrated
-straggler ratio, soak throughput) are captured at true idle instead of in
-the decaying wake of the tiers before them — no history-note footnotes.
+FRESH process, so latency-shaped numbers (integrated straggler ratio, soak
+throughput) are not taken in the decaying wake of the tiers before them.
 
     python bench/isolated.py [out.json]
 
-Three processes, each gated on (a) 1-min loadavg <= 2.0 and (b) a
-16-process md5 scaling probe (aggregate speedup >= 6.5x vs serial —
-catches HOST-level contention invisible to the sandbox loadavg, the r6
-lesson):
+Three processes:
 
   1. headline + query suite   (BENCH_SOAK_DOCS=0 BENCH_INTEGRATED_DOCS=0)
   2. 100k full-mix soak       (BENCH_ONLY=soak)
   3. integrated 100k+mega-doc (BENCH_ONLY=integrated)
 
 The three JSON lines are merged into ONE bench-contract-shaped object
-(tier provenance under "tier_isolation") and written to out.json
-(default BENCH/IDLE_R10.json).
+(tier provenance under "tier_isolation") and printed; it is also written
+to out.json when a path is given. Numbers from one run are only comparable
+with a same-session run of the base tree, never with an artifact from
+another day.
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
-import multiprocessing as mp
 import os
 import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-GATE_LOAD = float(os.environ.get("ISO_GATE_LOAD", "2.0"))
-GATE_SPEEDUP = float(os.environ.get("ISO_GATE_SPEEDUP", "6.5"))
-GATE_TIMEOUT = float(os.environ.get("ISO_GATE_TIMEOUT", "3600"))
-
-
-def _md5_unit(_=None) -> float:
-    t0 = time.perf_counter()
-    h = hashlib.md5()
-    blk = b"\xab" * (1 << 20)
-    for _i in range(40):
-        h.update(blk)
-    return time.perf_counter() - t0
-
-
-def probe_speedup() -> float:
-    """Aggregate 16-process speedup vs serial for a CPU-bound md5 unit.
-    Healthy idle host: ~8x. Relative criterion only — the serial unit's
-    absolute time is NOT thresholded (uncalibrated across probe
-    implementations; see memory of the r8 probe-gate trap)."""
-    serial = min(_md5_unit() for _ in range(2))
-    t0 = time.perf_counter()
-    with mp.Pool(16) as pool:
-        pool.map(_md5_unit, range(16))
-    wall = time.perf_counter() - t0
-    return 16.0 * serial / wall if wall > 0 else 0.0
-
-
-def gate(tag: str) -> dict:
-    """Block until the host looks idle; return the evidence."""
-    t0 = time.time()
-    while True:
-        load = os.getloadavg()[0]
-        if load <= GATE_LOAD:
-            sp = probe_speedup()
-            if sp >= GATE_SPEEDUP:
-                return {"tier": tag, "loadavg": round(load, 2),
-                        "probe_speedup": round(sp, 2),
-                        "waited_sec": round(time.time() - t0, 1)}
-            print(f"[gate {tag}] probe speedup {sp:.2f} < {GATE_SPEEDUP} "
-                  f"(host contention) — waiting", file=sys.stderr)
-        else:
-            print(f"[gate {tag}] loadavg {load:.2f} > {GATE_LOAD} — waiting",
-                  file=sys.stderr)
-        if time.time() - t0 > GATE_TIMEOUT:
-            raise SystemExit(f"gate {tag}: host never went idle "
-                             f"(waited {GATE_TIMEOUT}s)")
-        time.sleep(15)
 
 
 def run_tier(tag: str, env_extra: dict) -> dict:
@@ -100,32 +48,17 @@ def run_tier(tag: str, env_extra: dict) -> dict:
 
 
 def main() -> None:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
-        REPO, "BENCH", "IDLE_R10.json")
-    gates = []
-
-    gates.append(gate("queries"))
     base = run_tier("queries", {"BENCH_SOAK_DOCS": 0,
                                 "BENCH_INTEGRATED_DOCS": 0})
-
-    gates.append(gate("soak"))
-    soak = run_tier("soak", {"BENCH_ONLY": "soak"})
-    base["soak"] = soak.get("soak")
-
-    gates.append(gate("integrated"))
-    integ = run_tier("integrated", {"BENCH_ONLY": "integrated"})
-    base["integrated_soak"] = integ.get("integrated_soak")
-
-    base["tier_isolation"] = {
-        "method": "fresh process per tier; each launched after loadavg<="
-                  f"{GATE_LOAD} AND 16-proc md5 probe speedup>="
-                  f"{GATE_SPEEDUP}",
-        "gates": gates,
-    }
-    with open(out_path, "w") as f:
-        json.dump(base, f, indent=1)
+    base["soak"] = run_tier("soak", {"BENCH_ONLY": "soak"}).get("soak")
+    base["integrated_soak"] = run_tier(
+        "integrated", {"BENCH_ONLY": "integrated"}).get("integrated_soak")
+    base["tier_isolation"] = {"method": "fresh process per tier"}
     print(json.dumps(base))
-    print(f"wrote {out_path}", file=sys.stderr)
+    if len(sys.argv) > 1:
+        with open(sys.argv[1], "w") as f:
+            json.dump(base, f, indent=1)
+        print(f"wrote {sys.argv[1]}", file=sys.stderr)
 
 
 if __name__ == "__main__":

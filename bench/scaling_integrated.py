@@ -32,8 +32,8 @@ import json, sys, time
 sys.path.insert(0, {repo!r})
 from pyspark.sql import functions as F
 from unipdf_spark import pipeline
-from unipdf_spark.operators.dedup import (MAX_BUCKET, band_table,
-                                          lsh_armor_stats,
+from unipdf_spark.operators.dedup import (band_table, lsh_armor_stats,
+                                          lsh_candidates,
                                           minhash_signatures_pandas)
 from unipdf_spark.operators.extracted import (reassemble_parts,
                                               render_extract_parts)
@@ -75,22 +75,7 @@ def once():
     bt.count()
     t["bands"] = time.perf_counter() - t0
     t0 = time.perf_counter()
-    ok = (
-        bt.groupBy("band", "band_hash")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter((F.col("n") >= 2) & (F.col("n") <= MAX_BUCKET))
-        .select("band", "band_hash")
-    )
-    n_pairs = (
-        bt.join(ok, ["band", "band_hash"], "left_semi")
-        .groupBy("band", "band_hash")
-        .agg(F.collect_list("doc_id").alias("members"))
-        .select(F.explode("members").alias("doc_a"), "members")
-        .select("doc_a", F.explode("members").alias("doc_b"))
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .distinct()
-        .count()
-    )
+    n_pairs = lsh_candidates(bt).count()
     t["lsh_pairs"] = time.perf_counter() - t0
     armor = lsh_armor_stats(bt)  # untimed: armor-engagement observability
     for df in (pe, ext, sig, bt):

@@ -62,13 +62,35 @@ def _shingles(col, n: int = 3):
     )
 
 
+def _base60(col):
+    """60-bit integer hash of a string column (phash.base60_sql, Spark
+    Column API)."""
+    from pyspark.sql import functions as F
+
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
+def _h32(col):
+    from unipdf_spark.operators.phash import P
+
+    return _base60(col) % P
+
+
+def _family(i: int, h):
+    """i-th universal-hash family over an h32 value (Spark Column API)."""
+    from pyspark.sql import functions as F
+
+    from unipdf_spark.operators.phash import A, B, P
+
+    return (F.lit(A[i]) * h + F.lit(B[i])) % P
+
+
 def test_minhash_similar_docs_collide(spark):
     """Two near-identical docs must share LSH buckets; a disjoint doc not.
     Uses the operator's portable hash families (phash)."""
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from unipdf_spark.operators import phash
     from unipdf_spark.operators.dedup import BAND_SIZE, N_HASHES
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
@@ -79,9 +101,9 @@ def test_minhash_similar_docs_collide(spark):
     )
     sh = df.select(
         "doc_id", F.explode(_shingles(F.col("text"))).alias("shingle")
-    ).withColumn("h32", phash.h32(F.col("shingle")))
+    ).withColumn("h32", _h32(F.col("shingle")))
     aggs = [
-        F.min(phash.family(i, F.col("h32"))).alias(f"h{i}")
+        F.min(_family(i, F.col("h32"))).alias(f"h{i}")
         for i in range(N_HASHES)
     ]
     sig = sh.groupBy("doc_id").agg(*aggs).collect()

@@ -268,10 +268,9 @@ FROM hs
 """
 
 
-def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH banding: docs sharing any (band, band-hash) bucket become candidate
-    pairs; candidates are then verified with true shingle Jaccard. Only
-    bucket-mates join — no cross product at any scale.
+def lsh_candidates(bt: DataFrame) -> DataFrame:
+    """Distinct candidate pairs (doc_a < doc_b) of a :func:`band_table`:
+    docs that share a (band, band_hash) bucket.
 
     Skew armor: bucket sizes are counted FIRST (map-side-combinable groupBy —
     safe for any skew) and buckets outside [2, MAX_BUCKET] are dropped with a
@@ -283,32 +282,39 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect (it fails the count gate), so the worst aggregation buffer and
     the worst task are both ~MAX_BUCKET-sized.
     """
-    # persist the band table: the plan references it twice (bucket counts,
-    # member collection); without a cache the md5-shingle signature pass
-    # would be recomputed per reference. At corpus scale this is the
-    # standard 'materialize signatures' step.
-    bt = band_table(minhash_signatures(spark, sf_dir)).persist()
     ok = (
         bt.groupBy("band", "band_hash")
-        .agg(F.count("*").alias("n"))
+        .agg(F.count(F.lit(1)).alias("n"))
         .filter((F.col("n") >= 2) & (F.col("n") <= MAX_BUCKET))
         .select("band", "band_hash")
     )
-    members = bt.join(ok, ["band", "band_hash"], "left_semi")
-    # persist the candidate set: it is re-referenced by pair_ids (both
-    # legs), the verify join, and the shingle semi-join — without a cache
-    # each reference replays the bucket collect + pair explode from the
-    # band table. Bounded by candidate count (≤ MAX_BUCKET²/2 per bucket),
-    # so the cache is small at any scale.
-    cand = (
-        members.groupBy("band", "band_hash")
+    return (
+        bt.join(ok, ["band", "band_hash"], "left_semi")
+        .groupBy("band", "band_hash")
         .agg(F.collect_list("doc_id").alias("members"))
         .select(F.explode("members").alias("doc_a"), "members")
         .select("doc_a", F.explode("members").alias("doc_b"))
         .filter(F.col("doc_a") < F.col("doc_b"))
         .distinct()
-        .persist()
     )
+
+
+def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LSH banding: docs sharing any (band, band-hash) bucket become candidate
+    pairs (:func:`lsh_candidates`); candidates are then verified with true
+    shingle Jaccard. Only bucket-mates join — no cross product at any
+    scale."""
+    # persist the band table: the plan references it twice (bucket counts,
+    # member collection); without a cache the md5-shingle signature pass
+    # would be recomputed per reference. At corpus scale this is the
+    # standard 'materialize signatures' step.
+    bt = band_table(minhash_signatures(spark, sf_dir)).persist()
+    # persist the candidate set: it is re-referenced by pair_ids (both
+    # legs), the verify join, and the shingle semi-join — without a cache
+    # each reference replays the bucket collect + pair explode from the
+    # band table. Bounded by candidate count (≤ MAX_BUCKET²/2 per bucket),
+    # so the cache is small at any scale.
+    cand = lsh_candidates(bt).persist()
     # verify candidates with true Jaccard over shingle sets — computed ONLY
     # for docs that appear in a candidate pair (semi-join before the shingle
     # pass: at corpus scale candidates ≪ corpus); joins are unhinted —

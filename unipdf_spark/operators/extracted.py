@@ -42,6 +42,7 @@ from .dedup import (
     _SIG_FIELDS,
     _BANDS_SQL,
     band_table,
+    lsh_candidates,
     with_minhash,
 )
 
@@ -245,25 +246,9 @@ def extracted_text_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd = h.join(groups, "norm_hash").select(
         "doc_id", "canonical_doc_id", "group_size", "n_tokens")
 
-    # MinHash LSH candidate partners ON EXTRACTED TEXT: count-gated
-    # buckets (skew armor, same [2, MAX_BUCKET] gate as minhash_lsh_pairs)
-    # → bounded member collect → distinct pairs → per-doc partner count.
-    bt = band_table(extracted)
-    ok = (
-        bt.groupBy("band", "band_hash")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter((F.col("n") >= 2) & (F.col("n") <= MAX_BUCKET))
-        .select("band", "band_hash")
-    )
-    cand = (
-        bt.join(ok, ["band", "band_hash"], "left_semi")
-        .groupBy("band", "band_hash")
-        .agg(F.collect_list("doc_id").alias("members"))
-        .select(F.explode("members").alias("doc_a"), "members")
-        .select("doc_a", F.explode("members").alias("doc_b"))
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .distinct()
-    )
+    # MinHash LSH candidate partners ON EXTRACTED TEXT (the count-gated
+    # buckets of minhash_lsh_pairs) → per-doc partner count.
+    cand = lsh_candidates(band_table(extracted))
     partners = (
         cand.select(F.col("doc_a").alias("doc_id"))
         .unionByName(cand.select(F.col("doc_b").alias("doc_id")))

@@ -18,8 +18,6 @@ chosen so intermediates stay under 2^63 (BIGINT-safe in both engines):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, functions as F
-
 P = 4294967291  # largest prime < 2^32
 M = 2147483647  # 2^31 - 1 (Mersenne prime) — band-key fold modulus
 FOLD_MULT = 1000003
@@ -30,30 +28,17 @@ A = [((i * 0x9E3779B1 + 0x7F4A7C15) % (1 << 30)) | 1 for i in range(N_FAMILIES)]
 B = [(i * 0xC2B2AE35 + 0x165667B1) % P for i in range(N_FAMILIES)]
 
 
-def base60(col: Column) -> Column:
-    """60-bit integer hash of a string column (Spark side)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def base60_sql(expr: str) -> str:
-    """The identical hash in DuckDB SQL."""
+    """60-bit integer hash of a string expression, in DuckDB SQL."""
     return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
-
-
-def h32(col: Column) -> Column:
-    return base60(col) % P
 
 
 def h32_sql(expr: str) -> str:
     return f"({base60_sql(expr)} % {P})"
 
 
-def family(i: int, h: Column) -> Column:
-    """i-th universal-hash family over an h32 value (Spark side)."""
-    return (F.lit(A[i]) * h + F.lit(B[i])) % P
-
-
 def family_sql(i: int, expr: str) -> str:
+    """i-th universal-hash family over an h32 value, in DuckDB SQL."""
     return f"(({A[i]} * {expr} + {B[i]}) % {P})"
 
 
