@@ -423,33 +423,15 @@ def test_jpeg_color_roundtrip_psnr():
 
 
 def test_jpeg_420_roundtrip_psnr():
+    """4:2:0 round trip, including images one pixel high or wide: chroma
+    is averaged only along an axis at least 2 long, so it fits the chroma
+    block grid."""
     import numpy as np
 
     from unipdf_spark.fixtures.render import jpeg_420_encode
     from unipdf_spark.pdf.jpeg import decode_baseline
 
-    h, w = 24, 40
-    x, y = np.meshgrid(np.arange(w), np.arange(h))
-    rgb = np.stack([
-        128 + 100 * np.sin(x / 7.0),
-        128 + 90 * np.cos(y / 6.0),
-        128 + 80 * np.sin((x + y) / 9.0),
-    ], axis=2).astype("u1")
-    out = decode_baseline(jpeg_420_encode(rgb))
-    assert out.shape == rgb.shape
-    mse = float(np.mean((out.astype("f8") - rgb) ** 2))
-    assert 10 * np.log10(255**2 / mse) > 26  # chroma subsampling cost
-
-
-def test_jpeg_420_one_row_and_one_column_roundtrip():
-    """4:2:0 on images one pixel high or wide: chroma is averaged along the
-    long axis only, so it fits the chroma block grid."""
-    import numpy as np
-
-    from unipdf_spark.fixtures.render import jpeg_420_encode
-    from unipdf_spark.pdf.jpeg import decode_baseline
-
-    for h, w in ((1, 9), (1, 40), (9, 1), (40, 1)):
+    for h, w in ((24, 40), (1, 9), (1, 40), (9, 1), (40, 1)):
         x, y = np.meshgrid(np.arange(w), np.arange(h))
         rgb = np.stack([
             128 + 100 * np.sin(x / 7.0),
@@ -459,6 +441,7 @@ def test_jpeg_420_one_row_and_one_column_roundtrip():
         out = decode_baseline(jpeg_420_encode(rgb))
         assert out.shape == rgb.shape
         mse = float(np.mean((out.astype("f8") - rgb) ** 2))
+        # chroma subsampling cost
         assert 10 * np.log10(255**2 / mse) > 26, (h, w)
 
 

@@ -743,8 +743,9 @@ def _jb2_segment(number: int, seg_type: int, data: bytes,
                  refs=()) -> bytes:
     """Segment header on page 1 (1-byte referred-to segment numbers,
     count ≤ 4) + data."""
-    return (number.to_bytes(4, "big") + bytes([seg_type & 0x3F, len(refs) << 5])
-            + bytes(refs) + bytes([1]) + len(data).to_bytes(4, "big") + data)
+    return (number.to_bytes(4, "big")
+            + bytes([seg_type & 0x3F, len(refs) << 5]) + bytes(refs)
+            + bytes([1]) + len(data).to_bytes(4, "big") + data)
 
 
 def _jb2_stream(cols: int, rows: int, *segs) -> bytes:
@@ -1256,7 +1257,9 @@ def _jpg_dct():
                 np.sqrt(0.125) if k == 0 else 0.5)
     q = np.zeros(64)
     q[_JPG_ZZ] = _JPG_Q  # K.1 table is given in zigzag order
-    return c, q.reshape(8, 8)
+    q = q.reshape(8, 8)
+    c.flags.writeable = q.flags.writeable = False  # shared by every caller
+    return c, q
 
 
 def _jpg_pad(plane, ph: int, pw: int):
