@@ -12,9 +12,9 @@ Three processes:
 
 The three JSON lines are merged into ONE bench-contract-shaped object
 (tier provenance under "tier_isolation") and printed; it is also written
-to out.json when a path is given. Numbers from one run are only comparable
-with a same-session run of the base tree, never with an artifact from
-another day.
+to out.json when a path is given. Compare its numbers only with runs of
+the base tree interleaved with it, never with an artifact from another
+day.
 """
 
 from __future__ import annotations

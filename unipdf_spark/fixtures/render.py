@@ -1304,12 +1304,13 @@ def _jpeg_sequential(planes, luma_sampling: tuple[int, int],
             h // fv, fv, w // fh, fh).mean(axis=(1, 3))
         comps.append((_jpg_pad(box, mh * 8, mw * 8), 1, 1))
     if precision == 12:
-        tables = (_JPG12_DC_BITS, _JPG12_DC_VALS, _JPG12_AC_BITS,
-                  _JPG12_AC_VALS)
+        dc_bits, dc_vals = _JPG12_DC_BITS, _JPG12_DC_VALS
+        ac_bits, ac_vals = _JPG12_AC_BITS, _JPG12_AC_VALS
     else:
-        tables = (_JPG_DC_BITS, _JPG_DC_VALS, _JPG_AC_BITS, _JPG_AC_VALS)
-    dc_codes = _jpg_codes(tables[0], tables[1])
-    ac_codes = _jpg_codes(tables[2], tables[3])
+        dc_bits, dc_vals = _JPG_DC_BITS, _JPG_DC_VALS
+        ac_bits, ac_vals = _JPG_AC_BITS, _JPG_AC_VALS
+    dc_codes = _jpg_codes(dc_bits, dc_vals)
+    ac_codes = _jpg_codes(ac_bits, ac_vals)
     shift = float(1 << (precision - 1))
     bwr = _JpgBitWriter()
     preds = [0] * len(comps)
@@ -1355,8 +1356,8 @@ def _jpeg_sequential(planes, luma_sampling: tuple[int, int],
                + w.to_bytes(2, "big") + bytes([n])
                + b"".join(bytes([ci + 1, (ch << 4) | cv, 0])
                           for ci, (_, ch, cv) in enumerate(comps)))
-    dht = _seg(0xC4, bytes([0x00]) + bytes(tables[0]) + bytes(tables[1])) \
-        + _seg(0xC4, bytes([0x10]) + bytes(tables[2]) + bytes(tables[3]))
+    dht = _seg(0xC4, bytes([0x00]) + bytes(dc_bits) + bytes(dc_vals)) \
+        + _seg(0xC4, bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals))
     dri = _seg(0xDD, restart_interval.to_bytes(2, "big")) \
         if restart_interval else b""
     sos = _seg(0xDA, bytes([n]) + b"".join(bytes([ci + 1, 0x00])
