@@ -18,6 +18,7 @@ import math as _m
 import random
 import zlib
 from dataclasses import dataclass, field
+from itertools import groupby
 
 from .. import schema
 from .render import PdfFileWriter, esc_string
@@ -414,6 +415,41 @@ def _kern_segs(rng: random.Random, lines: list[str]) -> list[list[Seg]]:
     return seg_lines
 
 
+def _is_rtl(wd: str) -> bool:
+    return any("\u0590" <= ch <= "\u08ff" for ch in wd)
+
+
+def _visual_lines(tokens: list[str], width: float, v: float, shape
+                  ) -> tuple[list[list[Seg]], list[float], float]:
+    """Greedy-wrap logical ``tokens`` into lines of at most ``width``
+    (uniform CID widths) and show each line in VISUAL order: every RTL run
+    reversed word-wise, each of its words passed through ``shape`` and
+    reversed char-wise. The golden text is the logical line. Returns the
+    seg lines, their baselines from ``v`` down, and the baseline below the
+    last line."""
+    lines: list[list[str]] = [[]]
+    cur_w = 0.0
+    for wd in tokens:
+        cost = _cid_text_w(wd + " ", FS)
+        if cur_w + cost > width and lines[-1]:
+            lines.append([])
+            cur_w = 0.0
+        lines[-1].append(wd)
+        cur_w += cost
+    seg_lines: list[list[Seg]] = []
+    baselines: list[float] = []
+    for toks in lines:
+        visual: list[str] = []
+        for rtl, run in groupby(toks, key=_is_rtl):
+            run = list(run)
+            visual.extend([shape(t)[::-1] for t in reversed(run)] if rtl
+                          else run)
+        seg_lines.append([Seg(" ".join(visual), golden=" ".join(toks))])
+        baselines.append(v)
+        v -= LEADING
+    return seg_lines, baselines, v
+
+
 def _bidi_para(rng: random.Random, x: float, v_cursor: float, width: float
                ) -> tuple[ParaPlan, float]:
     """Mixed LTR/RTL paragraph (CID font). Logical token order drives the
@@ -428,39 +464,9 @@ def _bidi_para(rng: random.Random, x: float, v_cursor: float, width: float
         else:
             logical.append(rng.choice(WORDS[:20]))
 
-    def is_rtl(wd: str) -> bool:
-        return any("\u0590" <= ch <= "\u08ff" for ch in wd)
-
-    # greedy wrap on logical tokens (uniform CID width)
-    lines_logical: list[list[str]] = [[]]
-    cur_w = 0.0
-    for wd in logical:
-        cost = _cid_text_w(wd + " ", FS)
-        if cur_w + cost > width and lines_logical[-1]:
-            lines_logical.append([])
-            cur_w = 0.0
-        lines_logical[-1].append(wd)
-        cur_w += cost
-
-    seg_lines: list[list[Seg]] = []
-    baselines: list[float] = []
-    v = v_cursor - FS
-    for toks in lines_logical:
-        visual: list[str] = []
-        i = 0
-        while i < len(toks):
-            if is_rtl(toks[i]):
-                j = i
-                while j < len(toks) and is_rtl(toks[j]):
-                    j += 1
-                visual.extend(t[::-1] for t in reversed(toks[i:j]))
-                i = j
-            else:
-                visual.append(toks[i])
-                i += 1
-        seg_lines.append([Seg(" ".join(visual), golden=" ".join(toks))])
-        baselines.append(v)
-        v -= LEADING
+    # the Hebrew and Arabic RTL_WORDS are shown unshaped
+    seg_lines, baselines, v = _visual_lines(logical, width, v_cursor - FS,
+                                            lambda t: t)
     plan = ParaPlan(lines=seg_lines, x=x, baselines=baselines, font="F2")
     return plan, v + LEADING - PARA_SKIP
 
@@ -558,39 +564,8 @@ def _arabic_para(rng: random.Random, x: float, v_cursor: float, width: float
         else:
             logical.append(rng.choice(WORDS[:20]))
 
-    def is_rtl(wd: str) -> bool:
-        return any("֐" <= ch <= "ࣿ" for ch in wd)
-
-    lines_logical: list[list[str]] = [[]]
-    cur_w = 0.0
-    for wd in logical:
-        cost = _cid_text_w(wd + " ", FS)
-        if cur_w + cost > width and lines_logical[-1]:
-            lines_logical.append([])
-            cur_w = 0.0
-        lines_logical[-1].append(wd)
-        cur_w += cost
-
-    seg_lines: list[list[Seg]] = []
-    baselines: list[float] = []
-    v = v_cursor - FS
-    for toks in lines_logical:
-        visual: list[str] = []
-        i = 0
-        while i < len(toks):
-            if is_rtl(toks[i]):
-                j = i
-                while j < len(toks) and is_rtl(toks[j]):
-                    j += 1
-                visual.extend(_fixture_arabic_shape(t)[::-1]
-                              for t in reversed(toks[i:j]))
-                i = j
-            else:
-                visual.append(toks[i])
-                i += 1
-        seg_lines.append([Seg(" ".join(visual), golden=" ".join(toks))])
-        baselines.append(v)
-        v -= LEADING
+    seg_lines, baselines, v = _visual_lines(logical, width, v_cursor - FS,
+                                            _fixture_arabic_shape)
     plan = ParaPlan(lines=seg_lines, x=x, baselines=baselines, font="F2")
     return plan, v + LEADING - PARA_SKIP
 
@@ -604,45 +579,14 @@ def make_bidi_text_doc(doc_id: str, words: list[str]
     golden is the logical order; extraction must jointly unshape (NFKC)
     and bidi-reorder to recover it."""
 
-    def is_rtl(wd: str) -> bool:
-        return any("֐" <= ch <= "ࣿ" for ch in wd)
-
-    def is_arabic(wd: str) -> bool:
-        return any("؀" <= ch <= "ۿ" for ch in wd)
+    def shape(wd: str) -> str:
+        if any("\u0600" <= ch <= "\u06ff" for ch in wd):
+            return _fixture_arabic_shape(wd)
+        return wd
 
     words = [w for w in words if w] or ["empty"]
-    width = PAGE_W - 2 * MARGIN
-    lines_logical: list[list[str]] = [[]]
-    cur_w = 0.0
-    for wd in words:
-        cost = _cid_text_w(wd + " ", FS)
-        if cur_w + cost > width and lines_logical[-1]:
-            lines_logical.append([])
-            cur_w = 0.0
-        lines_logical[-1].append(wd)
-        cur_w += cost
-
-    seg_lines: list[list[Seg]] = []
-    baselines: list[float] = []
-    v = PAGE_H - MARGIN - FS
-    for toks in lines_logical:
-        visual: list[str] = []
-        i = 0
-        while i < len(toks):
-            if is_rtl(toks[i]):
-                j = i
-                while j < len(toks) and is_rtl(toks[j]):
-                    j += 1
-                visual.extend(
-                    (_fixture_arabic_shape(t) if is_arabic(t) else t)[::-1]
-                    for t in reversed(toks[i:j]))
-                i = j
-            else:
-                visual.append(toks[i])
-                i += 1
-        seg_lines.append([Seg(" ".join(visual), golden=" ".join(toks))])
-        baselines.append(v)
-        v -= LEADING
+    seg_lines, baselines, _ = _visual_lines(
+        words, PAGE_W - 2 * MARGIN, PAGE_H - MARGIN - FS, shape)
     plan = DocPlan()
     plan.blocks.append(ParaPlan(lines=seg_lines, x=MARGIN,
                                 baselines=baselines, font="F2"))
