@@ -34,9 +34,9 @@ def test_budget_rows_for_two_leaves():
     for r in rows.values():
         assert int(r["stages"]) >= 1 and int(r["tasks"]) >= 1
         assert float(r["cold s"]) > 0 and float(r["warm s"]) > 0
-    assert int(rows["q6_forecast_revenue"]["py run ms"]) == 0
-    dedup = rows["extracted_text_dedup"]
-    assert int(dedup["py run ms"]) > 0
+    q6, dedup = rows["q6_forecast_revenue"], rows["extracted_text_dedup"]
+    assert int(q6["py run ms"]) == 0 and int(q6["py tasks"]) == 0
+    assert int(dedup["py run ms"]) > 0 and int(dedup["py tasks"]) > 0
     # the warm run redid the stages the cold run persisted: cache cleared
     assert dedup["stages"] == dedup["cold stages"]
     assert "span_equality_join: 60/60 docs match" in out.stdout

@@ -40,8 +40,8 @@ QUERIES = [
 LEAVES = ["fixture_generation", "extract_spans", "span_equality_join",
           *QUERIES]
 HEADER = ("leaf", "cold s", "warm s", "cold stages", "stages", "tasks",
-          "py stages", "run ms", "py run ms", "cpu ms", "deser ms", "gc ms",
-          "shuffle read B", "shuffle write B")
+          "py stages", "py tasks", "run ms", "py run ms", "cpu ms",
+          "deser ms", "gc ms", "shuffle read B", "shuffle write B")
 
 
 def leaf_frames(spark, sf_dir: str, cores: int, n_docs: int) -> dict:
@@ -66,12 +66,11 @@ def leaf_frames(spark, sf_dir: str, cores: int, n_docs: int) -> dict:
 def row(name: str, walls: dict, groups: dict) -> str:
     cold, warm = (groups.get(f"{name}:{run}", stages.GroupStats())
                   for run in ("cold", "warm"))
-    t = warm.totals()
-    counts = [cold.totals()["stages"], t["stages"], t["tasks"],
-              sum(1 for s in warm.stages if s.python and s.tasks),
-              t["executor_run_ms"], warm.python_run_ms(), t["executor_cpu_ms"],
-              t["deserialize_ms"], t["gc_ms"], t["shuffle_read_bytes"],
-              t["shuffle_write_bytes"]]
+    t, py = warm.totals(), [s for s in warm.stages if s.python and s.tasks]
+    counts = [cold.totals()["stages"], t["stages"], t["tasks"], len(py),
+              sum(s.tasks for s in py), t["executor_run_ms"],
+              warm.python_run_ms(), t["executor_cpu_ms"], t["deserialize_ms"],
+              t["gc_ms"], t["shuffle_read_bytes"], t["shuffle_write_bytes"]]
     return "| " + " | ".join(
         [name, f"{walls[name, 'cold']:.3f}", f"{walls[name, 'warm']:.3f}"]
         + [f"{v:.0f}" for v in counts]) + " |"
