@@ -8,9 +8,10 @@ import subprocess
 import sys
 from pathlib import Path
 
+from conftest import SF_SMOKE
+
 ROOT = Path(__file__).resolve().parent.parent
 TOOL = ROOT / "tools" / "stage_budget.py"
-SF_SMOKE = "/root/testdata/sf0.001"
 
 
 def _tool(*args: str) -> subprocess.CompletedProcess:
