@@ -1,13 +1,20 @@
 """The one Arrow worker shape: ``pipeline.map_docs``'s batch function fed
-plain pandas frames (no Spark session), plus a structural guard that no
-per-doc batch loop is written by hand outside it."""
+plain pandas frames (no Spark session), a structural guard that no
+per-doc batch loop is written by hand outside it and that every batch
+function keeps the worker's zip directories, and a ``local[1]`` run that
+shows reused workers no longer re-read them."""
 
 from __future__ import annotations
 
 import ast
+import json
+import os
+import subprocess
+import sys
 from pathlib import Path
 
 import pandas as pd
+import pytest
 
 from unipdf_spark.pipeline import ddl_columns, doc_worker, extract_doc
 from unipdf_spark.schema import SPANS_OUT_DDL
@@ -82,39 +89,109 @@ _ALLOWED_FILES = {"unipdf_spark/operators/dedup.py"}
 
 
 def _map_in_pandas_calls(path: Path):
-    """(enclosing function, first argument source) per mapInPandas call."""
+    """(enclosing function, first argument source, batch function def or
+    None, the module's top-level defs) per mapInPandas call. The batch
+    function is the def of that name nested in the enclosing function,
+    else the module-level one."""
     tree = ast.parse(path.read_text())
+    top = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
     out = []
 
     def walk(node, fn):
         for child in ast.iter_child_nodes(node):
-            name = fn
+            inner = fn
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                name = child.name
+                inner = child
             if (isinstance(child, ast.Call)
                     and isinstance(child.func, ast.Attribute)
                     and child.func.attr == "mapInPandas"):
                 arg = ast.unparse(child.args[0]) if child.args else ""
-                out.append((fn, arg))
-            walk(child, name)
+                nested = {n.name: n for n in ast.walk(fn or tree)
+                          if isinstance(n, ast.FunctionDef)}
+                out.append((fn.name if fn else None, arg,
+                            nested.get(arg) or top.get(arg), top))
+            walk(child, inner)
 
     walk(tree, None)
     return out
 
 
+def _keeps_zip_directories(fn: ast.FunctionDef, top, seen=()) -> bool:
+    """``fn`` calls ``keep_zip_directories``, itself or through a
+    top-level function of its module."""
+    called = {c.func.id for c in ast.walk(fn)
+              if isinstance(c, ast.Call) and isinstance(c.func, ast.Name)}
+    return "keep_zip_directories" in called or any(
+        _keeps_zip_directories(top[n], top, (*seen, n))
+        for n in called if n in top and n not in seen)
+
+
 def test_every_map_in_pandas_goes_through_map_docs():
     files = [*sorted((REPO / "unipdf_spark").rglob("*.py")),
              REPO / "__spark_entry__.py"]
-    stray = []
+    stray, unkept = [], []
     n_sites = 0
     for path in files:
         rel = path.relative_to(REPO).as_posix()
-        for fn, arg in _map_in_pandas_calls(path):
+        for fn, arg, batch, top in _map_in_pandas_calls(path):
             n_sites += 1
-            if rel in _ALLOWED_FILES or arg in _ALLOWED_WORKERS:
-                continue
             if rel == "unipdf_spark/pipeline.py" and fn == "map_docs":
+                continue
+            if batch is None or not _keeps_zip_directories(batch, top):
+                unkept.append(f"{rel}:{fn}:{arg}")
+            if rel in _ALLOWED_FILES or arg in _ALLOWED_WORKERS:
                 continue
             stray.append(f"{rel}:{fn}:{arg}")
     assert n_sites > 1  # the scan sees the call sites at all
     assert not stray, stray
+    assert not unkept, unkept
+
+
+def test_doc_worker_keeps_zip_directories():
+    tree = ast.parse((REPO / "unipdf_spark" / "pipeline.py").read_text())
+    (worker,) = [n for n in tree.body if isinstance(n, ast.FunctionDef)
+                 and n.name == "doc_worker"]
+    (batch_fn,) = [n for n in worker.body if isinstance(n, ast.FunctionDef)]
+    assert _keeps_zip_directories(batch_fn, {})
+
+
+# One local[1] session in its own process: six one-row partitions through
+# map_docs, each task reporting its worker pid and the id of every archive's
+# zipimport directory dict. The dicts seen are kept alive in the worker so
+# a freed dict's id cannot be reused by a later one.
+_ZIP_PROBE = """
+import json, os, sys, zipimport
+from pyspark.sql import SparkSession
+from unipdf_spark.pipeline import map_docs
+
+def probe(i):
+    dirs = zipimport._zip_directory_cache
+    sys.__dict__.setdefault("_zip_dirs_seen", []).extend(dirs.values())
+    return [(i, os.getpid(), json.dumps({k: id(v) for k, v in dirs.items()}))]
+
+spark = (SparkSession.builder.master("local[1]").appName("zip-probe")
+         .config("spark.ui.enabled", "false").getOrCreate())
+df = spark.range(0, 6, numPartitions=6).selectExpr("cast(id as int) i")
+rows = map_docs(df, probe, "i int, pid int, dirs string").collect()
+print(json.dumps(sorted((r.i, r.pid, json.loads(r.dirs)) for r in rows)))
+spark.stop()
+"""
+
+
+def test_reused_worker_keeps_zip_directories():
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(
+        [str(REPO), *filter(None, [os.environ.get("PYTHONPATH")])])}
+    p = subprocess.run([sys.executable, "-c", _ZIP_PROBE], cwd=REPO, env=env,
+                       capture_output=True, text=True, timeout=300)
+    assert p.returncode == 0, p.stderr[-2000:]
+    tasks = json.loads(p.stdout.splitlines()[-1])
+    assert [i for i, _, _ in tasks] == list(range(6))
+    if not any(dirs for _, _, dirs in tasks):
+        pytest.skip("the Python workers import from no zip")
+    by_pid: dict[int, list[dict]] = {}
+    for _, pid, dirs in tasks:
+        by_pid.setdefault(pid, []).append(dirs)
+    assert max(map(len, by_pid.values())) >= 3  # workers are reused
+    for seen in by_pid.values():
+        # from a worker's second task on, no archive's directory is re-read
+        assert all(dirs == seen[1] for dirs in seen[2:]), seen

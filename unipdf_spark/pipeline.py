@@ -28,6 +28,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import zipimport
 from collections.abc import Iterator
 
 import pandas as pd
@@ -83,6 +84,30 @@ def ddl_columns(ddl: str) -> list[str]:
     return names
 
 
+def _keep_directory(self) -> None:
+    """Stand-in for ``zipimporter.invalidate_caches``: keep the archive's
+    directory as read."""
+
+
+def keep_zip_directories() -> None:
+    """Inside a Spark task, make ``zipimporter.invalidate_caches`` a no-op
+    for the rest of this Python worker process; elsewhere (the driver,
+    tests calling :func:`doc_worker` directly) do nothing.
+
+    PySpark's ``setup_spark_files`` calls ``importlib.invalidate_caches()``
+    at the start of every task, and on CPython 3.11/3.12 that makes each
+    ``zipimporter`` on the worker's ``sys.path`` (``pyspark.zip``, the py4j
+    zip, ...) re-read its whole zip directory: ~150 ms per task on a 4-vCPU
+    host. Workers are reused, so every later task on this worker skips the
+    re-read. Safe because no zip on the path changes during a job: a file
+    added later (``addPyFile``, ``--py-files``) is a new ``sys.path`` entry
+    with a fresh importer. Every Python batch function calls this first."""
+    from pyspark import TaskContext
+
+    if TaskContext.get() is not None:
+        zipimport.zipimporter.invalidate_caches = _keep_directory
+
+
 def doc_worker(per_doc_fn, ddl: str):
     """The Arrow batch function :func:`map_docs` runs: calls
     ``per_doc_fn(*row)`` for every input row and stacks the rows it
@@ -101,6 +126,7 @@ def doc_worker(per_doc_fn, ddl: str):
     def batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
 
+        keep_zip_directories()
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx else -1
         for b in batches:
