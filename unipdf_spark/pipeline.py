@@ -101,7 +101,8 @@ def keep_zip_directories() -> None:
     host. Workers are reused, so every later task on this worker skips the
     re-read. Safe because no zip on the path changes during a job: a file
     added later (``addPyFile``, ``--py-files``) is a new ``sys.path`` entry
-    with a fresh importer. Every Python batch function calls this first."""
+    with a fresh importer. Every ``mapInPandas`` batch function calls this
+    first."""
     from pyspark import TaskContext
 
     if TaskContext.get() is not None:
