@@ -88,9 +88,19 @@ _ALLOWED_WORKERS = {"_sig_worker", "_rex_sig_worker"}
 _ALLOWED_FILES = {"unipdf_spark/operators/dedup.py"}
 
 
+def _keeps_zip_directories(fn: ast.FunctionDef, top, seen=()) -> bool:
+    """``fn`` calls ``keep_zip_directories``, itself or through a
+    top-level function of its module."""
+    called = {c.func.id for c in ast.walk(fn)
+              if isinstance(c, ast.Call) and isinstance(c.func, ast.Name)}
+    return "keep_zip_directories" in called or any(
+        _keeps_zip_directories(top[n], top, (*seen, n))
+        for n in called if n in top and n not in seen)
+
+
 def _map_in_pandas_calls(path: Path):
-    """(enclosing function, first argument source, batch function def or
-    None, the module's top-level defs) per mapInPandas call. The batch
+    """(enclosing function, first argument source, whether that batch
+    function keeps the zip directories) per mapInPandas call. The batch
     function is the def of that name nested in the enclosing function,
     else the module-level one."""
     tree = ast.parse(path.read_text())
@@ -108,22 +118,13 @@ def _map_in_pandas_calls(path: Path):
                 arg = ast.unparse(child.args[0]) if child.args else ""
                 nested = {n.name: n for n in ast.walk(fn or tree)
                           if isinstance(n, ast.FunctionDef)}
-                out.append((fn.name if fn else None, arg,
-                            nested.get(arg) or top.get(arg), top))
+                batch = nested.get(arg) or top.get(arg)
+                out.append((fn.name if fn else None, arg, batch is not None
+                            and _keeps_zip_directories(batch, top)))
             walk(child, inner)
 
     walk(tree, None)
     return out
-
-
-def _keeps_zip_directories(fn: ast.FunctionDef, top, seen=()) -> bool:
-    """``fn`` calls ``keep_zip_directories``, itself or through a
-    top-level function of its module."""
-    called = {c.func.id for c in ast.walk(fn)
-              if isinstance(c, ast.Call) and isinstance(c.func, ast.Name)}
-    return "keep_zip_directories" in called or any(
-        _keeps_zip_directories(top[n], top, (*seen, n))
-        for n in called if n in top and n not in seen)
 
 
 def test_every_map_in_pandas_goes_through_map_docs():
@@ -133,11 +134,11 @@ def test_every_map_in_pandas_goes_through_map_docs():
     n_sites = 0
     for path in files:
         rel = path.relative_to(REPO).as_posix()
-        for fn, arg, batch, top in _map_in_pandas_calls(path):
+        for fn, arg, kept in _map_in_pandas_calls(path):
             n_sites += 1
             if rel == "unipdf_spark/pipeline.py" and fn == "map_docs":
                 continue
-            if batch is None or not _keeps_zip_directories(batch, top):
+            if not kept:
                 unkept.append(f"{rel}:{fn}:{arg}")
             if rel in _ALLOWED_FILES or arg in _ALLOWED_WORKERS:
                 continue
@@ -145,14 +146,6 @@ def test_every_map_in_pandas_goes_through_map_docs():
     assert n_sites > 1  # the scan sees the call sites at all
     assert not stray, stray
     assert not unkept, unkept
-
-
-def test_doc_worker_keeps_zip_directories():
-    tree = ast.parse((REPO / "unipdf_spark" / "pipeline.py").read_text())
-    (worker,) = [n for n in tree.body if isinstance(n, ast.FunctionDef)
-                 and n.name == "doc_worker"]
-    (batch_fn,) = [n for n in worker.body if isinstance(n, ast.FunctionDef)]
-    assert _keeps_zip_directories(batch_fn, {})
 
 
 # One local[1] session in its own process: six one-row partitions through
