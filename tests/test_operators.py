@@ -195,6 +195,39 @@ def test_lsh_bucket_cap_drops_degenerate_bucket(spark, tmp_path):
     assert not any(x < n_hot and y < n_hot for x, y in pairs)  # hot bucket dropped
 
 
+def test_lsh_partner_counts_equal_candidate_pair_counts(spark):
+    """Per-doc partner counts taken straight from the gated buckets equal
+    the counts derived from the distinct candidate pairs, on a hand-built
+    band table: docs 1 and 2 share two buckets; doc 2 also sits in a
+    bucket of exactly MAX_BUCKET members (kept); doc 1 also sits in a
+    bucket of MAX_BUCKET + 1 members (dropped) and in a singleton."""
+    from collections import Counter
+
+    from unipdf_spark.operators.dedup import (
+        MAX_BUCKET, lsh_candidates, lsh_partner_counts)
+
+    full = [2] + list(range(100, 100 + MAX_BUCKET - 1))
+    over = [1] + list(range(1000, 1000 + MAX_BUCKET))
+    rows = ([(1, 0, 10), (2, 0, 10), (1, 1, 11), (2, 1, 11)]
+            + [(d, 2, 12) for d in full]
+            + [(d, 3, 13) for d in over]
+            + [(1, 4, 14), (5000, 5, 15)])
+    bt = spark.createDataFrame(rows, "doc_id bigint, band int, band_hash long")
+
+    got = {r["doc_id"]: r["n_candidates"]
+           for r in lsh_partner_counts(bt).collect()}
+    want = Counter()
+    for r in lsh_candidates(bt).collect():
+        want[r["doc_a"]] += 1
+        want[r["doc_b"]] += 1
+    assert got == dict(want)
+    # the pair's two shared buckets count once; the dropped bucket and
+    # the singletons add nothing
+    assert got[1] == 1 and got[2] == MAX_BUCKET
+    assert got[100] == MAX_BUCKET - 1
+    assert not {1000, 5000} & set(got)
+
+
 def test_ann_lsh_recall_bounds(spark):
     from unipdf_spark.operators.similarity import ann_lsh_recall
 

@@ -103,11 +103,19 @@ def _udf_names(node) -> list[str]:
             if n.getClass().getSimpleName() == "MapInPandasExec"]
 
 
+def _doc_scans(node) -> list:
+    return [n for n in _walk(node)
+            if n.getClass().getSimpleName() == "FileSourceScanExec"
+            and "documents.parquet"
+            in n.relation().location().rootPaths().toString()]
+
+
 def test_extracted_text_dedup_single_pass_plan(spark, oversized_sf):
     """extracted_text_dedup renders and extracts every doc ONCE: its
     executed plan caches one relation, whose small-doc and oversized-doc
-    branches each hold exactly one render→extract (rex) worker, and no
-    Filter on `multi` re-reads a rex output."""
+    branches each hold exactly one render→extract (rex) worker and one
+    scan of `documents`, and no Filter on `multi` re-reads a rex output.
+    Partner counts aggregate no (doc_a, doc_b) pairs."""
     from unipdf_spark.operators.extracted import extracted_text_dedup
 
     df = extracted_text_dedup(spark, oversized_sf)
@@ -130,3 +138,12 @@ def test_extracted_text_dedup_single_pass_plan(spark, oversized_sf):
     assert not [n for n in _walk(plan)
                 if n.getClass().getSimpleName() == "FilterExec"
                 and "multi" in n.condition().toString()]
+    # one corpus scan per size branch: the clones come from the same rows
+    assert [len(_doc_scans(b)) for b in (small, big)] == [1, 1]
+    assert len(_doc_scans(plan)) == 2
+    # partner counts come from the buckets: no aggregate over pairs
+    aggs = [n.groupingExpressions().toString()
+            for n in _walk(df._jdf.queryExecution().executedPlan())
+            if n.getClass().getSimpleName().endswith("AggregateExec")]
+    assert aggs
+    assert not [g for g in aggs if "doc_a" in g or "doc_b" in g], aggs

@@ -54,15 +54,23 @@ def main() -> None:
 ## Notes: extracted_text_dedup
 
 - **extracted_text_dedup scale shape**: ONE persisted InMemoryRelation
-  of (doc_id, text, h0..h31) over a Union of (a) the small-doc branch:
+  of (doc_id, text, h0..h31) over a Union of two size branches, each
+  with its own scan of `documents` (two scans in all). Each keeps the
+  rows of its size (the length Filter sits on the scan) and plants the
+  clones with one `Generate explode` of `array(doc_id, doc_id +
+  CLONE_OFFSET)` over them.
+  (a) The small-doc branch: the `phash.spread` round-robin Exchange →
   one `_rex_sig_worker` MapInPandas that renders, extracts and
-  MinHashes each doc, map-only; and (b) the oversized-doc branch: split
-  → range Exchange (~one bounded atom per task) → `_rex_worker` →
+  MinHashes each doc. (b) The oversized-doc branch, with no spread:
+  split → range Exchange (~one bounded atom per task) → `_rex_worker` →
   ordered reassembly aggregate → MinHash worker. The dedup-hash subtree
   and the LSH band subtree (`band_table`: one `inline` generator over the
   cached h0..h31) both read that one relation, so each doc is rendered
-  and extracted once per query. No `Filter` on `multi` sits above a rex
-  worker. `tests/test_plans.py::test_extracted_text_dedup_single_pass_plan`
+  and extracted once per query. Partner counts come straight from the
+  count-gated buckets (`lsh_partner_counts`): explode the members, then
+  one ObjectHashAggregate on doc_id; no aggregate groups on (doc_a,
+  doc_b). No `Filter` on `multi` sits above a rex worker.
+  `tests/test_plans.py::test_extracted_text_dedup_single_pass_plan`
   locks this shape in. The partner join stays a BroadcastHashJoin.
 - **extracted_text_dedup cold floor**: cold ≈ warm + ~6 s. Measured with
   perfbench `text_dedup --trace 1` on a 4-vCPU host: 9.5 s cold against

@@ -271,19 +271,19 @@ FROM hs
 """
 
 
-def lsh_candidates(bt: DataFrame) -> DataFrame:
-    """Distinct candidate pairs (doc_a < doc_b) of a :func:`band_table`:
-    docs that share a (band, band_hash) bucket.
+def lsh_buckets(bt: DataFrame) -> DataFrame:
+    """The candidate buckets of a :func:`band_table`: one (band, band_hash,
+    members) row per bucket of 2..MAX_BUCKET docs.
 
     Skew armor: bucket sizes are counted FIRST (map-side-combinable groupBy —
     safe for any skew) and buckets outside [2, MAX_BUCKET] are dropped with a
     semi-join BEFORE any per-bucket materialization; only the surviving
-    (≤ MAX_BUCKET-member) buckets are then collected into member arrays and
-    pair-exploded — one bounded aggregation instead of a band-table
-    self-join (two full shuffled sides; r4 steady-state 4.9 s → 3.2 s). A
-    degenerate boilerplate bucket with millions of docs never reaches the
-    collect (it fails the count gate), so the worst aggregation buffer and
-    the worst task are both ~MAX_BUCKET-sized.
+    (≤ MAX_BUCKET-member) buckets are then collected into member arrays —
+    one bounded aggregation instead of a band-table self-join (two full
+    shuffled sides; r4 steady-state 4.9 s → 3.2 s). A degenerate
+    boilerplate bucket with millions of docs never reaches the collect (it
+    fails the count gate), so the worst aggregation buffer and the worst
+    task are both ~MAX_BUCKET-sized.
     """
     ok = (
         bt.groupBy("band", "band_hash")
@@ -295,10 +295,35 @@ def lsh_candidates(bt: DataFrame) -> DataFrame:
         bt.join(ok, ["band", "band_hash"], "left_semi")
         .groupBy("band", "band_hash")
         .agg(F.collect_list("doc_id").alias("members"))
+    )
+
+
+def lsh_candidates(bt: DataFrame) -> DataFrame:
+    """Distinct candidate pairs (doc_a < doc_b) of a :func:`band_table`:
+    docs that share a bucket of :func:`lsh_buckets`, pair-exploded (≤
+    MAX_BUCKET² rows per bucket)."""
+    return (
+        lsh_buckets(bt)
         .select(F.explode("members").alias("doc_a"), "members")
         .select("doc_a", F.explode("members").alias("doc_b"))
         .filter(F.col("doc_a") < F.col("doc_b"))
         .distinct()
+    )
+
+
+def lsh_partner_counts(bt: DataFrame) -> DataFrame:
+    """(doc_id, n_candidates): each doc's number of distinct
+    :func:`lsh_candidates` partners, straight from :func:`lsh_buckets`. A
+    doc's distinct bucket-mates, itself excluded, are exactly its
+    candidate pairs, so there is no pair explode and no pair distinct;
+    one aggregate collects at most (bands × MAX_BUCKET) ids per doc. Docs
+    in no candidate bucket have no row."""
+    return (
+        lsh_buckets(bt)
+        .select(F.explode("members").alias("doc_id"), "members")
+        .groupBy("doc_id")
+        .agg((F.size(F.array_distinct(F.flatten(F.collect_list("members"))))
+              - 1).alias("n_candidates"))
     )
 
 

@@ -17,13 +17,17 @@ chunking (the render plan is seeded per doc_id), so the pair is a true
 re-formatted duplicate — same content, different layout — exactly what
 normalized dedup and MinHash LSH exist to catch.
 
-Scale shape (100 TB): each doc is rendered, extracted, reassembled and
-MinHashed in ONE map-only Python pass (no payload shuffle); only
-oversized docs take the split → extract → reassemble detour. The
-resulting (doc_id, text, h0..h31) frame is persisted once and feeds both
-the dedup-hash and the LSH band paths; banding reuses the count-gated
-bounded-bucket pattern from :mod:`dedup` (no self-join, no mega-bucket
-task).
+Scale shape (100 TB): the corpus is scanned once per size branch, and
+the clones are planted by exploding those same rows. Each small doc is
+rendered, extracted, reassembled and MinHashed in ONE map-only Python
+pass; its only exchange is :func:`phash.spread`'s, which is a no-op once
+the input has as many partitions as cores. Only oversized docs take the
+split → range exchange → extract → reassemble detour. The resulting
+(doc_id, text, h0..h31) frame is persisted once and feeds both the
+dedup-hash and the LSH band paths. Partner counts come straight from the
+count-gated, bounded LSH buckets (:func:`dedup.lsh_partner_counts`: no
+self-join, no mega-bucket task, no pair explode): one aggregate per doc
+over at most 8 × MAX_BUCKET bucket-mates.
 """
 
 from __future__ import annotations
@@ -42,7 +46,7 @@ from .dedup import (
     _SIG_FIELDS,
     _BANDS_SQL,
     band_table,
-    lsh_candidates,
+    lsh_partner_counts,
     with_minhash,
 )
 
@@ -50,13 +54,13 @@ CLONE_OFFSET = 1_000_000
 
 
 def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = phash.spread(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), spark
-    ).select("doc_id", "text")
-    clones = docs.filter(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + CLONE_OFFSET).alias("doc_id"), "text"
-    )
-    return docs.unionByName(clones)
+    """documents plus the planted clones, from ONE scan: every
+    ``doc_id % 7 == 0`` row is exploded into itself and its clone."""
+    d = F.col("doc_id")
+    ids = F.when(d % 7 == 0, F.array(d, d + CLONE_OFFSET)).otherwise(
+        F.array(d))
+    return spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        F.explode(ids).alias("doc_id"), "text")
 
 
 PART_CHARS = 65536  # oversized-doc task atom: ~0.6 s render+extract each
@@ -140,6 +144,16 @@ def _by_size(named: DataFrame, part_chars: int
     return d.filter(n <= part_chars), d.filter(n > part_chars)
 
 
+def _spread_by_size(named: DataFrame, part_chars: int
+                    ) -> tuple[DataFrame, DataFrame]:
+    """Batch :func:`_by_size`: the small-doc branch is spread over the
+    cores (:func:`phash.spread`) for its Python pass; the oversized branch
+    goes straight from the scan to the splitter, whose range exchange
+    balances its parts."""
+    small, big = _by_size(named, part_chars)
+    return phash.spread(small, named.sparkSession), big
+
+
 def _big_parts_ext(big: DataFrame, part_chars: int) -> DataFrame:
     """Oversized docs → word-boundary parts, each rendered and extracted
     as its own atom (REX_DDL rows, ``multi`` true)."""
@@ -169,14 +183,15 @@ def render_extract_parts(named: DataFrame, part_chars: int = PART_CHARS
     longer hold a partition hostage (the 48k skew drill bounds doc-count
     skew; this bounds the per-DOC atom — a planted mega-doc costs ~15 s
     as one task but ~0.6 s × N fully parallel parts). Small docs (the
-    overwhelming majority) stay on the map-only path with NO shuffle;
-    only the oversized slice pays a parts shuffle.
+    overwhelming majority) stay on the map-only path, with no shuffle
+    beyond :func:`phash.spread`'s; only the oversized slice pays a parts
+    shuffle.
 
     Returns one row per part: (doc_id bigint, part_idx int, text,
     multi boolean, partition_id int, elapsed_ms double, error string) —
     the lineage columns feed per-partition straggler metrics (north-rule
     per-partition lineage, same convention as pipeline.run_extraction)."""
-    small, big = _by_size(named, part_chars)
+    small, big = _spread_by_size(named, part_chars)
     return map_docs(small, _rex_worker, REX_DDL).unionByName(
         _big_parts_ext(big, part_chars))
 
@@ -199,7 +214,7 @@ def render_extract_reassemble_scalable(named: DataFrame,
     only oversized parts reach the reassembly aggregate, after which their
     signatures come from the same :func:`with_minhash`. Every doc is
     rendered and extracted exactly once per evaluation."""
-    small, big = _by_size(named, part_chars)
+    small, big = _spread_by_size(named, part_chars)
     joined = _join_parts(_big_parts_ext(big, part_chars))
     return small.mapInPandas(_rex_sig_worker, SIG_DDL).unionByName(
         joined.mapInPandas(_sig_worker, SIG_DDL))
@@ -247,15 +262,9 @@ def extracted_text_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd = h.join(groups, "norm_hash").select(
         "doc_id", "canonical_doc_id", "group_size", "n_tokens")
 
-    # MinHash LSH candidate partners ON EXTRACTED TEXT (the count-gated
-    # buckets of minhash_lsh_pairs) → per-doc partner count.
-    cand = lsh_candidates(band_table(extracted))
-    partners = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_candidates"))
-    )
+    # MinHash LSH candidate-partner counts ON EXTRACTED TEXT, straight
+    # from the count-gated buckets of minhash_lsh_pairs
+    partners = lsh_partner_counts(band_table(extracted))
     return dd.join(partners, "doc_id", "left").select(
         "doc_id", "canonical_doc_id", "group_size", "n_tokens",
         F.coalesce("n_candidates", F.lit(0)).cast("long")
