@@ -196,37 +196,52 @@ def test_lsh_bucket_cap_drops_degenerate_bucket(spark, tmp_path):
 
 
 def test_lsh_partner_counts_equal_candidate_pair_counts(spark):
-    """Per-doc partner counts taken straight from the gated buckets equal
-    the counts derived from the distinct candidate pairs, on a hand-built
-    band table: docs 1 and 2 share two buckets; doc 2 also sits in a
-    bucket of exactly MAX_BUCKET members (kept); doc 1 also sits in a
-    bucket of MAX_BUCKET + 1 members (dropped) and in a singleton."""
+    """Per-doc partner counts folded from a hand-built keyed table equal
+    the counts derived from the distinct candidate pairs of its band
+    rows, and its exact rows give each doc its normalized-dup group:
+    docs 1 and 2 share two buckets; doc 2 also sits in a bucket of
+    exactly MAX_BUCKET members (kept); doc 1 also sits in a bucket of
+    MAX_BUCKET + 1 members (dropped) and in a singleton; doc 5000 is in
+    no bucket. Exact groups hold 1, 2 and 3 docs."""
     from collections import Counter
 
-    from unipdf_spark.operators.dedup import (
-        MAX_BUCKET, lsh_candidates, lsh_partner_counts)
+    from unipdf_spark.operators.dedup import MAX_BUCKET, lsh_candidates
+    from unipdf_spark.operators.extracted import KEYED_DDL, keyed_dedup
 
     full = [2] + list(range(100, 100 + MAX_BUCKET - 1))
     over = [1] + list(range(1000, 1000 + MAX_BUCKET))
-    rows = ([(1, 0, 10), (2, 0, 10), (1, 1, 11), (2, 1, 11)]
-            + [(d, 2, 12) for d in full]
-            + [(d, 3, 13) for d in over]
-            + [(1, 4, 14), (5000, 5, 15)])
-    bt = spark.createDataFrame(rows, "doc_id bigint, band int, band_hash long")
+    bands = ([(1, 0, 10), (2, 0, 10), (1, 1, 11), (2, 1, 11)]
+             + [(d, 2, 12) for d in full]
+             + [(d, 3, 13) for d in over]
+             + [(1, 4, 14), (5000, 5, 15)])
+    docs = sorted({d for d, _b, _h in bands})
+    # exact groups: {5000} alone, {1, 2}, {100, 101, 102}; every other
+    # doc alone under its own hash
+    norm = {1: "p", 2: "p", 100: "t", 101: "t", 102: "t"}
+    exact = [(d, None, None, norm.get(d, f"u{d}"), 3 * d) for d in docs]
+    keyed = spark.createDataFrame(
+        [(d, b, h, None, None) for d, b, h in bands] + exact, KEYED_DDL)
 
-    got = {r["doc_id"]: r["n_candidates"]
-           for r in lsh_partner_counts(bt).collect()}
+    got = {r["doc_id"]: tuple(r)[1:] for r in keyed_dedup(keyed).collect()}
+    bt = spark.createDataFrame(bands, "doc_id bigint, band int, "
+                                      "band_hash long")
     want = Counter()
     for r in lsh_candidates(bt).collect():
         want[r["doc_a"]] += 1
         want[r["doc_b"]] += 1
-    assert got == dict(want)
+    assert set(got) == set(docs)
+    assert {d: g[3] for d, g in got.items()} == {d: want[d] for d in docs}
     # the pair's two shared buckets count once; the dropped bucket and
     # the singletons add nothing
-    assert got[1] == 1 and got[2] == MAX_BUCKET
-    assert got[100] == MAX_BUCKET - 1
-    assert not {1000, 5000} & set(got)
-
+    n = {d: g[3] for d, g in got.items()}
+    assert n[1] == 1 and n[2] == MAX_BUCKET
+    assert n[100] == MAX_BUCKET - 1
+    assert n[1000] == n[5000] == 0
+    # (canonical_doc_id, group_size, n_tokens) from the exact rows
+    assert got[5000][:3] == (5000, 1, 15000)
+    assert got[1][:3] == (1, 2, 3) and got[2][:3] == (1, 2, 6)
+    assert [got[d][:2] for d in (100, 101, 102)] == [(100, 3)] * 3
+    assert got[1000][:3] == (1000, 1, 3000)
 
 def test_ann_lsh_recall_bounds(spark):
     from unipdf_spark.operators.similarity import ann_lsh_recall
@@ -970,6 +985,26 @@ def test_oversized_doc_split_roundtrip(spark):
     pe.unpersist()
     assert out[1] == ws.sub(" ", base).strip()
     assert out[2] == ws.sub(" ", mega).strip()
+
+
+def test_oversized_doc_atoms_spread_over_the_cores(spark):
+    """The parts of oversized docs run in parallel: 4 docs of 4 parts
+    each give 16 atoms, which must land in min(16, cores) distinct
+    partitions. (AQE coalesces a range exchange of so few small rows
+    into one partition, where all 16 atoms would run in one task.)"""
+    import pandas as pd
+
+    from unipdf_spark.operators.extracted import render_extract_parts
+
+    # 10-char words, 20 to a 200-char part: 70 words make 4 parts
+    text = " ".join(f"w{i:08d}" for i in range(70))
+    named = spark.createDataFrame(pd.DataFrame({
+        "doc_id": [f"doc_{i:08d}" for i in range(4)], "text": [text] * 4}))
+    atoms = [r for r in render_extract_parts(named, part_chars=200).collect()
+             if r["multi"]]
+    assert len(atoms) == 16 and all(r["error"] is None for r in atoms)
+    cores = spark.sparkContext.defaultParallelism
+    assert len({r["partition_id"] for r in atoms}) == min(16, cores)
 
 
 def test_lsh_armor_stats_engagement(spark, tmp_path):

@@ -111,39 +111,34 @@ def _doc_scans(node) -> list:
 
 
 def test_extracted_text_dedup_single_pass_plan(spark, oversized_sf):
-    """extracted_text_dedup renders and extracts every doc ONCE: its
-    executed plan caches one relation, whose small-doc and oversized-doc
-    branches each hold exactly one render→extract (rex) worker and one
-    scan of `documents`, and no Filter on `multi` re-reads a rex output.
-    Partner counts aggregate no (doc_a, doc_b) pairs."""
+    """extracted_text_dedup renders and extracts every doc ONCE with no
+    cache and no join: the executed plan holds one render→extract→MinHash
+    (`_rex_sig_worker`) and one oversized-part (`_rex_worker`) Python
+    pass, no InMemoryTableScan, no join node and one scan of `documents`
+    per size branch. A variant that reads the extracted frame twice (a
+    split on a window partition key that Catalyst pushes below the
+    window, or two readers whose pruned columns differ) plans the Python
+    passes twice. Partner counts aggregate no (doc_a, doc_b) pairs."""
     from unipdf_spark.operators.extracted import extracted_text_dedup
 
     df = extracted_text_dedup(spark, oversized_sf)
     df.collect()
-    ident = spark.sparkContext._jvm.System.identityHashCode
-    cached = {}
-    for n in _walk(df._jdf.queryExecution().executedPlan()):
-        if n.getClass().getSimpleName() == "InMemoryTableScanExec":
-            rel = n.relation()
-            cached[ident(rel.cacheBuilder())] = rel.cachedPlan()
-    assert len(cached) == 1, len(cached)
-    (plan,) = cached.values()
-    union = next(n for n in _walk(plan)
-                 if n.getClass().getSimpleName() == "UnionExec")
-    small, big = _seq(union.children())
-    assert [u for u in _udf_names(small) if "_rex" in u] == \
-        ["_rex_sig_worker"]
-    assert [u for u in _udf_names(big) if "_rex" in u] == ["_rex_worker"]
-    assert _udf_names(plan).count("split_batches") == 1
-    assert not [n for n in _walk(plan)
-                if n.getClass().getSimpleName() == "FilterExec"
-                and "multi" in n.condition().toString()]
+    plan = df._jdf.queryExecution().executedPlan()
+    names = [n.getClass().getSimpleName() for n in _walk(plan)]
+    assert "InMemoryTableScanExec" not in names
+    assert not [n for n in names if "Join" in n], names
+    udfs = _udf_names(plan)
+    assert [u for u in udfs if "_rex" in u] == ["_rex_sig_worker",
+                                                "_rex_worker"], udfs
+    assert udfs.count("split_batches") == 1
     # one corpus scan per size branch: the clones come from the same rows
-    assert [len(_doc_scans(b)) for b in (small, big)] == [1, 1]
+    rex = {n.func().name(): n for n in _walk(plan)
+           if n.getClass().getSimpleName() == "MapInPandasExec"}
+    assert [len(_doc_scans(rex[u]))
+            for u in ("_rex_sig_worker", "_rex_worker")] == [1, 1]
     assert len(_doc_scans(plan)) == 2
     # partner counts come from the buckets: no aggregate over pairs
-    aggs = [n.groupingExpressions().toString()
-            for n in _walk(df._jdf.queryExecution().executedPlan())
+    aggs = [n.groupingExpressions().toString() for n in _walk(plan)
             if n.getClass().getSimpleName().endswith("AggregateExec")]
     assert aggs
     assert not [g for g in aggs if "doc_a" in g or "doc_b" in g], aggs

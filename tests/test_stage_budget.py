@@ -35,6 +35,9 @@ def test_budget_rows_for_two_leaves():
     for r in rows.values():
         assert int(r["stages"]) >= 1 and int(r["tasks"]) >= 1
         assert float(r["cold s"]) > 0 and float(r["warm s"]) > 0
+        # the warm run's DataFrame build and its time outside any stage
+        assert int(r["build ms"]) >= 0 and int(r["driver ms"]) >= 0
+        assert int(r["build ms"]) <= 1000 * float(r["warm s"])
     q6, dedup = rows["q6_forecast_revenue"], rows["extracted_text_dedup"]
     assert int(q6["py run ms"]) == 0 and int(q6["py tasks"]) == 0
     assert int(dedup["py run ms"]) > 0 and int(dedup["py tasks"]) > 0

@@ -53,37 +53,45 @@ def main() -> None:
     out.append("""
 ## Notes: extracted_text_dedup
 
-- **extracted_text_dedup scale shape**: ONE persisted InMemoryRelation
-  of (doc_id, text, h0..h31) over a Union of two size branches, each
-  with its own scan of `documents` (two scans in all). Each keeps the
-  rows of its size (the length Filter sits on the scan) and plants the
-  clones with one `Generate explode` of `array(doc_id, doc_id +
-  CLONE_OFFSET)` over them.
+- **extracted_text_dedup scale shape**: no InMemoryRelation and no
+  join. A Union of two size branches, each with its own scan of
+  `documents` (two scans in all), read with the two-column schema, so no
+  schema-inference job runs. Each keeps the rows of its size (the length
+  Filter sits on the scan) and plants the clones with one `Generate
+  explode` of `array(doc_id, doc_id + CLONE_OFFSET)` over them.
   (a) The small-doc branch: the `phash.spread` round-robin Exchange →
   one `_rex_sig_worker` MapInPandas that renders, extracts and
   MinHashes each doc. (b) The oversized-doc branch, with no spread:
-  split → range Exchange (~one bounded atom per task) → `_rex_worker` →
-  ordered reassembly aggregate → MinHash worker. The dedup-hash subtree
-  and the LSH band subtree (`band_table`: one `inline` generator over the
-  cached h0..h31) both read that one relation, so each doc is rendered
-  and extracted once per query. Partner counts come straight from the
-  count-gated buckets (`lsh_partner_counts`): explode the members, then
-  one ObjectHashAggregate on doc_id; no aggregate groups on (doc_a,
-  doc_b). No `Filter` on `multi` sits above a rex worker.
+  split → round-robin Exchange over the cores (a fixed partition count,
+  which AQE does not coalesce) → `_rex_worker` → ordered reassembly
+  aggregate → MinHash worker. Above the Union, one `Generate inline`
+  emits each doc's 8 band rows and its exact row (the md5 of the
+  normalized text, with the token count), and ONE hashpartitioning
+  Exchange on (band, band_hash, norm_hash) feeds the Window (key group
+  size and minimum doc_id), the count-gate Filter and the
+  ObjectHashAggregate that collects bucket members, which adds no
+  exchange of its own. One more Exchange, on doc_id, folds exact rows
+  and exploded members into the output; no aggregate groups on (doc_a,
+  doc_b). Each doc is rendered and extracted once per query. In the
+  final plan above, AQE replaced the oversized branch, empty at this
+  input, with an EmptyRelation after its first stage.
   `tests/test_plans.py::test_extracted_text_dedup_single_pass_plan`
-  locks this shape in. The partner join stays a BroadcastHashJoin.
-- **extracted_text_dedup cold floor**: cold ≈ warm + ~6 s. Measured with
-  perfbench `text_dedup --trace 1` on a 4-vCPU host: 9.5 s cold against
-  ~3.6 s warm for 686 docs. The delta is one-time per session: janino
-  compiles the band/bucket expression family, each Python worker imports
-  the engine, and the cached frame is materialized for the first time.
-  None of it grows with data size, so it amortizes at corpus scale.
+  locks this shape in.
+- **extracted_text_dedup cold floor**: cold ≈ warm + ~4 s. Measured with
+  perfbench `text_dedup --trace 1` on a 4-vCPU host (seed 1001): 5.6 s
+  cold against 1.3-1.9 s warm for 686 docs. The delta is one-time per
+  session: janino compiles the band/bucket expression family and each
+  Python worker imports the engine. None of it grows with data size, so
+  it amortizes at corpus scale.
 - **band_table users**: `band_table` emits the 8 band rows of a
   signature with one `inline` generator, so the band subtree of
   `minhash_lsh_pairs` lost the Project that unpacked the exploded struct.
   Regenerating this file before and after that change and diffing with
   expression ids normalized, only `extracted_text_dedup` and
-  `minhash_lsh_pairs` differ.
+  `minhash_lsh_pairs` differ. The keyed-exchange `extracted_text_dedup`
+  builds its band rows from the same `band_structs` fold; across that
+  change only `extracted_text_dedup` differs, and `minhash_lsh_pairs` is
+  identical with expression ids normalized.
 
 ## Notes (r8)
 

@@ -109,14 +109,23 @@ FROM h JOIN g USING (norm_hash)
 """
 
 
+N_BANDS = N_HASHES // BAND_SIZE
+
+
+def band_structs(extra: str = "") -> list[str]:
+    """One ``named_struct('band', b, 'band_hash', <fold>{extra})`` SQL
+    expression per band; each key is the oracle's own fold
+    (phash.fold_sql). ``extra`` appends more fields to every struct."""
+    return [f"named_struct('band', {b}, 'band_hash', "
+            + phash.fold_sql([f"h{b * BAND_SIZE + r}"
+                              for r in range(BAND_SIZE)])
+            + extra + ")"
+            for b in range(N_BANDS)]
+
+
 # all 8 (band, band_hash) rows of a signature row as ONE generator
-# expression; each key is the oracle's own fold (phash.fold_sql)
-_BANDS_EXPR = "inline(array({}))".format(", ".join(
-    f"named_struct('band', {b}, 'band_hash', "
-    + phash.fold_sql([f"h{b * BAND_SIZE + r}" for r in range(BAND_SIZE)])
-    + ")"
-    for b in range(N_HASHES // BAND_SIZE)
-))
+# expression
+_BANDS_EXPR = "inline(array({}))".format(", ".join(band_structs()))
 
 
 def band_table(sig: DataFrame) -> DataFrame:
@@ -308,22 +317,6 @@ def lsh_candidates(bt: DataFrame) -> DataFrame:
         .select("doc_a", F.explode("members").alias("doc_b"))
         .filter(F.col("doc_a") < F.col("doc_b"))
         .distinct()
-    )
-
-
-def lsh_partner_counts(bt: DataFrame) -> DataFrame:
-    """(doc_id, n_candidates): each doc's number of distinct
-    :func:`lsh_candidates` partners, straight from :func:`lsh_buckets`. A
-    doc's distinct bucket-mates, itself excluded, are exactly its
-    candidate pairs, so there is no pair explode and no pair distinct;
-    one aggregate collects at most (bands × MAX_BUCKET) ids per doc. Docs
-    in no candidate bucket have no row."""
-    return (
-        lsh_buckets(bt)
-        .select(F.explode("members").alias("doc_id"), "members")
-        .groupBy("doc_id")
-        .agg((F.size(F.array_distinct(F.flatten(F.collect_list("members"))))
-              - 1).alias("n_candidates"))
     )
 
 

@@ -20,14 +20,23 @@ normalized dedup and MinHash LSH exist to catch.
 Scale shape (100 TB): the corpus is scanned once per size branch, and
 the clones are planted by exploding those same rows. Each small doc is
 rendered, extracted, reassembled and MinHashed in ONE map-only Python
-pass; its only exchange is :func:`phash.spread`'s, which is a no-op once
-the input has as many partitions as cores. Only oversized docs take the
-split → range exchange → extract → reassemble detour. The resulting
-(doc_id, text, h0..h31) frame is persisted once and feeds both the
-dedup-hash and the LSH band paths. Partner counts come straight from the
-count-gated, bounded LSH buckets (:func:`dedup.lsh_partner_counts`: no
-self-join, no mega-bucket task, no pair explode): one aggregate per doc
-over at most 8 × MAX_BUCKET bucket-mates.
+pass; the only exchange before it is :func:`phash.spread`'s, which is a
+no-op once the input has as many partitions as cores. Only oversized docs
+take the split → round-robin exchange → extract → reassemble detour,
+their parts dealt over the cores. Nothing is persisted and nothing is
+joined: one generator turns each extracted doc into its 8 LSH band
+rows and one exact row keyed by its normalized text's md5, and those rows
+take ONE hash exchange on the key (:func:`keyed_dedup`). All rows of a
+bucket or exact group, however many, meet in one window task and its
+spillable buffer, as they do in the sort-merge `bt ⋉ ok` semi-join of
+:func:`dedup.lsh_buckets` and the `norm_hash` join of
+:func:`dedup.dedup_normalized` at corpus scale, where neither side
+broadcasts. A boilerplate bucket of millions of docs is counted and
+dropped there. No collected list holds
+more than MAX_BUCKET ids: only buckets that pass the 2..MAX_BUCKET count
+gate collect their members, and each doc folds at most 8 such lists
+plus itself in the one doc_id exchange. There is no self-join and no pair
+explode.
 """
 
 from __future__ import annotations
@@ -45,8 +54,7 @@ from .dedup import (
     _SIG_COLS_SQL,
     _SIG_FIELDS,
     _BANDS_SQL,
-    band_table,
-    lsh_partner_counts,
+    band_structs,
     with_minhash,
 )
 
@@ -56,11 +64,11 @@ CLONE_OFFSET = 1_000_000
 def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents plus the planted clones, from ONE scan: every
     ``doc_id % 7 == 0`` row is exploded into itself and its clone."""
-    d = F.col("doc_id")
-    ids = F.when(d % 7 == 0, F.array(d, d + CLONE_OFFSET)).otherwise(
-        F.array(d))
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        F.explode(ids).alias("doc_id"), "text")
+    # the two columns read, as a schema: no schema-inference job per query
+    return spark.read.schema("doc_id bigint, text string").parquet(
+        f"{sf_dir}/documents.parquet").selectExpr(
+        f"explode(if(doc_id % 7 = 0, array(doc_id, doc_id + {CLONE_OFFSET}),"
+        " array(doc_id))) AS doc_id", "text")
 
 
 PART_CHARS = 65536  # oversized-doc task atom: ~0.6 s render+extract each
@@ -140,16 +148,16 @@ def _by_size(named: DataFrame, part_chars: int
     """(small, big) (doc_id, text) frames: texts up to ``part_chars`` and
     the oversized rest."""
     d = named.select("doc_id", "text")
-    n = F.length(F.coalesce("text", F.lit("")))
-    return d.filter(n <= part_chars), d.filter(n > part_chars)
+    n = "length(coalesce(text, ''))"
+    return d.filter(f"{n} <= {part_chars}"), d.filter(f"{n} > {part_chars}")
 
 
 def _spread_by_size(named: DataFrame, part_chars: int
                     ) -> tuple[DataFrame, DataFrame]:
     """Batch :func:`_by_size`: the small-doc branch is spread over the
     cores (:func:`phash.spread`) for its Python pass; the oversized branch
-    goes straight from the scan to the splitter, whose range exchange
-    balances its parts."""
+    goes straight from the scan to the splitter, whose round-robin
+    exchange deals its parts over the cores."""
     small, big = _by_size(named, part_chars)
     return phash.spread(small, named.sparkSession), big
 
@@ -157,35 +165,35 @@ def _spread_by_size(named: DataFrame, part_chars: int
 def _big_parts_ext(big: DataFrame, part_chars: int) -> DataFrame:
     """Oversized docs → word-boundary parts, each rendered and extracted
     as its own atom (REX_DDL rows, ``multi`` true)."""
-    # range- (not hash-) partitioned: the part count is small, and hash
-    # buckets birthday-collide (2-3 atoms in one task defeats the split);
-    # ranges give ~one atom per partition
-    parts = map_docs(big, _make_splitter(part_chars), PARTS_DDL
-                     ).repartitionByRange(F.col("doc_id"), F.col("part_idx"))
+    # dealt round-robin over the cores: hash buckets birthday-collide (2-3
+    # atoms in one task defeats the split), and AQE coalesces a
+    # repartitionByRange exchange of a few small rows into ONE partition;
+    # a repartition to a fixed count is neither coalesced nor sampled
+    parts = map_docs(big, _make_splitter(part_chars), PARTS_DDL).repartition(
+        big.sparkSession.sparkContext.defaultParallelism)
     return map_docs(parts, _rex_worker, REX_DDL)
 
 
 def _join_parts(multi: DataFrame) -> DataFrame:
     """Multi-part rows → (doc_id, text): part_idx-ordered space join, the
     token stream identical to the unsplit text."""
-    return multi.groupBy("doc_id").agg(F.array_join(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("part_idx", "text"))),
-            lambda s: s["text"],
-        ), " ").alias("text"))
+    return multi.groupBy("doc_id").agg(F.expr(
+        "array_join(transform(array_sort(collect_list(struct(part_idx, "
+        "text))), s -> s.text), ' ') AS text"))
 
 
 def render_extract_parts(named: DataFrame, part_chars: int = PART_CHARS
                          ) -> DataFrame:
     """Scale path for heavy-tailed corpora: texts longer than
     ``part_chars`` are split at word boundaries into bounded parts that
-    render+extract as INDEPENDENT tasks, so one 1 MB document can no
+    render+extract as INDEPENDENT atoms, so one 1 MB document can no
     longer hold a partition hostage (the 48k skew drill bounds doc-count
     skew; this bounds the per-DOC atom — a planted mega-doc costs ~15 s
-    as one task but ~0.6 s × N fully parallel parts). Small docs (the
-    overwhelming majority) stay on the map-only path, with no shuffle
-    beyond :func:`phash.spread`'s; only the oversized slice pays a parts
-    shuffle.
+    as one task, but its N parts of ~0.4-0.6 s each on a 4-vCPU host are
+    dealt round-robin over the cores and run ⌈N / cores⌉ deep). Small
+    docs (the overwhelming majority) stay on the map-only path, with no
+    shuffle beyond :func:`phash.spread`'s; only the oversized slice pays
+    a parts shuffle.
 
     Returns one row per part: (doc_id bigint, part_idx int, text,
     multi boolean, partition_id int, elapsed_ms double, error string) —
@@ -220,56 +228,93 @@ def render_extract_reassemble_scalable(named: DataFrame,
         joined.mapInPandas(_sig_worker, SIG_DDL))
 
 
+# normalized dedup key (same normalization as dedup_normalized:
+# lowercase, strip punctuation, collapse whitespace)
+_NORM_HASH_SQL = (r"md5(trim(regexp_replace(lower(regexp_replace("
+                  r"text, '[^A-Za-z0-9\\s]', ' ')), '\\s+', ' ')))")
+# token stats on the extracted text: the count must equal DuckDB's over
+# the ORIGINAL text — an extra per-doc integrity column beyond the dedup
+# hash. The reassembled text is single-space collapsed with no edge
+# spaces, so size(split(' ')) IS the token count — no interpreted
+# filter() HOF (Catalyst HOF lambdas never codegen; the first form of
+# this column cost +2 s on the sf0.1 suite)
+_N_TOKENS_SQL = ("CAST(IF(length(text) = 0, 0, size(split(text, ' ', -1)))"
+                 " AS BIGINT)")
+# every doc's keyed rows, from ONE generator: its dedup.N_BANDS (band,
+# band_hash) LSH rows, then its exact row keyed by the normalized text's
+# md5 and carrying its token count. Each row's key is (band, band_hash,
+# norm_hash); the fields a row does not use are NULL.
+KEYED_DDL = ("doc_id bigint, band int, band_hash bigint, norm_hash string, "
+             "n_tokens bigint")
+KEY = ["band", "band_hash", "norm_hash"]
+_KEYED_EXPR = "inline(array({}))".format(", ".join(
+    band_structs(", 'norm_hash', NULL, 'n_tokens', NULL")
+    + ["named_struct('band', NULL, 'band_hash', NULL, "
+       f"'norm_hash', {_NORM_HASH_SQL}, 'n_tokens', {_N_TOKENS_SQL})"]))
+_EXACT = "n_tokens IS NOT NULL"
+
+
+def keyed_rows(sig: DataFrame) -> DataFrame:
+    """(doc_id, text, h0..h31) → KEYED_DDL rows: 8 band rows and one
+    exact row per doc."""
+    return sig.selectExpr("doc_id", _KEYED_EXPR)
+
+
+def keyed_dedup(keyed: DataFrame) -> DataFrame:
+    """KEYED_DDL rows → per doc (doc_id, canonical_doc_id, group_size,
+    n_tokens, n_candidates), over ONE hash exchange on the key.
+
+    A window on the key gives every row its key group's size and minimum
+    doc_id: an exact row takes them as its doc's group_size and
+    canonical_doc_id; a band row survives only in a bucket of
+    2..MAX_BUCKET docs (the count gate of :func:`dedup.lsh_buckets`, so a
+    boilerplate bucket of millions of docs meets in one window task, in
+    its spillable buffer, and is dropped there). Surviving buckets collect
+    their members in an aggregate that the window's partitioning already
+    satisfies: no further exchange, at most MAX_BUCKET ids per list. An
+    exact row is its own group (keyed by its doc_id) with itself as the
+    only member. Exploding the members and folding them per doc (the one
+    doc_id exchange) gives each doc its distinct bucket-mates plus itself,
+    so ``n_candidates`` is that count minus one: the doc's number of
+    distinct :func:`dedup.lsh_candidates` partners, 0 in no bucket.
+    Written as SQL strings: each Column-API call is a py4j round trip
+    while the query is built."""
+    w = f"OVER (PARTITION BY {', '.join(KEY)})"
+    return (
+        keyed.selectExpr("doc_id", *KEY, "n_tokens",
+                         f"count(1) {w} AS n", f"min(doc_id) {w} AS first")
+        # a filter on a window partition key alone would be pushed below
+        # the window, and so below the exchange; `n` keeps it above
+        .filter(f"{_EXACT} OR n BETWEEN 2 AND {MAX_BUCKET}")
+        .groupBy(*KEY, F.expr(f"if({_EXACT}, doc_id, NULL) AS own"))
+        .agg(*(F.expr(a) for a in (
+            "collect_list(doc_id) AS members",
+            f"max(if({_EXACT}, first, NULL)) AS canonical_doc_id",
+            f"max(if({_EXACT}, n, NULL)) AS group_size",
+            "max(n_tokens) AS n_tokens")))
+        .selectExpr("explode(members) AS doc_id", "members",
+                    "canonical_doc_id", "group_size", "n_tokens")
+        .groupBy("doc_id")
+        .agg(*(F.expr(a) for a in (
+            "max(canonical_doc_id) AS canonical_doc_id",
+            "max(group_size) AS group_size",
+            "max(n_tokens) AS n_tokens",
+            "CAST(size(array_distinct(flatten(collect_list(members)))) - 1"
+            " AS BIGINT) AS n_candidates")))
+    )
+
+
 def extracted_text_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents(+planted clones) → PDFs → span extraction → reassembled
     text → normalized dedup groups + MinHash LSH candidate-partner counts,
     all computed on the extracted text. Output per doc: (doc_id,
     canonical_doc_id, group_size, n_tokens, n_candidates)."""
-    corpus = _corpus(spark, sf_dir)
-    named = corpus.select(
-        F.concat(F.lit("doc_"),
-                 F.lpad(F.col("doc_id").cast("string"), 8, "0")
-                 ).alias("doc_id"),
-        "text",
-    )
-    # ONE cached frame feeds both the dedup-hash and the band branches
-    extracted = render_extract_reassemble_scalable(named).persist()
-
-    # normalized dedup ON EXTRACTED TEXT (same normalization as
-    # dedup_normalized: lowercase, strip punctuation, collapse whitespace)
-    norm = F.trim(
-        F.regexp_replace(
-            F.lower(F.regexp_replace("text", r"[^A-Za-z0-9\s]", " ")),
-            r"\s+", " ",
-        )
-    )
-    # token stats on the extracted text: the count must equal DuckDB's
-    # over the ORIGINAL text — an extra per-doc integrity column beyond
-    # the dedup hash. The reassembled text is single-space collapsed with
-    # no edge spaces, so size(split(' ')) IS the token count — no
-    # interpreted filter() HOF (Catalyst HOF lambdas never codegen; the
-    # first form of this column cost +2 s on the sf0.1 suite)
-    n_tokens = F.when(F.length("text") == 0, F.lit(0)).otherwise(
-        F.size(F.split("text", " ", -1))).cast("long")
-    h = extracted.select(
-        "doc_id", F.md5(norm).alias("norm_hash"),
-        n_tokens.alias("n_tokens"),
-    )
-    groups = h.groupBy("norm_hash").agg(
-        F.min("doc_id").alias("canonical_doc_id"),
-        F.count(F.lit(1)).alias("group_size"),
-    )
-    dd = h.join(groups, "norm_hash").select(
-        "doc_id", "canonical_doc_id", "group_size", "n_tokens")
-
-    # MinHash LSH candidate-partner counts ON EXTRACTED TEXT, straight
-    # from the count-gated buckets of minhash_lsh_pairs
-    partners = lsh_partner_counts(band_table(extracted))
-    return dd.join(partners, "doc_id", "left").select(
-        "doc_id", "canonical_doc_id", "group_size", "n_tokens",
-        F.coalesce("n_candidates", F.lit(0)).cast("long")
-        .alias("n_candidates"),
-    )
+    named = _corpus(spark, sf_dir).selectExpr(
+        "concat('doc_', lpad(CAST(doc_id AS STRING), 8, '0')) AS doc_id",
+        "text")
+    # no cache: the one extracted frame feeds one generator, whose rows
+    # take one keyed exchange
+    return keyed_dedup(keyed_rows(render_extract_reassemble_scalable(named)))
 
 
 # Oracle: identical math straight from documents.text (no PDF trip).
