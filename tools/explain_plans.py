@@ -72,14 +72,18 @@ def main() -> None:
   ObjectHashAggregate that collects bucket members, which adds no
   exchange of its own. One more Exchange, on doc_id, folds exact rows
   and exploded members into the output; no aggregate groups on (doc_a,
-  doc_b). Each doc is rendered and extracted once per query. In the
-  final plan above, AQE replaced the oversized branch, empty at this
-  input, with an EmptyRelation after its first stage.
+  doc_b). Each doc is rendered and extracted once per query. The plan
+  above is the one before execution. When no doc is oversized, the
+  splitter stage (one task) and the `_rex_worker` stage (one empty task
+  per core: AQE keeps a user-set partition count) still run; AQE then
+  replaces the reassembly aggregate and the MinHash worker with an
+  EmptyRelation.
   `tests/test_plans.py::test_extracted_text_dedup_single_pass_plan`
   locks this shape in.
-- **extracted_text_dedup cold floor**: cold ≈ warm + ~4 s. Measured with
-  perfbench `text_dedup --trace 1` on a 4-vCPU host (seed 1001): 5.6 s
-  cold against 1.3-1.9 s warm for 686 docs. The delta is one-time per
+- **extracted_text_dedup cold floor**: cold ≈ warm + ~3 s. Measured with
+  perfbench `text_dedup` on a 4-vCPU host: 4.3 and 4.6 s cold
+  (`--trace 1`, seeds 2301 and 2302) against ~1.3 s warm (686 docs at
+  the untraced median of 534 docs/s). The delta is one-time per
   session: janino compiles the band/bucket expression family and each
   Python worker imports the engine. None of it grows with data size, so
   it amortizes at corpus scale.

@@ -18,6 +18,7 @@ span equality.
 
 from __future__ import annotations
 
+import json
 import os
 import platform
 import shlex
@@ -72,8 +73,6 @@ def leaf_frames(spark, sf_dir: str, cores: int, n_docs: int) -> dict:
 def stage_spans(log_dir: str) -> dict[str, list[tuple[int, int]]]:
     """Job group → the (submission, completion) epoch ms of each of its
     stages that ran, attributed as :func:`stages.parse_events` does."""
-    import json
-
     stage_group: dict[int, str] = {}
     spans: dict[str, list[tuple[int, int]]] = defaultdict(list)
     for path in stages.event_log_files(log_dir):

@@ -240,10 +240,11 @@ _NORM_HASH_SQL = (r"md5(trim(regexp_replace(lower(regexp_replace("
 # this column cost +2 s on the sf0.1 suite)
 _N_TOKENS_SQL = ("CAST(IF(length(text) = 0, 0, size(split(text, ' ', -1)))"
                  " AS BIGINT)")
-# every doc's keyed rows, from ONE generator: its dedup.N_BANDS (band,
-# band_hash) LSH rows, then its exact row keyed by the normalized text's
-# md5 and carrying its token count. Each row's key is (band, band_hash,
-# norm_hash); the fields a row does not use are NULL.
+# (doc_id, text, h0..h31) → every doc's keyed rows, from ONE generator:
+# its dedup.N_BANDS (band, band_hash) LSH rows, then its exact row keyed
+# by the normalized text's md5 and carrying its token count. Each row's
+# key is (band, band_hash, norm_hash); the fields a row does not use are
+# NULL.
 KEYED_DDL = ("doc_id bigint, band int, band_hash bigint, norm_hash string, "
              "n_tokens bigint")
 KEY = ["band", "band_hash", "norm_hash"]
@@ -252,12 +253,6 @@ _KEYED_EXPR = "inline(array({}))".format(", ".join(
     + ["named_struct('band', NULL, 'band_hash', NULL, "
        f"'norm_hash', {_NORM_HASH_SQL}, 'n_tokens', {_N_TOKENS_SQL})"]))
 _EXACT = "n_tokens IS NOT NULL"
-
-
-def keyed_rows(sig: DataFrame) -> DataFrame:
-    """(doc_id, text, h0..h31) → KEYED_DDL rows: 8 band rows and one
-    exact row per doc."""
-    return sig.selectExpr("doc_id", _KEYED_EXPR)
 
 
 def keyed_dedup(keyed: DataFrame) -> DataFrame:
@@ -314,7 +309,8 @@ def extracted_text_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text")
     # no cache: the one extracted frame feeds one generator, whose rows
     # take one keyed exchange
-    return keyed_dedup(keyed_rows(render_extract_reassemble_scalable(named)))
+    return keyed_dedup(render_extract_reassemble_scalable(named).selectExpr(
+        "doc_id", _KEYED_EXPR))
 
 
 # Oracle: identical math straight from documents.text (no PDF trip).
