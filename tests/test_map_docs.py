@@ -2,7 +2,9 @@
 plain pandas frames (no Spark session), a structural guard that no
 per-doc batch loop is written by hand outside it and that every batch
 function keeps the worker's zip directories, and a ``local[1]`` run that
-shows reused workers no longer re-read them."""
+shows reused workers no longer re-read them, and ``local[1]`` runs that
+show a session's Python workers reach the JVM over Unix domain sockets in
+a short private directory."""
 
 from __future__ import annotations
 
@@ -188,3 +190,61 @@ def test_reused_worker_keeps_zip_directories():
     for seen in by_pid.values():
         # from a worker's second task on, no archive's directory is re-read
         assert all(dirs == seen[1] for dirs in seen[2:]), seen
+
+
+# One local[1] session from get_spark in its own process, with TMPDIR and
+# java.io.tmpdir too deep for a Unix socket path: four map_docs tasks and a
+# collect() over the session's Unix domain sockets.
+_UDS_PROBE = """
+import json, os, stat
+from unipdf_spark.pipeline import get_spark, map_docs
+
+spark = get_spark("uds-probe", cores=1)
+conf = spark.sparkContext.getConf()
+df = spark.range(0, 4, numPartitions=4).selectExpr("cast(id as int) i")
+rows = map_docs(df, lambda i: [(i, os.getpid())], "i int, pid int").collect()
+d = conf.get("spark.python.unix.domain.socket.dir", "")
+print(json.dumps({
+    "enabled": conf.get("spark.python.unix.domain.socket.enabled", "false"),
+    "dir": d, "mode": stat.S_IMODE(os.stat(d).st_mode) if d else None,
+    "rows": sorted(r.i for r in rows)}))
+spark.stop()
+"""
+
+
+# Linux's sun_path holds 107 bytes; Spark's socket names are /.<uuid4>.sock
+SUN_PATH_MAX, SOCKET_NAME_LEN = 107, 43
+
+
+def test_python_workers_use_unix_sockets_in_a_short_private_dir(tmp_path):
+    deep = tmp_path / ("d" * 40) / ("e" * 40)
+    deep.mkdir(parents=True)
+    assert len(str(deep)) + SOCKET_NAME_LEN > SUN_PATH_MAX
+    env = {**os.environ, "TMPDIR": str(deep), "PYTHONPATH": os.pathsep.join(
+        [str(REPO), *filter(None, [os.environ.get("PYTHONPATH")])]),
+        "PYSPARK_SUBMIT_ARGS": f"--conf spark.ui.enabled=false "
+        f"--driver-java-options -Djava.io.tmpdir={deep} pyspark-shell"}
+    p = subprocess.run([sys.executable, "-c", _UDS_PROBE], cwd=REPO, env=env,
+                       capture_output=True, text=True, timeout=300)
+    assert p.returncode == 0, p.stderr[-2000:]
+    out = json.loads(p.stdout.splitlines()[-1])
+    assert out["enabled"] == "true"
+    assert out["rows"] == [0, 1, 2, 3]
+    assert out["mode"] == 0o700
+    assert len(out["dir"]) + SOCKET_NAME_LEN <= SUN_PATH_MAX
+    assert not os.path.exists(out["dir"])  # removed at interpreter exit
+
+
+def test_socket_dir_lies_under_tmpdir_when_paths_fit():
+    import tempfile
+
+    with tempfile.TemporaryDirectory(dir="/tmp") as short:
+        env = {**os.environ, "TMPDIR": short}
+        p = subprocess.run(
+            [sys.executable, "-c", "from unipdf_spark.pipeline import "
+             "socket_dir; print(socket_dir())"],
+            cwd=REPO, env=env, capture_output=True, text=True, timeout=60)
+        assert p.returncode == 0, p.stderr[-2000:]
+        d = p.stdout.strip()
+        assert os.path.dirname(d) == short
+        assert not os.path.exists(d)
