@@ -1,14 +1,15 @@
 """The one Arrow worker shape: ``pipeline.map_docs``'s batch function fed
 plain pandas frames (no Spark session), a structural guard that no
 per-doc batch loop is written by hand outside it and that every batch
-function keeps the worker's zip directories, and a ``local[1]`` run that
-shows reused workers no longer re-read them, and ``local[1]`` runs that
-show a session's Python workers reach the JVM over Unix domain sockets in
-a short private directory."""
+function calls ``prepare_worker``, a ``local[1]`` run that shows reused
+workers no longer re-read their zip directories and freeze their heap
+once, and ``local[1]`` runs that show a session's Python workers reach the
+JVM over Unix domain sockets in a short private directory."""
 
 from __future__ import annotations
 
 import ast
+import functools
 import json
 import os
 import subprocess
@@ -90,19 +91,19 @@ _ALLOWED_WORKERS = {"_sig_worker", "_rex_sig_worker"}
 _ALLOWED_FILES = {"unipdf_spark/operators/dedup.py"}
 
 
-def _keeps_zip_directories(fn: ast.FunctionDef, top, seen=()) -> bool:
-    """``fn`` calls ``keep_zip_directories``, itself or through a
+def _prepares_worker(fn: ast.FunctionDef, top, seen=()) -> bool:
+    """``fn`` calls ``prepare_worker``, itself or through a
     top-level function of its module."""
     called = {c.func.id for c in ast.walk(fn)
               if isinstance(c, ast.Call) and isinstance(c.func, ast.Name)}
-    return "keep_zip_directories" in called or any(
-        _keeps_zip_directories(top[n], top, (*seen, n))
+    return "prepare_worker" in called or any(
+        _prepares_worker(top[n], top, (*seen, n))
         for n in called if n in top and n not in seen)
 
 
 def _map_in_pandas_calls(path: Path):
     """(enclosing function, first argument source, whether that batch
-    function keeps the zip directories) per mapInPandas call. The batch
+    function calls ``prepare_worker``) per mapInPandas call. The batch
     function is the def of that name nested in the enclosing function,
     else the module-level one."""
     tree = ast.parse(path.read_text())
@@ -122,7 +123,7 @@ def _map_in_pandas_calls(path: Path):
                           if isinstance(n, ast.FunctionDef)}
                 batch = nested.get(arg) or top.get(arg)
                 out.append((fn.name if fn else None, arg, batch is not None
-                            and _keeps_zip_directories(batch, top)))
+                            and _prepares_worker(batch, top)))
             walk(child, inner)
 
     walk(tree, None)
@@ -151,45 +152,67 @@ def test_every_map_in_pandas_goes_through_map_docs():
 
 
 # One local[1] session in its own process: six one-row partitions through
-# map_docs, each task reporting its worker pid and the id of every archive's
-# zipimport directory dict. The dicts seen are kept alive in the worker so
-# a freed dict's id cannot be reused by a later one.
+# map_docs, each task reporting its worker pid, the id of every archive's
+# zipimport directory dict and the number of frozen gc objects. The dicts
+# seen are kept alive in the worker so a freed dict's id cannot be reused by
+# a later one.
 _ZIP_PROBE = """
-import json, os, sys, zipimport
+import gc, json, os, sys, zipimport
 from pyspark.sql import SparkSession
 from unipdf_spark.pipeline import map_docs
 
 def probe(i):
     dirs = zipimport._zip_directory_cache
     sys.__dict__.setdefault("_zip_dirs_seen", []).extend(dirs.values())
-    return [(i, os.getpid(), json.dumps({k: id(v) for k, v in dirs.items()}))]
+    return [(i, os.getpid(), json.dumps({k: id(v) for k, v in dirs.items()}),
+             gc.get_freeze_count())]
 
 spark = (SparkSession.builder.master("local[1]").appName("zip-probe")
          .config("spark.ui.enabled", "false").getOrCreate())
 df = spark.range(0, 6, numPartitions=6).selectExpr("cast(id as int) i")
-rows = map_docs(df, probe, "i int, pid int, dirs string").collect()
-print(json.dumps(sorted((r.i, r.pid, json.loads(r.dirs)) for r in rows)))
+rows = map_docs(df, probe, "i int, pid int, dirs string, frozen int").collect()
+print(json.dumps(sorted((r.i, r.pid, json.loads(r.dirs), r.frozen)
+                        for r in rows)))
 spark.stop()
 """
 
 
-def test_reused_worker_keeps_zip_directories():
+@functools.cache
+def _probe_tasks() -> dict[int, list[tuple[dict, int]]]:
+    """Worker pid → (zip directory ids, frozen count) per task, in task
+    order."""
     env = {**os.environ, "PYTHONPATH": os.pathsep.join(
         [str(REPO), *filter(None, [os.environ.get("PYTHONPATH")])])}
     p = subprocess.run([sys.executable, "-c", _ZIP_PROBE], cwd=REPO, env=env,
                        capture_output=True, text=True, timeout=300)
     assert p.returncode == 0, p.stderr[-2000:]
     tasks = json.loads(p.stdout.splitlines()[-1])
-    assert [i for i, _, _ in tasks] == list(range(6))
-    if not any(dirs for _, _, dirs in tasks):
-        pytest.skip("the Python workers import from no zip")
-    by_pid: dict[int, list[dict]] = {}
-    for _, pid, dirs in tasks:
-        by_pid.setdefault(pid, []).append(dirs)
+    assert [i for i, *_ in tasks] == list(range(6))
+    by_pid: dict[int, list[tuple[dict, int]]] = {}
+    for _, pid, dirs, frozen in tasks:
+        by_pid.setdefault(pid, []).append((dirs, frozen))
     assert max(map(len, by_pid.values())) >= 3  # workers are reused
+    return by_pid
+
+
+def test_reused_worker_keeps_zip_directories():
+    by_pid = _probe_tasks()
+    if not any(dirs for seen in by_pid.values() for dirs, _ in seen):
+        pytest.skip("the Python workers import from no zip")
     for seen in by_pid.values():
+        dirs = [d for d, _ in seen]
         # from a worker's second task on, no archive's directory is re-read
-        assert all(dirs == seen[1] for dirs in seen[2:]), seen
+        assert all(d == dirs[1] for d in dirs[2:]), dirs
+
+
+def test_reused_worker_freezes_its_heap_once():
+    for seen in _probe_tasks().values():
+        frozen = [f for _, f in seen]
+        # frozen from the first task on, so the daemon's gc.collect() after
+        # each task skips the import-time heap; frozen once, so the count
+        # never grows (freed frozen objects only shrink it)
+        assert frozen[0] > 1000, frozen
+        assert all(b <= a for a, b in zip(frozen, frozen[1:])), frozen
 
 
 # One local[1] session from get_spark in its own process, with TMPDIR and

@@ -27,7 +27,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..pipeline import keep_zip_directories
+from ..pipeline import prepare_worker
 from . import phash
 
 N_HASHES = 32
@@ -215,7 +215,7 @@ def minhash_signatures_pandas(d: DataFrame) -> DataFrame:
     :func:`with_minhash`."""
 
     def batches(pdfs):
-        keep_zip_directories()
+        prepare_worker()
         for pdf in pdfs:
             yield with_minhash(pdf)[["doc_id", *SIG_NAMES]]
 
@@ -234,7 +234,7 @@ def _shingle_sets_pandas(d: DataFrame) -> DataFrame:
     def batches(pdfs):
         import pandas as pd
 
-        keep_zip_directories()
+        prepare_worker()
         for pdf in pdfs:
             shs = [sorted(_shingle_set(t)) for t in pdf["text"].tolist()]
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "sh": shs})
@@ -365,7 +365,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         import pandas as pd
 
-        keep_zip_directories()
+        prepare_worker()
         for pdf in pdfs:
             vals = []
             for sa, sb in zip(pdf["sh_a"], pdf["sh_b"]):
@@ -549,7 +549,7 @@ def simhash_fingerprints_pandas(d: DataFrame) -> DataFrame:
 
         import pandas as pd
 
-        keep_zip_directories()
+        prepare_worker()
         ws = re.compile(r"\s+", re.ASCII)
         for pdf in pdfs:
             out = np.zeros(len(pdf), dtype=np.int64)

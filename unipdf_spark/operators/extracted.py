@@ -45,7 +45,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..pipeline import doc_worker, keep_zip_directories, map_docs
+from ..pipeline import doc_worker, map_docs, prepare_worker
 from . import phash
 from .dedup import (
     MAX_BUCKET,
@@ -100,7 +100,7 @@ SIG_DDL = "doc_id bigint, text string, " + _SIG_FIELDS
 def _sig_worker(batches):
     """(doc_id, text) batches → SIG_DDL rows: the text plus its 32 MinHash
     values."""
-    keep_zip_directories()
+    prepare_worker()
     for b in batches:
         yield with_minhash(b)[["doc_id", "text", *SIG_NAMES]]
 
