@@ -11,11 +11,10 @@ persisted; the pipeline leaves' inputs are built once, untimed, by
 ``localCheckpoint``, which that keeps. ``build ms`` is the warm run's time
 to build the DataFrame, before the write, and ``py4j calls`` the py4j
 round trips (``send_command``) the driver made meanwhile; ``driver ms`` is
-the warm wall
-time outside every stage of the run (wall minus the union of its stages'
-submission → completion spans): plan building, job submission and the
-gaps between jobs. Exits nonzero on an unknown leaf or when a doc fails
-span equality.
+the warm wall time outside every stage of the run (wall minus the union
+of its stages' submission → completion spans): plan building, job
+submission and the gaps between jobs. Exits nonzero on an unknown leaf or
+when a doc fails span equality.
 """
 
 from __future__ import annotations
