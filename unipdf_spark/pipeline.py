@@ -144,6 +144,7 @@ def prepare_worker() -> None:
       is bounded per process."""
     from pyspark import TaskContext
 
+    # the zip hook, once set, marks this worker process as prepared
     if TaskContext.get() is not None and \
             zipimport.zipimporter.invalidate_caches is not _keep_directory:
         zipimport.zipimporter.invalidate_caches = _keep_directory
