@@ -178,21 +178,37 @@ def test_simhash_near_dup_pairs_finds_near_dupes(spark, tmp_path):
     assert all(2 not in p for p in pairs)
 
 
-def test_lsh_bucket_cap_drops_degenerate_bucket(spark, tmp_path):
-    """Skew armor: a bucket of (MAX_BUCKET+many) identical docs is dropped
-    before pair generation — no n² blowup, no pairs from the hot bucket —
-    while a normal near-dup pair elsewhere is still found."""
-    from unipdf_spark.operators.dedup import MAX_BUCKET, minhash_lsh_pairs
+@pytest.mark.parametrize("extra", [0, 1], ids=["at_cap", "over_cap"])
+def test_lsh_bucket_cap_drops_degenerate_bucket(spark, tmp_path, extra):
+    """Skew armor at the gate's boundary: a bucket of exactly MAX_BUCKET
+    identical docs is kept and fully paired; one of MAX_BUCKET + 1 is
+    dropped before pair generation — no pairs from the hot bucket —
+    while a normal near-dup pair elsewhere is still found. Both match
+    the DuckDB oracle."""
+    import duckdb
+
+    from unipdf_spark.operators.dedup import (
+        MAX_BUCKET,
+        MINHASH_LSH_SQL,
+        minhash_lsh_pairs,
+    )
 
     boiler = "lorem ipsum dolor sit amet consectetur adipiscing elit " * 6
     a = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 6
     b = a.replace("kappa", "kappa2", 1)
-    texts = [boiler] * (MAX_BUCKET + 36) + [a, b]
-    sf = _write_docs(spark, tmp_path, texts)
-    pairs = {(r["doc_a"], r["doc_b"]) for r in minhash_lsh_pairs(spark, sf).collect()}
-    n_hot = MAX_BUCKET + 36
+    n_hot = MAX_BUCKET + extra
+    sf = _write_docs(spark, tmp_path, [boiler] * n_hot + [a, b])
+    got = sorted(tuple(r) for r in minhash_lsh_pairs(spark, sf).collect())
+    pairs = {(x, y) for x, y, _j in got}
     assert (n_hot, n_hot + 1) in pairs  # the real near-dup pair survives
-    assert not any(x < n_hot and y < n_hot for x, y in pairs)  # hot bucket dropped
+    hot = {(x, y) for x, y in pairs if y < n_hot}
+    assert len(hot) == (n_hot * (n_hot - 1) // 2 if not extra else 0)
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{sf}/documents.parquet/*.parquet')"
+    )
+    assert got == sorted(map(tuple, con.execute(MINHASH_LSH_SQL).fetchall()))
 
 
 def test_lsh_partner_counts_equal_candidate_pair_counts(spark):
@@ -203,9 +219,9 @@ def test_lsh_partner_counts_equal_candidate_pair_counts(spark):
     exactly MAX_BUCKET members (kept); doc 1 also sits in a bucket of
     MAX_BUCKET + 1 members (dropped) and in a singleton; doc 5000 is in
     no bucket. Exact groups hold 1, 2 and 3 docs."""
-    from collections import Counter
+    from collections import Counter, defaultdict
 
-    from unipdf_spark.operators.dedup import MAX_BUCKET, lsh_candidates
+    from unipdf_spark.operators.dedup import MAX_BUCKET
     from unipdf_spark.operators.extracted import KEYED_DDL, keyed_dedup
 
     full = [2] + list(range(100, 100 + MAX_BUCKET - 1))
@@ -223,12 +239,13 @@ def test_lsh_partner_counts_equal_candidate_pair_counts(spark):
         [(d, b, h, None, None) for d, b, h in bands] + exact, KEYED_DDL)
 
     got = {r["doc_id"]: tuple(r)[1:] for r in keyed_dedup(keyed).collect()}
-    bt = spark.createDataFrame(bands, "doc_id bigint, band int, "
-                                      "band_hash long")
-    want = Counter()
-    for r in lsh_candidates(bt).collect():
-        want[r["doc_a"]] += 1
-        want[r["doc_b"]] += 1
+    # reference: the distinct pairs of every bucket of 2..MAX_BUCKET docs
+    buckets = defaultdict(list)
+    for d, b, h in bands:
+        buckets[b, h].append(d)
+    pairs = {(x, y) for m in buckets.values() if 2 <= len(m) <= MAX_BUCKET
+             for x in m for y in m if x < y}
+    want = Counter(d for pair in pairs for d in pair)
     assert set(got) == set(docs)
     assert {d: g[3] for d, g in got.items()} == {d: want[d] for d in docs}
     # the pair's two shared buckets count once; the dropped bucket and

@@ -10,7 +10,9 @@ from unipdf_spark.plans import (
     has_broadcast_join,
     n_broadcast_hints,
     pushed_filters,
+    python_passes,
     read_schema_columns,
+    walk,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -77,34 +79,13 @@ def test_sources_reader_pushes_docid_range(spark):
     assert any("doc_id" in f for f in pf), pf
 
 
-def _seq(s) -> list:
-    return [s.apply(i) for i in range(s.size())]
-
-
-def _subplans(node) -> list:
-    """Children of a physical node, looking through AQE wrappers and query
-    stages into the final plan, but NOT into cached relations."""
-    name = node.getClass().getSimpleName()
-    if name == "AdaptiveSparkPlanExec":
-        return [node.executedPlan()]
-    if name.endswith("QueryStageExec"):
-        return [node.plan()]
-    return _seq(node.children())
-
-
-def _walk(node):
-    yield node
-    for c in _subplans(node):
-        yield from _walk(c)
-
-
 def _udf_names(node) -> list[str]:
-    return [n.func().name() for n in _walk(node)
+    return [n.func().name() for n in walk(node)
             if n.getClass().getSimpleName() == "MapInPandasExec"]
 
 
 def _doc_scans(node) -> list:
-    return [n for n in _walk(node)
+    return [n for n in walk(node)
             if n.getClass().getSimpleName() == "FileSourceScanExec"
             and "documents.parquet"
             in n.relation().location().rootPaths().toString()]
@@ -124,7 +105,7 @@ def test_extracted_text_dedup_single_pass_plan(spark, oversized_sf):
     df = extracted_text_dedup(spark, oversized_sf)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan()
-    names = [n.getClass().getSimpleName() for n in _walk(plan)]
+    names = [n.getClass().getSimpleName() for n in walk(plan)]
     assert "InMemoryTableScanExec" not in names
     assert not [n for n in names if "Join" in n], names
     udfs = _udf_names(plan)
@@ -132,13 +113,56 @@ def test_extracted_text_dedup_single_pass_plan(spark, oversized_sf):
                                                 "_rex_worker"], udfs
     assert udfs.count("split_batches") == 1
     # one corpus scan per size branch: the clones come from the same rows
-    rex = {n.func().name(): n for n in _walk(plan)
+    rex = {n.func().name(): n for n in walk(plan)
            if n.getClass().getSimpleName() == "MapInPandasExec"}
     assert [len(_doc_scans(rex[u]))
             for u in ("_rex_sig_worker", "_rex_worker")] == [1, 1]
     assert len(_doc_scans(plan)) == 2
     # partner counts come from the buckets: no aggregate over pairs
-    aggs = [n.groupingExpressions().toString() for n in _walk(plan)
+    aggs = [n.groupingExpressions().toString() for n in walk(plan)
             if n.getClass().getSimpleName().endswith("AggregateExec")]
     assert aggs
     assert not [g for g in aggs if "doc_a" in g or "doc_b" in g], aggs
+
+
+# Every registered query that reads a persisted frame, with why the cache
+# stays. A query not listed here must read none.
+_CACHE_ALLOWED = {
+    "embedding_near_dup_pairs": "the sign-LSH signatures feed both the "
+    "block counts and the block-label join",
+    "extract_fixture_roundtrip": "the rendered corpus feeds both the "
+    "extraction and the golden side of span equality",
+    "media_decode": "the media table feeds the bilevel, grayscale and "
+    "codec legs",
+    "near_dup_clusters": "the SimHash fingerprints (as in "
+    "simhash_near_dup_pairs) and the embedding signatures",
+    "simhash_near_dup_pairs": "levels 0 and 1 each read the fingerprints, "
+    "on both sides of the block self-join",
+}
+
+
+def test_every_query_runs_each_python_pass_once(spark):
+    """Plan lint over every registered query's optimized plan: no Python
+    pass appears twice (the same Python node over the same input
+    subtree, expression IDs normalized), and only the queries in
+    _CACHE_ALLOWED read a persisted frame. A count joined back to its own
+    input, or a self-join, plans the pass that feeds it twice; gate on a
+    window instead (dedup.bucket_window)."""
+    from collections import Counter
+
+    import __spark_entry__ as em
+
+    twice, cached = set(), set()
+    for name, build in sorted(em.queries().items()):
+        # a frame an earlier query persisted would stand in for this
+        # query's own passes
+        spark.catalog.clearCache()
+        passes, reads = python_passes(build(spark, SF))
+        n = Counter(k for _label, k in passes)
+        twice |= {f"{name}: {n[k]}x {label}" for label, k in passes
+                  if n[k] > 1}
+        if reads:
+            cached.add(name)
+    spark.catalog.clearCache()
+    assert not twice, sorted(twice)
+    assert cached == set(_CACHE_ALLOWED), sorted(cached ^ set(_CACHE_ALLOWED))

@@ -1,6 +1,7 @@
 """Dump `.explain("formatted")` for the headline queries → PLANS.md, with a
 summary of the scale-relevant properties (PushedFilters / ReadSchema /
-broadcast / codegen). Run: python tools/explain_plans.py"""
+broadcast / codegen / Python passes / cache reads). Run:
+python tools/explain_plans.py"""
 
 from __future__ import annotations
 
@@ -16,16 +17,17 @@ HEADLINE = [
     "q7_volume_shipping", "q10_returned_items", "q19_discounted_revenue",
     "top_customers_per_segment", "events_sessionize", "token_counts",
     "doc_fingerprints", "dedup_exact", "minhash_lsh_pairs",
+    "corpus_cleanup", "simhash_saturated_blocks",
     "embedding_near_dup_pairs", "ann_ivf_topk",
     "ann_bruteforce_topk", "extract_spans_flat", "extracted_text_dedup",
-    "html_main_content",
+    "html_main_content", "media_feature_dedup",
 ]
 
 
 def main() -> None:
     import __spark_entry__ as em
     from unipdf_spark.pipeline import get_spark
-    from unipdf_spark.plans import explain_str
+    from unipdf_spark.plans import explain_str, python_passes
 
     spark = get_spark("plans", cores=4)
     spark.sparkContext.setLogLevel("ERROR")
@@ -36,17 +38,25 @@ def main() -> None:
         "scale-invariant). Properties to check: `PushedFilters` non-empty on",
         "filtered scans, `ReadSchema` pruned to used columns, dimension joins",
         "as `BroadcastHashJoin`, `WholeStageCodegen` spans around relational",
-        "stages, Python only inside `MapInPandas`/`ArrowEvalPython`.\n",
+        "stages, Python only inside `MapInPandas`/`ArrowEvalPython`, each",
+        "Python pass once (`python_passes` counts them in the optimized",
+        "plan, each cached plan once; `cache_reads` counts InMemoryRelation",
+        "leaves; `tests/test_plans.py` lints every registered query).\n",
     ]
     for name in HEADLINE:
+        # a frame an earlier query persisted would stand in for this
+        # query's own plan
+        spark.catalog.clearCache()
         df = qs[name](spark, SF)
         txt = explain_str(df)
+        passes, reads = python_passes(df)
         pushed = re.findall(r"PushedFilters: \[[^\]]*\]", txt)
         bcast = txt.count("BroadcastHashJoin")
         wsc = len(re.findall(r"WholeStageCodegen", txt))
         out.append(f"\n## {name}\n")
         out.append(
             f"summary: broadcast_joins={bcast}, codegen_spans={wsc}, "
+            f"python_passes={len(passes)}, cache_reads={reads}, "
             f"pushed={pushed[:3]}\n"
         )
         out.append("```\n" + txt.strip()[:4000] + "\n```\n")
@@ -87,15 +97,24 @@ def main() -> None:
   session: janino compiles the band/bucket expression family and each
   Python worker imports the engine. None of it grows with data size, so
   it amortizes at corpus scale.
-- **band_table users**: `band_table` emits the 8 band rows of a
-  signature with one `inline` generator, so the band subtree of
-  `minhash_lsh_pairs` lost the Project that unpacked the exploded struct.
-  Regenerating this file before and after that change and diffing with
-  expression ids normalized, only `extracted_text_dedup` and
-  `minhash_lsh_pairs` differ. The keyed-exchange `extracted_text_dedup`
-  builds its band rows from the same `band_structs` fold; across that
-  change only `extracted_text_dedup` differs, and `minhash_lsh_pairs` is
-  identical with expression ids normalized.
+- **One bucket shape**: every LSH and SimHash bucket gate is
+  `dedup.bucket_window`: a Window computing the key group's `count(1)`
+  and `min(doc_id)` over ONE hashpartitioning Exchange on the bucket
+  key, then a Filter on the count. Above it, the member-collecting
+  ObjectHashAggregate of `extracted_text_dedup` and `minhash_lsh_pairs`
+  adds no exchange. No count is joined back to its input, so each
+  Python pass appears once in these plans (`python_passes`):
+  `minhash_lsh_pairs` holds the MinHash pass and one Jaccard worker
+  over the candidate pairs joined to `documents.text` twice;
+  `corpus_cleanup` one MinHash pass; `simhash_saturated_blocks` one
+  SimHash pass; `media_feature_dedup` one render → media → feature
+  pipeline, whose blocks collect their members instead of
+  self-joining. Of the MinHash and SimHash queries only
+  `simhash_near_dup_pairs` (and `near_dup_clusters`) keep a cache:
+  levels 0 and 1 read the fingerprints on both sides of the block
+  self-join. Regenerating this file before and after that
+  change and diffing with expression ids normalized,
+  `extracted_text_dedup`'s plan is identical.
 
 ## Notes (r8)
 

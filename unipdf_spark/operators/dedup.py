@@ -14,7 +14,10 @@ Spark-first shapes that survive 100 TB:
 * verification joins stay on candidate pairs only (never cross join);
 * skew armor: LSH/Hamming buckets above MAX_BUCKET members are dropped
   before any pair generation (a full bucket is near-identical boilerplate;
-  capping it bounds the worst task at ~MAX_BUCKET² pairs instead of n²).
+  capping it bounds the worst task at ~MAX_BUCKET² pairs instead of n²);
+* one bucket shape — every gate is a window count over ONE exchange on
+  the bucket key (:func:`bucket_window`), never a count joined back to
+  its input, so each Python pass runs once per query.
 
 Every operator here is oracle-checked: hashes come from
 :mod:`unipdf_spark.operators.phash` (md5-derived modular arithmetic), which
@@ -225,26 +228,6 @@ def minhash_signatures_pandas(d: DataFrame) -> DataFrame:
     )
 
 
-def _shingle_sets_pandas(d: DataFrame) -> DataFrame:
-    """(doc_id, text, …) → (doc_id, sh array<string>): the distinct-3-gram
-    shingle sets (:func:`_shingle_set`, shared with :func:`with_minhash`)
-    on the same Arrow-batched Python path. Used by the candidate-verify
-    stage of :func:`minhash_lsh_pairs` — bounded by candidate count."""
-
-    def batches(pdfs):
-        import pandas as pd
-
-        prepare_worker()
-        for pdf in pdfs:
-            shs = [sorted(_shingle_set(t)) for t in pdf["text"].tolist()]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "sh": shs})
-
-    id_type = d.schema["doc_id"].dataType.simpleString()
-    return d.select("doc_id", "text").mapInPandas(
-        batches, schema=f"doc_id {id_type}, sh array<string>"
-    )
-
-
 # shared SQL fragments: tokenize → 3-gram shingles → h32 list (DuckDB's
 # slicing w[i+1:i+3] matches Spark's slice(w, i+1, 3) incl. truncation)
 _SHINGLE_CTE = r"""
@@ -280,84 +263,48 @@ FROM hs
 """
 
 
-def lsh_buckets(bt: DataFrame) -> DataFrame:
-    """The candidate buckets of a :func:`band_table`: one (band, band_hash,
-    members) row per bucket of 2..MAX_BUCKET docs.
-
-    Skew armor: bucket sizes are counted FIRST (map-side-combinable groupBy —
-    safe for any skew) and buckets outside [2, MAX_BUCKET] are dropped with a
-    semi-join BEFORE any per-bucket materialization; only the surviving
-    (≤ MAX_BUCKET-member) buckets are then collected into member arrays —
-    one bounded aggregation instead of a band-table self-join (two full
-    shuffled sides; r4 steady-state 4.9 s → 3.2 s). A degenerate
-    boilerplate bucket with millions of docs never reaches the collect (it
-    fails the count gate), so the worst aggregation buffer and the worst
-    task are both ~MAX_BUCKET-sized.
-    """
-    ok = (
-        bt.groupBy("band", "band_hash")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter((F.col("n") >= 2) & (F.col("n") <= MAX_BUCKET))
-        .select("band", "band_hash")
-    )
-    return (
-        bt.join(ok, ["band", "band_hash"], "left_semi")
-        .groupBy("band", "band_hash")
-        .agg(F.collect_list("doc_id").alias("members"))
-    )
-
-
-def lsh_candidates(bt: DataFrame) -> DataFrame:
-    """Distinct candidate pairs (doc_a < doc_b) of a :func:`band_table`:
-    docs that share a bucket of :func:`lsh_buckets`, pair-exploded (≤
-    MAX_BUCKET² rows per bucket)."""
-    return (
-        lsh_buckets(bt)
-        .select(F.explode("members").alias("doc_a"), "members")
-        .select("doc_a", F.explode("members").alias("doc_b"))
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .distinct()
-    )
+def bucket_window(rows: DataFrame, key: list[str]) -> DataFrame:
+    """``rows`` plus ``n``, its key group's row count, and ``first``, the
+    group's minimum doc_id, as window columns over ONE hash exchange on
+    ``key``: the bucket gate of every LSH and SimHash query. A count
+    joined back to its input reads that input twice, and so runs the
+    Python pass feeding it twice. A bucket of millions of docs meets in
+    one window task's spillable buffer, and an aggregate on ``key`` above
+    it adds no exchange. Gate on ``n``: a filter on the key alone would
+    be pushed below the window and its exchange."""
+    w = f"OVER (PARTITION BY {', '.join(key)})"
+    return rows.selectExpr("*", f"count(1) {w} AS n",
+                           f"min(doc_id) {w} AS first")
 
 
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH banding: docs sharing any (band, band-hash) bucket become candidate
-    pairs (:func:`lsh_candidates`); candidates are then verified with true
-    shingle Jaccard. Only bucket-mates join — no cross product at any
-    scale."""
-    # persist the band table: the plan references it twice (bucket counts,
-    # member collection); without a cache the md5-shingle signature pass
-    # would be recomputed per reference. At corpus scale this is the
-    # standard 'materialize signatures' step.
-    bt = band_table(minhash_signatures(spark, sf_dir)).persist()
-    # persist the candidate set: it is re-referenced by pair_ids (both
-    # legs), the verify join, and the shingle semi-join — without a cache
-    # each reference replays the bucket collect + pair explode from the
-    # band table. Bounded by candidate count (≤ MAX_BUCKET²/2 per bucket),
-    # so the cache is small at any scale.
-    cand = lsh_candidates(bt).persist()
-    # verify candidates with true Jaccard over shingle sets — computed ONLY
-    # for docs that appear in a candidate pair (semi-join before the shingle
-    # pass: at corpus scale candidates ≪ corpus); joins are unhinted —
-    # AQE broadcasts when the candidate side is genuinely small. Shingle
-    # sets AND the Jaccard itself run in the same Arrow-batched Python
-    # worker family as the signatures (r4 VERDICT #3): Catalyst's
-    # array_intersect/array_union over interpreted HOF shingles was the
-    # query's residual cost; Python set ops on the same re.ASCII
-    # tokenization are bit-identical to the DuckDB oracle.
-    pair_ids = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
+    """LSH banding: docs sharing any (band, band-hash) bucket of
+    2..MAX_BUCKET docs become candidate pairs, verified with true shingle
+    Jaccard. Only bucket-mates pair — no cross product at any scale.
+
+    Each Python pass runs once: :func:`bucket_window` gates the MinHash
+    bands; the surviving buckets collect their ≤ MAX_BUCKET members with
+    no further exchange and explode into distinct pairs, which join
+    ``documents.text`` for both docs. ONE Arrow-batched worker shingles
+    both texts (:func:`_shingle_set`, bit-identical to the oracle's) and
+    computes the Jaccard; Catalyst's HOF set ops over shingle arrays were
+    this query's residual cost (r4 VERDICT #3)."""
+    cand = (
+        bucket_window(band_table(minhash_signatures(spark, sf_dir)),
+                      ["band", "band_hash"])
+        .filter(f"n BETWEEN 2 AND {MAX_BUCKET}")
+        .groupBy("band", "band_hash")
+        .agg(F.expr("collect_list(doc_id) AS members"))
+        .selectExpr("explode(members) AS doc_a", "members")
+        .selectExpr("doc_a", "explode(members) AS doc_b")
+        .filter("doc_a < doc_b")
         .distinct()
     )
-    d = _shingle_sets_pandas(
-        _docs(spark, sf_dir).join(pair_ids, "doc_id", "left_semi")
-    )
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     paired = (
-        cand.join(d.withColumnRenamed("doc_id", "doc_a")
-                  .withColumnRenamed("sh", "sh_a"), "doc_a")
-        .join(d.withColumnRenamed("doc_id", "doc_b")
-              .withColumnRenamed("sh", "sh_b"), "doc_b")
+        cand.join(docs.selectExpr("doc_id AS doc_a", "text AS text_a"),
+                  "doc_a")
+        .join(docs.selectExpr("doc_id AS doc_b", "text AS text_b"), "doc_b")
     )
 
     def jac_batches(pdfs):
@@ -368,8 +315,8 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         prepare_worker()
         for pdf in pdfs:
             vals = []
-            for sa, sb in zip(pdf["sh_a"], pdf["sh_b"]):
-                s1, s2 = set(sa), set(sb)
+            for ta, tb in zip(pdf["text_a"], pdf["text_b"]):
+                s1, s2 = _shingle_set(ta), _shingle_set(tb)
                 un = len(s1 | s2)
                 # DuckDB ROUND(double, 4) semantics (half away from zero
                 # on the scaled double); Spark's round() HALF_UPs the
@@ -438,19 +385,16 @@ def lsh_dropped_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     these cluster rows directly (keep min doc_id, drop the rest) instead of
     needing the quadratic pair expansion.
 
-    Scale shape: the 8-doc sample comes from :func:`bounded_min_sample`
-    (salted two-phase aggregate) — no single task ever sorts a whole
-    mega-bucket."""
-    # persist: the band table is referenced twice (sizes + member join);
-    # without a cache the signature pass runs twice (same device as
-    # minhash_lsh_pairs)
-    band_tbl = band_table(minhash_signatures(spark, sf_dir)).persist()
-    dropped = (
-        band_tbl.groupBy("band", "band_hash")
-        .agg(F.count(F.lit(1)).alias("size"))
-        .filter(F.col("size") > MAX_BUCKET)
+    Scale shape: the bucket sizes are :func:`bucket_window` counts, so
+    the MinHash pass runs once; the 8-doc sample comes from
+    :func:`bounded_min_sample` (salted two-phase aggregate) — no single
+    task ever sorts a whole mega-bucket."""
+    members = (
+        bucket_window(band_table(minhash_signatures(spark, sf_dir)),
+                      ["band", "band_hash"])
+        .filter(f"n > {MAX_BUCKET}")
+        .withColumnRenamed("n", "size")
     )
-    members = band_tbl.join(dropped, ["band", "band_hash"])
     return (
         bounded_min_sample(members, ["band", "band_hash", "size"])
         .select("band", "band_hash", "size", "sample_doc_ids")
@@ -622,11 +566,9 @@ def _interleaved_subkey_sql(expr: str, sc: str) -> str:
     return f"({terms})"
 
 
-def _simhash_blocking(fp: DataFrame):
-    """Shared hierarchical blocking over a (doc_id, simhash) frame.
-    Returns (lvl0, lvl1, hot_sub): level-0/1 block memberships for pair
-    generation and the still-oversized level-1 members (doc_id, simhash)
-    that form level-2 swarms."""
+def _chunk_rows(fp: DataFrame) -> DataFrame:
+    """(doc_id, simhash) → one (doc_id, simhash, chunk, key) row per
+    contiguous 15-bit chunk: the level-0 block keys."""
     chunk_structs = F.array(*[
         F.struct(
             F.lit(c).alias("chunk"),
@@ -636,22 +578,18 @@ def _simhash_blocking(fp: DataFrame):
         )
         for c in range(SIM_CHUNKS)
     ])
-    ch = fp.select(
+    return fp.select(
         "doc_id", "simhash", F.explode(chunk_structs).alias("cc")
     ).select(
         "doc_id", "simhash",
         F.col("cc.chunk").alias("chunk"), F.col("cc.key").alias("key"),
     )
-    cnt0 = ch.groupBy("chunk", "key").agg(F.count(F.lit(1)).alias("n0"))
-    ch0 = ch.join(cnt0, ["chunk", "key"])
-    lvl0 = ch0.filter((F.col("n0") >= 2) & (F.col("n0") <= MAX_BUCKET)).select(
-        "doc_id", "simhash",
-        F.concat_ws(":", F.lit("0"), F.col("chunk").cast("string"),
-                    F.col("key").cast("string")).alias("block"),
-    )
-    hot = ch0.filter(F.col("n0") > MAX_BUCKET).select(
-        "doc_id", "simhash", "chunk", "key"
-    )
+
+
+def _sub_rows(hot: DataFrame) -> DataFrame:
+    """Members of oversized chunk buckets → one (doc_id, simhash, chunk,
+    key, sc, skey) row per interleaved sub-chunk: the level-1 block
+    keys."""
     sub_structs = F.array(*[
         F.struct(
             F.lit(sc).alias("sc"),
@@ -659,23 +597,35 @@ def _simhash_blocking(fp: DataFrame):
         )
         for sc in range(4)
     ])
-    sub = hot.select(
+    return hot.select(
         "doc_id", "simhash", "chunk", "key", F.explode(sub_structs).alias("ss")
     ).select(
         "doc_id", "simhash", "chunk", "key",
         F.col("ss.sc").alias("sc"), F.col("ss.skey").alias("skey"),
     )
-    cnt1 = sub.groupBy("chunk", "key", "sc", "skey").agg(
-        F.count(F.lit(1)).alias("n1")
+
+
+def _simhash_blocking(fp: DataFrame):
+    """Shared hierarchical blocking over a (doc_id, simhash) frame.
+    Returns (lvl0, lvl1, hot_sub): level-0/1 block memberships for pair
+    generation and the still-oversized level-1 members (doc_id, simhash)
+    that form level-2 swarms. Block sizes are :func:`bucket_window`
+    counts."""
+    ch0 = bucket_window(_chunk_rows(fp), ["chunk", "key"])
+    lvl0 = ch0.filter(f"n BETWEEN 2 AND {MAX_BUCKET}").select(
+        "doc_id", "simhash",
+        F.concat_ws(":", F.lit("0"), F.col("chunk").cast("string"),
+                    F.col("key").cast("string")).alias("block"),
     )
-    sub1 = sub.join(cnt1, ["chunk", "key", "sc", "skey"])
-    lvl1 = sub1.filter(F.col("n1") <= MAX_BUCKET).select(
+    sub1 = bucket_window(_sub_rows(ch0.filter(f"n > {MAX_BUCKET}")),
+                         ["chunk", "key", "sc", "skey"])
+    lvl1 = sub1.filter(f"n <= {MAX_BUCKET}").select(
         "doc_id", "simhash",
         F.concat_ws(":", F.lit("1"), F.col("chunk").cast("string"),
                     F.col("key").cast("string"), F.col("sc").cast("string"),
                     F.col("skey").cast("string")).alias("block"),
     )
-    hot_sub = sub1.filter(F.col("n1") > MAX_BUCKET).select("doc_id", "simhash")
+    hot_sub = sub1.filter(f"n > {MAX_BUCKET}").select("doc_id", "simhash")
     return lvl0, lvl1, hot_sub
 
 
@@ -727,6 +677,9 @@ def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaced round-2's silent drop of oversized buckets. Identical-
     fingerprint swarms too dense for level-1 are reported by
     :func:`simhash_swarm_clusters`, never pair-expanded."""
+    # persisted: the level-0 and level-1 branches each read the
+    # fingerprints, on both sides of the block self-join; without the
+    # cache the plan holds the SimHash pass 4 times
     return _simhash_pairs_from_fp(
         simhash_fingerprints(spark, sf_dir).persist()
     )
@@ -834,31 +787,11 @@ def simhash_saturated_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     still denser than MAX_BUCKET after level-1 refinement — i.e. exactly
     where Hamming-1..3 recall can degrade to exact-fingerprint matching.
     Empty result ⇒ the pair query's ≤3-Hamming guarantee held everywhere."""
-    fp = simhash_fingerprints(spark, sf_dir)
-    chunk_structs = F.array(*[
-        F.struct(
-            F.lit(c).alias("chunk"),
-            F.shiftright(F.col("simhash"), 15 * c)
-            .bitwiseAND(F.lit(0x7FFF)).alias("key"),
-        )
-        for c in range(SIM_CHUNKS)
-    ])
-    ch = fp.select(
-        "doc_id", "simhash", F.explode(chunk_structs).alias("cc")
-    ).select("doc_id", "simhash", F.col("cc.chunk").alias("chunk"),
-             F.col("cc.key").alias("key"))
-    cnt0 = ch.groupBy("chunk", "key").agg(F.count(F.lit(1)).alias("n0"))
-    hot = ch.join(cnt0.filter(F.col("n0") > MAX_BUCKET), ["chunk", "key"])
-    sub_structs = F.array(*[
-        F.struct(F.lit(sc).alias("sc"),
-                 _interleaved_subkey(F.col("simhash"), sc).alias("skey"))
-        for sc in range(4)
-    ])
-    sub = hot.select("chunk", "key", F.explode(sub_structs).alias("ss")).select(
-        "chunk", "key", F.col("ss.sc").alias("sc"), F.col("ss.skey").alias("skey")
-    )
+    hot = bucket_window(_chunk_rows(simhash_fingerprints(spark, sf_dir)),
+                        ["chunk", "key"]).filter(f"n > {MAX_BUCKET}")
     return (
-        sub.groupBy("chunk", "key", "sc", "skey")
+        _sub_rows(hot)
+        .groupBy("chunk", "key", "sc", "skey")
         .agg(F.count(F.lit(1)).alias("size"))
         .filter(F.col("size") > MAX_BUCKET)
     )

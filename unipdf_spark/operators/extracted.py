@@ -26,10 +26,10 @@ take the split → round-robin exchange → extract → reassemble detour,
 their parts dealt over the cores. Nothing is persisted and nothing is
 joined: one generator turns each extracted doc into its 8 LSH band
 rows and one exact row keyed by its normalized text's md5, and those rows
-take ONE hash exchange on the key (:func:`keyed_dedup`). All rows of a
+take ONE hash exchange on the key (:func:`keyed_dedup`), the bucket
+shape of every LSH query (:func:`dedup.bucket_window`). All rows of a
 bucket or exact group, however many, meet in one window task and its
-spillable buffer, as they do in the sort-merge `bt ⋉ ok` semi-join of
-:func:`dedup.lsh_buckets` and the `norm_hash` join of
+spillable buffer, as they do in the `norm_hash` join of
 :func:`dedup.dedup_normalized` at corpus scale, where neither side
 broadcasts. A boilerplate bucket of millions of docs is counted and
 dropped there. No collected list holds
@@ -55,6 +55,7 @@ from .dedup import (
     _SIG_FIELDS,
     _BANDS_SQL,
     band_structs,
+    bucket_window,
     with_minhash,
 )
 
@@ -259,27 +260,22 @@ def keyed_dedup(keyed: DataFrame) -> DataFrame:
     """KEYED_DDL rows → per doc (doc_id, canonical_doc_id, group_size,
     n_tokens, n_candidates), over ONE hash exchange on the key.
 
-    A window on the key gives every row its key group's size and minimum
-    doc_id: an exact row takes them as its doc's group_size and
-    canonical_doc_id; a band row survives only in a bucket of
-    2..MAX_BUCKET docs (the count gate of :func:`dedup.lsh_buckets`, so a
-    boilerplate bucket of millions of docs meets in one window task, in
-    its spillable buffer, and is dropped there). Surviving buckets collect
-    their members in an aggregate that the window's partitioning already
+    :func:`dedup.bucket_window` on the key gives every row its key
+    group's size and minimum doc_id: an exact row takes them as its doc's
+    group_size and canonical_doc_id; a band row survives only in a bucket
+    of 2..MAX_BUCKET docs, the count gate of
+    :func:`dedup.minhash_lsh_pairs`. Surviving buckets collect their
+    members in an aggregate that the window's partitioning already
     satisfies: no further exchange, at most MAX_BUCKET ids per list. An
     exact row is its own group (keyed by its doc_id) with itself as the
     only member. Exploding the members and folding them per doc (the one
     doc_id exchange) gives each doc its distinct bucket-mates plus itself,
     so ``n_candidates`` is that count minus one: the doc's number of
-    distinct :func:`dedup.lsh_candidates` partners, 0 in no bucket.
-    Written as SQL strings: each Column-API call is a py4j round trip
-    while the query is built."""
-    w = f"OVER (PARTITION BY {', '.join(KEY)})"
+    distinct candidate partners in :func:`dedup.minhash_lsh_pairs`, 0 in
+    no bucket. Written as SQL strings: each Column-API call is a py4j
+    round trip while the query is built."""
     return (
-        keyed.selectExpr("doc_id", *KEY, "n_tokens",
-                         f"count(1) {w} AS n", f"min(doc_id) {w} AS first")
-        # a filter on a window partition key alone would be pushed below
-        # the window, and so below the exchange; `n` keeps it above
+        bucket_window(keyed, KEY)
         .filter(f"{_EXACT} OR n BETWEEN 2 AND {MAX_BUCKET}")
         .groupBy(*KEY, F.expr(f"if({_EXACT}, doc_id, NULL) AS own"))
         .agg(*(F.expr(a) for a in (

@@ -213,9 +213,12 @@ def media_feature_dedup(media: DataFrame) -> DataFrame:
     Blocking key = (feat_dim, 8-bit feature-sign LSH); blocks larger than
     MEDIA_BLOCK_CAP refine to a 16-bit sign signature (same hierarchical
     device as embedding_near_dup_pairs — a degenerate all-identical-
-    feature corpus can't force an n² join task). The join is an equality
-    shuffle join on the block, never a cross product.
+    feature corpus can't force an n² pair task). Each block collects its
+    members once and pairs them within the block: no self-join, so the
+    render → media → feature Python pipeline runs once.
     """
+    from .dedup import bucket_window
+
     feats = extract_features(media).filter(F.col("decode_ok"))
 
     def sign_bits(n: int):
@@ -231,17 +234,13 @@ def media_feature_dedup(media: DataFrame) -> DataFrame:
     feats = feats.withColumn(
         "b8", F.concat_ws(":", F.col("feat_dim").cast("string"), sign_bits(8))
     ).withColumn("b16", sign_bits(16))
-    from pyspark.sql.window import Window
-
-    feats = feats.withColumn(
-        "n8", F.count(F.lit(1)).over(Window.partitionBy("b8"))
-    ).withColumn(
+    blocks = bucket_window(feats, ["b8"]).withColumn(
         "block",
-        F.when(F.col("n8") <= MEDIA_BLOCK_CAP, F.col("b8"))
+        F.when(F.col("n") <= MEDIA_BLOCK_CAP, F.col("b8"))
         .otherwise(F.concat_ws(":", F.col("b8"), F.col("b16"))),
-    )
-    a = feats.alias("a")
-    b = feats.alias("b")
+    ).groupBy("block").agg(
+        F.collect_list(F.struct("media_ref", "feature", "dhash"))
+        .alias("members"))
     dot = F.aggregate(
         F.zip_with(
             F.col("a.feature"), F.col("b.feature"),
@@ -251,11 +250,9 @@ def media_feature_dedup(media: DataFrame) -> DataFrame:
         lambda acc, x: acc + x,
     )
     return (
-        a.join(
-            b,
-            (F.col("a.block") == F.col("b.block"))
-            & (F.col("a.media_ref") < F.col("b.media_ref")),
-        )
+        blocks.select(F.explode("members").alias("a"), "members")
+        .select("a", F.explode("members").alias("b"))
+        .filter(F.col("a.media_ref") < F.col("b.media_ref"))
         .select(
             F.col("a.media_ref").alias("ref_a"),
             F.col("b.media_ref").alias("ref_b"),

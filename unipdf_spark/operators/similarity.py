@@ -427,9 +427,8 @@ def _embedding_blocked(e: DataFrame) -> DataFrame:
     # (count rollup + the block-label join), and without a cache each
     # reference replays the parquet scan AND the sig28 Arrow pass — at
     # corpus scale that is N extra full-corpus UDF sweeps (r4 VERDICT #1:
-    # PLANS.md showed 3 Scan→ArrowEvalPython subtrees in one query). This
-    # is the same 'materialize signatures once' step minhash_lsh_pairs
-    # uses (dedup.py band table).
+    # PLANS.md showed 3 Scan→ArrowEvalPython subtrees in one query). The
+    # cache is on the plan lint's allow-list (tests/test_plans.py).
     sigs = e.select(
         "vec_id", "embedding", sig28(F.col("embedding")).alias("sig")
     ).select(

@@ -1,8 +1,9 @@
 """Text-analysis operators over the `documents` table — the training-data
 pipeline function family (token counting, quality scoring, language ID,
-fingerprinting). All JVM-side `pyspark.sql.functions` expressions (no Python
-UDFs): at 100 TB these run inside whole-stage codegen directly over the
-parquet scan with column pruning (only `doc_id`, `text` are read)."""
+fingerprinting). JVM-side `pyspark.sql.functions` expressions: at 100 TB
+these run inside whole-stage codegen directly over the parquet scan with
+column pruning (only `doc_id`, `text` are read). The one Python pass is
+:func:`corpus_cleanup`'s MinHash signatures, for its boilerplate gate."""
 
 from __future__ import annotations
 
@@ -304,9 +305,11 @@ FROM ({DEDUP_CLUSTERS_SQL})
 def corpus_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship composite cleanup: per doc, the keep/drop verdict a
     pre-training pipeline applies — exact-dup canonicalization + length gate
-    + punctuation-density gate, with per-gate reason flags so the drop
-    decision is auditable. One scan + one dedup shuffle; every gate is a
-    JVM expression (no Python). Fully oracle-checked."""
+    + punctuation-density gate + LSH boilerplate gate, with per-gate reason
+    flags so the drop decision is auditable. The canonical doc and the
+    boilerplate keeper are :func:`dedup.bucket_window` minima, so the one
+    Python pass (the MinHash signatures) runs once. Fully
+    oracle-checked."""
     d = _docs(spark, sf_dir)
     toks = F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda x: x != "")
     n_tok = F.size(toks)
@@ -319,29 +322,25 @@ def corpus_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "punct_ratio"
         ),
     )
-    canon = feats.groupBy("text_hash").agg(
-        F.min("doc_id").alias("canonical_doc_id")
-    )
-    j = feats.join(canon, "text_hash")
     # boilerplate gate: member of an LSH band bucket too dense for pairwise
     # dedup (> MAX_BUCKET — the clusters lsh_dropped_clusters reports); one
     # representative (the bucket's min doc_id) survives, the rest drop
-    from .dedup import MAX_BUCKET, band_table, minhash_signatures_pandas
+    from .dedup import (MAX_BUCKET, band_table, bucket_window,
+                        minhash_signatures_pandas)
 
-    bands = band_table(minhash_signatures_pandas(d))
-    hot = (
-        bands.groupBy("band", "band_hash")
-        .agg(F.count(F.lit(1)).alias("n"), F.min("doc_id").alias("keeper"))
-        .filter(F.col("n") > MAX_BUCKET)
-    )
     boiler_ids = (
-        bands.join(hot, ["band", "band_hash"])
-        .filter(F.col("doc_id") != F.col("keeper"))
+        bucket_window(band_table(minhash_signatures_pandas(d)),
+                      ["band", "band_hash"])
+        .filter(f"n > {MAX_BUCKET} AND doc_id <> first")
         .select("doc_id")
         .distinct()
         .withColumn("in_boiler", F.lit(True))
     )
-    j = j.join(boiler_ids, "doc_id", "left")
+    j = (
+        bucket_window(feats, ["text_hash"])
+        .withColumnRenamed("first", "canonical_doc_id")
+        .join(boiler_ids, "doc_id", "left")
+    )
     is_dup = F.col("doc_id") != F.col("canonical_doc_id")
     too_short = F.col("n_tokens") < 5
     too_punct = F.col("punct_ratio") > 0.10

@@ -1,4 +1,5 @@
-"""Physical-plan inspection helpers."""
+"""Plan inspection helpers: formatted-plan text, and one walker over plan
+trees that counts a query's Python passes and cache reads."""
 
 from __future__ import annotations
 
@@ -46,3 +47,65 @@ def n_broadcast_hints(df: DataFrame) -> int:
     (AQE-chosen broadcasts don't show up here — only explicit hints do)."""
     analyzed = df._jdf.queryExecution().analyzed().toString()
     return analyzed.count("ResolvedHint")
+
+
+# plan nodes whose operator runs a Python worker: MapInPandas,
+# ArrowEvalPython, BatchEvalPython, FlatMapGroupsInPandas, MapInArrow, and
+# their physical Exec twins
+_PYTHON_NODE = re.compile(r"Python|Pandas|InArrow")
+
+
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def plan_children(node) -> list:
+    """Children of a plan node, logical or physical, looking through AQE
+    wrappers and query stages into the final plan, but NOT into cached
+    relations."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if name.endswith("QueryStageExec"):
+        return [node.plan()]
+    return _seq(node.children())
+
+
+def walk(node):
+    """Every node of a plan tree, depth first (:func:`plan_children`)."""
+    yield node
+    for c in plan_children(node):
+        yield from walk(c)
+
+
+def python_passes(df: DataFrame) -> tuple[list[tuple[str, int]], int]:
+    """``(passes, cache_reads)`` of ``df``'s optimized logical plan.
+
+    ``passes`` holds one ``(label, key)`` per Python node: ``label`` is
+    the node's one-line description with expression IDs dropped, and
+    ``key`` the semantic hash of the node and its whole input subtree
+    (Catalyst's canonical form, expression IDs normalized), so two
+    entries with one key are the same Python pass planned twice.
+    ``cache_reads`` counts InMemoryRelation leaves. Each distinct cached
+    plan is walked once, as it is materialized once."""
+    jvm = df.sparkSession._jvm
+    seen: set[int] = set()
+    passes: list[tuple[str, int]] = []
+    reads = 0
+    todo = [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        if name in ("InMemoryRelation", "InMemoryTableScanExec"):
+            rel = node if name == "InMemoryRelation" else node.relation()
+            reads += name == "InMemoryRelation"
+            cache = jvm.System.identityHashCode(rel.cacheBuilder())
+            if cache not in seen:
+                seen.add(cache)
+                todo.append(rel.cachedPlan())
+            continue
+        if _PYTHON_NODE.search(name):
+            label = re.sub(r"#\d+L?", "", node.simpleString(4))
+            passes.append((label, node.canonicalized().semanticHash()))
+        todo.extend(plan_children(node))
+    return passes, reads
