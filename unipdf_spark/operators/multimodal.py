@@ -19,6 +19,7 @@ import hashlib
 from pyspark.sql import DataFrame, functions as F
 
 from ..pipeline import gen_docs_pdf, map_docs
+from .dedup import bucket_window
 
 MEDIA_SCHEMA = (
     "media_ref string, doc_id string, kind string, payload binary, "
@@ -217,8 +218,6 @@ def media_feature_dedup(media: DataFrame) -> DataFrame:
     members once and pairs them within the block: no self-join, so the
     render → media → feature Python pipeline runs once.
     """
-    from .dedup import bucket_window
-
     feats = extract_features(media).filter(F.col("decode_ok"))
 
     def sign_bits(n: int):

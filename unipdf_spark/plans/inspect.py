@@ -55,27 +55,20 @@ def n_broadcast_hints(df: DataFrame) -> int:
 _PYTHON_NODE = re.compile(r"Python|Pandas|InArrow")
 
 
-def _seq(s) -> list:
-    return [s.apply(i) for i in range(s.size())]
-
-
-def plan_children(node) -> list:
-    """Children of a plan node, logical or physical, looking through AQE
-    wrappers and query stages into the final plan, but NOT into cached
-    relations."""
+def walk(node):
+    """Every node of a plan tree, logical or physical, depth first,
+    looking through AQE wrappers and query stages into the final plan,
+    but NOT into cached relations."""
+    yield node
     name = node.getClass().getSimpleName()
     if name == "AdaptiveSparkPlanExec":
-        return [node.executedPlan()]
-    if name.endswith("QueryStageExec"):
-        return [node.plan()]
-    return _seq(node.children())
-
-
-def walk(node):
-    """Every node of a plan tree, depth first (:func:`plan_children`)."""
-    yield node
-    for c in plan_children(node):
-        yield from walk(c)
+        yield from walk(node.executedPlan())
+    elif name.endswith("QueryStageExec"):
+        yield from walk(node.plan())
+    else:
+        kids = node.children()
+        for i in range(kids.size()):
+            yield from walk(kids.apply(i))
 
 
 def python_passes(df: DataFrame) -> tuple[list[tuple[str, int]], int]:
@@ -94,18 +87,16 @@ def python_passes(df: DataFrame) -> tuple[list[tuple[str, int]], int]:
     reads = 0
     todo = [df._jdf.queryExecution().optimizedPlan()]
     while todo:
-        node = todo.pop()
-        name = node.getClass().getSimpleName()
-        if name in ("InMemoryRelation", "InMemoryTableScanExec"):
-            rel = node if name == "InMemoryRelation" else node.relation()
-            reads += name == "InMemoryRelation"
-            cache = jvm.System.identityHashCode(rel.cacheBuilder())
-            if cache not in seen:
-                seen.add(cache)
-                todo.append(rel.cachedPlan())
-            continue
-        if _PYTHON_NODE.search(name):
-            label = re.sub(r"#\d+L?", "", node.simpleString(4))
-            passes.append((label, node.canonicalized().semanticHash()))
-        todo.extend(plan_children(node))
+        for node in walk(todo.pop()):
+            name = node.getClass().getSimpleName()
+            if name in ("InMemoryRelation", "InMemoryTableScanExec"):
+                rel = node if name == "InMemoryRelation" else node.relation()
+                reads += name == "InMemoryRelation"
+                cache = jvm.System.identityHashCode(rel.cacheBuilder())
+                if cache not in seen:
+                    seen.add(cache)
+                    todo.append(rel.cachedPlan())
+            elif _PYTHON_NODE.search(name):
+                label = re.sub(r"#\d+L?", "", node.simpleString(4))
+                passes.append((label, node.canonicalized().semanticHash()))
     return passes, reads
