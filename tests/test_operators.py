@@ -307,7 +307,7 @@ def test_embedding_near_dup_hot_block_bounded(spark):
     from pyspark.sql import functions as F
 
     from unipdf_spark.operators.similarity import (
-        BLOCK_CAP, _near_dup_blocked, _sig_range,
+        BLOCK_CAP, _embedding_blocked, _near_dup_blocked, _sig_range,
     )
 
     n = 10_000
@@ -323,6 +323,13 @@ def test_embedding_near_dup_hot_block_bounded(spark):
     sig = df.select(_sig_range(F.col("embedding"), 0, 12).alias("s0"))
     s0_counts = sig.groupBy("s0").count().collect()
     assert max(r["count"] for r in s0_counts) == n > BLOCK_CAP  # one hot block
+
+    # the hot block refines to 20- or 28-bit blocks, each labelled with
+    # its own size
+    sizes = _embedding_blocked(df).groupBy("block", "n").count().collect()
+    assert {r["block"][0] for r in sizes} & {"1", "2"}
+    assert len({r["block"] for r in sizes}) == len(sizes)
+    assert all(r["n"] == r["count"] for r in sizes)
 
     pairs = _near_dup_blocked(df).collect()
     assert (0, 1) in {(r["vec_a"], r["vec_b"]) for r in pairs}
@@ -374,9 +381,13 @@ def test_simhash_hot_bucket_refinement_finds_planted_pair(spark):
     """r2 VERDICT #2: at bucket densities where EVERY 15-bit chunk bucket
     exceeds MAX_BUCKET (the >=2M-doc regime, simulated with synthetic
     fingerprints), the old code silently returned 0 pairs. The hierarchical
-    refinement must still find a planted Hamming-2 pair."""
+    refinement must still find a planted Hamming-2 pair, and a planted
+    Hamming-3 pair whose only shared chunk is the hot one (a level-1
+    pair), and the whole pair set must match the DuckDB oracle's."""
+    import duckdb
     import pandas as pd
 
+    from unipdf_spark.operators import dedup
     from unipdf_spark.operators.dedup import MAX_BUCKET, _simhash_pairs_from_fp
 
     rng_mult = 6364136223846793005
@@ -387,15 +398,26 @@ def test_simhash_hot_bucket_refinement_finds_planted_pair(spark):
         high = ((i * rng_mult + 1442695040888963407) % (1 << 45)) << 15
         fps.append((high | shared_low) & ((1 << 60) - 1))
     fps[1] = fps[0] ^ (1 << 20) ^ (1 << 40)  # planted Hamming-2 pair (0, 1)
+    # planted Hamming-3 pair (2, 3): chunks 1..3 all differ, so only an
+    # interleaved sub-chunk of the hot chunk-0 bucket can pair it
+    fps[3] = fps[2] ^ (1 << 20) ^ (1 << 35) ^ (1 << 50)
+    fps_pdf = pd.DataFrame({"doc_id": range(n), "simhash": fps})
     fp = spark.createDataFrame(
-        pd.DataFrame({"doc_id": range(n), "simhash": fps}),
-        schema="doc_id long, simhash long",
+        fps_pdf, schema="doc_id long, simhash long",
     ).repartition(8)
     assert n > MAX_BUCKET
     pairs = {(r["doc_a"], r["doc_b"]): r["hamming"]
              for r in _simhash_pairs_from_fp(fp).collect()}
     assert pairs.get((0, 1)) == 2
+    assert pairs.get((2, 3)) == 3
     assert all(h <= 3 for h in pairs.values())
+
+    con = duckdb.connect()
+    con.register("fps", fps_pdf)
+    want = con.execute(dedup.SIMHASH_PAIRS_SQL.replace(
+        dedup._SIMHASH_CTE, "fp AS (SELECT doc_id, simhash FROM fps)"
+    )).fetchall()
+    assert sorted(pairs.items()) == sorted(((a, b), h) for a, b, h in want)
 
 
 def test_simhash_identical_swarm_reports_cluster_row(spark):

@@ -128,16 +128,10 @@ def test_extracted_text_dedup_single_pass_plan(spark, oversized_sf):
 # Every registered query that reads a persisted frame, with why the cache
 # stays. A query not listed here must read none.
 _CACHE_ALLOWED = {
-    "embedding_near_dup_pairs": "the sign-LSH signatures feed both the "
-    "block counts and the block-label join",
     "extract_fixture_roundtrip": "the rendered corpus feeds both the "
     "extraction and the golden side of span equality",
     "media_decode": "the media table feeds the bilevel, grayscale and "
     "codec legs",
-    "near_dup_clusters": "the SimHash fingerprints (as in "
-    "simhash_near_dup_pairs) and the embedding signatures",
-    "simhash_near_dup_pairs": "levels 0 and 1 each read the fingerprints, "
-    "on both sides of the block self-join",
 }
 
 

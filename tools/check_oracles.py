@@ -71,8 +71,8 @@ def main() -> None:
             n_fail += 1
             continue
         finally:
-            # unpersist discipline (r5 VERDICT #9): queries persist shared
-            # frames (minhash bands, embedding sigs); release them at query
+            # unpersist discipline (r5 VERDICT #9): the fixture-corpus
+            # queries persist their rendered corpus; release it at query
             # end so long-lived sessions return memory and the next query
             # never warns 'Asked to cache already cached data'
             spark.catalog.clearCache()

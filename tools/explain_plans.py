@@ -17,8 +17,8 @@ HEADLINE = [
     "q7_volume_shipping", "q10_returned_items", "q19_discounted_revenue",
     "top_customers_per_segment", "events_sessionize", "token_counts",
     "doc_fingerprints", "dedup_exact", "minhash_lsh_pairs",
-    "corpus_cleanup", "simhash_saturated_blocks",
-    "embedding_near_dup_pairs", "ann_ivf_topk",
+    "corpus_cleanup", "simhash_near_dup_pairs", "simhash_saturated_blocks",
+    "embedding_near_dup_pairs", "near_dup_clusters", "ann_ivf_topk",
     "ann_bruteforce_topk", "extract_spans_flat", "extracted_text_dedup",
     "html_main_content", "media_feature_dedup",
 ]
@@ -97,24 +97,28 @@ def main() -> None:
   session: janino compiles the band/bucket expression family and each
   Python worker imports the engine. None of it grows with data size, so
   it amortizes at corpus scale.
-- **One bucket shape**: every LSH and SimHash bucket gate is
-  `dedup.bucket_window`: a Window computing the key group's `count(1)`
-  and `min(doc_id)` over ONE hashpartitioning Exchange on the bucket
-  key, then a Filter on the count. Above it, the member-collecting
-  ObjectHashAggregate of `extracted_text_dedup` and `minhash_lsh_pairs`
-  adds no exchange. No count is joined back to its input, so each
-  Python pass appears once in these plans (`python_passes`):
-  `minhash_lsh_pairs` holds the MinHash pass and one Jaccard worker
-  over the candidate pairs joined to `documents.text` twice;
-  `corpus_cleanup` one MinHash pass; `simhash_saturated_blocks` one
-  SimHash pass; `media_feature_dedup` one render → media → feature
-  pipeline, whose blocks collect their members instead of
-  self-joining. Of the MinHash and SimHash queries only
-  `simhash_near_dup_pairs` (and `near_dup_clusters`) keep a cache:
-  levels 0 and 1 read the fingerprints on both sides of the block
-  self-join. Regenerating this file before and after that
-  change and diffing with expression ids normalized,
-  `extracted_text_dedup`'s plan is identical.
+- **One bucket shape**: every exact-dedup, LSH and SimHash bucket gate
+  is `dedup.bucket_window`: a Window computing the key group's
+  `count(1)` and `min(doc_id)` over ONE hashpartitioning Exchange on the
+  bucket key, then a Filter on the count. Above it, the
+  member-collecting ObjectHashAggregate of `extracted_text_dedup`,
+  `minhash_lsh_pairs` and `simhash_near_dup_pairs` adds no exchange. No
+  count is joined back to its input, so each Python pass appears once
+  in these plans (`python_passes`): `minhash_lsh_pairs` holds the
+  MinHash pass and one Jaccard worker over the candidate pairs joined to
+  `documents.text` twice; `corpus_cleanup` one MinHash pass;
+  `simhash_near_dup_pairs` and `simhash_saturated_blocks` one SimHash
+  pass under one window chain (chunk rows → Window on (chunk, key) →
+  one `Generate inline` of the level-0 row or the 4 interleaved
+  sub-chunk rows → Window on (chunk, key, sc, skey)); `dedup_exact`
+  one Window on the text hash; `media_feature_dedup` one render →
+  media → feature pipeline, whose blocks collect their members instead
+  of self-joining. `embedding_near_dup_pairs` runs its sig28
+  ArrowEvalPython once, under three Windows (12-, 20- and 28-bit block
+  counts) that share one Exchange on s0. **No operator persists**:
+  `cache_reads` is 0 for every query above. Regenerating this file
+  before and after each of these changes and diffing with expression
+  ids normalized, `extracted_text_dedup`'s plan is identical.
 
 ## Notes (r8)
 

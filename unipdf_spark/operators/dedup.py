@@ -3,8 +3,8 @@ MinHash+LSH, SimHash, n-gram Jaccard.
 
 Spark-first shapes that survive 100 TB:
 
-* exact/fingerprint dedup — hash + groupBy (one shuffle on the hash key,
-  map-side partial agg; canonical pick is min(doc_id), associative);
+* exact dedup — hash + one window on the hash key (canonical pick is
+  min(doc_id)), the bucket shape below;
 * MinHash — explode(shingles) → per-doc min of k hash families (single
   shuffle on doc_id, partial min map-side); LSH banding turns O(n²) pair
   search into a groupBy on band keys — only co-bucketed docs pair up;
@@ -46,24 +46,15 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup on raw text hash; canonical = min(doc_id) per group."""
+    """Exact dedup on raw text hash; canonical = min(doc_id) per group,
+    from one :func:`bucket_window` on the hash."""
     d = phash.spread(
         spark.read.parquet(f"{sf_dir}/documents.parquet"), spark, heavy=False
     )
     h = d.select("doc_id", F.md5("text").alias("text_hash"))
-    groups = h.groupBy("text_hash").agg(
-        F.min("doc_id").alias("canonical_doc_id"),
-        F.count("*").alias("group_size"),
-    )
-    return (
-        h.join(groups, "text_hash")
-        .select(
-            "doc_id",
-            "canonical_doc_id",
-            "group_size",
-            (F.col("doc_id") == F.col("canonical_doc_id")).alias("is_canonical"),
-        )
-    )
+    return bucket_window(h, ["text_hash"]).selectExpr(
+        "doc_id", "first AS canonical_doc_id", "n AS group_size",
+        "doc_id = first AS is_canonical")
 
 
 DEDUP_EXACT_SQL = """
@@ -88,13 +79,8 @@ def dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     h = d.select("doc_id", F.md5(norm).alias("norm_hash"))
-    groups = h.groupBy("norm_hash").agg(
-        F.min("doc_id").alias("canonical_doc_id"), F.count("*").alias("group_size")
-    )
-    return (
-        h.join(groups, "norm_hash")
-        .select("doc_id", "canonical_doc_id", "group_size")
-    )
+    return bucket_window(h, ["norm_hash"]).selectExpr(
+        "doc_id", "first AS canonical_doc_id", "n AS group_size")
 
 
 DEDUP_NORM_SQL = """
@@ -266,7 +252,7 @@ FROM hs
 def bucket_window(rows: DataFrame, key: list[str]) -> DataFrame:
     """``rows`` plus ``n``, its key group's row count, and ``first``, the
     group's minimum doc_id, as window columns over ONE hash exchange on
-    ``key``: the bucket gate of every LSH and SimHash query. A count
+    ``key``: the bucket gate of every dedup, LSH and SimHash query. A count
     joined back to its input reads that input twice, and so runs the
     Python pass feeding it twice. A bucket of millions of docs meets in
     one window task's spillable buffer, and an aggregate on ``key`` above
@@ -547,87 +533,47 @@ SELECT doc_id, simhash FROM fp
 """
 
 
-def _interleaved_subkey(simhash_col, sc: int):
-    """15-bit interleaved sub-chunk: bits {i : i % 4 == sc} of the 60-bit
-    fingerprint, packed. Orthogonal to the contiguous 15-bit chunks, so a
-    (chunk, sub-chunk) pair pins ~26 distinct bits."""
-    terms = [
-        F.shiftleft(
-            F.shiftright(simhash_col, 4 * j + sc).bitwiseAND(F.lit(1)), j
-        )
-        for j in range(15)
-    ]
-    return sum(terms[1:], terms[0])
-
-
 def _interleaved_subkey_sql(expr: str, sc: str) -> str:
+    """15-bit interleaved sub-chunk in DuckDB SQL: bits {i : i % 4 == sc}
+    of the 60-bit fingerprint, packed. Orthogonal to the contiguous 15-bit
+    chunks, so a (chunk, sub-chunk) pair pins ~26 distinct bits. Spark's
+    copy is in ``_SUBS_EXPR``."""
     terms = " + ".join(
         f"((({expr} >> (4 * {j} + {sc})) & 1) << {j})" for j in range(15)
     )
     return f"({terms})"
 
 
-def _chunk_rows(fp: DataFrame) -> DataFrame:
-    """(doc_id, simhash) → one (doc_id, simhash, chunk, key) row per
-    contiguous 15-bit chunk: the level-0 block keys."""
-    chunk_structs = F.array(*[
-        F.struct(
-            F.lit(c).alias("chunk"),
-            F.shiftright(F.col("simhash"), 15 * c)
-            .bitwiseAND(F.lit(0x7FFF))
-            .alias("key"),
-        )
-        for c in range(SIM_CHUNKS)
-    ])
-    return fp.select(
-        "doc_id", "simhash", F.explode(chunk_structs).alias("cc")
-    ).select(
-        "doc_id", "simhash",
-        F.col("cc.chunk").alias("chunk"), F.col("cc.key").alias("key"),
-    )
+# the 4 contiguous 15-bit chunk rows of a fingerprint row, as ONE
+# generator expression
+_CHUNKS_EXPR = "inline(array({}))".format(", ".join(
+    f"named_struct('chunk', {c}, 'key', shiftright(simhash, {15 * c}) & 32767)"
+    for c in range(SIM_CHUNKS)))
+
+# a hot chunk bucket's member → its 4 interleaved sub-chunk rows; any
+# other member → one level-0 row (sc = -1); Spark's parser has no ``>>``
+_SUBS_EXPR = (
+    f"inline(CASE WHEN n > {MAX_BUCKET} THEN array({{}}) "
+    "ELSE array(named_struct('sc', -1, 'skey', CAST(-1 AS BIGINT))) END)"
+).format(", ".join(
+    f"named_struct('sc', {sc}, 'skey', "
+    + " + ".join(f"shiftleft(shiftright(simhash, {4 * j + sc}) & 1, {j})"
+                 for j in range(15)) + ")"
+    for sc in range(4)))
 
 
-def _sub_rows(hot: DataFrame) -> DataFrame:
-    """Members of oversized chunk buckets → one (doc_id, simhash, chunk,
-    key, sc, skey) row per interleaved sub-chunk: the level-1 block
-    keys."""
-    sub_structs = F.array(*[
-        F.struct(
-            F.lit(sc).alias("sc"),
-            _interleaved_subkey(F.col("simhash"), sc).alias("skey"),
-        )
-        for sc in range(4)
-    ])
-    return hot.select(
-        "doc_id", "simhash", "chunk", "key", F.explode(sub_structs).alias("ss")
-    ).select(
-        "doc_id", "simhash", "chunk", "key",
-        F.col("ss.sc").alias("sc"), F.col("ss.skey").alias("skey"),
-    )
-
-
-def _simhash_blocking(fp: DataFrame):
-    """Shared hierarchical blocking over a (doc_id, simhash) frame.
-    Returns (lvl0, lvl1, hot_sub): level-0/1 block memberships for pair
-    generation and the still-oversized level-1 members (doc_id, simhash)
-    that form level-2 swarms. Block sizes are :func:`bucket_window`
-    counts."""
-    ch0 = bucket_window(_chunk_rows(fp), ["chunk", "key"])
-    lvl0 = ch0.filter(f"n BETWEEN 2 AND {MAX_BUCKET}").select(
-        "doc_id", "simhash",
-        F.concat_ws(":", F.lit("0"), F.col("chunk").cast("string"),
-                    F.col("key").cast("string")).alias("block"),
-    )
-    sub1 = bucket_window(_sub_rows(ch0.filter(f"n > {MAX_BUCKET}")),
-                         ["chunk", "key", "sc", "skey"])
-    lvl1 = sub1.filter(f"n <= {MAX_BUCKET}").select(
-        "doc_id", "simhash",
-        F.concat_ws(":", F.lit("1"), F.col("chunk").cast("string"),
-                    F.col("key").cast("string"), F.col("sc").cast("string"),
-                    F.col("skey").cast("string")).alias("block"),
-    )
-    hot_sub = sub1.filter(f"n > {MAX_BUCKET}").select("doc_id", "simhash")
-    return lvl0, lvl1, hot_sub
+def _simhash_blocking(fp: DataFrame) -> DataFrame:
+    """Hierarchical blocking over a (doc_id, simhash) frame as ONE window
+    chain, the oracle's ``k0 → subs → k1``: (doc_id, simhash, chunk, key,
+    sc, skey, n), one row per block membership. Level-0 blocks are chunk
+    buckets of 2..MAX_BUCKET docs (``sc = -1``); members of a larger
+    chunk bucket are re-blocked by each interleaved 15-bit sub-chunk
+    (``sc`` 0..3). ``n`` is the block's size; every Python pass feeding
+    the chain runs once."""
+    k0 = bucket_window(fp.selectExpr("doc_id", "simhash", _CHUNKS_EXPR),
+                       ["chunk", "key"]).filter("n >= 2")
+    subs = k0.selectExpr("doc_id", "simhash", "chunk", "key", _SUBS_EXPR)
+    return bucket_window(subs, ["chunk", "key", "sc", "skey"]).drop("first")
 
 
 def _simhash_pairs_from_fp(fp: DataFrame) -> DataFrame:
@@ -654,21 +600,18 @@ def _simhash_pairs_from_fp(fp: DataFrame) -> DataFrame:
       reports exactly those blocks, and the swarm clusters carry the
       Hamming-0 mass.
     """
-    lvl0, lvl1, _hot_sub = _simhash_blocking(fp)
-    bt = lvl0.unionByName(lvl1)
     return (
-        bt.alias("a")
-        .join(bt.alias("b"), ["block"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
+        _simhash_blocking(fp)
+        .filter(f"n BETWEEN 2 AND {MAX_BUCKET}")
+        .groupBy("chunk", "key", "sc", "skey")
+        .agg(F.expr("collect_list(struct(doc_id, simhash)) AS members"))
+        .selectExpr("explode(members) AS a", "members")
+        .selectExpr("a", "explode(members) AS b")
+        .filter("a.doc_id < b.doc_id")
+        .selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b",
+                    "bit_count(a.simhash ^ b.simhash) AS hamming")
+        .filter(f"hamming <= {MAX_HAMMING}")
         .distinct()
-        .filter(F.col("hamming") <= MAX_HAMMING)
     )
 
 
@@ -678,12 +621,7 @@ def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaced round-2's silent drop of oversized buckets. Identical-
     fingerprint swarms too dense for level-1 are reported by
     :func:`simhash_swarm_clusters`, never pair-expanded."""
-    # persisted: the level-0 and level-1 branches each read the
-    # fingerprints, on both sides of the block self-join; without the
-    # cache the plan holds the SimHash pass 4 times
-    return _simhash_pairs_from_fp(
-        simhash_fingerprints(spark, sf_dir).persist()
-    )
+    return _simhash_pairs_from_fp(simhash_fingerprints(spark, sf_dir))
 
 
 def _simhash_swarms_from_fp(fp: DataFrame) -> DataFrame:
@@ -692,13 +630,14 @@ def _simhash_swarms_from_fp(fp: DataFrame) -> DataFrame:
     fingerprint group of ≥ 2 docs is one row (simhash, size,
     sample_doc_ids) — O(#distinct fingerprints) output instead of
     O(m²/2) Hamming-0 pairs for an m-doc boilerplate swarm."""
-    swarm = _simhash_blocking(fp)[2].distinct()
-    sizes = (
-        swarm.groupBy("simhash")
-        .agg(F.count(F.lit(1)).alias("size"))
-        .filter(F.col("size") >= 2)
+    members = (
+        bucket_window(
+            _simhash_blocking(fp).filter(f"n > {MAX_BUCKET}")
+            .select("doc_id", "simhash").distinct(),
+            ["simhash"])
+        .filter("n >= 2")
+        .withColumnRenamed("n", "size")
     )
-    members = swarm.join(sizes, "simhash")
     return (
         bounded_min_sample(members, ["simhash", "size"])
         .select("simhash", "size", "sample_doc_ids")
@@ -712,9 +651,7 @@ def simhash_swarm_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     simhash_near_dup_pairs (levels 0/1) and simhash_saturated_blocks
     (recall holes), nothing the blocking hierarchy touches is dropped
     without being reported."""
-    return _simhash_swarms_from_fp(
-        simhash_fingerprints(spark, sf_dir).persist()
-    )
+    return _simhash_swarms_from_fp(simhash_fingerprints(spark, sf_dir))
 
 
 # the same blocking, expressed with window counts (hierarchy ⇒ consistent)
@@ -788,13 +725,11 @@ def simhash_saturated_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     still denser than MAX_BUCKET after level-1 refinement — i.e. exactly
     where Hamming-1..3 recall can degrade to exact-fingerprint matching.
     Empty result ⇒ the pair query's ≤3-Hamming guarantee held everywhere."""
-    hot = bucket_window(_chunk_rows(simhash_fingerprints(spark, sf_dir)),
-                        ["chunk", "key"]).filter(f"n > {MAX_BUCKET}")
     return (
-        _sub_rows(hot)
-        .groupBy("chunk", "key", "sc", "skey")
-        .agg(F.count(F.lit(1)).alias("size"))
-        .filter(F.col("size") > MAX_BUCKET)
+        _simhash_blocking(simhash_fingerprints(spark, sf_dir))
+        .filter(f"n > {MAX_BUCKET}")
+        .selectExpr("chunk", "key", "sc", "skey", "n AS size")
+        .distinct()
     )
 
 

@@ -6,7 +6,8 @@
 * LSH-bucketed variant (random-hyperplane signs via deterministic per-dim
   hash weights) — the scale path: at 10^9 vectors only same-bucket
   candidates are scored;
-* embedding near-duplicate pairs (cosine ≥ τ on a label-blocked join).
+* embedding near-duplicate pairs (cosine ≥ τ within hierarchical
+  sign-LSH blocks).
 
 Cosine is computed in double with identical element order on both engines so
 ROUND(·, 6) hashes identically against the DuckDB oracle.
@@ -403,11 +404,12 @@ ORDER BY b.query_id
 
 
 def _embedding_blocked(e: DataFrame) -> DataFrame:
-    """Shared hierarchical sign-LSH blocking over a (vec_id, embedding)
-    frame: (vec_id, embedding, s0, s1, s2, block) where block level 3
-    marks >cap sign-identical swarms (unsplittable by refinement)."""
+    """Hierarchical sign-LSH blocking over a (vec_id, embedding) frame as
+    ONE window chain, the oracle's ``k``: (vec_id, embedding, s0, s1, s2,
+    block, n), where ``n`` is the block's size. A 28-bit block with
+    ``n > BLOCK_CAP`` is a level-3 sign-identical swarm (unsplittable by
+    refinement)."""
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.window import Window
 
     @pandas_udf("long")
     def sig28(emb):
@@ -423,78 +425,48 @@ def _embedding_blocked(e: DataFrame) -> DataFrame:
     # scale; numpy computes the same dot products in microseconds. Sign
     # agreement with the oracle's LIST_DOT_PRODUCT holds except for dots
     # within ~1e-15 of zero (pairwise vs sequential summation).
-    # persist the signature frame: the blocking plan references it twice
-    # (count rollup + the block-label join), and without a cache each
-    # reference replays the parquet scan AND the sig28 Arrow pass — at
-    # corpus scale that is N extra full-corpus UDF sweeps (r4 VERDICT #1:
-    # PLANS.md showed 3 Scan→ArrowEvalPython subtrees in one query). The
-    # cache is on the plan lint's allow-list (tests/test_plans.py).
     sigs = e.select(
         "vec_id", "embedding", sig28(F.col("embedding")).alias("sig")
-    ).select(
-        "vec_id", "embedding",
-        (F.col("sig") % 4096).alias("s0"),
-        (F.shiftright("sig", 12) % 256).alias("s1"),
-        (F.shiftright("sig", 20) % 256).alias("s2"),
-    ).persist()
-    # Hierarchical block sizing: ONE aggregation at the finest (28-bit)
-    # granularity (map-side partial), rolled up to 20- and 12-bit counts
-    # with windows over the already tiny counts table (≤ #distinct 28-bit
-    # sigs rows, never the data). Level 3 marks sign-identical swarms that
-    # even 28 hyperplanes cannot split AND that exceed the cap: those are
-    # excluded from pair generation (an m-identical-vector swarm would
-    # emit m(m−1)/2 cosine-1.0 rows) and reported as cluster rows by
+    ).selectExpr(
+        "vec_id", "embedding", "sig % 4096 AS s0",
+        "shiftright(sig, 12) % 256 AS s1", "shiftright(sig, 20) % 256 AS s2")
+    # Block sizes at 12, 20 and 28 bits are window counts, which all sit on
+    # ONE hash exchange on s0 (each finer key contains s0), so the sig28
+    # pass runs once and no count is joined back. The rows themselves,
+    # embeddings included, go through that exchange: a hot s0 block meets
+    # in one window task's spillable buffer, as in dedup.bucket_window.
+    # Level 3 (n > BLOCK_CAP) marks sign-identical swarms that even 28
+    # hyperplanes cannot split AND that exceed the cap: those are excluded
+    # from pair generation (an m-identical-vector swarm would emit
+    # m(m−1)/2 cosine-1.0 rows) and reported as cluster rows by
     # embedding_swarm_clusters instead (r3 VERDICT #9).
-    cnt = sigs.groupBy("s0", "s1", "s2").agg(F.count(F.lit(1)).alias("c28"))
-    cnt = cnt.withColumn(
-        "c20", F.sum("c28").over(Window.partitionBy("s0", "s1")))
-    cnt = cnt.withColumn("c12", F.sum("c28").over(Window.partitionBy("s0")))
-    j = sigs.join(cnt, ["s0", "s1", "s2"])  # equality join, AQE-planned
-    block = (
-        F.when(F.col("c12") <= BLOCK_CAP,
-               F.concat_ws(":", F.lit("0"), F.col("s0").cast("string")))
-        .when(F.col("c20") <= BLOCK_CAP,
-              F.concat_ws(":", F.lit("1"), F.col("s0").cast("string"),
-                          F.col("s1").cast("string")))
-        .when(F.col("c28") <= BLOCK_CAP,
-              F.concat_ws(":", F.lit("2"), F.col("s0").cast("string"),
-                          F.col("s1").cast("string"),
-                          F.col("s2").cast("string")))
-        .otherwise(F.concat_ws(":", F.lit("3"), F.col("s0").cast("string"),
-                               F.col("s1").cast("string"),
-                               F.col("s2").cast("string")))
-    )
-    # The blocked frame itself is NOT persisted: every consumer (pair
-    # path's count gate + member side, swarm filter) re-derives it as a
-    # join of the ONE cached sigs frame with the tiny counts table — a
-    # broadcast-sized build side — so the whole query family plans a
-    # single InMemoryRelation, one parquet scan, one sig28 Arrow pass.
-    # Spark's canonicalized-plan cache matching makes the same cache
-    # entry serve embedding_near_dup_pairs and embedding_swarm_clusters
-    # when both run in one session.
-    return j.select("vec_id", "embedding", "s0", "s1", "s2",
-                    block.alias("block"))
+    s0, s1, s2 = (f"CAST({c} AS STRING)" for c in ("s0", "s1", "s2"))
+    return sigs.selectExpr(
+        "*", "count(1) OVER (PARTITION BY s0) AS c12",
+        "count(1) OVER (PARTITION BY s0, s1) AS c20",
+        "count(1) OVER (PARTITION BY s0, s1, s2) AS c28",
+    ).selectExpr(
+        "vec_id", "embedding", "s0", "s1", "s2",
+        f"CASE WHEN c12 <= {BLOCK_CAP} THEN concat_ws(':', '0', {s0}) "
+        f"WHEN c20 <= {BLOCK_CAP} THEN concat_ws(':', '1', {s0}, {s1}) "
+        f"ELSE concat_ws(':', '2', {s0}, {s1}, {s2}) END AS block",
+        f"CASE WHEN c12 <= {BLOCK_CAP} THEN c12 "
+        f"WHEN c20 <= {BLOCK_CAP} THEN c20 ELSE c28 END AS n")
 
 
 def _embedding_swarms_from(e: DataFrame) -> DataFrame:
     """Cluster rows for level-3 sign-identical swarms: (sig, size,
     sample_vec_ids) — the lsh_dropped_clusters representation, O(#swarms)
-    output instead of O(m²/2) cosine-1.0 pairs."""
+    output instead of O(m²/2) cosine-1.0 pairs. A level-3 block is a
+    whole 28-bit block, so its size is the block's ``n``."""
     from .dedup import bounded_min_sample
 
-    swarm = _embedding_blocked(e).filter(
-        F.col("block").startswith("3:")
-    ).select(
-        "vec_id",
-        (F.col("s0") + F.shiftleft("s1", 12)
-         + F.shiftleft("s2", 20)).cast("long").alias("sig"),
-    )
-    sizes = swarm.groupBy("sig").agg(F.count(F.lit(1)).alias("size"))
-    members = swarm.join(sizes, "sig")
+    members = _embedding_blocked(e).filter(f"n > {BLOCK_CAP}").selectExpr(
+        "vec_id", "s0 + shiftleft(s1, 12) + shiftleft(s2, 20) AS sig",
+        "n AS size")
     return (
         bounded_min_sample(members, ["sig", "size"], col="vec_id")
-        .select("sig", "size",
-                F.col("sample_doc_ids").alias("sample_vec_ids"))
+        .selectExpr("sig", "size", "sample_doc_ids AS sample_vec_ids")
     )
 
 
@@ -509,8 +481,12 @@ def _near_dup_blocked(e: DataFrame) -> DataFrame:
     split out so the hot-block skew test can feed a synthetic corpus.
     Level-3 swarm blocks are excluded from pair generation (see
     _embedding_blocked / embedding_swarm_clusters)."""
+    # Singleton blocks can't pair — drop them BEFORE the pandas stage so the
+    # per-group Arrow overhead is paid only for blocks that can produce
+    # output (most of a healthy corpus is singletons); level-3 blocks are
+    # the ones larger than BLOCK_CAP.
     blocked = _embedding_blocked(e).filter(
-        ~F.col("block").startswith("3:")
+        f"n BETWEEN 2 AND {BLOCK_CAP}"
     ).select("vec_id", "embedding", "block")
 
     def find_pairs(pdf):
@@ -549,25 +525,13 @@ def _near_dup_blocked(e: DataFrame) -> DataFrame:
             }
         )
 
-    # Singleton blocks can't pair — drop them BEFORE the pandas stage so the
-    # per-group Arrow overhead is paid only for blocks that can produce
-    # output (most of a healthy corpus is singletons). Then one Arrow-batched
-    # numpy matmul per surviving block — ~64× fewer flops through the
-    # interpreter than per-pair higher-order-function dots.
-    multi = (
-        blocked.groupBy("block")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 2)
-        .select("block")
-    )
-    # no orderBy on the pair output: a global sort adds a range-partition
-    # SAMPLING pass that recomputes the whole un-cached pair stage twice
-    # per run; the correctness compare is order-insensitive
-    return (
-        blocked.join(multi, "block", "left_semi")
-        .groupBy("block")
-        .applyInPandas(find_pairs, "vec_a long, vec_b long, cosine double")
-    )
+    # One Arrow-batched numpy matmul per block — ~64× fewer flops through
+    # the interpreter than per-pair higher-order-function dots. No orderBy
+    # on the pair output: a global sort adds a range-partition SAMPLING
+    # pass that recomputes the whole pair stage twice per run; the
+    # correctness compare is order-insensitive.
+    return blocked.groupBy("block").applyInPandas(
+        find_pairs, "vec_a long, vec_b long, cosine double")
 
 
 def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -578,11 +542,10 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     REFINE to 20 then 28 bits ONLY when the coarser block exceeds BLOCK_CAP
     rows — block count adapts to corpus size instead of being pinned at
     4,096, and the per-block cosine matmul is row-chunked so task memory is
-    O(block × chunk), not O(block²). Truly sign-identical clusters (exact
-    dup swarms) can't be split by more hyperplanes; they hit the chunked
-    path and their quadratic OUTPUT is the honest answer — nothing is
-    silently dropped. The refinement rule is two window counts, so the
-    DuckDB oracle expresses the identical blocking."""
+    O(block × chunk), not O(block²). Sign-identical swarms larger than
+    BLOCK_CAP can't be split by more hyperplanes; they are cluster rows
+    of near_dup_clusters, never pairs. The refinement rule is three
+    window counts, the DuckDB oracle's own blocking."""
     return _near_dup_blocked(_emb(spark, sf_dir))
 
 
