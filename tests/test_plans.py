@@ -4,6 +4,8 @@ dimension joins."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from unipdf_spark.plans import (
@@ -135,28 +137,52 @@ _CACHE_ALLOWED = {
 }
 
 
+# Every registered query whose plan case-maps (Lower, Upper, InitCap), with
+# what it lowers: raw text, where Unicode case mapping is the semantics.
+# Spark's lower() runs an ICU initializer once per JVM (~1.6 s of one core,
+# ~2.6 GB of garbage); text a regexp_replace has already cut down to ASCII
+# folds with dedup.alnum_lower_sql instead.
+_CASE_MAPPING_ALLOWED = {
+    "corpus_cleanup": "counts the tokens of lower(raw text)",
+    "lang_id": "matches stopwords in lower(raw text)",
+    "ngram_jaccard_pairs": "compares the token sets of lower(raw text)",
+    "quality_scores": "stopword ratio, mean token length of lower(raw text)",
+    "top_bigrams": "counts the bigram strings of lower(raw text)",
+}
+_CASE_MAPPING = re.compile(r'"class":"org\.apache\.spark\.sql\.catalyst'
+                           r'\.expressions\.(?:Lower|Upper|InitCap)"')
+
+
 def test_every_query_runs_each_python_pass_once(spark):
     """Plan lint over every registered query's optimized plan: no Python
     pass appears twice (the same Python node over the same input
-    subtree, expression IDs normalized), and only the queries in
-    _CACHE_ALLOWED read a persisted frame. A count joined back to its own
+    subtree, expression IDs normalized), only the queries in
+    _CACHE_ALLOWED read a persisted frame, and only those in
+    _CASE_MAPPING_ALLOWED case-map. A count joined back to its own
     input, or a self-join, plans the pass that feeds it twice; gate on a
-    window instead (dedup.bucket_window)."""
+    window instead (dedup.bucket_window). The case-mapping check reads
+    the plan's JSON: toString() truncates long field lists."""
     from collections import Counter
 
     import __spark_entry__ as em
 
-    twice, cached = set(), set()
+    twice, cached, cased = set(), set(), set()
     for name, build in sorted(em.queries().items()):
         # a frame an earlier query persisted would stand in for this
         # query's own passes
         spark.catalog.clearCache()
-        passes, reads = python_passes(build(spark, SF))
+        df = build(spark, SF)
+        passes, reads = python_passes(df)
         n = Counter(k for _label, k in passes)
         twice |= {f"{name}: {n[k]}x {label}" for label, k in passes
                   if n[k] > 1}
         if reads:
             cached.add(name)
+        if _CASE_MAPPING.search(
+                df._jdf.queryExecution().optimizedPlan().toJSON()):
+            cased.add(name)
     spark.catalog.clearCache()
     assert not twice, sorted(twice)
     assert cached == set(_CACHE_ALLOWED), sorted(cached ^ set(_CACHE_ALLOWED))
+    assert cased == set(_CASE_MAPPING_ALLOWED), sorted(
+        cased ^ set(_CASE_MAPPING_ALLOWED))

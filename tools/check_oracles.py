@@ -60,7 +60,7 @@ def main() -> None:
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    n_pass = n_fail = n_rowsonly = 0
+    n_pass = n_vacuous = n_fail = n_rowsonly = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -93,8 +93,11 @@ def main() -> None:
         sh = value_hash(normalize(sdf))
         oh = value_hash(normalize(odf))
         if ok_rows and ok_cols and sh == oh:
-            print(f"PASS  {name}: {len(sdf)} rows")
+            # two empty sets agree whatever the query does
+            vacuous = " (vacuous)" if sdf.empty else ""
+            print(f"PASS  {name}: {len(sdf)} rows{vacuous}")
             n_pass += 1
+            n_vacuous += bool(vacuous)
         else:
             print(
                 f"FAIL  {name}: rows {len(sdf)}/{len(odf)} cols_ok={ok_cols} "
@@ -111,7 +114,8 @@ def main() -> None:
                 for r in sorted(o_rows - s_rows)[:3]:
                     print("      duck-only: ", r[:220])
             n_fail += 1
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_rowsonly} rows-only")
+    print(f"\n{n_pass} pass ({n_vacuous} vacuous), {n_fail} fail, "
+          f"{n_rowsonly} rows-only")
     spark.stop()
 
 

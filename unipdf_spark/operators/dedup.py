@@ -67,18 +67,23 @@ FROM h JOIN g USING (text_hash)
 """
 
 
+def alnum_lower_sql(keep: str) -> str:
+    """``text``, chars outside [A-Za-z0-9<keep>] spaced, ASCII-lowercased:
+    equal to lower() there, without its once-per-JVM ICU initializer."""
+    return ("translate(regexp_replace(text, '[^A-Za-z0-9" + keep + "]', ' '), "
+            "'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz')")
+
+
+NORM_HASH_SQL = ("md5(trim(regexp_replace(" + alnum_lower_sql(r"\\s")
+                 + r", '\\s+', ' ')))")
+
+
 def dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-exact dedup after normalization (lowercase, strip punctuation,
-    collapse whitespace) — catches trivially re-formatted duplicates."""
-    d = phash.spread(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), spark, heavy=False
-    )
-    norm = F.trim(
-        F.regexp_replace(
-            F.lower(F.regexp_replace("text", r"[^A-Za-z0-9\s]", " ")), r"\s+", " "
-        )
-    )
-    h = d.select("doc_id", F.md5(norm).alias("norm_hash"))
+    """Near-exact dedup on NORM_HASH_SQL: lowercased, punctuation stripped,
+    whitespace collapsed — catches trivially re-formatted duplicates."""
+    d = phash.spread(spark.read.parquet(f"{sf_dir}/documents.parquet"),
+                     spark, heavy=False)
+    h = d.selectExpr("doc_id", f"{NORM_HASH_SQL} AS norm_hash")
     return bucket_window(h, ["norm_hash"]).selectExpr(
         "doc_id", "first AS canonical_doc_id", "n AS group_size")
 

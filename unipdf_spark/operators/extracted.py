@@ -17,26 +17,23 @@ chunking (the render plan is seeded per doc_id), so the pair is a true
 re-formatted duplicate — same content, different layout — exactly what
 normalized dedup and MinHash LSH exist to catch.
 
-Scale shape (100 TB): the corpus is scanned once per size branch, and
-the clones are planted by exploding those same rows. Each small doc is
+Scale shape (100 TB): the corpus is scanned once per size branch, and the
+clones are planted by exploding those same rows. Each small doc is
 rendered, extracted, reassembled and MinHashed in ONE map-only Python
 pass; the only exchange before it is :func:`phash.spread`'s, which is a
 no-op once the input has as many partitions as cores. Only oversized docs
-take the split → round-robin exchange → extract → reassemble detour,
-their parts dealt over the cores. Nothing is persisted and nothing is
-joined: one generator turns each extracted doc into its 8 LSH band
-rows and one exact row keyed by its normalized text's md5, and those rows
-take ONE hash exchange on the key (:func:`keyed_dedup`), the bucket
-shape of every LSH query (:func:`dedup.bucket_window`). All rows of a
-bucket or exact group, however many, meet in one window task and its
-spillable buffer, as they do in the `norm_hash` join of
-:func:`dedup.dedup_normalized` at corpus scale, where neither side
-broadcasts. A boilerplate bucket of millions of docs is counted and
-dropped there. No collected list holds
-more than MAX_BUCKET ids: only buckets that pass the 2..MAX_BUCKET count
-gate collect their members, and each doc folds at most 8 such lists
-plus itself in the one doc_id exchange. There is no self-join and no pair
-explode.
+take the split → round-robin exchange → extract → reassemble detour, their
+parts dealt over the cores. Nothing is persisted and nothing is joined:
+one generator turns each extracted doc into its 8 LSH band rows and one
+exact row keyed by :data:`dedup.NORM_HASH_SQL`, and those rows take ONE
+hash exchange on the key (:func:`keyed_dedup`), the bucket shape of every
+LSH query (:func:`dedup.bucket_window`). All rows of a bucket or exact
+group, however many, meet in one window task and its spillable buffer, as
+in :func:`dedup.dedup_normalized`. A boilerplate bucket of millions of
+docs is counted and dropped there. No collected list holds more than
+MAX_BUCKET ids: only buckets that pass the 2..MAX_BUCKET count gate
+collect their members, and each doc folds at most 8 such lists plus itself
+in the one doc_id exchange. There is no self-join and no pair explode.
 """
 
 from __future__ import annotations
@@ -49,6 +46,7 @@ from ..pipeline import doc_worker, map_docs, prepare_worker
 from . import phash
 from .dedup import (
     MAX_BUCKET,
+    NORM_HASH_SQL,
     SIG_NAMES,
     _SHINGLE_CTE,
     _SIG_COLS_SQL,
@@ -229,10 +227,6 @@ def render_extract_reassemble_scalable(named: DataFrame,
         joined.mapInPandas(_sig_worker, SIG_DDL))
 
 
-# normalized dedup key (same normalization as dedup_normalized:
-# lowercase, strip punctuation, collapse whitespace)
-_NORM_HASH_SQL = (r"md5(trim(regexp_replace(lower(regexp_replace("
-                  r"text, '[^A-Za-z0-9\\s]', ' ')), '\\s+', ' ')))")
 # token stats on the extracted text: the count must equal DuckDB's over
 # the ORIGINAL text — an extra per-doc integrity column beyond the dedup
 # hash. The reassembled text is single-space collapsed with no edge
@@ -243,16 +237,15 @@ _N_TOKENS_SQL = ("CAST(IF(length(text) = 0, 0, size(split(text, ' ', -1)))"
                  " AS BIGINT)")
 # (doc_id, text, h0..h31) → every doc's keyed rows, from ONE generator:
 # its dedup.N_BANDS (band, band_hash) LSH rows, then its exact row keyed
-# by the normalized text's md5 and carrying its token count. Each row's
-# key is (band, band_hash, norm_hash); the fields a row does not use are
-# NULL.
+# by dedup.NORM_HASH_SQL and carrying its token count. Each row's key is
+# (band, band_hash, norm_hash); the fields a row does not use are NULL.
 KEYED_DDL = ("doc_id bigint, band int, band_hash bigint, norm_hash string, "
              "n_tokens bigint")
 KEY = ["band", "band_hash", "norm_hash"]
 _KEYED_EXPR = "inline(array({}))".format(", ".join(
     band_structs(", 'norm_hash', NULL, 'n_tokens', NULL")
     + ["named_struct('band', NULL, 'band_hash', NULL, "
-       f"'norm_hash', {_NORM_HASH_SQL}, 'n_tokens', {_N_TOKENS_SQL})"]))
+       f"'norm_hash', {NORM_HASH_SQL}, 'n_tokens', {_N_TOKENS_SQL})"]))
 _EXACT = "n_tokens IS NOT NULL"
 
 

@@ -140,8 +140,10 @@ FROM hits
 def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-insensitive content fingerprint: md5 over the sorted distinct
     token set (key-collision / "fingerprint" dedup method)."""
+    from .dedup import alnum_lower_sql
+
     d = _docs(spark, sf_dir)
-    norm = F.lower(F.regexp_replace("text", r"[^A-Za-z0-9 ]", " "))
+    norm = F.expr(alnum_lower_sql(" "))
     toks = F.filter(F.split(norm, r"\s+"), lambda x: x != "")
     fp = F.md5(F.array_join(F.array_sort(F.array_distinct(toks)), " "))
     return d.select("doc_id", fp.alias("fingerprint"))
