@@ -24,6 +24,19 @@ _STRINGS = [
 ]
 # the strips before each fold: dedup.NORM_HASH_SQL's, doc_fingerprints'
 _KEEPS = {r"\\s": r"\s", " ": " "}
+# raw text whose case mapping changes its length or is not one-to-one:
+# dotted capital I, final sigma, sharp s, titlecase dz, the fi ligature,
+# fullwidth letters around an ideographic space, emoji, and VT (Java's \s)
+_RAW = [
+    "\u0130stanbul \u0130I",
+    "\u039f\u0394\u039f\u03a3 \u03c3\u03bf\u03c6\u03cc\u03c2",
+    "Stra\u00dfe \u00df",
+    "\u01c5emal \u01c4 \u01c6",
+    "\ufb01le \ufb01",
+    "\uff21\u3000\uff22",
+    "\U0001f600 \U0001f44d\U0001f3fd x",
+    "a\x0bb c",
+]
 
 
 def test_ascii_fold_equals_lower_after_strip(spark):
@@ -57,3 +70,17 @@ def test_ascii_fold_equals_lower_after_strip(spark):
             LOWER(REGEXP_REPLACE(text, '[^A-Za-z0-9\s]', ' ', 'g')),
             '\s+', ' ', 'g'))) FROM t""").fetchall())
     assert norm == duck
+
+
+def test_token_count_needs_no_lower(spark):
+    """textops.corpus_cleanup's n_tokens splits the raw text on \\s+ with
+    no lower(): lowercasing maps no character to or from ASCII
+    whitespace, or to nothing, so the count is the same either way."""
+    rows = list(enumerate(_STRINGS + _RAW))
+    count = r"size(filter(split({}, '\\s+'), x -> x != ''))"
+    got = spark.createDataFrame(rows, "id int, text string").selectExpr(
+        "id", f"{count.format('lower(text)')} AS lowered",
+        f"{count.format('text')} AS raw").collect()
+    assert len(got) == len(rows)
+    for r in got:
+        assert r.raw == r.lowered, rows[r.id]

@@ -143,7 +143,6 @@ _CACHE_ALLOWED = {
 # ~2.6 GB of garbage); text a regexp_replace has already cut down to ASCII
 # folds with dedup.alnum_lower_sql instead.
 _CASE_MAPPING_ALLOWED = {
-    "corpus_cleanup": "counts the tokens of lower(raw text)",
     "lang_id": "matches stopwords in lower(raw text)",
     "ngram_jaccard_pairs": "compares the token sets of lower(raw text)",
     "quality_scores": "stopword ratio, mean token length of lower(raw text)",
@@ -161,17 +160,27 @@ def test_every_query_runs_each_python_pass_once(spark):
     _CASE_MAPPING_ALLOWED case-map. A count joined back to its own
     input, or a self-join, plans the pass that feeds it twice; gate on a
     window instead (dedup.bucket_window). The case-mapping check reads
-    the plan's JSON: toString() truncates long field lists."""
+    the plan's JSON: toString() truncates long field lists. Building a
+    query launches no Spark job: the sf tables are read with their
+    declared schemas (schema.read_sf), not inferred."""
     from collections import Counter
 
     import __spark_entry__ as em
 
-    twice, cached, cased = set(), set(), set()
+    sc = spark.sparkContext
+    twice, cached, cased, launched = set(), set(), set(), set()
     for name, build in sorted(em.queries().items()):
         # a frame an earlier query persisted would stand in for this
         # query's own passes
         spark.catalog.clearCache()
-        df = build(spark, SF)
+        sc.setJobGroup(f"build:{name}", name)
+        try:
+            df = build(spark, SF)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(f"build:{name}"))
+        if n_jobs:
+            launched.add(f"{name}: {n_jobs} jobs")
         passes, reads = python_passes(df)
         n = Counter(k for _label, k in passes)
         twice |= {f"{name}: {n[k]}x {label}" for label, k in passes
@@ -182,6 +191,7 @@ def test_every_query_runs_each_python_pass_once(spark):
                 df._jdf.queryExecution().optimizedPlan().toJSON()):
             cased.add(name)
     spark.catalog.clearCache()
+    assert not launched, sorted(launched)
     assert not twice, sorted(twice)
     assert cached == set(_CACHE_ALLOWED), sorted(cached ^ set(_CACHE_ALLOWED))
     assert cased == set(_CASE_MAPPING_ALLOWED), sorted(

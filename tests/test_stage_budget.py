@@ -38,8 +38,6 @@ def test_budget_rows_for_two_leaves():
         # the warm run's DataFrame build and its time outside any stage
         assert int(r["build ms"]) >= 0 and int(r["driver ms"]) >= 0
         assert int(r["build ms"]) <= 1000 * float(r["warm s"])
-        # building any DataFrame takes py4j round trips to the JVM
-        assert int(r["py4j calls"]) > 0
     q6, dedup = rows["q6_forecast_revenue"], rows["extracted_text_dedup"]
     assert int(q6["py run ms"]) == 0 and int(q6["py tasks"]) == 0
     assert int(dedup["py run ms"]) > 0 and int(dedup["py tasks"]) > 0

@@ -243,7 +243,8 @@ def test_streaming_integrated_extract_dedup(spark, tmp_path):
     working together on a stream."""
     import pandas as pd
 
-    from unipdf_spark.operators.extracted import render_extract_reassemble
+    from unipdf_spark.operators.extracted import REX_DDL, _rex_worker
+    from unipdf_spark.pipeline import map_docs
     from unipdf_spark.streaming.ops import streaming_minhash_candidates
 
     base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
@@ -259,10 +260,12 @@ def test_streaming_integrated_extract_dedup(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(f"{src}/batch=*")
     )
-    from pyspark.sql import functions as F
-
-    extracted = render_extract_reassemble(stream).withColumn(
-        "doc_id", F.col("doc_id").cast("string"))  # LSH state keys strings
+    # the small-doc branch of streaming_render_extract_reassemble: its
+    # reassembly state would be a second applyInPandasWithState, which a
+    # streaming query cannot chain with the LSH state below, whose keys
+    # are strings
+    extracted = map_docs(stream, _rex_worker, REX_DDL).selectExpr(
+        "CAST(doc_id AS STRING) AS doc_id", "text")
     out = streaming_minhash_candidates(extracted)
     q = (
         out.writeStream.format("memory").queryName("intdedup_out")

@@ -14,10 +14,7 @@ import duckdb
 
 sys.path.insert(0, ".")
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+from unipdf_spark.schema import SF_DDL  # noqa: E402
 
 
 def value_hash(rows) -> str:
@@ -53,7 +50,7 @@ def main() -> None:
 
     spark = get_spark("oracle-check", cores=8)
     con = duckdb.connect()
-    for t in TABLES:
+    for t in SF_DDL:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )

@@ -9,12 +9,11 @@ groups ``<leaf>:cold`` and ``<leaf>:warm``, on bench.py's session with
 Each run writes to a noop sink, then ``clearCache()`` drops what it
 persisted; the pipeline leaves' inputs are built once, untimed, by
 ``localCheckpoint``, which that keeps. ``build ms`` is the warm run's time
-to build the DataFrame, before the write, and ``py4j calls`` the py4j
-round trips (``send_command``) the driver made meanwhile; ``driver ms`` is
-the warm wall time outside every stage of the run (wall minus the union
-of its stages' submission → completion spans): plan building, job
-submission and the gaps between jobs. Exits nonzero on an unknown leaf or
-when a doc fails span equality.
+to build the DataFrame, before the write; ``driver ms`` is the warm wall
+time outside every stage of the run (wall minus the union of its stages'
+submission → completion spans): plan building, job submission and the
+gaps between jobs. Exits nonzero on an unknown leaf or when a doc fails
+span equality.
 """
 
 from __future__ import annotations
@@ -46,7 +45,7 @@ QUERIES = [
     "embedding_near_dup_pairs", "extracted_text_dedup", "html_main_content"]
 LEAVES = ["fixture_generation", "extract_spans", "span_equality_join",
           *QUERIES]
-HEADER = ("leaf", "cold s", "warm s", "build ms", "py4j calls", "driver ms",
+HEADER = ("leaf", "cold s", "warm s", "build ms", "driver ms",
           "cold stages", "stages", "tasks",
           "py stages", "py tasks", "run ms", "py run ms", "cpu ms",
           "deser ms", "gc ms", "shuffle read B", "shuffle write B")
@@ -69,20 +68,6 @@ def leaf_frames(spark, sf_dir: str, cores: int, n_docs: int) -> dict:
     leaves = {q: (lambda q=q: qs[q](spark, sf_dir)) for q in QUERIES}
     return {**leaves, "fixture_generation": gen, "extract_spans": extract,
             "span_equality_join": lambda: pipeline.span_equality(docs, spans)}
-
-
-def count_py4j_calls(spark) -> list[int]:
-    """Route the session's py4j client through a counter: every later
-    ``send_command`` round trip adds one to the returned list's item."""
-    client = spark.sparkContext._gateway._gateway_client
-    send, calls = client.send_command, [0]
-
-    def counted(*args, **kwargs):
-        calls[0] += 1
-        return send(*args, **kwargs)
-
-    client.send_command = counted
-    return calls
 
 
 def stage_spans(log_dir: str) -> dict[str, list[tuple[int, int]]]:
@@ -118,13 +103,13 @@ def covered_ms(spans: list[tuple[int, int]]) -> int:
     return total
 
 
-def row(name: str, walls: dict, builds: dict, py4j: dict, groups: dict,
-        spans: dict) -> str:
+def row(name: str, walls: dict, builds: dict, groups: dict, spans: dict
+        ) -> str:
     cold, warm = (groups.get(f"{name}:{run}", stages.GroupStats())
                   for run in ("cold", "warm"))
     t, py = warm.totals(), [s for s in warm.stages if s.python and s.tasks]
     wall = walls[name, "warm"]
-    counts = [1000 * builds[name, "warm"], py4j[name, "warm"],
+    counts = [1000 * builds[name, "warm"],
               1000 * wall - covered_ms(spans.get(f"{name}:warm", [])),
               cold.totals()["stages"], t["stages"], t["tasks"], len(py),
               sum(s.tasks for s in py), t["executor_run_ms"],
@@ -153,16 +138,14 @@ def main(argv: list[str]) -> int:
             "--conf", "spark.eventLog.rolling.enabled=false", "pyspark-shell"])
         spark = pipeline.get_spark("unipdf-stage-budget", cores=cores)
         spark.sparkContext.setLogLevel("ERROR")
-        walls, builds, py4j = {}, {}, {}
-        calls = count_py4j_calls(spark)
+        walls, builds = {}, {}
         try:
             leaves = leaf_frames(spark, sf_dir, cores, n_docs)
             for name, run in ((n, r) for n in names for r in ("cold", "warm")):
                 spark.sparkContext.setJobGroup(f"{name}:{run}", name)
-                c0, t0 = calls[0], time.perf_counter()
+                t0 = time.perf_counter()
                 df = leaves[name]()
                 builds[name, run] = time.perf_counter() - t0
-                py4j[name, run] = calls[0] - c0
                 df.write.format("noop").mode("overwrite").save()
                 walls[name, run] = time.perf_counter() - t0
                 spark.catalog.clearCache()
@@ -178,12 +161,12 @@ def main(argv: list[str]) -> int:
     print(f"# Spark stage budget of bench.py's leaves\n\nCommit "
           f"`{commit.strip()}`, `local[{cores}]` on {os.cpu_count()} cores, "
           f"Python {platform.python_version()}, pyspark {pyspark.__version__},"
-          f" {n_docs} pipeline docs, `{sf_dir}`. `build ms`, `py4j calls`, "
+          f" {n_docs} pipeline docs, `{sf_dir}`. `build ms`, "
           "`driver ms` and the columns after `cold stages` are the warm "
           "job's.\n")
     print("| " + " | ".join(HEADER) + " |\n" + "|---" * len(HEADER) + "|")
     for name in names:
-        print(row(name, walls, builds, py4j, groups, spans))
+        print(row(name, walls, builds, groups, spans))
     print(f"\nspan_equality_join: {n_match}/{n_docs} docs match")
     if n_match != n_docs:
         sys.exit(f"stage_budget: {n_docs - n_match} docs fail span equality")

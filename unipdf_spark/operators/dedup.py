@@ -31,6 +31,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..pipeline import prepare_worker
+from ..schema import read_sf
 from . import phash
 
 N_HASHES = 32
@@ -41,17 +42,15 @@ SIM_CHUNKS = 4  # 15-bit chunks → Hamming ≤ 3 guarantees a shared chunk
 MAX_HAMMING = 3
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return phash.spread(spark.read.parquet(f"{sf_dir}/documents.parquet"), spark)
+def _docs(spark: SparkSession, sf_dir: str, heavy: bool = True) -> DataFrame:
+    return phash.spread(read_sf(spark, sf_dir, "documents"), spark, heavy)
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup on raw text hash; canonical = min(doc_id) per group,
     from one :func:`bucket_window` on the hash."""
-    d = phash.spread(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), spark, heavy=False
-    )
-    h = d.select("doc_id", F.md5("text").alias("text_hash"))
+    h = _docs(spark, sf_dir, heavy=False).select(
+        "doc_id", F.md5("text").alias("text_hash"))
     return bucket_window(h, ["text_hash"]).selectExpr(
         "doc_id", "first AS canonical_doc_id", "n AS group_size",
         "doc_id = first AS is_canonical")
@@ -81,9 +80,8 @@ NORM_HASH_SQL = ("md5(trim(regexp_replace(" + alnum_lower_sql(r"\\s")
 def dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-exact dedup on NORM_HASH_SQL: lowercased, punctuation stripped,
     whitespace collapsed — catches trivially re-formatted duplicates."""
-    d = phash.spread(spark.read.parquet(f"{sf_dir}/documents.parquet"),
-                     spark, heavy=False)
-    h = d.selectExpr("doc_id", f"{NORM_HASH_SQL} AS norm_hash")
+    h = _docs(spark, sf_dir, heavy=False).selectExpr(
+        "doc_id", f"{NORM_HASH_SQL} AS norm_hash")
     return bucket_window(h, ["norm_hash"]).selectExpr(
         "doc_id", "first AS canonical_doc_id", "n AS group_size")
 
@@ -280,7 +278,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     both texts (:func:`_shingle_set`, bit-identical to the oracle's) and
     computes the Jaccard; Catalyst's HOF set ops over shingle arrays were
     this query's residual cost (r4 VERDICT #3)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_sf(spark, sf_dir, "documents")
     cand = (
         bucket_window(
             band_table(minhash_signatures_pandas(phash.spread(docs, spark))),

@@ -43,6 +43,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..pipeline import doc_worker, map_docs, prepare_worker
+from ..schema import read_sf
 from . import phash
 from .dedup import (
     MAX_BUCKET,
@@ -63,9 +64,7 @@ CLONE_OFFSET = 1_000_000
 def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents plus the planted clones, from ONE scan: every
     ``doc_id % 7 == 0`` row is exploded into itself and its clone."""
-    # the two columns read, as a schema: no schema-inference job per query
-    return spark.read.schema("doc_id bigint, text string").parquet(
-        f"{sf_dir}/documents.parquet").selectExpr(
+    return read_sf(spark, sf_dir, "documents").selectExpr(
         f"explode(if(doc_id % 7 = 0, array(doc_id, doc_id + {CLONE_OFFSET}),"
         " array(doc_id))) AS doc_id", "text")
 
@@ -107,20 +106,6 @@ def _sig_worker(batches):
 def _rex_sig_worker(batches):
     """Small docs in ONE Python pass: render → extract → MinHash."""
     yield from _sig_worker(doc_worker(_rex_worker, REX_DDL)(batches))
-
-
-def render_extract_reassemble(named: DataFrame) -> DataFrame:
-    """(doc_id 'doc_NNNNNNNN', text) → (doc_id bigint, text) where the
-    output text made a full render→span-extraction→reassembly trip
-    through the PDF engine, in ONE fused worker (:func:`_rex_worker`): as
-    two chained MapInPandas nodes every rendered PDF (and its span
-    structs) would cross Python→JVM→Python through Arrow once for nothing
-    — the render here is only the synthetic source; a real corpus enters
-    at the extraction stage, which stays the standalone
-    pipeline.run_extraction. Map-only (no payload shuffle) and
-    streaming-capable (mapInPandas binds to micro-batches unchanged — see
-    the streaming integrated-path test)."""
-    return map_docs(named, _rex_worker, REX_DDL).select("doc_id", "text")
 
 
 def _make_splitter(part_chars: int):

@@ -30,7 +30,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..pipeline import map_docs
-from . import phash
+from .dedup import _docs
 
 _WS = re.compile(r"\s+")
 
@@ -38,9 +38,7 @@ _WS = re.compile(r"\s+")
 def html_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → boilerplate-wrapped HTML → main-content extraction →
     (doc_id, main_hash, main_chars, n_tokens) of the EXTRACTED text."""
-    docs = phash.spread(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), spark
-    ).select(
+    docs = _docs(spark, sf_dir).select(
         F.concat(F.lit("doc_"),
                  F.lpad(F.col("doc_id").cast("string"), 8, "0")
                  ).alias("doc_id"),

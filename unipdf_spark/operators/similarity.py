@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from ..schema import read_sf
 from . import phash
 
 TOP_K = 5
@@ -89,7 +90,7 @@ def _lsh_sig_sql(emb_expr: str) -> str:
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return phash.spread(spark.read.parquet(f"{sf_dir}/embeddings.parquet"), spark)
+    return phash.spread(read_sf(spark, sf_dir, "embeddings"), spark)
 
 
 def _dot(a, b):

@@ -9,13 +9,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .dedup import (MAX_BUCKET, _BANDS_SQL, _SHINGLE_CTE, _SIG_COLS_SQL,
+                    _docs, alnum_lower_sql, band_table, bucket_window,
+                    minhash_signatures_pandas)
+
 _PUNCT = r"[.,;:!?'\"()\-]"
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .phash import spread
-
-    return spread(spark.read.parquet(f"{sf_dir}/documents.parquet"), spark)
 
 
 def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -140,8 +138,6 @@ FROM hits
 def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-insensitive content fingerprint: md5 over the sorted distinct
     token set (key-collision / "fingerprint" dedup method)."""
-    from .dedup import alnum_lower_sql
-
     d = _docs(spark, sf_dir)
     norm = F.expr(alnum_lower_sql(" "))
     toks = F.filter(F.split(norm, r"\s+"), lambda x: x != "")
@@ -313,7 +309,7 @@ def corpus_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python pass (the MinHash signatures) runs once. Fully
     oracle-checked."""
     d = _docs(spark, sf_dir)
-    toks = F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda x: x != "")
+    toks = F.filter(F.split(F.col("text"), r"\s+"), lambda x: x != "")
     n_tok = F.size(toks)
     n_punct = F.length("text") - F.length(F.regexp_replace("text", _PUNCT, ""))
     feats = d.select(
@@ -327,9 +323,6 @@ def corpus_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # boilerplate gate: member of an LSH band bucket too dense for pairwise
     # dedup (> MAX_BUCKET — the clusters lsh_dropped_clusters reports); one
     # representative (the bucket's min doc_id) survives, the rest drop
-    from .dedup import (MAX_BUCKET, band_table, bucket_window,
-                        minhash_signatures_pandas)
-
     boiler_ids = (
         bucket_window(band_table(minhash_signatures_pandas(d)),
                       ["band", "band_hash"])
@@ -358,8 +351,6 @@ def corpus_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cleanup_sql() -> str:
-    from .dedup import _BANDS_SQL, _SHINGLE_CTE, _SIG_COLS_SQL, MAX_BUCKET
-
     return r"""
 WITH feats AS (
     SELECT doc_id,

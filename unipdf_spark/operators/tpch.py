@@ -12,9 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from ..schema import read_sf as _t
 
 
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -254,7 +254,7 @@ def docs_pdf_from_documents(spark: SparkSession, sf_dir: str,
                             limit: int | None = None) -> DataFrame:
     """Render the TPC-H-ish `documents` table's text into PDFs (distributed),
     carrying golden spans — exercises the engine on external text."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = schema.read_sf(spark, sf_dir, "documents")
     if limit:
         docs = docs.limit(limit)
     docs = docs.select(

@@ -52,6 +52,39 @@ DOCS_DDL = (
 )
 
 
+# The sf tables the registered queries read (``<sf_dir>/<name>.parquet``),
+# declared so that no read runs a schema-inference job; the types are the
+# ones Spark infers from the files (tests/test_sf_schema.py checks them).
+SF_DDL = {
+    "customer": "c_custkey bigint, c_name string, c_nationkey int, "
+                "c_acctbal double, c_mktsegment string",
+    "documents": "doc_id bigint, text string, lang string, source string, "
+                 "n_chars bigint",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+    "events": "event_id bigint, ts timestamp_ntz, user_id bigint, "
+              "event_type string, value double, props string",
+    "lineitem": "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, "
+                "l_linenumber int, l_quantity double, l_extendedprice double, "
+                "l_discount double, l_tax double, l_returnflag string, "
+                "l_linestatus string, l_shipdate timestamp_ntz",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "orders": "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+              "o_totalprice double, o_orderdate timestamp_ntz, "
+              "o_orderpriority string",
+    "part": "p_partkey bigint, p_name string, p_brand string, p_type string, "
+            "p_size int, p_retailprice double",
+    "region": "r_regionkey int, r_name string",
+    "supplier": "s_suppkey bigint, s_name string, s_nationkey int, "
+                "s_acctbal double",
+}
+
+
+def read_sf(spark, sf_dir: str, name: str):
+    """The sf table ``name`` under ``sf_dir``, read with its declared
+    schema. User-supplied paths (the CLI, ``sources.readers``) infer."""
+    return spark.read.schema(SF_DDL[name]).parquet(f"{sf_dir}/{name}.parquet")
+
+
 def media_ref_for(raw_stream_bytes: bytes) -> str:
     """Deterministic media reference for an image payload (see module doc)."""
     return "img_" + hashlib.sha256(raw_stream_bytes).hexdigest()[:16]
