@@ -1,7 +1,7 @@
 """The one Arrow worker shape: ``pipeline.map_docs``'s batch function fed
-plain pandas frames (no Spark session), a structural guard that no
-per-doc batch loop is written by hand outside it and that every batch
-function calls ``prepare_worker``, a ``local[1]`` run that shows reused
+plain pandas frames (no Spark session), a structural guard that the
+package's one ``mapInPandas`` call is ``map_docs``'s and that every other
+Python worker calls ``prepare_worker``, a ``local[1]`` run that shows reused
 workers no longer re-read their zip directories and freeze their heap
 once, and ``local[1]`` runs that show a session's Python workers reach the
 JVM over Unix domain sockets in a short private directory."""
@@ -19,7 +19,8 @@ from pathlib import Path
 import pandas as pd
 import pytest
 
-from unipdf_spark.pipeline import ddl_columns, doc_worker, extract_doc
+from unipdf_spark.pipeline import (SOCKET_DIR_MAX, ddl_columns, doc_worker,
+                                   extract_doc)
 from unipdf_spark.schema import SPANS_OUT_DDL
 
 REPO = Path(__file__).resolve().parent.parent
@@ -85,12 +86,6 @@ def test_worker_carries_the_per_doc_name():
         "split_batches"
 
 
-# Every `.mapInPandas(` outside map_docs is one of these: a column-vectorized
-# batch transform (dedup.py) or the batch-level MinHash composition.
-_ALLOWED_WORKERS = {"_sig_worker", "_rex_sig_worker"}
-_ALLOWED_FILES = {"unipdf_spark/operators/dedup.py"}
-
-
 def _prepares_worker(fn: ast.FunctionDef, top, seen=()) -> bool:
     """``fn`` calls ``prepare_worker``, itself or through a
     top-level function of its module."""
@@ -101,54 +96,74 @@ def _prepares_worker(fn: ast.FunctionDef, top, seen=()) -> bool:
         for n in called if n in top and n not in seen)
 
 
-def _map_in_pandas_calls(path: Path):
-    """(enclosing function, first argument source, whether that batch
-    function calls ``prepare_worker``) per mapInPandas call. The batch
-    function is the def of that name nested in the enclosing function,
-    else the module-level one."""
+def _is_pandas_udf(decorator) -> bool:
+    d = decorator.func if isinstance(decorator, ast.Call) else decorator
+    return (d.id if isinstance(d, ast.Name) else getattr(d, "attr", "")) \
+        == "pandas_udf"
+
+
+def _python_workers(path: Path):
+    """The Python functions Spark runs, per module: ``("mapInPandas",
+    enclosing function)`` per ``.mapInPandas(`` call, and ``(name,
+    whether it calls prepare_worker)`` per ``@pandas_udf`` function and
+    per first argument of ``.applyInPandas(``/``.applyInPandasWithState(``.
+    That argument is the def of that name nested in the enclosing
+    function, else the module-level one; any other argument is reported
+    as not preparing."""
     tree = ast.parse(path.read_text())
     top = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
-    out = []
+    sites, workers = [], []
 
     def walk(node, fn):
         for child in ast.iter_child_nodes(node):
             inner = fn
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 inner = child
+                if any(map(_is_pandas_udf, child.decorator_list)):
+                    workers.append((child.name,
+                                    _prepares_worker(child, top)))
             if (isinstance(child, ast.Call)
-                    and isinstance(child.func, ast.Attribute)
-                    and child.func.attr == "mapInPandas"):
-                arg = ast.unparse(child.args[0]) if child.args else ""
-                nested = {n.name: n for n in ast.walk(fn or tree)
-                          if isinstance(n, ast.FunctionDef)}
-                batch = nested.get(arg) or top.get(arg)
-                out.append((fn.name if fn else None, arg, batch is not None
-                            and _prepares_worker(batch, top)))
+                    and isinstance(child.func, ast.Attribute)):
+                attr = child.func.attr
+                if attr == "mapInPandas":
+                    sites.append(fn.name if fn else None)
+                elif attr in ("applyInPandas", "applyInPandasWithState"):
+                    arg = ast.unparse(child.args[0]) if child.args else ""
+                    nested = {n.name: n for n in ast.walk(fn or tree)
+                              if isinstance(n, ast.FunctionDef)}
+                    worker = nested.get(arg) or top.get(arg)
+                    workers.append((arg, worker is not None
+                                    and _prepares_worker(worker, top)))
             walk(child, inner)
 
     walk(tree, None)
-    return out
+    return sites, workers
+
+
+def _package_files():
+    return [*sorted((REPO / "unipdf_spark").rglob("*.py")),
+            REPO / "__spark_entry__.py"]
 
 
 def test_every_map_in_pandas_goes_through_map_docs():
-    files = [*sorted((REPO / "unipdf_spark").rglob("*.py")),
-             REPO / "__spark_entry__.py"]
-    stray, unkept = [], []
-    n_sites = 0
-    for path in files:
-        rel = path.relative_to(REPO).as_posix()
-        for fn, arg, kept in _map_in_pandas_calls(path):
-            n_sites += 1
-            if rel == "unipdf_spark/pipeline.py" and fn == "map_docs":
-                continue
-            if not kept:
-                unkept.append(f"{rel}:{fn}:{arg}")
-            if rel in _ALLOWED_FILES or arg in _ALLOWED_WORKERS:
-                continue
-            stray.append(f"{rel}:{fn}:{arg}")
-    assert n_sites > 1  # the scan sees the call sites at all
-    assert not stray, stray
-    assert not unkept, unkept
+    sites = [f"{path.relative_to(REPO).as_posix()}:{fn}"
+             for path in _package_files()
+             for fn in _python_workers(path)[0]]
+    assert sites == ["unipdf_spark/pipeline.py:map_docs"], sites
+
+
+def test_every_other_python_worker_prepares():
+    """``@pandas_udf`` bodies and ``applyInPandas``/
+    ``applyInPandasWithState`` functions run outside ``doc_worker``, so
+    each calls ``prepare_worker`` itself."""
+    found = {f"{path.relative_to(REPO).as_posix()}:{name}": kept
+             for path in _package_files()
+             for name, kept in _python_workers(path)[1]}
+    # the scan sees each kind of worker at all
+    for seen in ("similarity.py:sig28", "similarity.py:find_pairs",
+                 "ops.py:_session_fn"):
+        assert any(k.endswith(seen) for k in found), found
+    assert not [k for k, kept in found.items() if not kept], found
 
 
 # One local[1] session in its own process: six one-row partitions through
@@ -235,14 +250,10 @@ spark.stop()
 """
 
 
-# Linux's sun_path holds 107 bytes; Spark's socket names are /.<uuid4>.sock
-SUN_PATH_MAX, SOCKET_NAME_LEN = 107, 43
-
-
 def test_python_workers_use_unix_sockets_in_a_short_private_dir(tmp_path):
     deep = tmp_path / ("d" * 40) / ("e" * 40)
     deep.mkdir(parents=True)
-    assert len(str(deep)) + SOCKET_NAME_LEN > SUN_PATH_MAX
+    assert len(str(deep)) > SOCKET_DIR_MAX
     env = {**os.environ, "TMPDIR": str(deep), "PYTHONPATH": os.pathsep.join(
         [str(REPO), *filter(None, [os.environ.get("PYTHONPATH")])]),
         "PYSPARK_SUBMIT_ARGS": f"--conf spark.ui.enabled=false "
@@ -254,20 +265,32 @@ def test_python_workers_use_unix_sockets_in_a_short_private_dir(tmp_path):
     assert out["enabled"] == "true"
     assert out["rows"] == [0, 1, 2, 3]
     assert out["mode"] == 0o700
-    assert len(out["dir"]) + SOCKET_NAME_LEN <= SUN_PATH_MAX
+    assert len(out["dir"]) <= SOCKET_DIR_MAX
     assert not os.path.exists(out["dir"])  # removed at interpreter exit
 
 
 def test_socket_dir_lies_under_tmpdir_when_paths_fit():
+    """Under TMPDIR while the directory's path is at most SOCKET_DIR_MAX
+    (Spark's bound) characters long, else under /tmp."""
     import tempfile
 
+    name = len("/spark-uds-XXXXXXXX")
     with tempfile.TemporaryDirectory(dir="/tmp") as short:
-        env = {**os.environ, "TMPDIR": short}
-        p = subprocess.run(
-            [sys.executable, "-c", "from unipdf_spark.pipeline import "
-             "socket_dir; print(socket_dir())"],
-            cwd=REPO, env=env, capture_output=True, text=True, timeout=60)
-        assert p.returncode == 0, p.stderr[-2000:]
-        d = p.stdout.strip()
-        assert os.path.dirname(d) == short
-        assert not os.path.exists(d)
+        for dir_len, under_tmpdir in [(len(short) + name, True),
+                                      (SOCKET_DIR_MAX, True),
+                                      (SOCKET_DIR_MAX + 3, False)]:
+            tmpdir = short
+            if dir_len > len(short) + name:
+                tmpdir = os.path.join(short, "t" * (
+                    dir_len - name - len(short) - 1))
+                os.makedirs(tmpdir)
+            p = subprocess.run(
+                [sys.executable, "-c", "from unipdf_spark.pipeline import "
+                 "socket_dir; print(socket_dir())"],
+                cwd=REPO, env={**os.environ, "TMPDIR": tmpdir},
+                capture_output=True, text=True, timeout=60)
+            assert p.returncode == 0, p.stderr[-2000:]
+            d = p.stdout.strip()
+            assert os.path.dirname(d) == (tmpdir if under_tmpdir else "/tmp")
+            assert len(d) <= SOCKET_DIR_MAX
+            assert not os.path.exists(d)

@@ -184,13 +184,18 @@ def test_lsh_bucket_cap_drops_degenerate_bucket(spark, tmp_path, extra):
     identical docs is kept and fully paired; one of MAX_BUCKET + 1 is
     dropped before pair generation — no pairs from the hot bucket —
     while a normal near-dup pair elsewhere is still found. Both match
-    the DuckDB oracle."""
+    the DuckDB oracle, and so do the per-doc MinHash signatures and
+    SimHash fingerprints of the same corpus."""
     import duckdb
 
     from unipdf_spark.operators.dedup import (
         MAX_BUCKET,
         MINHASH_LSH_SQL,
+        MINHASH_SIG_SQL,
+        SIMHASH_SQL,
         minhash_lsh_pairs,
+        minhash_signatures,
+        simhash_fingerprints,
     )
 
     boiler = "lorem ipsum dolor sit amet consectetur adipiscing elit " * 6
@@ -209,6 +214,10 @@ def test_lsh_bucket_cap_drops_degenerate_bucket(spark, tmp_path, extra):
         f"read_parquet('{sf}/documents.parquet/*.parquet')"
     )
     assert got == sorted(map(tuple, con.execute(MINHASH_LSH_SQL).fetchall()))
+    for query, sql in [(minhash_signatures, MINHASH_SIG_SQL),
+                       (simhash_fingerprints, SIMHASH_SQL)]:
+        assert sorted(tuple(r) for r in query(spark, sf).collect()) == \
+            sorted(map(tuple, con.execute(sql).fetchall())), query.__name__
 
 
 def test_lsh_partner_counts_equal_candidate_pair_counts(spark):

@@ -26,11 +26,14 @@ DuckDB evaluates to identical values.
 
 from __future__ import annotations
 
+import hashlib
+import math
 import re
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..pipeline import prepare_worker
+from ..pipeline import map_docs
 from ..schema import read_sf
 from . import phash
 
@@ -143,31 +146,38 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_signatures_pandas(_docs(spark, sf_dir))
 
 
-SIG_NAMES = [f"h{i}" for i in range(N_HASHES)]
-_SIG_FIELDS = ", ".join(f"{h} long" for h in SIG_NAMES)
+_SIG_FIELDS = ", ".join(f"h{i} long" for i in range(N_HASHES))
 
 
 _WS = re.compile(r"\s+", re.ASCII)
 
 
+def _tokens(text: str) -> list[str]:
+    """The oracles' tokens: ``re.ASCII`` ``\\s+`` split of ``text.lower()``
+    (Java's and RE2's ``\\s`` are ASCII-only, so the Python pattern must
+    be too), empty tokens dropped."""
+    return [t for t in _WS.split(text.lower()) if t]
+
+
 def _shingle_set(text: str) -> set[str]:
     """Distinct word 3-gram shingles of ``text``, bit-identical to the
-    ``_SHINGLE_CTE`` oracle fragment: ``re.ASCII`` ``\\s+`` split of
-    ``text.lower()`` (Java's and RE2's ``\\s`` are ASCII-only, so the
-    Python pattern must be too), empty tokens dropped, and one window
-    for texts of fewer than 3 tokens."""
-    toks = [t for t in _WS.split(text.lower()) if t]
+    ``_SHINGLE_CTE`` oracle fragment: :func:`_tokens`, and one window for
+    texts of fewer than 3 tokens."""
+    toks = _tokens(text)
     return {" ".join(toks[j : j + 3])
             for j in range(max(len(toks) - 3, 0) + 1)}
 
 
-def with_minhash(pdf):
-    """pandas batch with a ``text`` column → the same batch plus h0..h31:
-    Python-side tokenize → 3-gram shingles → md5-derived h32 → one numpy
-    (n_shingles × 32) modular matmul-min per doc. The one Python copy of
-    the math, shared by :func:`minhash_signatures_pandas` and the fused
-    render→extract workers of :mod:`.extracted`. Bit-identical to
-    MINHASH_SIG_SQL:
+_A = np.array(phash.A, dtype=np.int64)
+_B = np.array(phash.B, dtype=np.int64)
+
+
+def minhash(text: str) -> list[int]:
+    """``text``'s 32 MinHash values h0..h31: Python-side tokenize → 3-gram
+    shingles → md5-derived h32 → one numpy (n_shingles × 32) modular
+    matmul-min. The one Python copy of the math, shared by
+    :func:`minhash_signatures_pandas` and the fused render→extract workers
+    of :mod:`.extracted`. Bit-identical to MINHASH_SIG_SQL:
 
     * shingles: :func:`_shingle_set`;
     * shingle hash: ``int(md5(s)[:15], 16) % P`` ≡ Spark
@@ -175,46 +185,30 @@ def with_minhash(pdf):
       ``('0x'||substr(md5(s),1,15))::BIGINT`` (< 2^60, exact in int64);
     * families: ``(A_i·h + B_i) % P`` with A_i < 2^30 → products < 2^62.
     """
-    import hashlib
+    sh = _shingle_set(text)
+    hs = np.fromiter(
+        (int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16) % phash.P
+         for s in sh),
+        dtype=np.int64,
+        count=len(sh),
+    )
+    # per-doc (n_shingles × 32) op, NOT batched across docs: a measured
+    # segmented-reduceat variant (one giant concatenated product +
+    # np.minimum.reduceat) ran 6× SLOWER — the ~150×32 per-doc
+    # temporaries stay in L2 while the batch-wide ones thrash cache (r7)
+    return ((hs[:, None] * _A + _B) % phash.P).min(axis=0).tolist()
 
-    import numpy as np
 
-    a_arr = np.array(phash.A, dtype=np.int64)
-    b_arr = np.array(phash.B, dtype=np.int64)
-    p = phash.P
-    sigs = np.empty((len(pdf), N_HASHES), dtype=np.int64)
-    for i, text in enumerate(pdf["text"].tolist()):
-        sh = _shingle_set(text)
-        hs = np.fromiter(
-            (
-                int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16) % p
-                for s in sh
-            ),
-            dtype=np.int64,
-            count=len(sh),
-        )
-        # per-doc (n_shingles × 32) op, NOT batched across docs: a
-        # measured segmented-reduceat variant (one giant concatenated
-        # product + np.minimum.reduceat) ran 6× SLOWER — the ~150×32
-        # per-doc temporaries stay in L2 while the batch-wide ones thrash
-        # cache (r7)
-        sigs[i] = ((hs[:, None] * a_arr + b_arr) % p).min(axis=0)
-    return pdf.assign(**{h: sigs[:, k] for k, h in enumerate(SIG_NAMES)})
+def minhash_doc(doc_id, text):
+    return [(doc_id, *minhash(text))]
 
 
 def minhash_signatures_pandas(d: DataFrame) -> DataFrame:
-    """(doc_id, text, …) → (doc_id, h0..h31) via mapInPandas over
-    :func:`with_minhash`."""
-
-    def batches(pdfs):
-        prepare_worker()
-        for pdf in pdfs:
-            yield with_minhash(pdf)[["doc_id", *SIG_NAMES]]
-
+    """(doc_id, text, …) → (doc_id, h0..h31): :func:`minhash` per doc,
+    through :func:`pipeline.map_docs`."""
     id_type = d.schema["doc_id"].dataType.simpleString()
-    return d.select("doc_id", "text").mapInPandas(
-        batches, schema=f"doc_id {id_type}, {_SIG_FIELDS}"
-    )
+    return map_docs(d.select("doc_id", "text"), minhash_doc,
+                    f"doc_id {id_type}, {_SIG_FIELDS}")
 
 
 # shared SQL fragments: tokenize → 3-gram shingles → h32 list (DuckDB's
@@ -297,34 +291,24 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(docs.selectExpr("doc_id AS doc_b", "text AS text_b"), "doc_b")
     )
 
-    def jac_batches(pdfs):
-        import math
-
-        import pandas as pd
-
-        prepare_worker()
-        for pdf in pdfs:
-            vals = []
-            for ta, tb in zip(pdf["text_a"], pdf["text_b"]):
-                s1, s2 = _shingle_set(ta), _shingle_set(tb)
-                un = len(s1 | s2)
-                # DuckDB ROUND(double, 4) semantics (half away from zero
-                # on the scaled double); Spark's round() HALF_UPs the
-                # shortest-decimal rendering instead — floor(x·1e4 + 0.5)
-                # matches the oracle on ties and non-ties alike
-                vals.append(
-                    math.floor(len(s1 & s2) / un * 10000.0 + 0.5) / 10000.0
-                    if un else 0.0
-                )
-            yield pd.DataFrame({"doc_a": pdf["doc_a"],
-                                "doc_b": pdf["doc_b"],
-                                "jaccard": vals})
-
     id_type = paired.schema["doc_a"].dataType.simpleString()
-    return paired.mapInPandas(
-        jac_batches,
-        schema=f"doc_a {id_type}, doc_b {id_type}, jaccard double",
-    )
+    return map_docs(paired.select("doc_a", "doc_b", "text_a", "text_b"),
+                    jaccard_pair,
+                    f"doc_a {id_type}, doc_b {id_type}, jaccard double")
+
+
+def jaccard_pair(doc_a, doc_b, text_a, text_b):
+    """One candidate pair → its shingle Jaccard, rounded as the oracle
+    rounds."""
+    s1, s2 = _shingle_set(text_a), _shingle_set(text_b)
+    un = len(s1 | s2)
+    # DuckDB ROUND(double, 4) semantics (half away from zero on the scaled
+    # double); Spark's round() HALF_UPs the shortest-decimal rendering
+    # instead — floor(x·1e4 + 0.5) matches the oracle on ties and non-ties
+    # alike
+    return [(doc_a, doc_b,
+             math.floor(len(s1 & s2) / un * 10000.0 + 0.5) / 10000.0
+             if un else 0.0)]
 
 
 def lsh_armor_stats(bt: DataFrame) -> dict:
@@ -466,45 +450,38 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_fingerprints_pandas(_docs(spark, sf_dir))
 
 
-def simhash_fingerprints_pandas(d: DataFrame) -> DataFrame:
-    """(doc_id, text, …) → (doc_id, simhash) via mapInPandas. Per doc:
-    ASCII-``\\s+`` tokens of lower(text) → base60 md5 hash per token →
-    per-bit ±1 votes (numpy (n_tokens × 60) popcount) → majority bits.
-    Matches SIMHASH_SQL exactly: vote > 0 sets the bit (ties → 0), empty
-    token lists yield simhash 0."""
-    import numpy as np
+_SHIFTS = np.arange(SIM_BITS, dtype=np.int64)
+_POWERS = np.int64(1) << _SHIFTS
 
-    shifts = np.arange(SIM_BITS, dtype=np.int64)
-    powers = (np.int64(1) << shifts)
 
-    def batches(pdfs):
-        import hashlib
-        import re
-
-        import pandas as pd
-
-        prepare_worker()
-        ws = re.compile(r"\s+", re.ASCII)
-        for pdf in pdfs:
-            out = np.zeros(len(pdf), dtype=np.int64)
-            for i, text in enumerate(pdf["text"].tolist()):
-                toks = [t for t in ws.split(text.lower()) if t]
-                if not toks:
-                    continue
-                hs = np.fromiter(
-                    (int(hashlib.md5(t.encode("utf-8")).hexdigest()[:15], 16)
-                     for t in toks),
-                    dtype=np.int64,
-                    count=len(toks),
-                )
-                ones = ((hs[:, None] >> shifts) & 1).sum(axis=0)
-                votes = 2 * ones - len(toks)
-                out[i] = int(powers[votes > 0].sum())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "simhash": out})
-
-    return d.select("doc_id", "text").mapInPandas(
-        batches, schema="doc_id long, simhash long"
+def simhash(text: str) -> int:
+    """``text``'s 60-bit SimHash: :func:`_tokens` → base60 md5 hash per
+    token → per-bit ±1 votes (numpy (n_tokens × 60) popcount) → majority
+    bits. Matches SIMHASH_SQL exactly: vote > 0 sets the bit (ties → 0),
+    an empty token list yields 0."""
+    toks = _tokens(text)
+    if not toks:
+        return 0
+    hs = np.fromiter(
+        (int(hashlib.md5(t.encode("utf-8")).hexdigest()[:15], 16)
+         for t in toks),
+        dtype=np.int64,
+        count=len(toks),
     )
+    ones = ((hs[:, None] >> _SHIFTS) & 1).sum(axis=0)
+    votes = 2 * ones - len(toks)
+    return int(_POWERS[votes > 0].sum())
+
+
+def simhash_doc(doc_id, text):
+    return [(doc_id, simhash(text))]
+
+
+def simhash_fingerprints_pandas(d: DataFrame) -> DataFrame:
+    """(doc_id, text, …) → (doc_id, simhash): :func:`simhash` per doc,
+    through :func:`pipeline.map_docs`."""
+    return map_docs(d.select("doc_id", "text"), simhash_doc,
+                    "doc_id long, simhash long")
 
 
 _SIMHASH_CTE = (

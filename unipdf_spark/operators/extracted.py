@@ -42,20 +42,19 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..pipeline import doc_worker, map_docs, prepare_worker
+from ..pipeline import map_docs
 from ..schema import read_sf
 from . import phash
 from .dedup import (
     MAX_BUCKET,
     NORM_HASH_SQL,
-    SIG_NAMES,
     _SHINGLE_CTE,
     _SIG_COLS_SQL,
     _SIG_FIELDS,
     _BANDS_SQL,
     band_structs,
     bucket_window,
-    with_minhash,
+    minhash,
 )
 
 CLONE_OFFSET = 1_000_000
@@ -95,17 +94,16 @@ def _rex_worker(doc_id, *row):
 SIG_DDL = "doc_id bigint, text string, " + _SIG_FIELDS
 
 
-def _sig_worker(batches):
-    """(doc_id, text) batches → SIG_DDL rows: the text plus its 32 MinHash
+def _sig_worker(doc_id, text):
+    """(doc_id, text) → one SIG_DDL row: the text plus its 32 MinHash
     values."""
-    prepare_worker()
-    for b in batches:
-        yield with_minhash(b)[["doc_id", "text", *SIG_NAMES]]
+    return [(doc_id, text, *minhash(text))]
 
 
-def _rex_sig_worker(batches):
+def _rex_sig_worker(doc_id, text):
     """Small docs in ONE Python pass: render → extract → MinHash."""
-    yield from _sig_worker(doc_worker(_rex_worker, REX_DDL)(batches))
+    return [sig for doc, _part, txt, *_ in _rex_worker(doc_id, text)
+            for sig in _sig_worker(doc, txt)]
 
 
 def _make_splitter(part_chars: int):
@@ -204,12 +202,12 @@ def render_extract_reassemble_scalable(named: DataFrame,
     the streaming twin (``streaming_render_extract_reassemble``): small
     docs take one Python pass (:func:`_rex_sig_worker`) with no shuffle;
     only oversized parts reach the reassembly aggregate, after which their
-    signatures come from the same :func:`with_minhash`. Every doc is
+    signatures come from the same :func:`dedup.minhash`. Every doc is
     rendered and extracted exactly once per evaluation."""
     small, big = _spread_by_size(named, part_chars)
     joined = _join_parts(_big_parts_ext(big, part_chars))
-    return small.mapInPandas(_rex_sig_worker, SIG_DDL).unionByName(
-        joined.mapInPandas(_sig_worker, SIG_DDL))
+    return map_docs(small, _rex_sig_worker, SIG_DDL).unionByName(
+        map_docs(joined, _sig_worker, SIG_DDL))
 
 
 # token stats on the extracted text: the count must equal DuckDB's over

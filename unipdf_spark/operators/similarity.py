@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from ..pipeline import prepare_worker
 from ..schema import read_sf
 from . import phash
 
@@ -46,25 +47,28 @@ def _w28_arrays():
 _W28_T, _W28_POW = _w28_arrays()
 
 
+def _dot_lits(emb_col: Column, lits: list[float]) -> Column:
+    """dot(emb, literal vector) as a left fold — element order d = 0..63
+    matches DuckDB's LIST_DOT_PRODUCT exactly (proven-portable shape)."""
+    return F.aggregate(
+        F.zip_with(
+            emb_col,
+            F.array(*[F.lit(x) for x in lits]),
+            lambda x, wv: x.cast("double") * wv,
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
 def _sig_range(emb_col: Column, lo: int, hi: int) -> Column:
     """Random-hyperplane sign bits [lo, hi) packed into an int (Spark side):
-    one zip_with fold per bit against that bit's 64-literal weight array.
-    (A single-pass wide accumulator was tried and is SLOWER here: dynamic
-    element_at into a big literal array per element×bit dominates; per-bit
-    folds keep each weight array a constant local.) Add order per bit is
-    d = 0..63, matching DuckDB's LIST_DOT_PRODUCT."""
-    bits = []
-    for b in range(lo, hi):
-        w = F.aggregate(
-            F.zip_with(
-                emb_col,
-                F.array(*[F.lit(x) for x in _W[b]]),
-                lambda x, wv: x.cast("double") * wv,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(w > 0, F.lit(1 << (b - lo))).otherwise(F.lit(0)))
+    one :func:`_dot_lits` fold per bit against that bit's 64-literal weight
+    array. (A single-pass wide accumulator was tried and is SLOWER here:
+    dynamic element_at into a big literal array per element×bit dominates;
+    per-bit folds keep each weight array a constant local.)"""
+    bits = [F.when(_dot_lits(emb_col, _W[b]) > 0, F.lit(1 << (b - lo)))
+            .otherwise(F.lit(0)) for b in range(lo, hi)]
     return sum(bits[1:], bits[0])
 
 
@@ -215,18 +219,18 @@ ORDER BY query_id, rank
 """
 
 
-def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """recall@k of the LSH scale path vs the exact bruteforce baseline,
-    per query — quantifies what bucketing gives up (VERDICT: a scale path
-    without a recall number is unquantified)."""
+def _recall(spark: SparkSession, sf_dir: str, topk) -> DataFrame:
+    """recall@k per query of a scale path's ``topk(spark, sf_dir)`` vs the
+    exact bruteforce baseline — quantifies what bucketing gives up
+    (VERDICT: a scale path without a recall number is unquantified)."""
     bf = ann_bruteforce_topk(spark, sf_dir).select("query_id", "cand_id")
-    ls = (
-        ann_lsh_topk(spark, sf_dir)
+    hits = (
+        topk(spark, sf_dir)
         .select("query_id", "cand_id")
         .withColumn("hit", F.lit(1))
     )
     return (
-        bf.join(ls, ["query_id", "cand_id"], "left")
+        bf.join(hits, ["query_id", "cand_id"], "left")
         .groupBy("query_id")
         .agg(
             F.round(
@@ -237,37 +241,28 @@ def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANN_LSH_RECALL_SQL = f"""
+def _recall_sql(topk_sql: str) -> str:
+    return f"""
 SELECT b.query_id,
        ROUND(SUM(CASE WHEN l.cand_id IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE
              / {TOP_K}, 4) AS recall_at_k
 FROM ({ANN_SQL}) b
-LEFT JOIN ({ANN_LSH_SQL}) l
+LEFT JOIN ({topk_sql}) l
   ON b.query_id = l.query_id AND b.cand_id = l.cand_id
 GROUP BY b.query_id
 ORDER BY b.query_id
 """
 
 
+def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """recall@k of the LSH scale path (:func:`_recall`)."""
+    return _recall(spark, sf_dir, ann_lsh_topk)
+
+
 def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """recall@k of the IVF scale path vs the exact bruteforce baseline,
-    per query — fully oracle-checked now that the codebook is literal."""
-    bf = ann_bruteforce_topk(spark, sf_dir).select("query_id", "cand_id")
-    iv = (
-        ann_ivf_topk(spark, sf_dir)
-        .select("query_id", "cand_id")
-        .withColumn("hit", F.lit(1))
-    )
-    return (
-        bf.join(iv, ["query_id", "cand_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.round(
-                F.sum(F.coalesce(F.col("hit"), F.lit(0))) / F.lit(TOP_K), 4
-            ).alias("recall_at_k")
-        )
-        .orderBy("query_id")
-    )
+    """recall@k of the IVF scale path (:func:`_recall`) — fully
+    oracle-checked now that the codebook is literal."""
+    return _recall(spark, sf_dir, ann_ivf_topk)
 
 
 # IVF codebook: deterministic literal centroids (r2 VERDICT #10 — replaces
@@ -281,20 +276,6 @@ _CENT = [
     for c in range(K_IVF)
 ]
 _CENT_NORM2 = [sum(x * x for x in row) for row in _CENT]
-
-
-def _dot_lits(emb_col: Column, lits: list[float]) -> Column:
-    """dot(emb, literal vector) as a left fold — element order d = 0..63
-    matches DuckDB's LIST_DOT_PRODUCT exactly (proven-portable shape)."""
-    return F.aggregate(
-        F.zip_with(
-            emb_col,
-            F.array(*[F.lit(x) for x in lits]),
-            lambda x, wv: x.cast("double") * wv,
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def _ivf_scores(emb_col: Column) -> Column:
@@ -392,18 +373,6 @@ WHERE rank <= {TOP_K}
 ORDER BY query_id, rank
 """
 
-ANN_IVF_RECALL_SQL = f"""
-SELECT b.query_id,
-       ROUND(SUM(CASE WHEN l.cand_id IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE
-             / {TOP_K}, 4) AS recall_at_k
-FROM ({ANN_SQL}) b
-LEFT JOIN ({ANN_IVF_SQL}) l
-  ON b.query_id = l.query_id AND b.cand_id = l.cand_id
-GROUP BY b.query_id
-ORDER BY b.query_id
-"""
-
-
 def _embedding_blocked(e: DataFrame) -> DataFrame:
     """Hierarchical sign-LSH blocking over a (vec_id, embedding) frame as
     ONE window chain, the oracle's ``k``: (vec_id, embedding, s0, s1, s2,
@@ -417,6 +386,7 @@ def _embedding_blocked(e: DataFrame) -> DataFrame:
         import numpy as np
         import pandas as pd
 
+        prepare_worker()
         m = np.stack(emb.to_numpy()).astype("float64")
         bits = (m @ _W28_T) > 0.0  # n×28 sign matrix, one vectorized matmul
         return pd.Series((bits @ _W28_POW).astype("int64"))
@@ -494,6 +464,7 @@ def _near_dup_blocked(e: DataFrame) -> DataFrame:
         import numpy as np
         import pandas as pd
 
+        prepare_worker()
         ids = pdf["vec_id"].to_numpy()
         n = len(ids)
         if n < 2:
@@ -724,9 +695,9 @@ QUERIES = {
 ORACLES = {
     "ann_bruteforce_topk": ANN_SQL,
     "ann_lsh_topk": ANN_LSH_SQL,
-    "ann_lsh_recall": ANN_LSH_RECALL_SQL,
+    "ann_lsh_recall": _recall_sql(ANN_LSH_SQL),
     "ann_ivf_topk": ANN_IVF_SQL,
-    "ann_ivf_recall": ANN_IVF_RECALL_SQL,
+    "ann_ivf_recall": _recall_sql(ANN_IVF_SQL),
     "embedding_near_dup_pairs": NEAR_DUP_SQL,
     "near_dup_clusters": _near_dup_clusters_sql(),
     "label_centroids": CENTROID_SQL,

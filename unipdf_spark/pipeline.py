@@ -6,12 +6,13 @@ Design (SURVEY §3.1 "Spark lifecycle equivalent"):
          → spans_out (+ per-partition lineage/metrics) → sink / verification
 
 All tokenize/classify work happens inside Arrow-batched Python workers — never
-per-row Python in the driver plan. Every per-doc stage in the package (render,
-extract, tables, media decode, HTML strip, corpus ingest) has one worker
-shape, :func:`map_docs`: a per-doc function over one input row's values,
-with the batch loop, output columns and lineage columns (``partition_id``,
-``elapsed_ms``) owned by the helper. The only cross-document relational ops are
-the explicit salted repartition and the verification join. Checkpoint
+per-row Python in the driver plan. Every per-row Python pass in the package
+(render, extract, tables, media decode, HTML strip, corpus ingest, MinHash,
+SimHash, pair Jaccard) has one worker shape, :func:`map_docs`: a per-row
+function over one input row's values, with the batch loop, output columns and
+lineage columns (``partition_id``, ``elapsed_ms``) owned by the helper. The
+only cross-document relational ops are the explicit salted repartition and the
+verification join. Checkpoint
 bookkeeping is a JSON commit log, read and written with the stdlib, without a
 Spark job.
 
@@ -53,21 +54,20 @@ ARROW_BATCH_CONF = {
     "spark.sql.adaptive.enabled": "true",
 }
 
-# Spark names each socket ``<dir>/.<uuid4>.sock``: 43 bytes after the
-# directory, and the whole path must fit Linux's 107-byte ``sun_path``.
-SOCKET_NAME_LEN = 43
-SUN_PATH_MAX = 107
+# Spark rejects a ``spark.python.unix.domain.socket.dir`` longer than 61
+# characters, which keeps its socket paths ``<dir>/.<uuid4>.sock`` (43 more
+# bytes) inside Linux's 107-byte ``sun_path``.
+SOCKET_DIR_MAX = 61
 
 
 @functools.cache
 def socket_dir() -> str:
     """A private (0700) directory for this process's Spark sessions' Unix
     domain sockets, made once and removed at interpreter exit. It lies
-    under ``tempfile.gettempdir()`` when a socket path there fits
-    ``sun_path``, else under ``/tmp``."""
+    under ``tempfile.gettempdir()`` when its path there is at most
+    SOCKET_DIR_MAX characters long, else under ``/tmp``."""
     base = tempfile.gettempdir()
-    if len(os.path.join(base, "spark-uds-XXXXXXXX")) + SOCKET_NAME_LEN \
-            > SUN_PATH_MAX:
+    if len(os.path.join(base, "spark-uds-XXXXXXXX")) > SOCKET_DIR_MAX:
         base = "/tmp"
     path = tempfile.mkdtemp(prefix="spark-uds-", dir=base)
     atexit.register(shutil.rmtree, path, True)
@@ -123,7 +123,9 @@ def prepare_worker() -> None:
     """At the start of the first Spark task a Python worker process runs,
     cut two fixed costs of every later task on that reused worker;
     elsewhere (the driver, tests calling :func:`doc_worker` directly) do
-    nothing. Every ``mapInPandas`` batch function calls this first.
+    nothing. :func:`doc_worker` calls this first, and so does every Python
+    function Spark runs outside :func:`map_docs`: ``@pandas_udf`` bodies and
+    the functions given to ``applyInPandas``/``applyInPandasWithState``.
 
     - Make ``zipimporter.invalidate_caches`` a no-op. PySpark's
       ``setup_spark_files`` calls ``importlib.invalidate_caches()`` at the
@@ -196,8 +198,9 @@ def doc_worker(per_doc_fn, ddl: str):
 def map_docs(df: DataFrame, per_doc_fn, ddl: str) -> DataFrame:
     """``df`` → ``ddl`` rows, one ``per_doc_fn`` call per input row inside
     an Arrow-batched ``mapInPandas`` worker (:func:`doc_worker`); ``df``'s
-    columns, in order, are ``per_doc_fn``'s arguments. Every per-doc stage
-    goes through here; ``per_doc_fn`` keeps its own per-row error
+    columns, in order, are ``per_doc_fn``'s arguments. Every per-row
+    Python pass goes through here, and this is the package's one
+    ``mapInPandas`` call; ``per_doc_fn`` keeps its own per-row error
     handling."""
     return df.mapInPandas(doc_worker(per_doc_fn, ddl), schema=ddl)
 

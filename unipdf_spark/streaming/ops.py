@@ -13,7 +13,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..pipeline import map_docs, run_extraction
+from ..pipeline import map_docs, prepare_worker, run_extraction
 
 SESSION_GAP_S = 1800
 
@@ -51,6 +51,7 @@ def _session_fn(
 ) -> Iterator[pd.DataFrame]:
     """Gap-based session assembly with timeout-driven emission (the streaming
     analog of the extractor's gap-based clustering, SURVEY §2.3)."""
+    prepare_worker()
     (user_id,) = key
     if state.hasTimedOut:
         start, last, n, total = state.get
@@ -132,6 +133,7 @@ def _dedup_fn(
     remembers whether the hash was ever emitted; later arrivals are flagged
     duplicates. The state is one int per distinct hash — the streaming analog
     of dedup_exact's canonical pick."""
+    prepare_worker()
     (text_hash,) = key
     seen = state.get[0] if state.exists else 0
     rows = []
@@ -170,6 +172,7 @@ def _lsh_cand_fn(
     boilerplate bucket emits ≤ MAX_BUCKET pairs per arrival, never n²),
     while arrivals beyond the cap still pair against the stored sample, so
     a hot cluster keeps reporting instead of going silent."""
+    prepare_worker()
     from ..operators.dedup import MAX_BUCKET
 
     band, band_hash = key
@@ -198,7 +201,7 @@ def streaming_minhash_candidates(docs: DataFrame) -> DataFrame:
     (true Jaccard) stays a batch join over the candidate output."""
     from ..operators.dedup import minhash_signatures_pandas, band_table
 
-    # mapInPandas is streaming-capable: the numpy signature path (bit-
+    # map_docs is streaming-capable: the numpy signature path (bit-
     # identical to the column-expression form, see dedup.py) serves
     # micro-batches too — the interpreted-HOF fold was the per-batch cost
     bands = band_table(minhash_signatures_pandas(docs))
@@ -222,6 +225,7 @@ def _reassemble_fn(
     its own micro-batch (the splitter derives them from one input row),
     so no state survives calls — the group step exists only because a
     plain groupBy aggregate is not available mid-stream."""
+    prepare_worker()
     parts: list[tuple[int, str]] = []
     for pdf in pdfs:
         parts.extend(zip(pdf["part_idx"], pdf["text"]))
@@ -244,7 +248,14 @@ def streaming_render_extract_reassemble(docs: DataFrame,
     sampling pass a stream cannot do), then reassemble per doc via a
     stateless applyInPandasWithState group step. Small docs take the
     map-only branch; a 1 MB document in a micro-batch no longer holds the
-    trigger hostage on one core."""
+    trigger hostage on one core.
+
+    The output cannot feed another ``applyInPandasWithState`` (such as
+    :func:`streaming_minhash_candidates`) in the same streaming query:
+    Spark rejects the query at ``start()`` with "Multiple
+    applyInPandasWithStates are not supported". A stream that goes on to
+    LSH state maps ``operators.extracted._rex_worker`` itself, without the
+    oversized-doc split."""
     from ..operators.extracted import (PART_CHARS, PARTS_DDL, REX_DDL,
                                        _by_size, _make_splitter,
                                        _rex_worker)
