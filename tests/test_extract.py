@@ -175,10 +175,10 @@ def test_invisible_text_detected_but_extracted():
 
 
 def test_page_inventory_fonts_and_images():
-    from unipdf_spark.pdf.extract import extract_page_inventory
+    from unipdf_spark.pdf.extract import extract_document_profile
 
     _, pdf = make_doc("inv_fonts", "interleaved")
-    inv = extract_page_inventory(pdf)
+    inv = extract_document_profile(pdf)["pages"]
     assert len(inv) >= 1
     assert any(f[0] == "Helvetica" for pg in inv for f in pg["fonts"])
     assert sum(len(pg["images"]) for pg in inv) >= 1
@@ -624,17 +624,20 @@ def test_cmap_resource_dir_loading(tmp_path, monkeypatch):
         cmap_resources._dir_scanned = False
 
 
-def _mini_pdf(content: bytes) -> bytes:
+def _mini_pdf(content: bytes, catalog_extra: bytes = b"",
+              extra_objs: tuple[bytes, ...] = ()) -> bytes:
     """Minimal one-page PDF with Helvetica as /F1 and a raw content stream
-    — planted-coordinate harness for positional search."""
+    — planted-coordinate harness for positional search. ``extra_objs``
+    are numbered from 6 on; ``catalog_extra`` goes into the catalog."""
     objs = [
-        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Catalog /Pages 2 0 R" + catalog_extra + b" >>",
         b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
         b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
         b"/Resources << /Font << /F1 4 0 R >> >> /Contents 5 0 R >>",
         b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
         b"<< /Length " + str(len(content)).encode() + b" >>\nstream\n"
         + content + b"\nendstream",
+        *extra_objs,
     ]
     out = bytearray(b"%PDF-1.4\n")
     offsets = []
@@ -652,18 +655,41 @@ def _mini_pdf(content: bytes) -> bytes:
     return bytes(out)
 
 
+@pytest.mark.parametrize("k, want", [
+    (b"0", "Hello\nyyyy"),
+    (b"[0 1]", "Hello"),
+    (b"[<< /Type /MCR /MCID 0 >>]", "Hello\nyyyy"),
+])
+def test_struct_tree_actual_text_covers_every_mcid_under_k(k, want):
+    """A struct element's ActualText replaces every MCID its /K reaches
+    (an int, an array of ints, an MCR dict): the first MCID carries the
+    text and the rest read empty (e:977), like an in-stream ActualText
+    region. MCID 1 outside the element keeps its own glyphs."""
+    content = (b"/P << /MCID 0 >> BDC BT /F1 12 Tf 72 700 Td (xxxx) Tj ET EMC\n"
+               b"/P << /MCID 1 >> BDC BT /F1 12 Tf 72 680 Td (yyyy) Tj ET EMC\n")
+    pdf = _mini_pdf(
+        content, catalog_extra=b" /StructTreeRoot 6 0 R",
+        extra_objs=(b"<< /Type /StructTreeRoot /K 7 0 R >>",
+                    b"<< /Type /StructElem /S /P /ActualText (Hello) /K "
+                    + k + b" >>"))
+    res = extract_spans(pdf)
+    assert res.error is None
+    assert "\n".join(s["text"] for s in res.spans) == want
+
+
 def test_search_positions_planted_coordinates():
     """Editor.Search/Match analog: term matches carry page-space word
     boxes. Coordinates are PLANTED via explicit Td operators, so x0 is
     exact; vertical extent must bracket the baseline's glyph box."""
-    from unipdf_spark.pdf.extract import search_positions
+    from unipdf_spark.pdf.extract import extract_document_profile
     from unipdf_spark.pdf.std14 import widths_for_basefont
 
     content = (b"BT /F1 12 Tf 72 700 Td (alpha beta) Tj ET\n"
                b"BT /F1 12 Tf 200 650 Td (needle) Tj ET\n")
     pdf = _mini_pdf(content)
 
-    hits = search_positions(pdf, ["needle", "alpha beta", "gamma"])
+    hits = extract_document_profile(
+        pdf, ["needle", "alpha beta", "gamma"])["term_boxes"]
     by_term = {}
     for h in hits:
         by_term.setdefault(h["term"], []).append(h)
@@ -688,14 +714,15 @@ def test_symbol_zapf_builtin_metrics():
     """Standard-14 Symbol / ZapfDingbats without /Widths must use the real
     AFM metrics (reference GetCharMetrics model.go:3340 via its compiled
     tables) — planted Td coordinates verify the advance math end to end."""
-    from unipdf_spark.pdf.extract import search_positions
+    from unipdf_spark.pdf.extract import extract_document_profile
     from unipdf_spark.pdf.std14 import SYMBOL_WIDTHS
 
     # /F1 here is Symbol: 'a' maps to alpha in the built-in encoding
     content = b"BT /F1 12 Tf 100 700 Td (abg) Tj ET\n"
     pdf = _mini_pdf(content).replace(b"/BaseFont /Helvetica",
                                      b"/BaseFont /Symbol")
-    hits = search_positions(pdf, ["αβγ"])  # alpha beta gamma
+    # alpha beta gamma
+    hits = extract_document_profile(pdf, ["αβγ"])["term_boxes"]
     assert len(hits) == 1
     h = hits[0]
     assert abs(h["x0"] - 100.0) < 1e-6
@@ -834,7 +861,7 @@ def test_search_positions_per_rune_subword_box():
     """Per-rune refinement (reference TextMark granularity, e:82): a term
     matching MID-WORD gets the exact sub-word box from the matched chars'
     own glyph boxes, not the whole word's union box."""
-    from unipdf_spark.pdf.extract import search_positions
+    from unipdf_spark.pdf.extract import extract_document_profile
     from unipdf_spark.pdf.std14 import widths_for_basefont
 
     content = b"BT /F1 12 Tf 200 650 Td (needle) Tj ET\n"
@@ -844,13 +871,13 @@ def test_search_positions_per_rune_subword_box():
     def adv(s):
         return sum(widths.get(c, 500) for c in s) * 12.0 / 1000.0
 
-    (h,) = search_positions(pdf, ["eed"])
+    (h,) = extract_document_profile(pdf, ["eed"])["term_boxes"]
     assert h["line_offset"] == 1
     assert abs(h["x0"] - (200.0 + adv("n"))) < 1e-6
     assert abs(h["x1"] - (200.0 + adv("need"))) < 1e-6
     assert h["y0"] <= 650.0 <= h["y1"]
     # suffix match
-    (t,) = search_positions(pdf, ["dle"])
+    (t,) = extract_document_profile(pdf, ["dle"])["term_boxes"]
     assert abs(t["x0"] - (200.0 + adv("nee"))) < 1e-6
     assert abs(t["x1"] - (200.0 + adv("needle"))) < 1e-6
 
@@ -1254,3 +1281,24 @@ def test_make_lines_bisect_matches_full_scan():
         want = [(ln.depth, [w.text for w in ln.words])
                 for ln in make_lines_reference(words)]
         assert got == want, trial
+
+
+def test_extract_public_functions_are_used_outside_tests():
+    """No test-only API in pdf/extract.py: every public top-level function
+    there is referenced by Python code outside the test directories."""
+    import ast
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    module = root / "unipdf_spark" / "pdf" / "extract.py"
+    public = [node.name for node in ast.parse(module.read_text()).body
+              if isinstance(node, ast.FunctionDef)
+              and not node.name.startswith("_")]
+    sources = [path.read_text(encoding="utf-8", errors="replace")
+               for path in root.rglob("*.py")
+               if path != module
+               and "tests" not in path.relative_to(root).parts]
+    unused = [name for name in public
+              if not any(re.search(rf"\b{name}\b", src) for src in sources)]
+    assert public and unused == [], unused

@@ -365,11 +365,11 @@ def test_embedding_near_dup_oracle_parity_with_planted_dups(spark, tmp_path):
         {
             "vec_id": range(len(vecs)),
             "embedding": [[float(np.float32(x)) for x in v] for v in vecs],
-            "label": ["x"] * len(vecs),
+            "label": [0] * len(vecs),
         }
     )
     spark.createDataFrame(
-        pdf, schema="vec_id long, embedding array<float>, label string"
+        pdf, schema="vec_id long, embedding array<float>, label int"
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
 
     got = sorted(
@@ -621,10 +621,10 @@ def test_embedding_swarm_clusters_and_unified_companion(spark, tmp_path):
     pdf = pd.DataFrame({
         "vec_id": range(len(vecs)),
         "embedding": [[float(np.float32(x)) for x in v] for v in vecs],
-        "label": ["x"] * len(vecs),
+        "label": [0] * len(vecs),
     })
     spark.createDataFrame(
-        pdf, schema="vec_id long, embedding array<float>, label string"
+        pdf, schema="vec_id long, embedding array<float>, label int"
     ).coalesce(1).write.mode("overwrite").parquet(
         f"{tmp_path}/embeddings.parquet")
     boiler = "lorem ipsum dolor sit amet consectetur adipiscing elit " * 6

@@ -64,7 +64,6 @@ def test_corrupted_pdfs_never_raise():
     from unipdf_spark.pdf.extract import (
         extract_document_profile,
         extract_lists,
-        extract_page_inventory,
         extract_spans,
         extract_tables,
         extract_text_visibility,
@@ -106,7 +105,6 @@ def test_corrupted_pdfs_never_raise():
         extract_tables(blob)
         extract_lists(blob)
         extract_text_visibility(blob)
-        extract_page_inventory(blob)
         extract_document_profile(blob, terms=["query"])
 
 

@@ -51,6 +51,17 @@ class PdfDict(dict):
     __slots__ = ()
 
 
+def text_string(obj) -> str:
+    """A PDF text string as str (ISO 32000-1 §7.9.2.2): UTF-16BE after a
+    byte order mark (strict: a malformed body raises), else one byte per
+    character read as Latin-1; a non-string object goes through str()."""
+    if isinstance(obj, bytes):
+        if obj.startswith(b"\xfe\xff"):
+            return obj[2:].decode("utf-16-be")
+        return obj.decode("latin-1")
+    return str(obj)
+
+
 class Stream:
     __slots__ = ("dict", "raw", "_decoded")
 

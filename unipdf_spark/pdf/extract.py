@@ -1,17 +1,27 @@
-"""Top-level per-document extraction: pdf_bytes → interleaved spans.
+"""Top-level per-document extraction: pdf_bytes → interleaved spans, tables,
+lists and a structural profile.
 
 Mirrors the lifecycle of ``extractor.New(page).ExtractPageText()``
 (SURVEY §3.1; unipdf extractor/extractor.go:520 → :966) fused with the image
 path (``ExtractPageImages``, e:698) into a single pass — one interpretation of
 the operator stream yields text and media marks in operator order, then the
 layout stage assembles reading-ordered spans.
+
+Every entry point reads a document the same way (SURVEY §3.2 'one
+interpretation'): ``_Document`` parses it once, walks its struct tree once
+and interprets each page once with the struct tree's ActualText applied, so
+spans, tables, lists and the profile all see the same marks. Each entry
+point keeps its own relaxed-mode boundary (core ParserOpts core/core.go:389):
+per-document errors are reported or degrade to partial results, never
+raised — at corpus scale one bad document must not fail a task (SURVEY §4).
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
 from dataclasses import dataclass
 
-from .cos import PdfDocument, PdfError
+from .cos import PdfDocument, PdfError, text_string
 from .interp import (M_MCID, M_OP, M_ORIENT, M_RGB, M_RMODE, M_TEXT,
                      M_X0, M_X1, M_Y0, M_Y1, Interpreter)
 from .layout import assemble_spans
@@ -25,70 +35,130 @@ class ExtractResult:
     error: str | None = None
 
 
-def _page_index_of(doc: PdfDocument, pages: list) -> dict[int, int]:
-    """id(page dict) → page index. Object resolution is cached per document,
-    so a struct element's /Pg resolves to the SAME dict instance as the
-    pages() entry."""
-    return {id(p): i for i, p in enumerate(pages)}
+_PgMcid = tuple[int | None, int]
+_ListItems = list[tuple[list[_PgMcid], list[_PgMcid]]]
 
 
-def _node_page(doc: PdfDocument, node: dict, page_of: dict[int, int],
-               inherited: int | None) -> int | None:
-    """/Pg-qualified page of a struct element (ParentTree semantics,
-    extractor/extractor.go:977): the element's own /Pg, else inherited from
-    the enclosing element, else None (matches any page — legacy documents
-    omitting /Pg keep the document-wide behavior)."""
-    pg = doc.resolve(node.get("Pg"))
-    if isinstance(pg, dict):
-        idx = page_of.get(id(pg))
-        if idx is not None:
-            return idx
-    return inherited
+def _walk_struct_tree(
+    doc: PdfDocument, pages: list
+) -> tuple[dict[_PgMcid, str], list[_ListItems]]:
+    """The struct tree (StructTreeRoot, model/model.go:3710), walked once:
 
+    - (page, MCID) → ActualText (consumed at extractor/extractor.go:977). An
+      element's ActualText covers every MCID under its /K (ints, MCR dicts,
+      nested elements): the first carries the text and the rest read empty,
+      as an in-stream ActualText region does. An enclosing element's
+      ActualText wins over those inside it.
+    - /L list elements → [(label MCIDs, body MCIDs)] per list (PageText.List,
+      e:495: L → LI → Lbl + LBody). A list inside a list belongs to the
+      outer list's items only.
 
-def _struct_tree_actual_text(
-    doc: PdfDocument, page_of: dict[int, int]
-) -> dict[tuple[int | None, int], str]:
-    """(page, MCID) → ActualText from the struct tree (StructTreeRoot,
-    model/model.go:3710; consumed at extractor/extractor.go:977). MCIDs are
-    page-scoped: documents reusing MCID numbers across pages resolve through
-    the element's /Pg (r2 VERDICT missing #5)."""
-    out: dict[tuple[int | None, int], str] = {}
+    MCIDs are page-scoped (ParentTree semantics, e:977): an element's own
+    /Pg, else the enclosing element's, else None, which matches any page
+    (legacy documents omitting /Pg keep the document-wide behavior).
+    Object resolution is cached per document, so a /Pg resolves to the SAME
+    dict instance as its pages() entry. Depth is capped at 64; an
+    unresolvable object ends the walk with what it found so far."""
+    page_of = {id(p): i for i, p in enumerate(pages)}
+    actual_text: dict[_PgMcid, str] = {}
+    lists: list[_ListItems] = []
+
+    def page(node: dict, inherited: int | None) -> int | None:
+        pg = doc.resolve(node.get("Pg"))
+        if isinstance(pg, dict):
+            return page_of.get(id(pg), inherited)
+        return inherited
+
+    def kids(node: dict) -> list:
+        k = doc.resolve(node.get("K"))
+        return [doc.resolve(kid) for kid in (k if isinstance(k, list) else [k])]
+
+    def mcids(k, pg: int | None, depth: int) -> list[_PgMcid]:
+        if depth > 64:
+            return []
+        k = doc.resolve(k)
+        if isinstance(k, (int, float)):
+            return [(pg, int(k))]
+        if isinstance(k, list):
+            return [m for kid in k for m in mcids(kid, pg, depth + 1)]
+        if not isinstance(k, dict):
+            return []
+        pg = page(k, pg)
+        if str(k.get("Type") or "") == "MCR":
+            mcid = doc.resolve(k.get("MCID"))
+            return [(pg, int(mcid))] if isinstance(mcid, (int, float)) else []
+        return mcids(k.get("K"), pg, depth + 1)
+
+    def list_items(node: dict, pg: int | None, depth: int) -> _ListItems:
+        items: _ListItems = []
+        for li in kids(node):
+            if not isinstance(li, dict) or str(li.get("S") or "") != "LI":
+                continue
+            li_pg = page(li, pg)
+            lbl: list[_PgMcid] = []
+            body: list[_PgMcid] = []
+            for part in kids(li):
+                if not isinstance(part, dict):
+                    continue
+                s = str(part.get("S") or "")
+                if s in ("Lbl", "LBody"):
+                    (lbl if s == "Lbl" else body).extend(
+                        mcids(part.get("K"), page(part, li_pg), depth))
+            if lbl or body:
+                items.append((lbl, body))
+        return items
+
+    def walk(node, pg: int | None, depth: int, in_list: bool) -> None:
+        if depth > 64 or not isinstance(node, dict):
+            return
+        pg = page(node, pg)
+        at = node.get("ActualText")
+        if at is not None:
+            text = text_string(doc.resolve(at))
+            for i, key in enumerate(mcids(node.get("K"), pg, depth + 1)):
+                actual_text.setdefault(key, text if i == 0 else "")
+        if not in_list and str(node.get("S") or "") == "L":
+            items = list_items(node, pg, depth + 1)
+            if items:
+                lists.append(items)
+            in_list = True
+        for kid in kids(node):
+            walk(kid, pg, depth + 1, in_list)
+
     try:
-        cat = doc.catalog()
-        root = doc.resolve(cat.get("StructTreeRoot"))
-        if not isinstance(root, dict):
-            return out
-
-        def walk(node, pg: int | None, depth=0):
-            if depth > 64 or not isinstance(node, dict):
-                return
-            pg = _node_page(doc, node, page_of, pg)
-            at = node.get("ActualText")
-            k = doc.resolve(node.get("K"))
-            if isinstance(k, (int, float)) and at is not None:
-                txt = (
-                    at.decode("utf-16-be")[1:]
-                    if isinstance(at, bytes) and at.startswith(b"\xfe\xff")
-                    else (at.decode("latin-1") if isinstance(at, bytes) else str(at))
-                )
-                out[(pg, int(k))] = txt
-                return
-            kids = k if isinstance(k, list) else [k]
-            for kid in kids:
-                kid = doc.resolve(kid)
-                if isinstance(kid, dict):
-                    walk(kid, pg, depth + 1)
-                elif isinstance(kid, (int, float)) and at is not None:
-                    out[(pg, int(kid))] = str(at)
-
-        walk(root, None)
+        walk(doc.resolve(doc.catalog().get("StructTreeRoot")), None, 0, False)
     except PdfError:
         pass
-    return out
+    return actual_text, lists
 
 
-def extract_spans(pdf_bytes: bytes, dehyphenate: bool = True,
+class _Document:
+    """One parse of a PDF: its pages, its struct tree walked once, and one
+    interpretation per page on demand."""
+
+    def __init__(self, pdf_bytes: bytes):
+        self.doc = PdfDocument(pdf_bytes, relaxed=True)
+        self.pages = self.doc.pages()
+        self.actual_text, self.lists = _walk_struct_tree(self.doc, self.pages)
+
+    def interpreted(self) -> Iterator[tuple[int, Interpreter]]:
+        """(page index, interpreter after ``run()``) in page order. A page
+        that fails raises to the caller after the earlier pages were
+        yielded, so a caller can keep what it finished."""
+        for page_idx, page in enumerate(self.pages):
+            # page-scoped MCID view: /Pg-qualified entries for THIS page,
+            # plus unqualified (legacy) entries that match any page
+            page_at = {
+                mcid: txt
+                for (pg, mcid), txt in self.actual_text.items()
+                if pg is None or pg == page_idx
+            }
+            interp = Interpreter(self.doc, page, mcid_actual_text=page_at)
+            interp.run()
+            yield page_idx, interp
+
+
+def extract_spans(pdf_bytes: bytes,
                   area: tuple[float, float, float, float] | None = None
                   ) -> ExtractResult:
     """Extract the interleaved span sequence from a (possibly multi-page) PDF.
@@ -97,28 +167,16 @@ def extract_spans(pdf_bytes: bytes, dehyphenate: bool = True,
     media whose boxes intersect it — the reference's ``ApplyArea`` (e:886)
     reduces the page's marks to an area and rebuilds the text the same way.
 
-    Relaxed-mode philosophy (core ParserOpts core/core.go:389): per-document
-    errors are reported in the result, never raised — at corpus scale one bad
-    document must not fail a task (SURVEY §4)."""
+    Relaxed: any failure comes back as the result's ``error``, with no
+    spans."""
     try:
-        doc = PdfDocument(pdf_bytes, relaxed=True)
-        pages = doc.pages()
-        if not pages:
+        d = _Document(pdf_bytes)
+        if not d.pages:
             return ExtractResult([], 0, 0, "no pages")
-        mcid_at = _struct_tree_actual_text(doc, _page_index_of(doc, pages))
         all_spans: list[dict] = []
         n_misses = 0
         offset_base = 0
-        for page_idx, page in enumerate(pages):
-            # page-scoped MCID view: /Pg-qualified entries for THIS page,
-            # plus unqualified (legacy) entries that match any page
-            page_at = {
-                mcid: txt
-                for (pg, mcid), txt in mcid_at.items()
-                if pg is None or pg == page_idx
-            }
-            interp = Interpreter(doc, page, mcid_actual_text=page_at)
-            interp.run()
+        for _, interp in d.interpreted():
             marks, media = interp.marks, interp.media
             if area is not None:
                 ax0, ay0, ax1, ay1 = area
@@ -131,8 +189,7 @@ def extract_spans(pdf_bytes: bytes, dehyphenate: bool = True,
                 media = [m for m in media
                          if _hits(min(m.x, m.x1), min(m.y, m.y1),
                                   max(m.x, m.x1), max(m.y, m.y1))]
-            spans = assemble_spans(marks, media, dehyphenate,
-                                   rulings=interp.rulings)
+            spans = assemble_spans(marks, media, rulings=interp.rulings)
             for s in spans:
                 s["offset"] += offset_base
             if spans:
@@ -204,9 +261,9 @@ def _term_boxes_for_page(marks: list, terms: list[str],
 
 def extract_document_profile(pdf_bytes: bytes,
                              terms: list[str] | None = None) -> dict:
-    """ONE parse + one interpreter pass per page feeding every structural
-    inventory (the SURVEY §3.2 'one interpretation' principle — r5 VERDICT
-    'What's wrong' #2 had doc_inventory re-parsing per feature family):
+    """One interpreter pass per page feeding every structural inventory
+    (r5 VERDICT 'What's wrong' #2 had doc_inventory re-parsing per feature
+    family):
 
     - ``pages``: per-page font/image inventories (PageFonts/PageImages,
       e:536/:510),
@@ -218,20 +275,14 @@ def extract_document_profile(pdf_bytes: bytes,
     - ``n_chars``/``n_invisible``: invisible-text statistics (render mode
       3 / white fill, e:1018).
 
-    Relaxed per-document: a mid-document failure keeps the pages already
-    profiled (consistent with the relaxed-mode philosophy — the replaced
-    extract_page_inventory/extract_text_visibility accumulated partial
-    per-page results the same way; r6 ADVICE)."""
+    Relaxed: a mid-document failure keeps the pages already profiled."""
     pages_out: list[dict] = []
     placements: list[dict] = []
     term_boxes: list[dict] = []
     strokes: list[dict] = []
     n_chars = n_invisible = 0
     try:
-        doc = PdfDocument(pdf_bytes, relaxed=True)
-        for page_idx, page in enumerate(doc.pages()):
-            interp = Interpreter(doc, page)
-            interp.run()
+        for page_idx, interp in _Document(pdf_bytes).interpreted():
             for rgb, points in interp.stroke_paths:
                 strokes.append({"page": page_idx, "color": rgb,
                                 "points": points})
@@ -275,26 +326,17 @@ def extract_image_placements(pdf_bytes: bytes) -> list[dict]:
     return extract_document_profile(pdf_bytes)["placements"]
 
 
-def search_positions(pdf_bytes: bytes, terms: list[str]) -> list[dict]:
-    """Positional term search (Editor.Search/Match analog with page boxes,
-    e:82/:649) — thin wrapper over :func:`extract_document_profile`.
-    Word-box granularity: the union box is exact whenever the term spans
-    whole words (the reference's per-rune boxes refine within a word)."""
-    return extract_document_profile(pdf_bytes, terms)["term_boxes"]
-
-
 def extract_tables(pdf_bytes: bytes) -> list[dict]:
     """Structured table extraction: the TextTable / TableCell API analog
     (extractor/extractor.go:35 `TextTable`, :899 `TableCell`). Returns one
     dict per detected table: {page, n_rows, n_cols, cells} with the full
     (row, col)-addressable cell-text matrix (empty string for empty cells),
-    independent of the row-major serialization in the span stream."""
+    independent of the row-major serialization in the span stream.
+
+    Relaxed: a failure returns the tables found before it."""
     out: list[dict] = []
     try:
-        doc = PdfDocument(pdf_bytes, relaxed=True)
-        for page_idx, page in enumerate(doc.pages()):
-            interp = Interpreter(doc, page)
-            interp.run()
+        for page_idx, interp in _Document(pdf_bytes).interpreted():
             tables: list = []
             assemble_spans(interp.marks, interp.media, rulings=interp.rulings,
                            tables_out=tables)
@@ -324,99 +366,6 @@ def extract_text_visibility(pdf_bytes: bytes) -> dict:
     return {"n_chars": p["n_chars"], "n_invisible": p["n_invisible"]}
 
 
-def extract_page_inventory(pdf_bytes: bytes) -> list[dict]:
-    """Per-page font and image inventories (PageFonts / PageImages,
-    extractor/extractor.go:536/:510) — thin wrapper over
-    :func:`extract_document_profile`."""
-    return extract_document_profile(pdf_bytes)["pages"]
-
-
-_PgMcid = tuple[int | None, int]
-
-
-def _collect_mcids(doc: PdfDocument, node, page_of: dict[int, int],
-                   pg: int | None, depth: int = 0) -> list[_PgMcid]:
-    """All (page, MCID) pairs under a struct element's /K (ints, MCR dicts,
-    nested elems); MCR and nested elements may override /Pg."""
-    if depth > 64:
-        return []
-    node = doc.resolve(node)
-    if isinstance(node, (int, float)):
-        return [(pg, int(node))]
-    if isinstance(node, list):
-        out: list[_PgMcid] = []
-        for kid in node:
-            out.extend(_collect_mcids(doc, kid, page_of, pg, depth + 1))
-        return out
-    if isinstance(node, dict):
-        pg = _node_page(doc, node, page_of, pg)
-        if str(node.get("Type") or "") == "MCR" and "MCID" in node:
-            return [(pg, int(doc.resolve(node["MCID"])))]
-        if "K" in node:
-            return _collect_mcids(doc, node["K"], page_of, pg, depth + 1)
-    return []
-
-
-def _struct_tree_lists(
-    doc: PdfDocument, page_of: dict[int, int]
-) -> list[list[tuple[list[_PgMcid], list[_PgMcid]]]]:
-    """Struct-tree /L list elements → [(label MCIDs, body MCIDs)] per list
-    (PageText.List, extractor/extractor.go:495: L → LI → Lbl + LBody),
-    MCIDs /Pg-qualified."""
-    lists: list[list[tuple[list[_PgMcid], list[_PgMcid]]]] = []
-    try:
-        root = doc.resolve(doc.catalog().get("StructTreeRoot"))
-    except PdfError:
-        return lists
-    if not isinstance(root, dict):
-        return lists
-
-    def walk(node, pg: int | None, depth: int = 0) -> None:
-        if depth > 64:
-            return
-        node = doc.resolve(node)
-        if isinstance(node, list):
-            for kid in node:
-                walk(kid, pg, depth + 1)
-            return
-        if not isinstance(node, dict):
-            return
-        pg = _node_page(doc, node, page_of, pg)
-        if str(node.get("S") or "") == "L":
-            items: list[tuple[list[_PgMcid], list[_PgMcid]]] = []
-            kids = doc.resolve(node.get("K"))
-            for li in kids if isinstance(kids, list) else [kids]:
-                li = doc.resolve(li)
-                if not isinstance(li, dict) or str(li.get("S") or "") != "LI":
-                    continue
-                li_pg = _node_page(doc, li, page_of, pg)
-                lbl: list[_PgMcid] = []
-                body: list[_PgMcid] = []
-                lk = doc.resolve(li.get("K"))
-                for part in lk if isinstance(lk, list) else [lk]:
-                    part = doc.resolve(part)
-                    if not isinstance(part, dict):
-                        continue
-                    s = str(part.get("S") or "")
-                    p_pg = _node_page(doc, part, page_of, li_pg)
-                    if s == "Lbl":
-                        lbl.extend(
-                            _collect_mcids(doc, part.get("K"), page_of, p_pg))
-                    elif s == "LBody":
-                        body.extend(
-                            _collect_mcids(doc, part.get("K"), page_of, p_pg))
-                if lbl or body:
-                    items.append((lbl, body))
-            if items:
-                lists.append(items)
-            return
-        if "K" in node:
-            walk(node["K"], pg, depth + 1)
-
-    walk(root, None)
-    return lists
-
-
 def extract_lists(pdf_bytes: bytes) -> list[dict]:
     """Structured list extraction (PageText.List, extractor/extractor.go:495):
     struct-tree L/LI/Lbl/LBody elements resolved to their marked-content
@@ -425,19 +374,17 @@ def extract_lists(pdf_bytes: bytes) -> list[dict]:
 
     MCIDs are /Pg-qualified (ParentTree semantics, e:977): documents that
     reuse MCID numbers on different pages resolve correctly; elements
-    without /Pg keep the legacy any-page behavior."""
+    without /Pg keep the legacy any-page behavior.
+
+    Relaxed: a failure returns the lists completed before it (none when
+    a page fails to interpret)."""
     out: list[dict] = []
     try:
-        doc = PdfDocument(pdf_bytes, relaxed=True)
-        pages = doc.pages()
-        page_of = _page_index_of(doc, pages)
-        lists = _struct_tree_lists(doc, page_of)
-        if not lists:
+        d = _Document(pdf_bytes)
+        if not d.lists:
             return out
         mcid_text: dict[tuple[int, int], str] = {}
-        for page_idx, page in enumerate(pages):
-            interp = Interpreter(doc, page)
-            interp.run(include_annotations=False)
+        for page_idx, interp in d.interpreted():
             for m in sorted(interp.marks, key=lambda m: m[M_OP]):
                 if m[M_MCID] >= 0:
                     key = (page_idx, m[M_MCID])
@@ -450,10 +397,11 @@ def extract_lists(pdf_bytes: bytes) -> list[dict]:
                     parts.append(mcid_text.get((pg, i), ""))
                 else:  # unqualified: concatenate across pages in order
                     parts.append("".join(
-                        mcid_text.get((p, i), "") for p in range(len(pages))))
+                        mcid_text.get((p, i), "")
+                        for p in range(len(d.pages))))
             return "".join(parts).strip()
 
-        for items in lists:
+        for items in d.lists:
             out.append(
                 {
                     "items": [

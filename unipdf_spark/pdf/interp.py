@@ -15,9 +15,10 @@ Re-expresses unipdf's processor + extractor switch:
 * Form XObject recursion with per-name memoized parse (e:625 ``_gd``);
   image ``Do``/``BI`` → media marks in operator order (e:949/:687 semantics,
   identity hash instead of pixel decode);
-* BDC/EMC ActualText override (e:977 block) — direct /ActualText property
-  supported; MCID struct-tree lookup is handled by the caller passing
-  ``mcid_actual_text``.
+* BDC/EMC ActualText override (e:977 block) — a direct /ActualText
+  property, or the struct tree's ActualText for the region's /MCID:
+  ``mcid_actual_text`` is this page's MCID → text map, built by the one
+  struct-tree walk in ``extract.py``.
 """
 
 from __future__ import annotations
@@ -28,7 +29,7 @@ from typing import NamedTuple
 
 from .. import schema
 from .content import InlineImage, Operation, parse_content
-from .cos import PdfDict, Ref, Stream
+from .cos import PdfDict, Ref, Stream, text_string
 from . import fonts as fonts_mod
 
 Matrix = tuple[float, float, float, float, float, float]
@@ -193,12 +194,11 @@ class Interpreter:
         self.page_box = (llx, lly, urx, ury)
 
     # -- public -------------------------------------------------------------
-    def run(self, include_annotations: bool = True) -> None:
+    def run(self) -> None:
         content = self.doc.page_content(self.page)
         ops = parse_content(content)
         self._exec(ops, _GState(), self.resources, 0)
-        if include_annotations:
-            self._run_annotations()
+        self._run_annotations()
 
     def _run_annotations(self) -> None:
         """Annotation appearance streams appended after page content
@@ -431,11 +431,7 @@ class Interpreter:
                     if isinstance(props, dict) and "MCID" in props:
                         self.cur_mcid = int(props["MCID"])
                     if at is not None:
-                        actual_text = (
-                            at.decode("utf-16-be")[1:]
-                            if isinstance(at, bytes) and at.startswith(b"\xfe\xff")
-                            else (at.decode("latin-1") if isinstance(at, bytes) else str(at))
-                        )
+                        actual_text = text_string(at)
                         actual_consumed = False
                         mc_depth_at_actual = mc_depth
                 elif o == "m" and len(p) == 2:

@@ -1404,6 +1404,25 @@ def decode_embedded(data: bytes, width_hint: int = 0, height_hint: int = 0):
     pat_dicts: dict[int, list] = {}  # segment number → pattern bitmaps
     huff_tables: dict[int, HuffTable] = {}  # segment number → custom table
 
+    def place(rows, rx: int, ry: int, rw: int, rh: int,
+              replace: bool = False) -> None:
+        """Compose a decoded region into the page, clipped to it: OR by
+        default, REPLACE for refinement (§6.3.2). Without a page info
+        segment, the first region sizes the page."""
+        nonlocal page, page_w, page_h
+        if page is None:
+            page_w, page_h = max(page_w, rx + rw), max(page_h, ry + rh)
+            page = [bytearray(page_w) for _ in range(page_h)]
+        for y in range(min(rh, len(page) - ry)):
+            prow = page[ry + y]
+            row = rows[y]
+            if replace:
+                for x in range(min(rw, len(prow) - rx)):
+                    prow[rx + x] = row[x]
+            else:
+                for x in range(min(rw, len(prow) - rx)):
+                    prow[rx + x] |= row[x]
+
     while pos + 11 <= n:
         # --- segment header (§7.2) ---
         seg_number = _u32(data, pos)
@@ -1481,17 +1500,7 @@ def decode_embedded(data: bytes, width_hint: int = 0, height_hint: int = 0):
                 ]
             else:
                 rows = decode_generic(body, rw, rh, template, at, tpgdon)
-            if page is None:
-                page_w, page_h = max(page_w, rx + rw), max(page_h, ry + rh)
-                page = [bytearray(page_w) for _ in range(page_h)]
-            for y in range(rh):
-                if ry + y >= len(page):
-                    break
-                prow = page[ry + y]
-                row = rows[y]
-                for x in range(rw):
-                    if rx + x < len(prow):
-                        prow[rx + x] |= row[x]  # OR composition (default)
+            place(rows, rx, ry, rw, rh)
         elif seg_type == 0:  # symbol dictionary
             in_syms: list = []
             in_tables: list = []
@@ -1510,17 +1519,7 @@ def decode_embedded(data: bytes, width_hint: int = 0, height_hint: int = 0):
                     tr_tables.append(huff_tables[r])
             rows, rw, rh, rx, ry = decode_text_region(seg, symbols,
                                                       tr_tables)
-            if page is None:
-                page_w, page_h = max(page_w, rx + rw), max(page_h, ry + rh)
-                page = [bytearray(page_w) for _ in range(page_h)]
-            for y in range(rh):
-                if ry + y >= len(page):
-                    break
-                prow = page[ry + y]
-                row = rows[y]
-                for x in range(rw):
-                    if rx + x < len(prow):
-                        prow[rx + x] |= row[x]
+            place(rows, rx, ry, rw, rh)
         elif seg_type in (40, 42, 43):  # generic refinement region (§7.4.7)
             rw, rh = _u32(seg, 0), _u32(seg, 4)
             rx, ry = _u32(seg, 8), _u32(seg, 12)
@@ -1540,27 +1539,18 @@ def decode_embedded(data: bytes, width_hint: int = 0, height_hint: int = 0):
                                        signed=True),
                     ))
                     off += 2
-            if page is None:
-                page_w, page_h = max(page_w, rx + rw), max(page_h, ry + rh)
-                page = [bytearray(page_w) for _ in range(page_h)]
             # reference = the page region being refined (no intermediate
-            # buffers in this subset); result REPLACES it (§6.3.2)
+            # buffers in this subset; before the first region the page is
+            # all zeros); result REPLACES it (§6.3.2)
             ref = []
             for y in range(rh):
                 row = (page[ry + y][rx : rx + rw]
-                       if ry + y < len(page) else b"")
+                       if page is not None and ry + y < len(page) else b"")
                 ref.append(bytearray(row) + bytearray(rw - len(row)))
             rows = decode_refinement(
                 MQDecoder(seg[off:]), {}, rw, rh, template, at,
                 ref, rw, rh, 0, 0, tpgron)
-            for y in range(rh):
-                if ry + y >= len(page):
-                    break
-                prow = page[ry + y]
-                row = rows[y]
-                for x in range(rw):
-                    if rx + x < len(prow):
-                        prow[rx + x] = row[x]
+            place(rows, rx, ry, rw, rh, replace=True)
         elif seg_type == 53:  # custom Huffman table definition
             huff_tables[seg_number] = parse_table_segment(seg)
         elif seg_type == 16:  # pattern dictionary
@@ -1570,17 +1560,7 @@ def decode_embedded(data: bytes, width_hint: int = 0, height_hint: int = 0):
             for r in referred:
                 patterns.extend(pat_dicts.get(r, []))
             rows, rw, rh, rx, ry = decode_halftone_region(seg, patterns)
-            if page is None:
-                page_w, page_h = max(page_w, rx + rw), max(page_h, ry + rh)
-                page = [bytearray(page_w) for _ in range(page_h)]
-            for y in range(rh):
-                if ry + y >= len(page):
-                    break
-                prow = page[ry + y]
-                row = rows[y]
-                for x in range(rw):
-                    if rx + x < len(prow):
-                        prow[rx + x] |= row[x]
+            place(rows, rx, ry, rw, rh)
         # 49/50/51/62: end-of-* and extension segments — nothing to do
 
     if page is None:

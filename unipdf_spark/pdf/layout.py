@@ -185,7 +185,7 @@ class Para:
         if ln.op0 < self.min_op:
             self.min_op = ln.op0
 
-    def text(self, dehyphenate: bool = True) -> str:
+    def text(self) -> str:
         parts: list[str] = []
         for ln in sorted(self.lines, key=attrgetter("depth")):
             t = ln.text()
@@ -194,8 +194,7 @@ class Para:
                 continue
             prev = parts[-1]
             if (
-                dehyphenate
-                and prev
+                prev
                 and prev[-1] in HYPHENS
                 and t[:1].isalpha()
                 and t[:1].islower()
@@ -461,7 +460,7 @@ class TablePara:
         self.n_rows, self.n_cols = n_rows, n_cols
         self.cells: list[list[str]] = cells or []
 
-    def text(self, dehyphenate: bool = True) -> str:
+    def text(self) -> str:
         return self._text
 
 
@@ -801,7 +800,6 @@ def reading_order(paras: list[Para]) -> list[Para]:
 def assemble_spans(
     marks: list[TextMark],
     media: list[MediaMark],
-    dehyphenate: bool = True,
     rulings=None,
     tables_out: list | None = None,
 ) -> list[dict]:
@@ -861,7 +859,7 @@ def assemble_spans(
     mi = 0
     for i, pa in enumerate(ordered_paras):
         mi = emit_media_upto(i, mi)
-        t = pa.text(dehyphenate=dehyphenate)
+        t = pa.text()
         spans.append({"kind": "text", "text": t, "media_ref": "", "offset": offset})
         offset += len(t)
     emit_media_upto(len(ordered_paras), mi)

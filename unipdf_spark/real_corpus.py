@@ -81,62 +81,44 @@ def read_corpus_dir(spark: SparkSession, corpus_dir: str,
     )
 
 
-def _outcome_row(path, kind, content, n_bytes):
-    """Per-file worker: (path, kind, content, n_bytes) → outcome row.
-    Every document yields exactly one row; exceptions become the row's
-    ``error`` (corpus-scale rule: one bad file must not fail a task)."""
+def _extract_file(kind, content):
+    """One file's extraction by its sniffed kind → (spans, n_chars,
+    n_misses, error); spans are (kind, text, media_ref, offset) tuples.
+    Exceptions become the error (corpus-scale rule: one bad file must not
+    fail a task)."""
     from .html_extract import main_content
     from .pdf.extract import extract_spans
 
-    data = bytes(content)
-    ok, err = False, None
-    n_spans = n_text = n_media = n_miss = 0
     try:
+        data = bytes(content)
         if kind == "pdf":
             res = extract_spans(data)
-            err = res.error
-            ok = err is None
-            n_spans = len(res.spans)
-            n_text = res.n_chars
-            n_media = sum(1 for s in res.spans if s["kind"] == "media")
-            n_miss = res.n_misses
-        elif kind == "html":
+            spans = [(s["kind"], s["text"], s["media_ref"], s["offset"])
+                     for s in res.spans]
+            return spans, res.n_chars, res.n_misses, res.error
+        if kind == "html":
             text = main_content(data.decode("utf-8", errors="replace"))
-            ok = True
-            n_spans = 1 if text else 0
-            n_text = len(text)
-        else:
-            err = "unknown format (no %PDF- magic, no HTML root)"
+            return ([("text", text, "", 0)] if text else []), len(text), 0, None
+        return [], 0, 0, "unknown format (no %PDF- magic, no HTML root)"
     except Exception as e:  # harness guarantee: rows, not raises
-        err, ok = f"{type(e).__name__}: {e}", False
+        return [], 0, 0, f"{type(e).__name__}: {e}"
+
+
+def _outcome_row(path, kind, content, n_bytes):
+    """Per-file worker: (path, kind, content, n_bytes) → outcome row.
+    Every document yields exactly one row."""
+    spans, n_text, n_miss, err = _extract_file(kind, content)
+    n_media = sum(1 for s in spans if s[0] == "media")
     # doc_id == full path in BOTH the outcome and spans tables so they
     # join on doc_id; a basename id collides for same-named files in
     # different subdirectories
-    return [(path, path, kind, int(n_bytes), ok, err, n_spans, n_text,
-             n_media, n_miss)]
+    return [(path, path, kind, int(n_bytes), err is None, err, len(spans),
+             n_text, n_media, n_miss)]
 
 
 def _spans_row(path, kind, content):
     """Heavier variant: full span payloads (for writing a spans table)."""
-    from .html_extract import main_content
-    from .pdf.extract import extract_spans
-
-    data = bytes(content)
-    spans, err = [], None
-    try:
-        if kind == "pdf":
-            res = extract_spans(data)
-            err = res.error
-            spans = [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                     for s in res.spans]
-        elif kind == "html":
-            text = main_content(data.decode("utf-8", errors="replace"))
-            if text:
-                spans = [("text", text, "", 0)]
-        else:
-            err = "unknown format"
-    except Exception as e:
-        err = f"{type(e).__name__}: {e}"
+    spans, _, _, err = _extract_file(kind, content)
     return [(path, spans, err)]
 
 
