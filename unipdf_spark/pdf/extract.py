@@ -39,19 +39,22 @@ _PgMcid = tuple[int | None, int]
 _ListItems = list[tuple[list[_PgMcid], list[_PgMcid]]]
 
 
-def _walk_struct_tree(
-    doc: PdfDocument, pages: list
-) -> tuple[dict[_PgMcid, str], list[_ListItems]]:
-    """The struct tree (StructTreeRoot, model/model.go:3710), walked once:
+class _Document:
+    """One parse of a PDF for every entry point: its pages, its struct tree
+    (StructTreeRoot, model/model.go:3710) walked once, and one
+    interpretation per page on demand.
 
-    - (page, MCID) → ActualText (consumed at extractor/extractor.go:977). An
-      element's ActualText covers every MCID under its /K (ints, MCR dicts,
-      nested elements): the first carries the text and the rest read empty,
-      as an in-stream ActualText region does. An enclosing element's
-      ActualText wins over those inside it.
-    - /L list elements → [(label MCIDs, body MCIDs)] per list (PageText.List,
-      e:495: L → LI → Lbl + LBody). A list inside a list belongs to the
-      outer list's items only.
+    The walk fills two views:
+
+    - ``actual_text``: (page, MCID) → ActualText (consumed at
+      extractor/extractor.go:977). An element's ActualText covers every
+      MCID under its /K (ints, MCR dicts, nested elements): the first
+      carries the text and the rest read empty, as an in-stream ActualText
+      region does. An enclosing element's ActualText wins over those
+      inside it.
+    - ``lists``: /L list elements → [(label MCIDs, body MCIDs)] per list
+      (PageText.List, e:495: L → LI → Lbl + LBody). A list inside a list
+      belongs to the outer list's items only.
 
     MCIDs are page-scoped (ParentTree semantics, e:977): an element's own
     /Pg, else the enclosing element's, else None, which matches any page
@@ -59,87 +62,18 @@ def _walk_struct_tree(
     Object resolution is cached per document, so a /Pg resolves to the SAME
     dict instance as its pages() entry. Depth is capped at 64; an
     unresolvable object ends the walk with what it found so far."""
-    page_of = {id(p): i for i, p in enumerate(pages)}
-    actual_text: dict[_PgMcid, str] = {}
-    lists: list[_ListItems] = []
-
-    def page(node: dict, inherited: int | None) -> int | None:
-        pg = doc.resolve(node.get("Pg"))
-        if isinstance(pg, dict):
-            return page_of.get(id(pg), inherited)
-        return inherited
-
-    def kids(node: dict) -> list:
-        k = doc.resolve(node.get("K"))
-        return [doc.resolve(kid) for kid in (k if isinstance(k, list) else [k])]
-
-    def mcids(k, pg: int | None, depth: int) -> list[_PgMcid]:
-        if depth > 64:
-            return []
-        k = doc.resolve(k)
-        if isinstance(k, (int, float)):
-            return [(pg, int(k))]
-        if isinstance(k, list):
-            return [m for kid in k for m in mcids(kid, pg, depth + 1)]
-        if not isinstance(k, dict):
-            return []
-        pg = page(k, pg)
-        if str(k.get("Type") or "") == "MCR":
-            mcid = doc.resolve(k.get("MCID"))
-            return [(pg, int(mcid))] if isinstance(mcid, (int, float)) else []
-        return mcids(k.get("K"), pg, depth + 1)
-
-    def list_items(node: dict, pg: int | None, depth: int) -> _ListItems:
-        items: _ListItems = []
-        for li in kids(node):
-            if not isinstance(li, dict) or str(li.get("S") or "") != "LI":
-                continue
-            li_pg = page(li, pg)
-            lbl: list[_PgMcid] = []
-            body: list[_PgMcid] = []
-            for part in kids(li):
-                if not isinstance(part, dict):
-                    continue
-                s = str(part.get("S") or "")
-                if s in ("Lbl", "LBody"):
-                    (lbl if s == "Lbl" else body).extend(
-                        mcids(part.get("K"), page(part, li_pg), depth))
-            if lbl or body:
-                items.append((lbl, body))
-        return items
-
-    def walk(node, pg: int | None, depth: int, in_list: bool) -> None:
-        if depth > 64 or not isinstance(node, dict):
-            return
-        pg = page(node, pg)
-        at = node.get("ActualText")
-        if at is not None:
-            text = text_string(doc.resolve(at))
-            for i, key in enumerate(mcids(node.get("K"), pg, depth + 1)):
-                actual_text.setdefault(key, text if i == 0 else "")
-        if not in_list and str(node.get("S") or "") == "L":
-            items = list_items(node, pg, depth + 1)
-            if items:
-                lists.append(items)
-            in_list = True
-        for kid in kids(node):
-            walk(kid, pg, depth + 1, in_list)
-
-    try:
-        walk(doc.resolve(doc.catalog().get("StructTreeRoot")), None, 0, False)
-    except PdfError:
-        pass
-    return actual_text, lists
-
-
-class _Document:
-    """One parse of a PDF: its pages, its struct tree walked once, and one
-    interpretation per page on demand."""
 
     def __init__(self, pdf_bytes: bytes):
         self.doc = PdfDocument(pdf_bytes, relaxed=True)
         self.pages = self.doc.pages()
-        self.actual_text, self.lists = _walk_struct_tree(self.doc, self.pages)
+        self._page_of = {id(p): i for i, p in enumerate(self.pages)}
+        self.actual_text: dict[_PgMcid, str] = {}
+        self.lists: list[_ListItems] = []
+        try:
+            self._walk(self.doc.resolve(
+                self.doc.catalog().get("StructTreeRoot")), None, 0, False)
+        except PdfError:
+            pass
 
     def interpreted(self) -> Iterator[tuple[int, Interpreter]]:
         """(page index, interpreter after ``run()``) in page order. A page
@@ -156,6 +90,70 @@ class _Document:
             interp = Interpreter(self.doc, page, mcid_actual_text=page_at)
             interp.run()
             yield page_idx, interp
+
+    def _page(self, node: dict, inherited: int | None) -> int | None:
+        pg = self.doc.resolve(node.get("Pg"))
+        if isinstance(pg, dict):
+            return self._page_of.get(id(pg), inherited)
+        return inherited
+
+    def _kids(self, node: dict) -> list:
+        k = self.doc.resolve(node.get("K"))
+        return [self.doc.resolve(kid)
+                for kid in (k if isinstance(k, list) else [k])]
+
+    def _mcids(self, k, pg: int | None, depth: int) -> list[_PgMcid]:
+        if depth > 64:
+            return []
+        k = self.doc.resolve(k)
+        if isinstance(k, (int, float)):
+            return [(pg, int(k))]
+        if isinstance(k, list):
+            return [m for kid in k for m in self._mcids(kid, pg, depth + 1)]
+        if not isinstance(k, dict):
+            return []
+        pg = self._page(k, pg)
+        if str(k.get("Type") or "") == "MCR":
+            mcid = self.doc.resolve(k.get("MCID"))
+            return [(pg, int(mcid))] if isinstance(mcid, (int, float)) else []
+        return self._mcids(k.get("K"), pg, depth + 1)
+
+    def _list_items(self, node: dict, pg: int | None,
+                    depth: int) -> _ListItems:
+        items: _ListItems = []
+        for li in self._kids(node):
+            if not isinstance(li, dict) or str(li.get("S") or "") != "LI":
+                continue
+            li_pg = self._page(li, pg)
+            lbl: list[_PgMcid] = []
+            body: list[_PgMcid] = []
+            for part in self._kids(li):
+                if not isinstance(part, dict):
+                    continue
+                s = str(part.get("S") or "")
+                if s in ("Lbl", "LBody"):
+                    (lbl if s == "Lbl" else body).extend(self._mcids(
+                        part.get("K"), self._page(part, li_pg), depth))
+            if lbl or body:
+                items.append((lbl, body))
+        return items
+
+    def _walk(self, node, pg: int | None, depth: int, in_list: bool) -> None:
+        if depth > 64 or not isinstance(node, dict):
+            return
+        pg = self._page(node, pg)
+        at = node.get("ActualText")
+        if at is not None:
+            text = text_string(self.doc.resolve(at))
+            for i, key in enumerate(self._mcids(node.get("K"), pg, depth + 1)):
+                self.actual_text.setdefault(key, text if i == 0 else "")
+        if not in_list and str(node.get("S") or "") == "L":
+            items = self._list_items(node, pg, depth + 1)
+            if items:
+                self.lists.append(items)
+            in_list = True
+        for kid in self._kids(node):
+            self._walk(kid, pg, depth + 1, in_list)
 
 
 def extract_spans(pdf_bytes: bytes,

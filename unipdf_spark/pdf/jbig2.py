@@ -1393,9 +1393,9 @@ def decode_text_payload(dec: MQDecoder, tc: TextCtx, symbols: list,
 
 def decode_embedded(data: bytes, width_hint: int = 0, height_hint: int = 0):
     """Decode a PDF-embedded JBIG2 stream (no file header). Returns
-    (rows_of_0_1, width, height) of the page bitmap composited from all
-    generic regions. Raises Jbig2Error on unsupported segment types that
-    carry region data (symbol/text/halftone)."""
+    (rows_of_0_1, width, height) of the page bitmap composited from its
+    generic, text, halftone and refinement regions. Raises Jbig2Error on
+    malformed segments and when no page bitmap results."""
     pos = 0
     n = len(data)
     page_w, page_h = width_hint, height_hint
